@@ -40,20 +40,21 @@ def vb_decode(buf: bytes | np.ndarray) -> np.ndarray:
     b = np.frombuffer(buf, dtype=np.uint8) if isinstance(buf, (bytes, bytearray, memoryview)) else np.asarray(buf, dtype=np.uint8)
     if b.size == 0:
         return np.empty(0, dtype=np.uint64)
-    is_term = b >= 0x80
-    n_vals = int(is_term.sum())
-    # group id of each byte = number of terminators strictly before it
-    gid = np.zeros(b.size, dtype=np.int64)
-    np.cumsum(is_term[:-1], out=gid[1:])
-    # position within group = index - start_of_group
-    starts = np.zeros(n_vals, dtype=np.int64)
-    ends = np.flatnonzero(is_term)
+    if b[-1] < 0x80:
+        raise ValueError("truncated varbyte stream: no terminator at end")
+    ends = np.flatnonzero(b >= 0x80)
+    starts = np.empty(ends.size, dtype=np.int64)
+    starts[0] = 0
     starts[1:] = ends[:-1] + 1
-    pos = np.arange(b.size, dtype=np.int64) - starts[gid]
-    contrib = (b.astype(np.uint64) & _MASK7) << (np.uint64(7) * pos.astype(np.uint64))
-    out = np.zeros(n_vals, dtype=np.uint64)
-    np.bitwise_or.at(out, gid, contrib)  # groups are disjoint bit-ranges
-    return out
+    # shift of each byte = 7 * (index - start of its value)
+    shift = np.arange(b.size, dtype=np.int64)
+    shift -= np.repeat(starts, ends - starts + 1)
+    shift *= 7
+    contrib = (b & np.uint8(0x7F)).astype(np.uint64)
+    contrib <<= shift.view(np.uint64)
+    # a value's groups occupy disjoint bit ranges, so their sum is
+    # their bitwise OR: one segmented sum over the value starts
+    return np.add.reduceat(contrib, starts)
 
 
 def _vb_bytes_and_counts(values: np.ndarray) -> tuple[np.ndarray, np.ndarray]:

@@ -17,11 +17,15 @@ Rank identity with the distributed scoreall path is pinned by tests
 boosts, minimum_should_match route to the Spark path).
 
 Scale note: this is a SERVING optimization, not a bypass of the
-execution model — the read is bounded by the query terms' dictionary
-buckets (row-group pruned by the term-sorted layout), exactly the
-data a distributed task would read, just without a cluster in the
-loop. On a real deployment the index lives on shared storage
-(S3/HDFS); pyarrow reads it the same way.
+execution model — the read is bounded by the query terms' buckets,
+exactly the data a distributed task would read, just without a
+cluster in the loop. Row-group statistics prune only when a bucket
+file has several row groups: at Spark's default 128 MB parquet block a
+bucket file is one row group, so a term read decompresses that file's
+payload columns and the term filter applies after decode. Decoding is
+batch-at-a-time: one varbyte pass per posting column per bucket read.
+On a real deployment the index lives on shared storage (S3/HDFS);
+pyarrow reads it the same way.
 """
 
 from __future__ import annotations
@@ -29,11 +33,15 @@ from __future__ import annotations
 import glob
 import os
 import threading
+import time
 from collections import OrderedDict
 
 import numpy as np
 
-from elasticsearch_osmosis_plugin_spark.functions.varbyte import vb_decode
+from elasticsearch_osmosis_plugin_spark.functions.varbyte import (
+    delta_decode_groups,
+    vb_decode,
+)
 from elasticsearch_osmosis_plugin_spark.plans.build import (
     bucket_of,
     index_groups,
@@ -99,7 +107,14 @@ def _files_sig(files: list[str]) -> tuple:
 # dir's mtime_ns is exact for file-set changes; content rewrites of an
 # EXISTING file are caught downstream by _files_sig (every consumer
 # keys on it). One stat per bucket dir instead of a scan.
+#
+# Racy timestamps: on a filesystem with coarse mtimes an entry added
+# within the same tick as the listing leaves the dir's mtime unchanged,
+# so a listing is cached only once the dir's mtime is older than the
+# coarsest common granularity (2 s, FAT); any later change then moves
+# the mtime.
 listing_cache = _LRU(maxsize=512)
+_RACY_NS = 2_000_000_000
 
 
 def _ls_parquet(d: str) -> list[str]:
@@ -111,22 +126,29 @@ def _ls_parquet(d: str) -> list[str]:
     if hit is not None and hit[0] == mt:
         return hit[1]
     files = sorted(glob.glob(os.path.join(d, "*.parquet")))
-    listing_cache.put(d, (mt, files))
+    if time.time_ns() - mt > _RACY_NS:
+        listing_cache.put(d, (mt, files))
     return files
 
 
 def _load_dic_bucket(files: list[str]):
     """One dictionary bucket -> (sorted term array, df, cf, max_wand
-    numpy columns) for binary-search term lookups."""
-    import pyarrow.dataset as pds
+    numpy columns) for binary-search term lookups. Sorted by Arrow
+    (UTF-8 byte order == Python ``str`` order, so ``np.searchsorted``
+    over the object array agrees); no per-term Python objects until
+    the final term array."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
 
-    tbl = (pds.dataset(files, format="parquet")
-           .to_table(columns=["term", "df", "cf", "max_wand"]))
-    terms = np.asarray(tbl["term"].to_pylist(), dtype=object)
-    order = np.argsort(terms)
-    return (terms[order], tbl["df"].to_numpy()[order],
-            tbl["cf"].to_numpy()[order],
-            tbl["max_wand"].to_numpy()[order])
+    tbl = pa.concat_tables([
+        pq.ParquetFile(f).read(columns=["term", "df", "cf", "max_wand"],
+                               use_threads=False)
+        for f in files])
+    tbl = tbl.take(pc.sort_indices(tbl["term"]))
+    return (tbl["term"].to_numpy(zero_copy_only=False),
+            tbl["df"].to_numpy(), tbl["cf"].to_numpy(),
+            tbl["max_wand"].to_numpy())
 
 
 def _posting_dirs(index_path: str, meta: dict) -> list[str]:
@@ -225,12 +247,13 @@ def _tombstone_ids(index_path: str, meta: dict) -> np.ndarray | None:
 
 
 class _ByteLRU:
-    """Byte-budgeted thread-safe LRU for decoded posting arrays — the
-    analog of Lucene's filesystem cache / ES's shard request cache:
-    the index layout on disk stays the source of truth, this only
-    skips re-reading and re-decoding hot terms. Eviction by total
-    payload bytes, so the driver pin is bounded regardless of term
-    count or posting sizes."""
+    """Byte-budgeted thread-safe LRU for numpy payloads (decoded
+    posting arrays, merge structures, weight vectors) — the analog of
+    Lucene's filesystem cache / ES's shard request cache: the index
+    layout on disk stays the source of truth, this only skips
+    re-reading and recomputing hot terms. Eviction by total payload
+    bytes, so the driver pin is bounded regardless of entry count or
+    posting sizes."""
 
     def __init__(self, max_bytes: int = 256 << 20):
         self.max_bytes = max_bytes
@@ -269,6 +292,25 @@ class _ByteLRU:
 
 
 postings_cache = _ByteLRU(max_bytes=256 << 20)
+
+
+def _decode_column(col) -> tuple[np.ndarray, np.ndarray]:
+    """One ``vb_decode`` over every row of a pyarrow binary column
+    (Array or ChunkedArray) -> (uint64 values of all rows in row
+    order, int64 value count per row). Works on the array's int32
+    offsets and value buffer in place (honouring a slice offset); a
+    row's value count is its number of terminator bytes."""
+    import pyarrow as pa
+
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    _, obuf, vbuf = col.buffers()
+    offs = np.frombuffer(obuf, dtype=np.int32)[
+        col.offset:col.offset + len(col) + 1].astype(np.int64)
+    data = np.frombuffer(vbuf, dtype=np.uint8)[offs[0]:offs[-1]]
+    terms_before = np.zeros(data.size + 1, dtype=np.int64)
+    np.cumsum(data >= 0x80, out=terms_before[1:])
+    return vb_decode(data), np.diff(terms_before[offs - offs[0]])
 
 
 def _gather_term_postings(index_path: str, meta: dict,
@@ -317,18 +359,23 @@ def _gather_term_postings(index_path: str, meta: dict,
             files, ["term", "doc_ids_vb", "tfs_vb", "dls_vb"], missing)
         if tbl is None or tbl.num_rows == 0:
             continue
-        parts: dict[str, list] = {}
-        for term, ids_vb, tfs_vb, dls_vb in zip(
-                tbl["term"].to_pylist(), tbl["doc_ids_vb"].to_pylist(),
-                tbl["tfs_vb"].to_pylist(), tbl["dls_vb"].to_pylist()):
-            d = np.cumsum(vb_decode(ids_vb),
-                          dtype=np.uint64).astype(np.int64)
-            parts.setdefault(term, []).append(
-                (d, vb_decode(tfs_vb).astype(np.float64),
-                 vb_decode(dls_vb).astype(np.float64)))
-        for term, lst in parts.items():
-            v = tuple(np.concatenate([x[i] for x in lst])
-                      for i in range(3))
+        # one decode per column for the whole read; each row's doc ids
+        # restart from an absolute value (delta-encoded per row)
+        deltas, n = _decode_column(tbl["doc_ids_vb"])
+        first = np.cumsum(n) - n
+        ids = delta_decode_groups(deltas, first[n > 0]).astype(np.int64)
+        tfs = _decode_column(tbl["tfs_vb"])[0].astype(np.float64)
+        dls = _decode_column(tbl["dls_vb"])[0].astype(np.float64)
+        row_terms = tbl["term"].to_numpy(zero_copy_only=False)
+        for term in dict.fromkeys(row_terms):
+            # the term's rows in table order (file, then row), values
+            # concatenated in that order — the order every accumulate
+            # sums in
+            rows = np.flatnonzero(row_terms == term)
+            lens = n[rows]
+            take = (np.repeat(first[rows] - (np.cumsum(lens) - lens), lens)
+                    + np.arange(lens.sum()))
+            v = (ids[take], tfs[take], dls[take])
             out[term] = v
             if cache is not None:
                 cache.put((sig, term), v, sum(a.nbytes for a in v))
@@ -346,7 +393,7 @@ def _gather_term_postings(index_path: str, meta: dict,
 # O(n log n) sort per call) and the cached pair is exact — the
 # accumulate still runs per call with identical operand order, so
 # scores stay bit-for-bit equal to the uncached path.
-merge_cache = _LRU(maxsize=256)
+merge_cache = _ByteLRU(max_bytes=64 << 20)
 
 # Per-term BM25 weight vectors: w = idf * tf * (k1+1) / (tf + k1 *
 # (1 - b + b * dl/avgdl)) depends only on the term's posting bytes
@@ -354,7 +401,7 @@ merge_cache = _LRU(maxsize=256)
 # all in the key, so an index mutation OR a meta change (append moves
 # avgdl/n_docs) misses and recomputes. The cached vector is the exact
 # array the uncached path builds (same inputs, same expression).
-weight_cache = _LRU(maxsize=512)
+weight_cache = _ByteLRU(max_bytes=64 << 20)
 
 
 def _topk_order(uids: np.ndarray, scores: np.ndarray,
@@ -364,6 +411,8 @@ def _topk_order(uids: np.ndarray, scores: np.ndarray,
     every doc at-or-above it (ties included, so the doc_id tie-break
     stays exact), lexsort only the candidates. Identical output to
     ``np.lexsort((uids, -scores))[:k]``."""
+    if k <= 0:
+        return np.empty(0, dtype=np.intp)
     if uids.size <= k:
         return np.lexsort((uids, -scores))
     part = np.argpartition(-scores, k - 1)[:k]
@@ -404,7 +453,7 @@ def _score_from_postings(live: list[str], posts: dict[str, tuple],
             w = idf(n_docs, df_t) * tf * (k1 + 1.0) \
                 / (tf + k1 * (1.0 - b + b * dl / avgdl))
             if wkey is not None:
-                weight_cache.put(wkey, w)
+                weight_cache.put(wkey, w, w.nbytes)
         ids_parts.append(d)
         w_parts.append(w)
         terms_used.append(term)
@@ -423,7 +472,8 @@ def _score_from_postings(live: list[str], posts: dict[str, tuple],
         all_ids = np.concatenate(ids_parts)
         uids, inv = np.unique(all_ids, return_inverse=True)
         if key is not None:
-            merge_cache.put(key, (uids, inv, all_ids.size))
+            merge_cache.put(key, (uids, inv, all_ids.size),
+                            uids.nbytes + inv.nbytes)
     scores = np.zeros(uids.size, dtype=np.float64)
     np.add.at(scores, inv, all_w)
     if dead is not None and dead.size:

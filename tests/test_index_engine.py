@@ -2125,6 +2125,41 @@ def test_multi_match_most_and_cross_fields(spark, corpus_rows, corpus_df,
         == [r["doc_id"] for r in got]
 
 
+def _assert_gather_matches_per_row_decode(idx, queries, tag):
+    """The batched column decode of ``_gather_term_postings`` equals a
+    per-row decode of the same pruned read, array for array (order
+    included: file order, then row order)."""
+    import numpy as np
+
+    from elasticsearch_osmosis_plugin_spark.functions.varbyte import vb_decode
+    from elasticsearch_osmosis_plugin_spark.operators import serve
+    from elasticsearch_osmosis_plugin_spark.operators.query import query_terms
+    from elasticsearch_osmosis_plugin_spark.plans.build import bucket_of
+
+    meta = load_meta(idx)
+    terms = sorted({t for q in queries for t in query_terms(q, meta)})
+    got = serve._gather_term_postings(idx, meta, terms, cache=None)
+    dirs = serve._posting_dirs(idx, meta)
+    parts: dict[str, list] = {}
+    for b in sorted({bucket_of(t, meta["n_buckets"]) for t in terms}):
+        ts = [t for t in terms if bucket_of(t, meta["n_buckets"]) == b]
+        tbl = serve._read_filtered(serve._bucket_files(dirs, b),
+                                   ["term", "doc_ids_vb", "tfs_vb",
+                                    "dls_vb"], ts)
+        for r in ([] if tbl is None else tbl.to_pylist()):
+            parts.setdefault(r["term"], []).append((
+                np.cumsum(vb_decode(r["doc_ids_vb"]),
+                          dtype=np.uint64).astype(np.int64),
+                vb_decode(r["tfs_vb"]).astype(np.float64),
+                vb_decode(r["dls_vb"]).astype(np.float64)))
+    assert set(got) == set(parts), tag
+    for t, lst in parts.items():
+        for i in range(3):
+            want = np.concatenate([x[i] for x in lst])
+            assert got[t][i].dtype == want.dtype, (tag, t, i)
+            assert np.array_equal(got[t][i], want), (tag, t, i)
+
+
 def test_local_serving_path_lifecycle(spark, corpus_df, tmp_path):
     """Driver-local serving (Searcher.topk_local / operators.serve):
     rank- AND score-identical to the distributed scoreall path through
@@ -2154,6 +2189,7 @@ def test_local_serving_path_lifecycle(spark, corpus_df, tmp_path):
             assert local == [(d, round(sc, 9))
                              for d, sc in s.topk_local(q, k=10)], (tag, q)
         s.close()
+        _assert_gather_matches_per_row_decode(idx, queries, tag)
 
     check("fresh")
     append_index_group(spark, generate_corpus_df(spark, seed=9, n=40), idx)
@@ -2235,3 +2271,65 @@ def test_local_serving_concurrent_and_bucket_lru(spark, corpus_df,
     assert fresh["public"]["df"] > with_cache["public"]["df"]
     s.close()
     s2.close()
+
+
+def test_local_serving_k_zero_and_cache_byte_bounds(spark, index_path,
+                                                    monkeypatch):
+    """k <= 0 returns an empty answer on both local entry points; the
+    merge-structure and weight caches stay within their byte budgets
+    and never admit an entry larger than the budget."""
+    from elasticsearch_osmosis_plugin_spark.operators import serve
+    from elasticsearch_osmosis_plugin_spark.operators.query import (
+        Searcher,
+        query_terms,
+    )
+
+    meta = load_meta(index_path)
+    q = "public static void"
+    terms = query_terms(q, meta)
+    assert serve.local_topk(index_path, terms, k=0) == []
+    assert serve.local_topk(index_path, terms, k=-1) == []
+    s = Searcher(spark, index_path)
+    assert s.topk_local(q, 0) == []
+    want = s.topk_local(q, 10)
+    assert want
+
+    for name in ("merge_cache", "weight_cache"):
+        c = getattr(serve, name)
+        assert 0 < c.bytes <= c.max_bytes, name
+
+    # an entry over budget is not cached, and the answer is unchanged
+    tiny_merge, tiny_weight = serve._ByteLRU(16), serve._ByteLRU(16)
+    monkeypatch.setattr(serve, "merge_cache", tiny_merge)
+    monkeypatch.setattr(serve, "weight_cache", tiny_weight)
+    assert s.topk_local(q, 10) == want
+    for c in (tiny_merge, tiny_weight):
+        assert c.bytes == 0 and not c._d
+    s.close()
+
+
+def test_listing_cache_racy_timestamp(tmp_path):
+    """A listing taken while the directory's mtime is recent is not
+    cached: a file added within the same mtime tick (simulated by
+    resetting the mtime) is still seen. An old-mtime listing is
+    cached."""
+    import time
+
+    from elasticsearch_osmosis_plugin_spark.operators import serve
+
+    d = tmp_path / "bucket=0"
+    d.mkdir()
+    (d / "part-0.parquet").write_bytes(b"")
+    mt = os.stat(d).st_mtime_ns
+    assert serve._ls_parquet(str(d)) == [str(d / "part-0.parquet")]
+    (d / "part-1.parquet").write_bytes(b"")
+    os.utime(d, ns=(mt, mt))
+    assert serve._ls_parquet(str(d)) == [str(d / "part-0.parquet"),
+                                         str(d / "part-1.parquet")]
+
+    old = time.time_ns() - 10 * serve._RACY_NS
+    os.utime(d, ns=(old, old))
+    serve._ls_parquet(str(d))
+    h0 = serve.listing_cache.hits
+    assert len(serve._ls_parquet(str(d))) == 2
+    assert serve.listing_cache.hits == h0 + 1
