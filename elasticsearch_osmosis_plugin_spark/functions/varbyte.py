@@ -1,10 +1,15 @@
 """Delta + varbyte posting compression — vectorized numpy kernels.
 
-Runs inside Arrow batches on executors (mapInPandas/applyInPandas);
-never per-row Python. Convention: little-endian 7-bit groups, the
-TERMINATOR byte (last byte of each value) has the high bit set —
-classic varint with inverted continuation, which makes vectorized
-decode a cumsum over terminator positions.
+The one module that knows how a posting column is laid out: every
+posting decode (Spark mapInArrow kernels, merge/purge, driver-local
+serving) goes through ``decode_rows`` / ``decode_doc_ids``, one pass
+over a whole Arrow binary column, never per-row Python. Convention:
+little-endian 7-bit groups, the TERMINATOR byte (last byte of each
+value) has the high bit set — classic varint with inverted
+continuation, which makes vectorized decode a cumsum over terminator
+positions. A posting row's doc ids are delta-encoded from an absolute
+first value; its tfs/dls are plain; its positions are delta-encoded
+per (term, doc) run, the tf stream giving each run's length.
 
 Property: decode(encode(x)) == x for any uint64 array (tested with
 hypothesis in tests/test_varbyte.py).
@@ -55,6 +60,34 @@ def vb_decode(buf: bytes | np.ndarray) -> np.ndarray:
     # a value's groups occupy disjoint bit ranges, so their sum is
     # their bitwise OR: one segmented sum over the value starts
     return np.add.reduceat(contrib, starts)
+
+
+def decode_rows(col) -> tuple[np.ndarray, np.ndarray]:
+    """One ``vb_decode`` over every row of a pyarrow binary column
+    (Array or ChunkedArray) -> (uint64 values of all rows in row
+    order, int64 value count per row). Works on the array's int32
+    offsets and value buffer in place (honouring a slice offset); a
+    row's value count is its number of terminator bytes."""
+    import pyarrow as pa
+
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    _, obuf, vbuf = col.buffers()
+    offs = np.frombuffer(obuf, dtype=np.int32)[
+        col.offset:col.offset + len(col) + 1].astype(np.int64)
+    data = np.frombuffer(vbuf, dtype=np.uint8)[offs[0]:offs[-1]]
+    terms_before = np.zeros(data.size + 1, dtype=np.int64)
+    np.cumsum(data >= 0x80, out=terms_before[1:])
+    return vb_decode(data), np.diff(terms_before[offs - offs[0]])
+
+
+def decode_doc_ids(col) -> tuple[np.ndarray, np.ndarray]:
+    """``decode_rows`` for a ``doc_ids_vb`` column -> (int64 doc ids of
+    all rows in row order, count per row): each row's ids restart from
+    an absolute value, so one cumsum + per-row rebase."""
+    deltas, n = decode_rows(col)
+    first = np.cumsum(n) - n
+    return delta_decode_groups(deltas, first[n > 0]).astype(np.int64), n
 
 
 def _vb_bytes_and_counts(values: np.ndarray) -> tuple[np.ndarray, np.ndarray]:

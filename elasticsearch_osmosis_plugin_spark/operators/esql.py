@@ -2080,14 +2080,18 @@ def _ts_command(spark, p0: _P, tables, segs, query: str,
             # delta carried across bucket boundaries (round-5 advisor
             # fix; the DSL `rate` agg twin in plans/tsds.py keeps its
             # bucket-width semantics, which is that API's contract).
+            # NULL samples are skipped: the delta runs from the last
+            # non-NULL sample and the span covers non-NULL samples only.
             wb = Window.partitionBy("__tsb", *dims) \
-                .orderBy(F.col(ts_col).cast("timestamp"))
-            prev = F.lag(c).over(wb)
+                .orderBy(F.col(ts_col).cast("timestamp")) \
+                .rowsBetween(Window.unboundedPreceding, -1)
+            prev = F.last(c, ignorenulls=True).over(wb)
             delta = F.when(prev.isNull(), F.lit(None)) \
                 .when(c >= prev, c - prev) \
                 .otherwise(c)        # reset: counter restarted from 0
             df = df.withColumn(f"__d{i}", delta)
-            tsec = F.col(ts_col).cast("timestamp").cast("double")
+            tsec = F.when(c.isNotNull(),
+                          F.col(ts_col).cast("timestamp").cast("double"))
             span = F.max(tsec) - F.min(tsec)
             inner_aggs.append(
                 (F.sum(f"__d{i}") / F.when(span > F.lit(0.0), span))

@@ -55,16 +55,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from elasticsearch_osmosis_plugin_spark.operators.intersect import (
-    _SCORE_COLS,
     match_all_terms,
     match_any_terms,
 )
 from elasticsearch_osmosis_plugin_spark.operators.query import (
-    DECODED_SCHEMA,
-    _decode_score,
     _live,
-    _pruned_postings,
     dictionary_rows,
+    term_docs,
 )
 from elasticsearch_osmosis_plugin_spark.plans import catalog
 from elasticsearch_osmosis_plugin_spark.plans.build import (
@@ -87,14 +84,8 @@ def docs_with_terms(spark: SparkSession, index_path: str,
     dic = dictionary_rows(spark, index_path, sorted(set(terms)), meta)
     if dic.empty:
         return spark.createDataFrame([], "doc_id long")
-    posts = _pruned_postings(spark, index_path, list(dic["term"]), meta)
-    decoded = posts.select(*_SCORE_COLS).mapInPandas(
-        _decode_score({t: 1.0 for t in dic["term"]},
-                      meta["k1"], meta["b"], meta["avgdl"]),
-        DECODED_SCHEMA)
-    return (_live(decoded.select("doc_id"),
-                  tombstones_df(spark, index_path, meta))
-            .distinct())
+    return (term_docs(spark, index_path, list(dic["term"]), meta)
+            .select("doc_id").distinct())
 
 
 def _seed_ids(spark: SparkSession, index_path: str, query: dict) -> DataFrame:

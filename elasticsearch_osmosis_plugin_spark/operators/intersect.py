@@ -18,17 +18,14 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from elasticsearch_osmosis_plugin_spark.operators.query import (
-    DECODED_SCHEMA,
-    _decode_score,
     _live,
     _pruned_postings,
     dictionary_rows,
     query_terms,
+    term_docs,
+    term_positions,
 )
 from elasticsearch_osmosis_plugin_spark.plans.build import load_meta, tombstones_df
-
-
-_SCORE_COLS = ["term", "doc_ids_vb", "tfs_vb", "dls_vb"]
 
 
 def _one_term(text: str, meta: dict) -> str:
@@ -45,15 +42,6 @@ def _drop_tombstones(spark, index_path, occ, meta) -> DataFrame:
     return _live(occ, tombstones_df(spark, index_path, meta))
 
 
-def _term_docs(spark, index_path, term, meta) -> DataFrame:
-    posts = _pruned_postings(spark, index_path, [term], meta)
-    decoded = posts.select(*_SCORE_COLS).mapInPandas(
-        _decode_score({term: 1.0}, meta["k1"], meta["b"], meta["avgdl"]),
-        DECODED_SCHEMA)
-    return _live(decoded.select("doc_id"),
-                 tombstones_df(spark, index_path, meta))
-
-
 def match_all_terms(spark: SparkSession, index_path: str, query: str) -> DataFrame:
     """doc_ids containing ALL query terms (conjunctive AND)."""
     meta = load_meta(index_path)
@@ -63,9 +51,11 @@ def match_all_terms(spark: SparkSession, index_path: str, query: str) -> DataFra
         # some term matches nothing -> empty intersection
         return spark.createDataFrame([], "doc_id long")
     order = list(dic.sort_values(["df", "term"])["term"])  # rarest first
-    out = _term_docs(spark, index_path, order[0], meta).distinct()
+    out = term_docs(spark, index_path, order[:1], meta) \
+        .select("doc_id").distinct()
     for t in order[1:]:
-        out = out.join(_term_docs(spark, index_path, t, meta), "doc_id", "left_semi")
+        out = out.join(term_docs(spark, index_path, [t], meta), "doc_id",
+                       "left_semi")
     return out.orderBy("doc_id")
 
 
@@ -154,16 +144,9 @@ def match_phrase(spark: SparkSession, index_path: str, phrase: str,
             return (scored.filter(F.col("slop_cost") <= slop)
                     .orderBy("doc_id"))
 
-        from elasticsearch_osmosis_plugin_spark.operators.query import (
-            POSITIONS_SCHEMA,
-            _decode_positions,
-        )
-
         uniq = sorted(set(terms))
         posts = _pruned_postings(spark, index_path, uniq, meta)
-        occ = (posts.select("term", "doc_ids_vb", "tfs_vb", "pos_vb")
-               .mapInPandas(_decode_positions(uniq), POSITIONS_SCHEMA)
-               .join(cands, "doc_id", "left_semi"))
+        occ = term_positions(posts).join(cands, "doc_id", "left_semi")
         slots = spark.createDataFrame(
             [(i, t) for i, t in enumerate(terms)], "slot int, term string")
         aligned = (occ.join(F.broadcast(slots), "term")
@@ -194,16 +177,9 @@ def _slot_position_lists(spark, index_path, slot_terms, cands, meta):
     positions map -> (doc_id, m) for docs where EVERY slot has >=1
     occurrence. ``slot_terms`` may map several terms to one slot
     (phrase-prefix expansions) or one term to several slots."""
-    from elasticsearch_osmosis_plugin_spark.operators.query import (
-        POSITIONS_SCHEMA,
-        _decode_positions,
-    )
-
     uniq = sorted({t for _, t in slot_terms})
     posts = _pruned_postings(spark, index_path, uniq, meta)
-    occ = (posts.select("term", "doc_ids_vb", "tfs_vb", "pos_vb")
-           .mapInPandas(_decode_positions(uniq), POSITIONS_SCHEMA)
-           .join(cands, "doc_id", "left_semi"))
+    occ = term_positions(posts).join(cands, "doc_id", "left_semi")
     slots = spark.createDataFrame(list(slot_terms), "slot int, term string")
     n_slots = len({s for s, _ in slot_terms})
     per = (occ.join(F.broadcast(slots), "term")
@@ -299,18 +275,12 @@ def span_first(spark: SparkSession, index_path: str, term: str,
     span end is p+1, so the rule is p < end (Lucene
     ``SpanFirstQuery``). One pruned positions decode for the term, a
     min-position aggregate, no doc-store touch."""
-    from elasticsearch_osmosis_plugin_spark.operators.query import (
-        POSITIONS_SCHEMA,
-        _decode_positions,
-    )
-
     meta = load_meta(index_path)
     if not meta.get("positions", False):
         raise ValueError("span_first needs positional postings")
     t = _one_term(term, meta)
     posts = _pruned_postings(spark, index_path, [t], meta)
-    occ = (posts.select("term", "doc_ids_vb", "tfs_vb", "pos_vb")
-           .mapInPandas(_decode_positions([t]), POSITIONS_SCHEMA))
+    occ = term_positions(posts)
     occ = _drop_tombstones(spark, index_path, occ, meta)
     return (occ.groupBy("doc_id").agg(F.min("pos").alias("_p"))
             .filter(F.col("_p") < int(end))
@@ -328,11 +298,6 @@ def span_not(spark: SparkSession, index_path: str, include: str,
     ONE positions decode for both terms; the per-doc existence check is
     a pure Catalyst exists/filter over the two position arrays — docs
     without any exclude occurrence pass trivially (left join)."""
-    from elasticsearch_osmosis_plugin_spark.operators.query import (
-        POSITIONS_SCHEMA,
-        _decode_positions,
-    )
-
     meta = load_meta(index_path)
     if not meta.get("positions", False):
         raise ValueError("span_not needs positional postings")
@@ -342,8 +307,7 @@ def span_not(spark: SparkSession, index_path: str, include: str,
         raise ValueError("span_not include and exclude must differ")
     uniq = sorted({ti, te})
     posts = _pruned_postings(spark, index_path, uniq, meta)
-    occ = (posts.select("term", "doc_ids_vb", "tfs_vb", "pos_vb")
-           .mapInPandas(_decode_positions(uniq), POSITIONS_SCHEMA))
+    occ = term_positions(posts)
     occ = _drop_tombstones(spark, index_path, occ, meta)
     per = (occ.groupBy("doc_id")
            .agg(F.sort_array(F.collect_list(
@@ -456,15 +420,8 @@ def match_phrase_prefix(spark: SparkSession, index_path: str, phrase: str,
     slot_terms = ([(i, t) for i, t in enumerate(fixed)]
                   + [(len(fixed), e) for e in expansions])
     uniq = sorted({t for _, t in slot_terms})
-    from elasticsearch_osmosis_plugin_spark.operators.query import (
-        POSITIONS_SCHEMA,
-        _decode_positions,
-    )
-
     posts = _pruned_postings(spark, index_path, uniq, meta)
-    occ = (posts.select("term", "doc_ids_vb", "tfs_vb", "pos_vb")
-           .mapInPandas(_decode_positions(uniq), POSITIONS_SCHEMA)
-           .join(cands, "doc_id", "left_semi"))
+    occ = term_positions(posts).join(cands, "doc_id", "left_semi")
     slots = spark.createDataFrame(slot_terms, "slot int, term string")
     n = len(fixed) + 1
     aligned = (occ.join(F.broadcast(slots), "term")
@@ -569,13 +526,7 @@ def match_fuzzy(spark: SparkSession, index_path: str, term: str,
                          transpositions=transpositions)
     if not terms:
         return spark.createDataFrame([], "doc_id long")
-    posts = _pruned_postings(spark, index_path, terms, meta)
-    decoded = posts.select(*_SCORE_COLS).mapInPandas(
-        _decode_score({t: 1.0 for t in terms},
-                      meta["k1"], meta["b"], meta["avgdl"]),
-        DECODED_SCHEMA)
-    return (_live(decoded.select("doc_id"),
-                  tombstones_df(spark, index_path, meta))
+    return (term_docs(spark, index_path, terms, meta).select("doc_id")
             .distinct().orderBy("doc_id"))
 
 
@@ -589,13 +540,7 @@ def match_expanded(spark: SparkSession, index_path: str, pattern: str,
                          _meta=meta)
     if not terms:
         return spark.createDataFrame([], "doc_id long")
-    posts = _pruned_postings(spark, index_path, terms, meta)
-    decoded = posts.select(*_SCORE_COLS).mapInPandas(
-        _decode_score({t: 1.0 for t in terms},
-                      meta["k1"], meta["b"], meta["avgdl"]),
-        DECODED_SCHEMA)
-    return (_live(decoded.select("doc_id"),
-                  tombstones_df(spark, index_path, meta))
+    return (term_docs(spark, index_path, terms, meta).select("doc_id")
             .distinct().orderBy("doc_id"))
 
 
@@ -843,10 +788,6 @@ def highlight(spark: SparkSession, index_path: str, query: str,
     the full corpus), min(pos) per doc, then one semi-joined doc-store
     read slices the stored term vector around it — the doc-store scan
     is pruned to (doc_id, tokens) of matching docs only."""
-    from elasticsearch_osmosis_plugin_spark.operators.query import (
-        POSITIONS_SCHEMA,
-        _decode_positions,
-    )
     from elasticsearch_osmosis_plugin_spark.plans import catalog
 
     meta = load_meta(index_path)
@@ -864,8 +805,7 @@ def highlight(spark: SparkSession, index_path: str, query: str,
         raise ValueError("highlight needs the term-vector store")
     live = sorted(dic["term"])
     posts = _pruned_postings(spark, index_path, live, meta)
-    occ = (posts.select("term", "doc_ids_vb", "tfs_vb", "pos_vb")
-           .mapInPandas(_decode_positions(live), POSITIONS_SCHEMA))
+    occ = term_positions(posts)
     first = (_live(occ, tombstones_df(spark, index_path, meta))
              .groupBy("doc_id").agg(F.min("pos").alias("first_pos")))
     # stored positions are 0-based; slice() is 1-based
@@ -1173,17 +1113,11 @@ def match_min_should(spark: SparkSession, index_path: str, query: str,
     dic = dictionary_rows(spark, index_path, terms, meta)
     if dic.empty or len(dic) < min_should_match:
         return spark.createDataFrame([], "doc_id long")
-    posts = _pruned_postings(spark, index_path, list(dic["term"]), meta)
-    decoded = posts.select(*_SCORE_COLS).mapInPandas(
-        _decode_score({t: 1.0 for t in dic["term"]},
-                      meta["k1"], meta["b"], meta["avgdl"]),
-        DECODED_SCHEMA)
-    hits = (decoded.groupBy("doc_id")
+    return (term_docs(spark, index_path, list(dic["term"]), meta)
+            .groupBy("doc_id")
             .agg(F.countDistinct("term").alias("n_terms"))
-            .filter(F.col("n_terms") >= min_should_match))
-    return (_live(hits.select("doc_id"),
-                  tombstones_df(spark, index_path, meta))
-            .orderBy("doc_id"))
+            .filter(F.col("n_terms") >= min_should_match)
+            .select("doc_id").orderBy("doc_id"))
 
 
 def terms_set(spark: SparkSession, index_path: str, terms_query: str,
@@ -1208,19 +1142,13 @@ def terms_set(spark: SparkSession, index_path: str, terms_query: str,
     dic = dictionary_rows(spark, index_path, terms, meta)
     if dic.empty:
         return spark.createDataFrame([], "doc_id long, n_matched long")
-    posts = _pruned_postings(spark, index_path, list(dic["term"]), meta)
-    decoded = posts.select(*_SCORE_COLS).mapInPandas(
-        _decode_score({t: 1.0 for t in dic["term"]},
-                      meta["k1"], meta["b"], meta["avgdl"]),
-        DECODED_SCHEMA)
-    hits = (decoded.groupBy("doc_id")
+    hits = (term_docs(spark, index_path, list(dic["term"]), meta)
+            .groupBy("doc_id")
             .agg(F.countDistinct("term").alias("n_matched")))
     ds = catalog.read_table(spark, index_path, "docstats")
-    out = (hits.join(ds, "doc_id")
-           .filter(F.col("n_matched") >= min_expr)
-           .select("doc_id", "n_matched"))
-    return (_live(out, tombstones_df(spark, index_path, meta))
-            .orderBy("doc_id"))
+    return (hits.join(ds, "doc_id")
+            .filter(F.col("n_matched") >= min_expr)
+            .select("doc_id", "n_matched").orderBy("doc_id"))
 
 
 def match_bool(spark: SparkSession, index_path: str, *,
@@ -1265,14 +1193,8 @@ def match_any_terms(spark: SparkSession, index_path: str, query: str) -> DataFra
     dic = dictionary_rows(spark, index_path, terms, meta)
     if dic.empty:
         return spark.createDataFrame([], "doc_id long")
-    posts = _pruned_postings(spark, index_path, list(dic["term"]), meta)
-    decoded = posts.select(*_SCORE_COLS).mapInPandas(
-        _decode_score({t: 1.0 for t in dic["term"]},
-                      meta["k1"], meta["b"], meta["avgdl"]),
-        DECODED_SCHEMA)
-    return (_live(decoded.select("doc_id"),
-                  tombstones_df(spark, index_path, meta))
-            .distinct().orderBy("doc_id"))
+    return (term_docs(spark, index_path, list(dic["term"]), meta)
+            .select("doc_id").distinct().orderBy("doc_id"))
 
 def suggest_terms(spark: SparkSession, index_path: str, text: str,
                   max_edits: int = 2, size: int = 5,
@@ -1426,10 +1348,6 @@ def suggest_phrase(spark: SparkSession, index_path: str, text: str,
     from elasticsearch_osmosis_plugin_spark.functions.tokenizer import (
         tokenize_py,
     )
-    from elasticsearch_osmosis_plugin_spark.operators.query import (
-        POSITIONS_SCHEMA,
-        _decode_positions,
-    )
     from elasticsearch_osmosis_plugin_spark.plans.build import dictionary_df
 
     meta = load_meta(index_path)
@@ -1473,8 +1391,7 @@ def suggest_phrase(spark: SparkSession, index_path: str, text: str,
     if len(slots) > 1:
         uniq = sorted({t for ts in by_slot.values() for t in ts})
         posts = _pruned_postings(spark, index_path, uniq, meta)
-        occ = (posts.select("term", "doc_ids_vb", "tfs_vb", "pos_vb")
-               .mapInPandas(_decode_positions(uniq), POSITIONS_SCHEMA)
+        occ = (term_positions(posts)
                .groupBy("term", "doc_id")
                .agg(F.collect_list("pos").alias("poss")))
         occ = _live(occ, tombstones_df(spark, index_path, meta))
@@ -2867,10 +2784,6 @@ def highlight_fragments(spark: SparkSession, index_path: str, query: str,
     streams only, doc-store pruned to matching docs."""
     from pyspark.sql import Window as W
 
-    from elasticsearch_osmosis_plugin_spark.operators.query import (
-        POSITIONS_SCHEMA,
-        _decode_positions,
-    )
     from elasticsearch_osmosis_plugin_spark.plans import catalog
 
     meta = load_meta(index_path)
@@ -2888,8 +2801,7 @@ def highlight_fragments(spark: SparkSession, index_path: str, query: str,
         raise ValueError("highlight needs the term-vector store")
     live = sorted(dic["term"])
     posts = _pruned_postings(spark, index_path, live, meta)
-    occ = (posts.select("term", "doc_ids_vb", "tfs_vb", "pos_vb")
-           .mapInPandas(_decode_positions(live), POSITIONS_SCHEMA))
+    occ = term_positions(posts)
     firsts = (_live(occ, tombstones_df(spark, index_path, meta))
               .groupBy("doc_id", "term").agg(F.min("pos").alias("pos")))
     w = W.partitionBy("doc_id").orderBy("pos", "term")

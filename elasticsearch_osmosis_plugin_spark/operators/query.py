@@ -12,7 +12,8 @@ Execution (Spark-first):
 3. postings read pruned the same way — only query terms' rows are
    ever scanned;
 4. vectorized numpy decode + exact float64 BM25 partial scores inside
-   Arrow batches (mapInPandas);
+   Arrow batches (mapInArrow: one varbyte pass per payload column per
+   batch, ``functions.varbyte.decode_rows``);
 5. groupBy(doc_id).sum -> deterministic top-k
    (TakeOrderedAndProject: per-partition heaps, no global sort).
 
@@ -32,15 +33,23 @@ Strategies:
 
 from __future__ import annotations
 
+import functools
 import math
 from typing import Iterator, Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from elasticsearch_osmosis_plugin_spark.functions.tokenizer import tokenize_py
-from elasticsearch_osmosis_plugin_spark.functions.varbyte import vb_decode
+from elasticsearch_osmosis_plugin_spark.functions.varbyte import (
+    decode_doc_ids,
+    decode_rows,
+    delta_decode_groups,
+)
+from elasticsearch_osmosis_plugin_spark.operators import serve
 from elasticsearch_osmosis_plugin_spark.operators.topk import deterministic_topk
 from elasticsearch_osmosis_plugin_spark.plans.build import (
     bucket_of,
@@ -64,35 +73,53 @@ def query_terms(query: str, meta: dict) -> list[str]:
 
 _DIC_COLS = ["term", "df", "cf", "n_blocks", "max_wand", "bucket"]
 
+# Per-term dictionary memos hold at most this many terms (LRU), so an
+# adversarial query vocabulary evicts instead of growing the driver
+# heap. Absent terms are memoized as _ABSENT (an LRU miss is None).
+DIC_MEMO_TERMS = 1 << 14
+_ABSENT = False
+
+
+def _memoized(memo, terms, fetch) -> dict[str, dict]:
+    """term -> dictionary row for the indexed ``terms`` (in order):
+    memo misses go to ``fetch(missing) -> {term: row}`` once, and
+    every fetched term, absent ones too, lands in the memo."""
+    got = {t: memo.get(t) for t in terms}
+    missing = [t for t, r in got.items() if r is None]
+    if missing:
+        found = fetch(missing)
+        for t in missing:
+            got[t] = found.get(t, _ABSENT)
+            memo.put(t, got[t])
+    return {t: r for t, r in got.items() if r is not _ABSENT}
+
 
 class DictionaryCache:
     """Driver-side per-term dictionary memo for a long-lived Searcher:
-    every term's stats row is fetched from the (persisted) dictionary
-    relation AT MOST ONCE across the Searcher's lifetime — repeated
-    queries over a warm vocabulary skip the per-query Spark job that a
-    ``dic.filter(...).toPandas()`` lookup costs (~50-150 ms of fixed
-    scheduling latency, the dominant term in serving p95). Negative
-    hits (absent terms) are memoized too, so unknown-term queries stay
-    one-time."""
+    a warm term's stats row is fetched from the (persisted) dictionary
+    relation once while it stays among the ``DIC_MEMO_TERMS`` most
+    recently used — repeated queries over a warm vocabulary skip the
+    per-query Spark job that a ``dic.filter(...).toPandas()`` lookup
+    costs (~50-150 ms of fixed scheduling latency, the dominant term
+    in serving p95). Negative hits (absent terms) are memoized too, so
+    unknown-term queries stay one-time."""
 
     def __init__(self, dic_df: DataFrame):
         self.df = dic_df
-        self._rows: dict[str, dict | None] = {}
+        self._rows = serve._LRU(maxsize=DIC_MEMO_TERMS)
 
     def rows(self, terms: Sequence[str], meta: dict) -> pd.DataFrame:
-        missing = sorted({t for t in terms if t not in self._rows})
-        if missing:
+        def fetch(missing):
             buckets = sorted({bucket_of(t, meta["n_buckets"])
                               for t in missing})
             pdf = (self.df.filter(F.col("bucket").isin(buckets)
-                                  & F.col("term").isin(missing))
+                                  & F.col("term").isin(sorted(missing)))
                    .toPandas())
-            found = {r["term"]: {c: r[c] for c in _DIC_COLS}
-                     for _, r in pdf.iterrows()}
-            for t in missing:
-                self._rows[t] = found.get(t)
-        hits = [self._rows[t] for t in dict.fromkeys(terms)
-                if self._rows.get(t) is not None]
+            return {r["term"]: {c: r[c] for c in _DIC_COLS}
+                    for _, r in pdf.iterrows()}
+
+        hits = list(_memoized(self._rows, dict.fromkeys(terms),
+                              fetch).values())
         if not hits:
             return pd.DataFrame(columns=_DIC_COLS)
         return pd.DataFrame(hits, columns=_DIC_COLS)
@@ -125,25 +152,83 @@ def _pruned_postings(spark: SparkSession, index_path: str,
     return posts.filter(F.col("bucket").isin(buckets) & F.col("term").isin(list(terms)))
 
 
-def _decode_score(idf_by_term: dict[str, float], k1: float, b: float, avgdl: float):
-    """mapInPandas kernel: posting blocks -> (term, doc_id, partial)."""
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = []
-            for term, ids_vb, tfs_vb, dls_vb in zip(
-                    pdf["term"], pdf["doc_ids_vb"], pdf["tfs_vb"], pdf["dls_vb"]):
-                d = np.cumsum(vb_decode(ids_vb), dtype=np.uint64).astype(np.int64)
-                tf = vb_decode(tfs_vb).astype(np.float64)
-                dl = vb_decode(dls_vb).astype(np.float64)
-                w = idf_by_term[term] * tf * (k1 + 1.0) / (
-                    tf + k1 * (1.0 - b + b * dl / avgdl))
-                outs.append(pd.DataFrame({"term": term, "doc_id": d, "partial": w}))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
+def bm25_weight(c, tf, dl, k1: float, b: float, avgdl: float):
+    """BM25 partial c * tf * (k1+1) / (tf + k1 * (1 - b + b * dl/avgdl))
+    with c = idf (times any boost). Elementwise over numpy arrays or
+    Spark Columns: every BM25 scoring path evaluates this expression."""
+    return c * tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
+
+
+def _posting_rows(batch: pa.RecordBatch) -> tuple[np.ndarray, np.ndarray]:
+    """(row index of every posting, doc ids) of an Arrow batch of
+    posting rows, postings in (row, then posting) order."""
+    ids, n = decode_doc_ids(batch.column("doc_ids_vb"))
+    return np.repeat(np.arange(n.size), n), ids
+
+
+def _out(batch: pa.RecordBatch, rows: np.ndarray, **cols) -> pa.RecordBatch:
+    return pa.RecordBatch.from_arrays(
+        [batch.column("term").take(rows), *map(pa.array, cols.values())],
+        names=["term", *cols])
+
+
+def _scored_kernel(c_by_term: dict[str, float], weight):
+    """mapInArrow kernel: posting rows -> (term, doc_id, partial) with
+    partial = weight(c_term, tf, dl) — one decode per payload column
+    per Arrow batch."""
+    keys = pa.array(list(c_by_term), pa.string())
+    consts = np.fromiter(c_by_term.values(), np.float64, len(c_by_term))
+
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            rows, ids = _posting_rows(batch)
+            tf = decode_rows(batch.column("tfs_vb"))[0].astype(np.float64)
+            dl = decode_rows(batch.column("dls_vb"))[0].astype(np.float64)
+            c = consts[pc.index_in(batch.column("term"), value_set=keys)
+                       .to_numpy()][rows]
+            yield _out(batch, rows, doc_id=ids, partial=weight(c, tf, dl))
     return fn
 
 
 DECODED_SCHEMA = "term string, doc_id long, partial double"
+
+
+def score_postings(posts: DataFrame, c_by_term: dict[str, float],
+                   weight) -> DataFrame:
+    """Posting rows -> (term, doc_id, partial). Column-pruned before
+    the Arrow exchange: scoring never reads the positional payload."""
+    return (posts.select("term", "doc_ids_vb", "tfs_vb", "dls_vb")
+            .mapInArrow(_scored_kernel(c_by_term, weight), DECODED_SCHEMA))
+
+
+def _bm25(meta: dict):
+    return functools.partial(bm25_weight, k1=meta["k1"], b=meta["b"],
+                             avgdl=meta["avgdl"])
+
+
+def _raw_kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    for batch in batches:
+        rows, ids = _posting_rows(batch)
+        cols = {"doc_id": ids,
+                "tf": decode_rows(batch.column("tfs_vb"))[0].astype(np.int64)}
+        if "dls_vb" in batch.schema.names:
+            cols["dl"] = decode_rows(batch.column("dls_vb"))[0].astype(np.int64)
+        yield _out(batch, rows, **cols)
+
+
+def raw_postings(posts: DataFrame, with_dl: bool = True) -> DataFrame:
+    """Posting rows -> unscored (term, doc_id, tf[, dl]) rows, for
+    callers that blend tfs across terms or fields before scoring."""
+    payload = ["tfs_vb", "dls_vb"] if with_dl else ["tfs_vb"]
+    return (posts.select("term", "doc_ids_vb", *payload)
+            .mapInArrow(_raw_kernel, "term string, doc_id long, tf long"
+                        + (", dl long" if with_dl else "")))
+
+
+def _doc_ids_kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    for batch in batches:
+        rows, ids = _posting_rows(batch)
+        yield _out(batch, rows, doc_id=ids)
 
 
 def _live(out: DataFrame, denied: DataFrame | None) -> DataFrame:
@@ -154,15 +239,20 @@ def _live(out: DataFrame, denied: DataFrame | None) -> DataFrame:
     return out.join(F.broadcast(denied), "doc_id", "left_anti")
 
 
+def term_docs(spark: SparkSession, index_path: str, terms: Sequence[str],
+              meta: dict, posts: DataFrame | None = None) -> DataFrame:
+    """Live (term, doc_id) matches of ``terms`` — reads only the
+    ``doc_ids_vb`` payload."""
+    pruned = _pruned_postings(spark, index_path, terms, meta, posts)
+    return _live(pruned.select("term", "doc_ids_vb")
+                 .mapInArrow(_doc_ids_kernel, "term string, doc_id long"),
+                 tombstones_df(spark, index_path, meta))
+
+
 def _scored(spark, index_path, terms, meta, idf_by_term,
             posts=None, allowed=None, denied=None) -> DataFrame:
     pruned = _pruned_postings(spark, index_path, terms, meta, posts)
-    # column-prune BEFORE the Arrow exchange: scoring never reads the
-    # positional payload (pos_vb) — parquet skips those pages entirely
-    out = pruned.select("term", "doc_ids_vb", "tfs_vb", "dls_vb").mapInPandas(
-        _decode_score(idf_by_term, meta["k1"], meta["b"], meta["avgdl"]),
-        DECODED_SCHEMA)
-    out = _live(out, denied)
+    out = _live(score_postings(pruned, idf_by_term, _bm25(meta)), denied)
     if allowed is not None:
         # post-filter semi-join BEFORE the aggregation: per-doc scores
         # are unaffected (idf/avgdl/N stay corpus-global), only which
@@ -174,29 +264,22 @@ def _scored(spark, index_path, terms, meta, idf_by_term,
 POSITIONS_SCHEMA = "term string, doc_id long, pos long"
 
 
-def _decode_positions(terms: Sequence[str]):
-    """mapInPandas kernel: posting blocks -> one row per token
-    occurrence (term, doc_id, pos). The tf stream is the split key for
-    the per-(term, doc) position runs inside each block."""
-    from elasticsearch_osmosis_plugin_spark.functions.varbyte import (
-        delta_decode_groups,
-    )
+def _positions_kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    for batch in batches:
+        rows, ids = _posting_rows(batch)
+        tf = decode_rows(batch.column("tfs_vb"))[0].astype(np.int64)
+        pos = delta_decode_groups(decode_rows(batch.column("pos_vb"))[0],
+                                  np.cumsum(tf) - tf)
+        yield _out(batch, np.repeat(rows, tf), doc_id=np.repeat(ids, tf),
+                   pos=pos.astype(np.int64))
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = []
-            for term, ids_vb, tfs_vb, pos_vb in zip(
-                    pdf["term"], pdf["doc_ids_vb"], pdf["tfs_vb"], pdf["pos_vb"]):
-                d = np.cumsum(vb_decode(ids_vb), dtype=np.uint64).astype(np.int64)
-                tf = vb_decode(tfs_vb).astype(np.int64)
-                starts = np.zeros(tf.size, dtype=np.int64)
-                np.cumsum(tf[:-1], out=starts[1:])
-                pos = delta_decode_groups(vb_decode(pos_vb), starts).astype(np.int64)
-                outs.append(pd.DataFrame({
-                    "term": term, "doc_id": np.repeat(d, tf), "pos": pos}))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-    return fn
+
+def term_positions(posts: DataFrame) -> DataFrame:
+    """Posting rows -> one (term, doc_id, pos) row per token
+    occurrence. The tf stream is the split key for the per-(term, doc)
+    position runs."""
+    return (posts.select("term", "doc_ids_vb", "tfs_vb", "pos_vb")
+            .mapInArrow(_positions_kernel, POSITIONS_SCHEMA))
 
 
 def topk(spark: SparkSession, index_path: str, query: str, k: int = 10,
@@ -340,30 +423,6 @@ def topk_after(spark: SparkSession, index_path: str, query: str,
     return deterministic_topk(scores, k)
 
 
-RAW_TF_SCHEMA = "term string, doc_id long, tf double, dl double"
-
-
-def _decode_raw_tf(_terms):
-    """mapInPandas kernel: posting blocks -> raw (term, doc_id, tf, dl)
-    rows (no scoring — callers that blend tfs across terms, e.g. the
-    synonym query, aggregate first and score after)."""
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = []
-            for term, ids_vb, tfs_vb, dls_vb in zip(
-                    pdf["term"], pdf["doc_ids_vb"], pdf["tfs_vb"],
-                    pdf["dls_vb"]):
-                d = np.cumsum(vb_decode(ids_vb),
-                              dtype=np.uint64).astype(np.int64)
-                tf = vb_decode(tfs_vb).astype(np.float64)
-                dl = vb_decode(dls_vb).astype(np.float64)
-                outs.append(pd.DataFrame(
-                    {"term": term, "doc_id": d, "tf": tf, "dl": dl}))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-    return fn
-
-
 def topk_synonyms(spark: SparkSession, index_path: str,
                   groups: list[list[str]], k: int = 10, *,
                   post_filter=None,
@@ -426,58 +485,38 @@ def topk_synonyms(spark: SparkSession, index_path: str,
     denied = tombstones_df(spark, index_path, meta)
     pruned = _pruned_postings(spark, index_path, sorted(live_terms), meta,
                               _posts)
-    raw = pruned.select("term", "doc_ids_vb", "tfs_vb", "dls_vb") \
-        .mapInPandas(_decode_raw_tf(live_terms), RAW_TF_SCHEMA)
-    raw = _live(raw, denied)
+    raw = _live(raw_postings(pruned), denied)
     if allowed is not None:
         raw = raw.join(allowed, "doc_id", "left_semi")
     gmap = F.create_map(*[x for t, g in gid_of.items()
                           for x in (F.lit(t), F.lit(g))])
     imap = F.create_map(*[x for g, v in idf_of_gid.items()
                           for x in (F.lit(g), F.lit(v))])
-    k1, b, avgdl = meta["k1"], meta["b"], meta["avgdl"]
     blended = (raw.withColumn("_g", gmap[F.col("term")])
                .groupBy("doc_id", "_g")
                .agg(F.sum("tf").alias("_tf"), F.first("dl").alias("_dl")))
-    partial = (imap[F.col("_g")] * F.col("_tf") * F.lit(k1 + 1.0)
-               / (F.col("_tf") + F.lit(k1) * (F.lit(1.0 - b)
-                  + F.lit(b) * F.col("_dl") / F.lit(avgdl))))
+    partial = _bm25(meta)(imap[F.col("_g")], F.col("_tf"), F.col("_dl"))
     scores = (blended.withColumn("_p", partial)
               .groupBy("doc_id").agg(F.sum("_p").alias("score")))
     return deterministic_topk(scores, k)
 
 
-def _decode_score_lm(p_by_term: dict[str, float], kind: str,
-                     mu: float, lam: float):
-    """mapInPandas kernel for the Lucene language-model similarities.
-
-    ``p_by_term`` carries the collection LM P(t|C) = (cf_t+1)/(T+1)
-    (Lucene ``LMSimilarity.DefaultCollectionModel``); per-posting
-    partials, each clamped at 0 exactly as Lucene's ``score()`` does:
+def lm_weight(similarity: str, mu: float, lam: float):
+    """Per-posting weight of the Lucene language-model similarities
+    over c = P(t|C) = (cf_t+1)/(T+1) (Lucene
+    ``LMSimilarity.DefaultCollectionModel``), each partial clamped at
+    0 exactly as Lucene's ``score()`` does:
 
     - dirichlet:      log(1 + tf/(mu*p)) + log(mu/(dl+mu))
     - jelinek_mercer: log(1 + (1-l)*tf/(dl*l*p))
-    """
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = []
-            for term, ids_vb, tfs_vb, dls_vb in zip(
-                    pdf["term"], pdf["doc_ids_vb"], pdf["tfs_vb"], pdf["dls_vb"]):
-                d = np.cumsum(vb_decode(ids_vb), dtype=np.uint64).astype(np.int64)
-                tf = vb_decode(tfs_vb).astype(np.float64)
-                dl = vb_decode(dls_vb).astype(np.float64)
-                p = p_by_term[term]
-                # ln(1+x) spelled exactly as the DuckDB twin computes
-                # it (same double for 1+x into the same libm log)
-                if kind == "dirichlet":
-                    w = np.log(1.0 + tf / (mu * p)) + np.log(mu / (dl + mu))
-                else:
-                    w = np.log(1.0 + (1.0 - lam) * tf / (dl * lam * p))
-                w = np.maximum(w, 0.0)
-                outs.append(pd.DataFrame({"term": term, "doc_id": d, "partial": w}))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-    return fn
+
+    ln(1+x) is spelled exactly as the DuckDB twin computes it (same
+    double for 1+x into the same libm log)."""
+    if similarity == "lm_dirichlet":
+        return lambda p, tf, dl: np.maximum(
+            np.log(1.0 + tf / (mu * p)) + np.log(mu / (dl + mu)), 0.0)
+    return lambda p, tf, dl: np.maximum(
+        np.log(1.0 + (1.0 - lam) * tf / (dl * lam * p)), 0.0)
 
 
 def topk_lm(spark: SparkSession, index_path: str, query: str,
@@ -520,12 +559,10 @@ def topk_lm(spark: SparkSession, index_path: str, query: str,
         allowed = (catalog.read_table(spark, index_path, "docstats")
                    .filter(post_filter).select("doc_id"))
     denied = tombstones_df(spark, index_path, meta)
-    kind = "dirichlet" if similarity == "lm_dirichlet" else "jm"
     pruned = _pruned_postings(spark, index_path, live_terms, meta, _posts)
-    out = pruned.select("term", "doc_ids_vb", "tfs_vb", "dls_vb").mapInPandas(
-        _decode_score_lm(p_by_term, kind, float(mu), float(lam)),
-        DECODED_SCHEMA)
-    out = _live(out, denied)
+    out = _live(score_postings(pruned, p_by_term,
+                               lm_weight(similarity, float(mu), float(lam))),
+                denied)
     if allowed is not None:
         out = out.join(allowed, "doc_id", "left_semi")
     scores = (out.groupBy("doc_id").agg(F.sum("partial").alias("score"))
@@ -533,23 +570,10 @@ def topk_lm(spark: SparkSession, index_path: str, query: str,
     return deterministic_topk(scores, k)
 
 
-def _decode_score_classic(w_by_term: dict[str, float]):
-    """mapInPandas kernel for ClassicSimilarity: per-posting partial
-    w_t * sqrt(tf) / sqrt(dl), with w_t = queryNorm * idf_t^2 folded
-    in on the driver (constants per query)."""
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = []
-            for term, ids_vb, tfs_vb, dls_vb in zip(
-                    pdf["term"], pdf["doc_ids_vb"], pdf["tfs_vb"], pdf["dls_vb"]):
-                d = np.cumsum(vb_decode(ids_vb), dtype=np.uint64).astype(np.int64)
-                tf = vb_decode(tfs_vb).astype(np.float64)
-                dl = vb_decode(dls_vb).astype(np.float64)
-                w = w_by_term[term] * np.sqrt(tf) / np.sqrt(dl)
-                outs.append(pd.DataFrame({"term": term, "doc_id": d, "partial": w}))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-    return fn
+def classic_weight(c, tf, dl):
+    """ClassicSimilarity per-posting partial c * sqrt(tf) / sqrt(dl),
+    with c = queryNorm * idf_t^2 folded in on the driver."""
+    return c * np.sqrt(tf) / np.sqrt(dl)
 
 
 def topk_classic(spark: SparkSession, index_path: str, query: str,
@@ -603,9 +627,7 @@ def topk_classic(spark: SparkSession, index_path: str, query: str,
                    .filter(post_filter).select("doc_id"))
     denied = tombstones_df(spark, index_path, meta)
     pruned = _pruned_postings(spark, index_path, live_terms, meta, _posts)
-    out = pruned.select("term", "doc_ids_vb", "tfs_vb", "dls_vb").mapInPandas(
-        _decode_score_classic(w_by_term), DECODED_SCHEMA)
-    out = _live(out, denied)
+    out = _live(score_postings(pruned, w_by_term, classic_weight), denied)
     if allowed is not None:
         out = out.join(allowed, "doc_id", "left_semi")
     # coord numerator: a term's blocks are doc-disjoint, so the decode
@@ -974,10 +996,15 @@ class Searcher:
         self.dic = dictionary_df(spark, self.index_path)
         if cache_dictionary:
             self.dic = self.dic.persist()
-        # per-term driver memo on TOP of the persisted relation: warm
+        # per-term driver memos on TOP of the persisted relation: warm
         # terms skip the per-query dictionary job entirely
         self._dic_cache = DictionaryCache(self.dic)
-        self._local_dic: dict[str, dict | None] = {}
+        self._local_dic = serve._LRU(maxsize=DIC_MEMO_TERMS)
+
+    def _local_rows(self, terms: Sequence[str]) -> dict[str, dict]:
+        return _memoized(self._local_dic, terms,
+                         lambda missing: serve.local_dictionary_rows(
+                             self.index_path, self.meta, missing))
 
     def topk(self, query: str, k: int = 10, strategy: str = "auto",
              post_filter=None, boosts=None,
@@ -993,22 +1020,12 @@ class Searcher:
         directly with pyarrow on the driver — no Spark job, no
         scheduler round-trip, millisecond latencies. Rank-identical
         to ``topk(strategy="scoreall")`` (lifecycle-tested);
-        dictionary rows memoize per term across calls. Returns
-        [(doc_id, score)] — post_filter/boosts/msm queries use the
-        Spark path."""
-        from elasticsearch_osmosis_plugin_spark.operators import serve
-
+        dictionary rows memoize per term across calls (bounded LRU).
+        Returns [(doc_id, score)] — post_filter/boosts/msm queries use
+        the Spark path."""
         terms = query_terms(query, self.meta)
-        missing = [t for t in terms if t not in self._local_dic]
-        if missing:
-            got = serve.local_dictionary_rows(self.index_path, self.meta,
-                                              missing)
-            for t in missing:
-                self._local_dic[t] = got.get(t)
-        rows = {t: r for t in terms
-                if (r := self._local_dic.get(t)) is not None}
-        return serve.local_topk(self.index_path, terms, k,
-                                meta=self.meta, dic_rows=rows)
+        return serve.local_topk(self.index_path, terms, k, meta=self.meta,
+                                dic_rows=self._local_rows(terms))
 
     def topk_local_many(self, queries: dict[str, str],
                         k: int = 10) -> dict[str, list]:
@@ -1023,21 +1040,12 @@ class Searcher:
         contending (a thread pool would serialize on the GIL between
         arrow reads — measured 8x worse). Returns
         {name: [(doc_id, score)]}."""
-        from elasticsearch_osmosis_plugin_spark.operators import serve
-
         term_lists = {name: query_terms(q, self.meta)
                       for name, q in queries.items()}
         all_terms = sorted({t for ts in term_lists.values() for t in ts})
-        missing = [t for t in all_terms if t not in self._local_dic]
-        if missing:
-            got = serve.local_dictionary_rows(self.index_path, self.meta,
-                                              missing)
-            for t in missing:
-                self._local_dic[t] = got.get(t)
-        rows = {t: r for t in all_terms
-                if (r := self._local_dic.get(t)) is not None}
         return serve.local_topk_many(self.index_path, term_lists, k,
-                                     meta=self.meta, dic_rows=rows)
+                                     meta=self.meta,
+                                     dic_rows=self._local_rows(all_terms))
 
     def match_count(self, query: str) -> int:
         return match_count(self.spark, self.index_path, query,
@@ -1074,7 +1082,7 @@ class Searcher:
         self.posts = postings_df(self.spark, self.index_path)
         self.dic = dictionary_df(self.spark, self.index_path).persist()
         self._dic_cache = DictionaryCache(self.dic)  # drop stale rows
-        self._local_dic = {}
+        self._local_dic = serve._LRU(maxsize=DIC_MEMO_TERMS)
 
     def close(self) -> None:
         self.dic.unpersist()
@@ -1107,10 +1115,8 @@ def _topk_single_term_blockmax(spark, index_path, term, meta, idf_t, k,
     head_keys = sorted({(r["seg"], r["block"]) for r in head})
     head_pred = functools.reduce(operator.or_, [
         (F.col("seg") == s) & (F.col("block") == b) for s, b in head_keys])
-    decode = _decode_score({term: idf_t}, meta["k1"], meta["b"], meta["avgdl"])
-    score_cols = ["term", "doc_ids_vb", "tfs_vb", "dls_vb"]
-    phase1 = posts.filter(head_pred).select(*score_cols) \
-        .mapInPandas(decode, DECODED_SCHEMA) \
+    phase1 = score_postings(posts.filter(head_pred), {term: idf_t},
+                            _bm25(meta)) \
         .select("doc_id", F.col("partial").alias("score"))
     phase1 = _live(phase1, denied)
     if allowed is not None:
@@ -1121,7 +1127,7 @@ def _topk_single_term_blockmax(spark, index_path, term, meta, idf_t, k,
     # phase 2: only blocks that could beat θ and weren't already decoded
     rest = posts.filter(~head_pred
                         & (F.col("block_max_wand") * scale >= F.lit(theta)))
-    phase2 = rest.select(*score_cols).mapInPandas(decode, DECODED_SCHEMA) \
+    phase2 = score_postings(rest, {term: idf_t}, _bm25(meta)) \
         .select("doc_id", F.col("partial").alias("score"))
     phase2 = _live(phase2, denied)
     if allowed is not None:
@@ -1167,13 +1173,11 @@ def _theta_seed(spark, index_path, term, meta, idf_t, k, posts,
             else 0.0
     # ONE Spark action: TakeOrdered picks the best block by metadata,
     # limit(1) feeds the decode kernel just that block
-    seed = (p.select("term", "doc_ids_vb", "tfs_vb", "dls_vb",
+    best = (p.select("term", "doc_ids_vb", "tfs_vb", "dls_vb",
                      "block_max_wand", "seg", "block")
             .orderBy(F.desc("block_max_wand"), F.asc("seg"), F.asc("block"))
-            .limit(1)
-            .select("term", "doc_ids_vb", "tfs_vb", "dls_vb")
-            .mapInPandas(_decode_score({term: idf_t}, meta["k1"], meta["b"],
-                                       meta["avgdl"]), DECODED_SCHEMA))
+            .limit(1))
+    seed = score_postings(best, {term: idf_t}, _bm25(meta))
     seed = _live(seed, denied)  # a tombstoned doc must not raise θ
     if allowed is not None:
         # θ must lower-bound the FILTERED k-th score, or MaxScore would
@@ -1241,18 +1245,7 @@ def match_count(spark: SparkSession, index_path: str, query: str, *,
         # (df = docs containing the term) — no posting decode at all;
         # with live tombstones the decode path subtracts them instead
         return int(dic["df"].iloc[0])
-    posts = _pruned_postings(spark, index_path, list(dic["term"]), meta, _posts)
-
-    def ids_only(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = [np.cumsum(vb_decode(b), dtype=np.uint64).astype(np.int64)
-                    for b in pdf["doc_ids_vb"]]
-            if outs:
-                yield pd.DataFrame({"doc_id": np.concatenate(outs)})
-
-    return (_live(posts.select("doc_ids_vb")
-                  .mapInPandas(ids_only, "doc_id long"),
-                  tombstones_df(spark, index_path, meta))
+    return (term_docs(spark, index_path, list(dic["term"]), meta, _posts)
             .select("doc_id").distinct().count())
 
 

@@ -29,10 +29,12 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from elasticsearch_osmosis_plugin_spark.functions.tokenizer import tokenize_py
 from elasticsearch_osmosis_plugin_spark.operators.query import (
     _live,
+    _pruned_postings,
     _scored,
     dictionary_rows,
     idf,
     query_terms,
+    raw_postings,
 )
 from elasticsearch_osmosis_plugin_spark.operators.topk import deterministic_topk
 from elasticsearch_osmosis_plugin_spark.plans.build import load_meta, tombstones_df
@@ -852,31 +854,6 @@ def match_bool_prefix_topk(spark: SparkSession, index_path: str, text: str,
     return deterministic_topk(merged, k)
 
 
-TF_SCHEMA = "term string, doc_id long, tf double"
-
-
-def _decode_tf():
-    """mapInPandas kernel: posting blocks -> raw (term, doc_id, tf)."""
-    import numpy as np
-    import pandas as pd
-
-    from elasticsearch_osmosis_plugin_spark.functions.varbyte import vb_decode
-
-    def fn(batches):
-        for pdf in batches:
-            outs = []
-            for term, ids_vb, tfs_vb in zip(
-                    pdf["term"], pdf["doc_ids_vb"], pdf["tfs_vb"]):
-                d = np.cumsum(vb_decode(ids_vb),
-                              dtype=np.uint64).astype(np.int64)
-                tf = vb_decode(tfs_vb).astype(np.float64)
-                outs.append(pd.DataFrame(
-                    {"term": term, "doc_id": d, "tf": tf}))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-    return fn
-
-
 def combined_fields_topk(spark: SparkSession,
                          field_indexes: dict[str, str], query: str,
                          k: int = 10,
@@ -923,13 +900,9 @@ def combined_fields_topk(spark: SparkSession,
         terms = query_terms(query, meta)
         dic = dictionary_rows(spark, path, terms, meta)
         if not dic.empty:
-            from elasticsearch_osmosis_plugin_spark.operators.query import (
-                _pruned_postings,
-            )
-
-            raw = (_pruned_postings(spark, path, list(dic["term"]), meta)
-                   .select("term", "doc_ids_vb", "tfs_vb")
-                   .mapInPandas(_decode_tf(), TF_SCHEMA))
+            raw = raw_postings(_pruned_postings(spark, path,
+                                                list(dic["term"]), meta),
+                               with_dl=False)
             raw = _live(raw, tombstones_df(spark, path, meta))
             tf_parts.append(raw.select(
                 "term", "doc_id", (F.col("tf") * w[f]).alias("wtf")))

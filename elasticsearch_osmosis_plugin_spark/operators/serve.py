@@ -23,7 +23,9 @@ cluster in the loop. Row-group statistics prune only when a bucket
 file has several row groups: at Spark's default 128 MB parquet block a
 bucket file is one row group, so a term read decompresses that file's
 payload columns and the term filter applies after decode. Decoding is
-batch-at-a-time: one varbyte pass per posting column per bucket read.
+batch-at-a-time through ``functions.varbyte.decode_rows``, the one
+posting decoder the Spark kernels and merge use too: one varbyte pass
+per posting column per bucket read.
 On a real deployment the index lives on shared storage (S3/HDFS);
 pyarrow reads it the same way.
 """
@@ -39,8 +41,8 @@ from collections import OrderedDict
 import numpy as np
 
 from elasticsearch_osmosis_plugin_spark.functions.varbyte import (
-    delta_decode_groups,
-    vb_decode,
+    decode_doc_ids,
+    decode_rows,
 )
 from elasticsearch_osmosis_plugin_spark.plans.build import (
     bucket_of,
@@ -294,25 +296,6 @@ class _ByteLRU:
 postings_cache = _ByteLRU(max_bytes=256 << 20)
 
 
-def _decode_column(col) -> tuple[np.ndarray, np.ndarray]:
-    """One ``vb_decode`` over every row of a pyarrow binary column
-    (Array or ChunkedArray) -> (uint64 values of all rows in row
-    order, int64 value count per row). Works on the array's int32
-    offsets and value buffer in place (honouring a slice offset); a
-    row's value count is its number of terminator bytes."""
-    import pyarrow as pa
-
-    if isinstance(col, pa.ChunkedArray):
-        col = col.combine_chunks()
-    _, obuf, vbuf = col.buffers()
-    offs = np.frombuffer(obuf, dtype=np.int32)[
-        col.offset:col.offset + len(col) + 1].astype(np.int64)
-    data = np.frombuffer(vbuf, dtype=np.uint8)[offs[0]:offs[-1]]
-    terms_before = np.zeros(data.size + 1, dtype=np.int64)
-    np.cumsum(data >= 0x80, out=terms_before[1:])
-    return vb_decode(data), np.diff(terms_before[offs - offs[0]])
-
-
 def _gather_term_postings(index_path: str, meta: dict,
                           terms: list[str],
                           cache: _ByteLRU | None = postings_cache,
@@ -359,13 +342,11 @@ def _gather_term_postings(index_path: str, meta: dict,
             files, ["term", "doc_ids_vb", "tfs_vb", "dls_vb"], missing)
         if tbl is None or tbl.num_rows == 0:
             continue
-        # one decode per column for the whole read; each row's doc ids
-        # restart from an absolute value (delta-encoded per row)
-        deltas, n = _decode_column(tbl["doc_ids_vb"])
+        # one decode per column for the whole read
+        ids, n = decode_doc_ids(tbl["doc_ids_vb"])
         first = np.cumsum(n) - n
-        ids = delta_decode_groups(deltas, first[n > 0]).astype(np.int64)
-        tfs = _decode_column(tbl["tfs_vb"])[0].astype(np.float64)
-        dls = _decode_column(tbl["dls_vb"])[0].astype(np.float64)
+        tfs = decode_rows(tbl["tfs_vb"])[0].astype(np.float64)
+        dls = decode_rows(tbl["dls_vb"])[0].astype(np.float64)
         row_terms = tbl["term"].to_numpy(zero_copy_only=False)
         for term in dict.fromkeys(row_terms):
             # the term's rows in table order (file, then row), values
@@ -395,8 +376,8 @@ def _gather_term_postings(index_path: str, meta: dict,
 # scores stay bit-for-bit equal to the uncached path.
 merge_cache = _ByteLRU(max_bytes=64 << 20)
 
-# Per-term BM25 weight vectors: w = idf * tf * (k1+1) / (tf + k1 *
-# (1 - b + b * dl/avgdl)) depends only on the term's posting bytes
+# Per-term BM25 weight vectors: w = query.bm25_weight(idf, tf, dl)
+# depends only on the term's posting bytes
 # (signature) and the scoring snapshot (n_docs, avgdl, k1, b, df) —
 # all in the key, so an index mutation OR a meta change (append moves
 # avgdl/n_docs) misses and recomputes. The cached vector is the exact
@@ -427,11 +408,14 @@ def _score_from_postings(live: list[str], posts: dict[str, tuple],
                          sigs: dict | None = None
                          ) -> list[tuple[int, float]]:
     """BM25 accumulate + tombstone mask + deterministic top-k over
-    pre-gathered per-term postings — identical arithmetic to
-    query._decode_score. ``sigs``: term -> posting bucket signature
+    pre-gathered per-term postings — the Spark kernels' weight,
+    ``query.bm25_weight``. ``sigs``: term -> posting bucket signature
     (from ``_gather_term_postings``); when present the doc-id merge
     structure comes from / lands in ``merge_cache``."""
-    from elasticsearch_osmosis_plugin_spark.operators.query import idf
+    from elasticsearch_osmosis_plugin_spark.operators.query import (
+        bm25_weight,
+        idf,
+    )
 
     k1, b, avgdl = meta["k1"], meta["b"], float(meta["avgdl"])
     n_docs = int(meta["n_docs"])
@@ -450,8 +434,7 @@ def _score_from_postings(live: list[str], posts: dict[str, tuple],
             if hit_w is not None and hit_w.size == tf.size:
                 w = hit_w
         if w is None:
-            w = idf(n_docs, df_t) * tf * (k1 + 1.0) \
-                / (tf + k1 * (1.0 - b + b * dl / avgdl))
+            w = bm25_weight(idf(n_docs, df_t), tf, dl, k1, b, avgdl)
             if wkey is not None:
                 weight_cache.put(wkey, w, w.nbytes)
         ids_parts.append(d)

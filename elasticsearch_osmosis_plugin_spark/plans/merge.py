@@ -27,7 +27,11 @@ import uuid
 from pyspark.sql import SparkSession, functions as F
 
 from elasticsearch_osmosis_plugin_spark.plans import catalog
-from elasticsearch_osmosis_plugin_spark.plans.build import index_groups, load_meta
+from elasticsearch_osmosis_plugin_spark.plans.build import (
+    POSTING_SCHEMA,
+    index_groups,
+    load_meta,
+)
 
 
 def compact_index(spark: SparkSession, index_path: str) -> dict:
@@ -70,92 +74,78 @@ def drop_term_vectors(spark: SparkSession, index_path: str) -> None:
                               partition_by=["grp"])
 
 
-def _rewrite_block(r, ids, keep, k1: float, b: float, avgdl_eff: float,
-                   np, vb_decode, vb_encode_groups, delta_encode_groups,
-                   delta_decode_groups):
-    """Re-encode one posting block keeping only ``keep``-masked docs,
-    recomputing stats/bounds under ``avgdl_eff``. Returns the new row
-    dict, or None when every entry died. Shared by the exact-broadcast
-    and bloom/attached purge kernels — one encoder, two membership
-    strategies."""
-    if not keep.any():
-        return None
-    tf = vb_decode(r.tfs_vb).astype(np.int64)
-    dl = vb_decode(r.dls_vb).astype(np.int64)
-    pos_all = vb_decode(r.pos_vb)
-    starts = np.zeros(tf.size, dtype=np.int64)
-    np.cumsum(tf[:-1], out=starts[1:])
-    ids_k, tf_k, dl_k = ids[keep], tf[keep], dl[keep]
-    z = np.zeros(1, dtype=np.int64)
-    if pos_all.size:
-        pos = delta_decode_groups(pos_all, starts)
-        kept_pos = np.concatenate(
-            [pos[s:s + n] for s, n in
-             zip(starts[keep], tf[keep])]) if keep.any() else pos[:0]
-        pstarts = np.zeros(tf_k.size, dtype=np.int64)
-        np.cumsum(tf_k[:-1], out=pstarts[1:])
-        pos_vb = b"".join(vb_encode_groups(
-            delta_encode_groups(kept_pos.astype(np.uint64), pstarts), z))
-    else:
-        pos_vb = b""
-    w = tf_k / (tf_k + k1 * (1.0 - b + b * dl_k / avgdl_eff))
-    return {
-        "bucket": r.bucket, "term": r.term, "seg": r.seg,
-        "block": r.block, "n": int(tf_k.size),
-        "sum_tf": int(tf_k.sum()),
-        "block_max_wand": float(w.max()),
-        "min_doc": int(ids_k[0]), "max_doc": int(ids_k[-1]),
-        "doc_ids_vb": b"".join(vb_encode_groups(
-            delta_encode_groups(ids_k.astype(np.uint64), z), z)),
-        "tfs_vb": b"".join(vb_encode_groups(tf_k.astype(np.uint64), z)),
-        "dls_vb": b"".join(vb_encode_groups(dl_k.astype(np.uint64), z)),
-        "pos_vb": pos_vb,
-    }
+_POSTING_COLS = [f.split()[0] for f in POSTING_SCHEMA.split(",")]
 
 
 def _purge_kernel(dead_bc, k1: float, b: float, avgdl_eff: float):
-    """mapInPandas kernel: drop tombstoned docs from each posting block
-    and recompute its stats/payloads. Per-ROW (per-block) work — no
-    shuffle; blocks that lose every entry are dropped. Bounds are
-    recomputed under ``avgdl_eff`` = max(old, new avgdl), valid for
-    readers of either meta snapshot (w is monotone in avgdl).
+    """mapInArrow kernel: drop tombstoned docs from each posting block
+    and recompute its stats/payloads, one Arrow batch of blocks at a
+    time — no shuffle; blocks that lose every entry are dropped. Each
+    payload column decodes once per batch, survivors re-encode with the
+    group encoders (one group per block), and the per-block stats are
+    ``reduceat``s. Bounds are recomputed under ``avgdl_eff`` = max(old,
+    new avgdl), valid for readers of either meta snapshot (w is
+    monotone in avgdl).
 
     ``dead_bc``: a Spark Broadcast of the SORTED int64 tombstone id
     array — torrent-distributed once per executor, never serialized
     into the task closure or the query plan, so the kernel scales to
-    millions of tombstones (membership is a binary search per block,
-    not a re-sort of the dead set per block as ``np.isin`` would do)."""
+    millions of tombstones (membership is one binary search per batch).
+    ``None`` on the bloom path: each row then carries the exactly
+    verified dead ids of ITS block (``dead_ids``, null when none), and
+    the batch's dead set is their union — exact, because a row's list
+    holds every tombstoned id present in that block."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     from elasticsearch_osmosis_plugin_spark.functions.varbyte import (
-        delta_decode_groups,
+        decode_doc_ids,
+        decode_rows,
         delta_encode_groups,
-        vb_decode,
         vb_encode_groups,
     )
 
+    def encode(values, starts):
+        return pa.array(vb_encode_groups(values.astype(np.uint64), starts),
+                        pa.binary())
+
     def fn(batches):
-        dead_arr = dead_bc.value  # sorted int64, one copy per executor
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                ids = np.cumsum(vb_decode(r.doc_ids_vb),
-                                dtype=np.uint64).astype(np.int64)
-                if dead_arr.size:
-                    pos = np.searchsorted(dead_arr, ids)
-                    keep = ~((pos < dead_arr.size)
-                             & (dead_arr[np.minimum(pos, dead_arr.size - 1)]
-                                == ids))
-                else:
-                    keep = np.ones(ids.size, dtype=bool)
-                row = _rewrite_block(r, ids, keep, k1, b, avgdl_eff,
-                                     np, vb_decode, vb_encode_groups,
-                                     delta_encode_groups, delta_decode_groups)
-                if row is not None:
-                    rows.append(row)
-            if rows:
-                yield pd.DataFrame(rows)
+        for batch in batches:
+            dead = (dead_bc.value if dead_bc is not None else
+                    np.unique(batch.column("dead_ids").flatten().to_numpy()))
+            ids, n = decode_doc_ids(batch.column("doc_ids_vb"))
+            keep = (dead[np.minimum(np.searchsorted(dead, ids),
+                                    dead.size - 1)] != ids
+                    if dead.size else np.ones(ids.size, dtype=bool))
+            kept_n = np.bincount(np.repeat(np.arange(n.size), n)[keep],
+                                 minlength=n.size)
+            live = np.flatnonzero(kept_n)
+            if not live.size:
+                continue
+            tf = decode_rows(batch.column("tfs_vb"))[0].astype(np.int64)
+            dl = decode_rows(batch.column("dls_vb"))[0].astype(np.int64)
+            pos = decode_rows(batch.column("pos_vb"))[0]
+            ids_k, tf_k, dl_k = ids[keep], tf[keep], dl[keep]
+            starts = (np.cumsum(kept_n) - kept_n)[live]
+            w = tf_k / (tf_k + k1 * (1.0 - b + b * dl_k / avgdl_eff))
+            if pos.size:
+                # positions are delta-encoded per (term, doc) run, so a
+                # kept doc's run re-encodes to the same values
+                pos_vb = encode(pos[np.repeat(keep, tf)],
+                                (np.cumsum(tf_k) - tf_k)[starts])
+            else:
+                pos_vb = pa.array([b""] * live.size, pa.binary())
+            yield pa.RecordBatch.from_arrays([
+                *(batch.column(c).take(live)
+                  for c in ("bucket", "term", "seg", "block")),
+                pa.array(kept_n[live].astype(np.int32)),
+                pa.array(np.add.reduceat(tf_k, starts)),
+                pa.array(np.maximum.reduceat(w, starts)),
+                pa.array(ids_k[starts]),
+                pa.array(ids_k[np.append(starts[1:], ids_k.size) - 1]),
+                encode(delta_encode_groups(ids_k, starts), starts),
+                encode(tf_k, starts), encode(dl_k, starts), pos_vb,
+            ], names=_POSTING_COLS)
     return fn
 
 
@@ -247,71 +237,28 @@ CAND_SCHEMA = "bucket int, term string, seg long, block int, cand long"
 
 
 def _cand_kernel(bloom_bc, n_bits: int, k: int = 4):
-    """mapInPandas: decode each block's doc ids, keep the bloom-
+    """mapInArrow: decode a batch's doc ids at once, keep the bloom-
     positive ones as (block key, candidate id) rows. Reads only the
     doc_ids_vb payload (no tf/dl/pos decode)."""
     import numpy as np
-    import pandas as pd
-
-    from elasticsearch_osmosis_plugin_spark.functions.varbyte import vb_decode
-
-    def fn(batches):
-        words = bloom_bc.value.view(np.uint64)
-        for pdf in batches:
-            outs = []
-            for r in pdf.itertuples(index=False):
-                ids = np.cumsum(vb_decode(r.doc_ids_vb), dtype=np.uint64)
-                cand = _bloom_probe(words, ids, n_bits, k)
-                if cand.any():
-                    outs.append(pd.DataFrame({
-                        "bucket": r.bucket, "term": r.term, "seg": r.seg,
-                        "block": r.block,
-                        "cand": ids[cand].astype(np.int64)}))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-    return fn
-
-
-def _purge_kernel_attached(k1: float, b: float, avgdl_eff: float):
-    """mapInPandas kernel for the bloom path: each posting row arrives
-    with an attached ``dead_ids`` array (the exactly-verified dead ids
-    present in THAT block; null when the block has none). Same encoder
-    and bound semantics as the exact kernel — every block's bounds are
-    recomputed under avgdl_eff so both kernels leave identical
-    invariants for readers."""
-    import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     from elasticsearch_osmosis_plugin_spark.functions.varbyte import (
-        delta_decode_groups,
-        delta_encode_groups,
-        vb_decode,
-        vb_encode_groups,
+        decode_doc_ids,
     )
 
     def fn(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                ids = np.cumsum(vb_decode(r.doc_ids_vb),
-                                dtype=np.uint64).astype(np.int64)
-                dead = r.dead_ids
-                if dead is None or (hasattr(dead, "__len__")
-                                    and len(dead) == 0):
-                    keep = np.ones(ids.size, dtype=bool)
-                else:
-                    dead_arr = np.asarray(dead, dtype=np.int64)  # sorted
-                    pos = np.searchsorted(dead_arr, ids)
-                    keep = ~((pos < dead_arr.size)
-                             & (dead_arr[np.minimum(pos, dead_arr.size - 1)]
-                                == ids))
-                row = _rewrite_block(r, ids, keep, k1, b, avgdl_eff,
-                                     np, vb_decode, vb_encode_groups,
-                                     delta_encode_groups, delta_decode_groups)
-                if row is not None:
-                    rows.append(row)
-            if rows:
-                yield pd.DataFrame(rows)
+        words = bloom_bc.value.view(np.uint64)
+        for batch in batches:
+            ids, n = decode_doc_ids(batch.column("doc_ids_vb"))
+            cand = np.flatnonzero(
+                _bloom_probe(words, ids.astype(np.uint64), n_bits, k))
+            rows = np.repeat(np.arange(n.size), n)[cand]
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(c).take(rows)
+                 for c in ("bucket", "term", "seg", "block")]
+                + [pa.array(ids[cand])],
+                names=["bucket", "term", "seg", "block", "cand"])
     return fn
 
 
@@ -319,7 +266,7 @@ def purge_deletes(spark: SparkSession, index_path: str,
                   max_exact_broadcast: int = 10_000_000) -> dict:
     """Physically remove tombstoned docs (the Lucene expunge-deletes /
     forced-merge analog): rewrite the doc store without them, rewrite
-    every posting block without their entries (per-block kernel, no
+    every posting block without their entries (batched kernel, no
     shuffle), rebuild the dictionary, recompute corpus stats, clear the
     tombstones. After this, df/avgdl/n_docs no longer count the deleted
     docs — queries score exactly as a fresh build over the live corpus.
@@ -336,11 +283,8 @@ def purge_deletes(spark: SparkSession, index_path: str,
     deletion is possible (the bloom only nominates candidates; the
     semi-join confirms them exactly)."""
     from elasticsearch_osmosis_plugin_spark.plans.build import (
-        POSTING_SCHEMA,
         _write_dictionary,
         _write_meta,
-        index_groups,
-        load_meta,
         tombstones_df,
     )
 
@@ -386,8 +330,7 @@ def purge_deletes(spark: SparkSession, index_path: str,
     avgdl_eff = max(float(meta["avgdl"]) * float(meta.get("wand_slack", 1.0)),
                     avgdl_new)
 
-    kern = (None if use_bloom else
-            _purge_kernel(dead_bc, meta["k1"], meta["b"], avgdl_eff))
+    kern = _purge_kernel(dead_bc, meta["k1"], meta["b"], avgdl_eff)
     tomb_ids = tombs.select(
         F.col("doc_id").cast("long").alias("cand")).distinct()
     for g in index_groups(meta):
@@ -399,28 +342,21 @@ def purge_deletes(spark: SparkSession, index_path: str,
             # reads only the block key + doc_ids_vb (column pruning
             # keeps tf/dl/pos payloads on disk); pass 2 verifies them
             # EXACTLY via a semi-join against the tombstone relation,
-            # re-groups the survivors per block (sorted, so the kernel
-            # binary-searches), and joins them back onto the posting
-            # rows. Blocks with no verified dead id join to NULL and
-            # are re-encoded unchanged.
+            # re-groups the survivors per block and joins them back
+            # onto the posting rows. Blocks with no verified dead id
+            # join to NULL and are re-encoded unchanged.
             cands = (posts
                      .select("bucket", "term", "seg", "block",
                              "doc_ids_vb")
-                     .mapInPandas(_cand_kernel(bloom_bc, n_bits),
-                                  CAND_SCHEMA))
+                     .mapInArrow(_cand_kernel(bloom_bc, n_bits),
+                                 CAND_SCHEMA))
             dead_per_block = (
                 cands.join(tomb_ids, "cand", "left_semi")
                 .groupBy("bucket", "term", "seg", "block")
-                .agg(F.sort_array(F.collect_list("cand"))
-                     .alias("dead_ids")))
-            enriched = posts.join(dead_per_block,
-                                  ["bucket", "term", "seg", "block"],
-                                  "left")
-            rewritten = enriched.mapInPandas(
-                _purge_kernel_attached(meta["k1"], meta["b"], avgdl_eff),
-                POSTING_SCHEMA)
-        else:
-            rewritten = posts.mapInPandas(kern, POSTING_SCHEMA)
+                .agg(F.collect_list("cand").alias("dead_ids")))
+            posts = posts.join(dead_per_block,
+                               ["bucket", "term", "seg", "block"], "left")
+        rewritten = posts.mapInArrow(kern, POSTING_SCHEMA)
         purged = (rewritten
                   .repartition(meta["n_buckets"], "bucket")
                   .sortWithinPartitions("term", "seg", "block"))
@@ -531,12 +467,9 @@ def verify_index(spark: SparkSession, index_path: str,
       the docstats doc store, and postings reference no unknown docs;
     - ``tombstones``: tombstoned ids all exist in the doc store.
     """
-    from typing import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    from elasticsearch_osmosis_plugin_spark.functions.varbyte import vb_decode
+    from elasticsearch_osmosis_plugin_spark.operators.query import (
+        raw_postings,
+    )
     from elasticsearch_osmosis_plugin_spark.plans.build import (
         dictionary_df,
         postings_df,
@@ -570,18 +503,6 @@ def verify_index(spark: SparkSession, index_path: str,
             | (F.col("content_sha") != F.col("_src_sha"))).count()
         out["row_invariant"] = {"ok": bad == 0, "mismatches": int(bad)}
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for term, ids_vb, tfs_vb, dls_vb in zip(
-                    pdf["term"], pdf["doc_ids_vb"], pdf["tfs_vb"],
-                    pdf["dls_vb"]):
-                d = np.cumsum(vb_decode(ids_vb),
-                              dtype=np.uint64).astype(np.int64)
-                yield pd.DataFrame({
-                    "term": term, "doc_id": d,
-                    "tf": vb_decode(tfs_vb).astype(np.int64),
-                    "dl": vb_decode(dls_vb).astype(np.int64)})
-
     if missing:
         out["dictionary"] = {"ok": False, "mismatched_terms": None,
                              "skipped": "structure incomplete"}
@@ -590,11 +511,7 @@ def verify_index(spark: SparkSession, index_path: str,
         out["ok"] = False
         return out
 
-    decoded = (postings_df(spark, index_path)
-               .select("term", "doc_ids_vb", "tfs_vb", "dls_vb")
-               .mapInPandas(_decode,
-                            "term string, doc_id long, tf long, dl long"))
-    decoded = decoded.persist()
+    decoded = raw_postings(postings_df(spark, index_path)).persist()
     try:
         stats = (decoded.groupBy("term")
                  .agg(F.countDistinct("doc_id").alias("_df"),

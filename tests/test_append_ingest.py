@@ -596,3 +596,121 @@ def test_streaming_ingest_auto_compaction(spark, corpus_rows, tmp_path):
     for q in QUERIES:
         assert _rows((spark, inc), q, "scoreall") \
             == _rows((spark, full), q, "scoreall"), q
+
+
+def _purge_reference(row, dead, k1, b, avgdl_eff):
+    """Per-block rewrite the batched purge kernel must reproduce byte
+    for byte: decode one block, drop dead docs, re-encode, recompute
+    stats and the block bound. None when every entry died."""
+    import numpy as np
+
+    from elasticsearch_osmosis_plugin_spark.functions.varbyte import (
+        delta_decode_groups,
+        delta_encode_groups,
+        vb_decode,
+        vb_encode_groups,
+    )
+
+    ids = np.cumsum(vb_decode(row["doc_ids_vb"]),
+                    dtype=np.uint64).astype(np.int64)
+    keep = ~np.isin(ids, dead)
+    if not keep.any():
+        return None
+    tf = vb_decode(row["tfs_vb"]).astype(np.int64)
+    dl = vb_decode(row["dls_vb"]).astype(np.int64)
+    pos_all = vb_decode(row["pos_vb"])
+    starts = np.zeros(tf.size, dtype=np.int64)
+    np.cumsum(tf[:-1], out=starts[1:])
+    ids_k, tf_k, dl_k = ids[keep], tf[keep], dl[keep]
+    z = np.zeros(1, dtype=np.int64)
+    pos_vb = b""
+    if pos_all.size:
+        pos = delta_decode_groups(pos_all, starts)
+        kept_pos = np.concatenate(
+            [pos[s:s + n] for s, n in zip(starts[keep], tf[keep])])
+        pstarts = np.zeros(tf_k.size, dtype=np.int64)
+        np.cumsum(tf_k[:-1], out=pstarts[1:])
+        pos_vb = b"".join(vb_encode_groups(
+            delta_encode_groups(kept_pos.astype(np.uint64), pstarts), z))
+    w = tf_k / (tf_k + k1 * (1.0 - b + b * dl_k / avgdl_eff))
+    return {
+        "bucket": row["bucket"], "term": row["term"], "seg": row["seg"],
+        "block": row["block"], "n": int(tf_k.size),
+        "sum_tf": int(tf_k.sum()), "block_max_wand": float(w.max()),
+        "min_doc": int(ids_k[0]), "max_doc": int(ids_k[-1]),
+        "doc_ids_vb": b"".join(vb_encode_groups(
+            delta_encode_groups(ids_k.astype(np.uint64), z), z)),
+        "tfs_vb": b"".join(vb_encode_groups(tf_k.astype(np.uint64), z)),
+        "dls_vb": b"".join(vb_encode_groups(dl_k.astype(np.uint64), z)),
+        "pos_vb": pos_vb,
+    }
+
+
+@pytest.mark.parametrize("positions", [True, False])
+def test_purge_kernel_matches_per_block_reference(spark, positions):
+    """The batched purge kernel's output equals the per-block
+    reference byte for byte, on the exact (broadcast dead array) and
+    the bloom (attached per-block ``dead_ids``) inputs, over sliced
+    batches: a block that loses every entry is dropped, a block with
+    no dead id is re-encoded with its bound recomputed."""
+    from types import SimpleNamespace
+
+    import numpy as np
+    import pyarrow as pa
+
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    from elasticsearch_osmosis_plugin_spark.functions.varbyte import (
+        delta_encode,
+        delta_encode_groups,
+        vb_encode,
+    )
+    from elasticsearch_osmosis_plugin_spark.plans.build import POSTING_SCHEMA
+    from elasticsearch_osmosis_plugin_spark.plans.merge import _purge_kernel
+
+    rng = np.random.default_rng(5)
+    rows, block_ids = [], []
+    for i in range(9):
+        n = int(rng.integers(1, 20))
+        ids = np.sort(rng.choice(400, n, replace=False)).astype(np.int64) \
+            + (1 << 60) * (i % 2) + 1000 * (i == 1)
+        tf = rng.integers(1, 5, n)
+        dl = tf + rng.integers(0, 40, n)
+        pos = [np.sort(rng.choice(d, t, replace=False))
+               for t, d in zip(tf, dl)]
+        starts = np.cumsum(tf) - tf
+        rows.append({
+            "bucket": i % 3, "term": f"t{i % 4}", "seg": i // 4, "block": i,
+            "n": n, "sum_tf": int(tf.sum()), "block_max_wand": 1.0,
+            "min_doc": int(ids[0]), "max_doc": int(ids[-1]),
+            "doc_ids_vb": vb_encode(delta_encode(ids.astype(np.uint64))),
+            "tfs_vb": vb_encode(tf.astype(np.uint64)),
+            "dls_vb": vb_encode(dl.astype(np.uint64)),
+            "pos_vb": vb_encode(delta_encode_groups(
+                np.concatenate(pos).astype(np.uint64), starts))
+            if positions else b""})
+        block_ids.append(ids)
+    dead = set(block_ids[0].tolist())                 # block 0 dies
+    for ids in block_ids[2:]:                         # block 1 untouched
+        dead |= set(rng.choice(ids, ids.size // 3, replace=False).tolist())
+    dead = np.array(sorted(dead), dtype=np.int64)
+    assert not np.isin(block_ids[1], dead).any()
+
+    schema = to_arrow_schema(_parse_datatype_string(POSTING_SCHEMA))
+    table = pa.Table.from_pylist(rows, schema=schema)
+    attached = [sorted(set(ids.tolist()) & set(dead.tolist())) or None
+                for ids in block_ids]
+    k1, b, avgdl_eff = 1.2, 0.75, 21.5
+    want = [r for r in (_purge_reference(row, dead, k1, b, avgdl_eff)
+                        for row in rows) if r is not None]
+    assert len(want) == len(rows) - 1
+    cases = [(SimpleNamespace(value=dead), table),
+             (None, table.append_column(
+                 "dead_ids", pa.array(attached, pa.list_(pa.int64()))))]
+    for dead_bc, tbl in cases:
+        batch = tbl.combine_chunks().to_batches()[0]
+        batches = [batch.slice(0, 4), batch.slice(4)]
+        out = list(_purge_kernel(dead_bc, k1, b, avgdl_eff)(iter(batches)))
+        assert all(o.schema == schema for o in out)
+        assert pa.Table.from_batches(out).to_pylist() == want

@@ -2308,6 +2308,39 @@ def test_local_serving_k_zero_and_cache_byte_bounds(spark, index_path,
     s.close()
 
 
+def test_dictionary_memos_bounded(spark, index_path, monkeypatch):
+    """Both per-term dictionary memos of a Searcher (the Spark-path
+    DictionaryCache and the driver-local memo) stay within
+    DIC_MEMO_TERMS after twice that many distinct unknown terms, and a
+    repeated unknown term is answered from the memo without a second
+    dictionary read."""
+    from elasticsearch_osmosis_plugin_spark.operators import query as Q
+    from elasticsearch_osmosis_plugin_spark.operators import serve
+
+    meta = load_meta(index_path)
+    bound = Q.DIC_MEMO_TERMS
+    unknown = [f"zzunknown{i:06d}" for i in range(2 * bound)]
+    s = Q.Searcher(spark, index_path)
+    try:
+        reads = []
+        real = serve.local_dictionary_rows
+        monkeypatch.setattr(serve, "local_dictionary_rows",
+                            lambda *a, **kw: reads.append(a[2]) or real(*a, **kw))
+        assert s._local_rows(unknown) == {}
+        assert len(s._local_dic._d) <= bound
+        assert s._local_rows(unknown[-1:] + ["public"])
+        assert s._local_rows(unknown[-1:]) == {}
+        assert reads[1:] == [["public"]]
+
+        dc = s._dic_cache
+        assert dc.rows(unknown, meta).empty
+        assert len(dc._rows._d) <= bound
+        dc.df = None        # any further dictionary read would raise
+        assert dc.rows(unknown[-1:], meta).empty
+    finally:
+        s.close()
+
+
 def test_listing_cache_racy_timestamp(tmp_path):
     """A listing taken while the directory's mtime is recent is not
     cached: a file added within the same mtime tick (simulated by

@@ -51,7 +51,7 @@ def test_parquet_scan_projects_needed_columns_only(spark, index_path):
 
 def test_topk_many_single_decode(spark, index_path):
     """The batched serving path's amortization claim, pinned in the
-    plan: ONE MapInPandas decode for the whole batch (not one per
+    plan: ONE MapInArrow decode for the whole batch (not one per
     query) and a broadcast fan-out of the (query_id, term) relation."""
     from elasticsearch_osmosis_plugin_spark.operators.query import topk_many
 
@@ -59,7 +59,7 @@ def test_topk_many_single_decode(spark, index_path):
                                        "b": "static void",
                                        "c": "import"}, k=5)
     plan = _plan(df)
-    assert plan.count("MapInPandas") == 1
+    assert plan.count("MapInArrow") == 1
     assert "BroadcastHashJoin" in plan
 
 
@@ -118,7 +118,7 @@ def test_classic_similarity_plan(spark, index_path):
     from elasticsearch_osmosis_plugin_spark.operators.query import topk_classic
 
     plan = _plan(topk_classic(spark, index_path, "public static", k=10))
-    assert plan.count("MapInPandas") == 1
+    assert plan.count("MapInArrow") == 1
     assert "TakeOrderedAndProject" in plan
 
 

@@ -331,6 +331,34 @@ TS m | WHERE host == "a" | STATS r = SUM(RATE(reqs))
                     "BY b = BUCKET(ts, 1 month)", src)
 
 
+def test_esql_ts_rate_skips_null_samples(spark):
+    """RATE ignores NULL metric samples: the delta runs from the last
+    non-NULL sample, and the observed span is taken over non-NULL
+    samples only — a NULL mid-bucket, at a bucket's first edge and at
+    its last edge."""
+    from elasticsearch_osmosis_plugin_spark.operators.esql import esql
+
+    rows = [("a", "2024-01-01 00:00:00", 100.0),
+            ("a", "2024-01-01 00:00:20", None),      # mid-bucket
+            ("a", "2024-01-01 00:00:40", 160.0),
+            ("a", "2024-01-01 00:01:00", None),      # bucket start edge
+            ("a", "2024-01-01 00:01:20", 200.0),
+            ("a", "2024-01-01 00:01:50", 230.0),
+            ("a", "2024-01-01 00:02:10", 240.0),
+            ("a", "2024-01-01 00:02:40", 300.0),
+            ("a", "2024-01-01 00:02:59", None)]      # bucket end edge
+    df = spark.createDataFrame(rows, "host string, ts string, c double") \
+        .withColumn("ts", F.to_timestamp("ts"))
+    src = {"m": {"df": df, "ts_col": "ts", "dimensions": ["host"],
+                 "metrics": {"c": "counter"}}}
+    out = {r["b"].minute: r["r"] for r in esql(
+        spark, "TS m | STATS r = SUM(RATE(c)) BY b = BUCKET(ts, 1 minute)",
+        src).collect()}
+    assert out[0] == pytest.approx(60.0 / 40.0)
+    assert out[1] == pytest.approx(30.0 / 30.0)
+    assert out[2] == pytest.approx(60.0 / 30.0)
+
+
 def test_esql_ts_plan_two_exchanges(spark):
     """TS plan shape: the series-key exchange is shared by the rate
     window AND the inner (series, bucket) aggregate; only the outer

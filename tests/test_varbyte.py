@@ -6,7 +6,9 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from elasticsearch_osmosis_plugin_spark.functions.varbyte import (
+    decode_doc_ids,
     decode_posting_ids,
+    decode_rows,
     delta_decode,
     delta_encode,
     encode_posting_ids,
@@ -91,10 +93,9 @@ _rows = st.lists(st.lists(st.integers(min_value=0, max_value=(1 << 64) - 1),
 def test_batched_column_decode_matches_per_row(rows, lo, split, chunked):
     """One decode over a binary column's value buffer == per-row
     ``vb_decode``: empty rows, a sliced array (non-zero offset) and a
-    multi-chunk column."""
+    multi-chunk column; ``decode_doc_ids`` == per-row cumsum of the
+    row's gaps."""
     import pyarrow as pa
-
-    from elasticsearch_osmosis_plugin_spark.operators.serve import _decode_column
 
     bufs = [vb_encode(np.array(r, dtype=np.uint64)) for r in rows]
     arr = pa.array(bufs, type=pa.binary())
@@ -105,8 +106,34 @@ def test_batched_column_decode_matches_per_row(rows, lo, split, chunked):
         cut = min(split, len(col))
         col = pa.chunked_array([col.slice(0, cut), col.slice(cut)],
                                type=pa.binary())
-    vals, counts = _decode_column(col)
+    vals, counts = decode_rows(col)
     want = [vb_decode(b) for b in want_rows]
     assert counts.tolist() == [w.size for w in want]
     assert np.array_equal(
         vals, np.concatenate(want) if want else np.empty(0, np.uint64))
+    ids, id_counts = decode_doc_ids(col)
+    assert id_counts.tolist() == counts.tolist()
+    want_ids = [np.cumsum(w, dtype=np.uint64).astype(np.int64) for w in want]
+    assert np.array_equal(
+        ids, np.concatenate(want_ids) if want_ids else np.empty(0, np.int64))
+
+
+def test_vb_decode_only_in_codec_module():
+    """The varbyte codec is the only package code that decodes posting
+    bytes: every other module goes through ``decode_rows`` /
+    ``decode_doc_ids``."""
+    import ast
+    import pathlib
+
+    import elasticsearch_osmosis_plugin_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    calls = []
+    for path in sorted(root.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, ast.Call) and "vb_decode" in (
+                    getattr(node.func, "id", None),
+                    getattr(node.func, "attr", None)):
+                calls.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert calls and all(c.startswith("functions/varbyte.py:")
+                         for c in calls), calls
