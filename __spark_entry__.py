@@ -200,7 +200,7 @@ def q_bm25_topk_idx_local(spark, sf_dir):
     from elasticsearch_osmosis_plugin_spark.operators.query import Searcher
 
     idx = _index_for(spark, sf_dir)
-    s = Searcher(spark, idx, cache_dictionary=False)
+    s = Searcher(spark, idx)
     rows = s.topk_local("spark query join", k=30)
     s.close()
     ranked = sorted(

@@ -73,56 +73,45 @@ def query_terms(query: str, meta: dict) -> list[str]:
 
 _DIC_COLS = ["term", "df", "cf", "n_blocks", "max_wand", "bucket"]
 
-# Per-term dictionary memos hold at most this many terms (LRU), so an
+# A Searcher's per-term dictionary memo is a byte-budgeted LRU, so an
 # adversarial query vocabulary evicts instead of growing the driver
-# heap. Absent terms are memoized as _ABSENT (an LRU miss is None).
-DIC_MEMO_TERMS = 1 << 14
+# heap. A row is a tuple of Python values charged its object bytes
+# (about 460 B with the per-entry charge), so the budget holds ~16k
+# rows. Absent terms are memoized as _ABSENT (an LRU miss is None).
+DIC_MEMO_BYTES = 8 << 20
 _ABSENT = False
-
-
-def _memoized(memo, terms, fetch) -> dict[str, dict]:
-    """term -> dictionary row for the indexed ``terms`` (in order):
-    memo misses go to ``fetch(missing) -> {term: row}`` once, and
-    every fetched term, absent ones too, lands in the memo."""
-    got = {t: memo.get(t) for t in terms}
-    missing = [t for t, r in got.items() if r is None]
-    if missing:
-        found = fetch(missing)
-        for t in missing:
-            got[t] = found.get(t, _ABSENT)
-            memo.put(t, got[t])
-    return {t: r for t, r in got.items() if r is not _ABSENT}
 
 
 class DictionaryCache:
     """Driver-side per-term dictionary memo for a long-lived Searcher:
     a warm term's stats row is fetched from the (persisted) dictionary
-    relation once while it stays among the ``DIC_MEMO_TERMS`` most
-    recently used — repeated queries over a warm vocabulary skip the
-    per-query Spark job that a ``dic.filter(...).toPandas()`` lookup
-    costs (~50-150 ms of fixed scheduling latency, the dominant term
-    in serving p95). Negative hits (absent terms) are memoized too, so
-    unknown-term queries stay one-time."""
+    relation once while it stays within the ``DIC_MEMO_BYTES`` budget
+    — repeated queries over a warm vocabulary skip the per-query Spark
+    job that a ``dic.filter(...).toPandas()`` lookup costs (~50-150 ms
+    of fixed scheduling latency, the dominant term in serving p95).
+    Negative hits (absent terms) are memoized too, so unknown-term
+    queries stay one-time."""
 
     def __init__(self, dic_df: DataFrame):
         self.df = dic_df
-        self._rows = serve._LRU(maxsize=DIC_MEMO_TERMS)
+        self._rows = serve._ByteLRU(max_bytes=DIC_MEMO_BYTES)
 
     def rows(self, terms: Sequence[str], meta: dict) -> pd.DataFrame:
-        def fetch(missing):
+        got = {t: self._rows.get(t) for t in dict.fromkeys(terms)}
+        missing = sorted(t for t, r in got.items() if r is None)
+        if missing:
             buckets = sorted({bucket_of(t, meta["n_buckets"])
                               for t in missing})
             pdf = (self.df.filter(F.col("bucket").isin(buckets)
-                                  & F.col("term").isin(sorted(missing)))
+                                  & F.col("term").isin(missing))
                    .toPandas())
-            return {r["term"]: {c: r[c] for c in _DIC_COLS}
-                    for _, r in pdf.iterrows()}
-
-        hits = list(_memoized(self._rows, dict.fromkeys(terms),
-                              fetch).values())
-        if not hits:
-            return pd.DataFrame(columns=_DIC_COLS)
-        return pd.DataFrame(hits, columns=_DIC_COLS)
+            found = {r[0]: r for r in
+                     pdf[_DIC_COLS].itertuples(index=False, name=None)}
+            for t in missing:
+                got[t] = found.get(t, _ABSENT)
+                self._rows.put(t, got[t], serve._pysize(t, got[t]))
+        return pd.DataFrame([r for r in got.values() if r is not _ABSENT],
+                            columns=_DIC_COLS)
 
 
 def dictionary_rows(spark: SparkSession, index_path: str,
@@ -981,8 +970,7 @@ class Searcher:
     repeated queries pay scoring cost only, not per-query planning,
     file-index rebuild, or dictionary re-reads."""
 
-    def __init__(self, spark: SparkSession, index_path: str,
-                 cache_dictionary: bool = True):
+    def __init__(self, spark: SparkSession, index_path: str):
         from elasticsearch_osmosis_plugin_spark.plans import catalog
 
         self.spark = spark
@@ -993,18 +981,10 @@ class Searcher:
         self.index_path = catalog.resolve_alias(index_path)
         self.meta = load_meta(self.index_path)
         self.posts = postings_df(spark, self.index_path)
-        self.dic = dictionary_df(spark, self.index_path)
-        if cache_dictionary:
-            self.dic = self.dic.persist()
-        # per-term driver memos on TOP of the persisted relation: warm
+        self.dic = dictionary_df(spark, self.index_path).persist()
+        # per-term driver memo on TOP of the persisted relation: warm
         # terms skip the per-query dictionary job entirely
         self._dic_cache = DictionaryCache(self.dic)
-        self._local_dic = serve._LRU(maxsize=DIC_MEMO_TERMS)
-
-    def _local_rows(self, terms: Sequence[str]) -> dict[str, dict]:
-        return _memoized(self._local_dic, terms,
-                         lambda missing: serve.local_dictionary_rows(
-                             self.index_path, self.meta, missing))
 
     def topk(self, query: str, k: int = 10, strategy: str = "auto",
              post_filter=None, boosts=None,
@@ -1016,36 +996,35 @@ class Searcher:
 
     def topk_local(self, query: str, k: int = 10) -> list:
         """Interactive serving path (operators.serve): answer the
-        query by reading the pruned dictionary/posting buckets
-        directly with pyarrow on the driver — no Spark job, no
-        scheduler round-trip, millisecond latencies. Rank-identical
-        to ``topk(strategy="scoreall")`` (lifecycle-tested);
-        dictionary rows memoize per term across calls (bounded LRU).
-        Returns [(doc_id, score)] — post_filter/boosts/msm queries use
-        the Spark path."""
-        terms = query_terms(query, self.meta)
-        return serve.local_topk(self.index_path, terms, k, meta=self.meta,
-                                dic_rows=self._local_rows(terms))
+        query by reading the query terms' posting buckets directly
+        with pyarrow on the driver — no Spark job, no scheduler
+        round-trip, no dictionary read (df is the gathered posting
+        count), millisecond latencies. Rank-identical to
+        ``topk(strategy="scoreall")`` (lifecycle-tested); decoded
+        postings, absent terms included, are cached per term across
+        calls (the byte-budgeted serve.postings_cache). Returns
+        [(doc_id, score)] — post_filter/boosts/msm queries use the
+        Spark path."""
+        return serve.local_topk(self.index_path,
+                                query_terms(query, self.meta), k,
+                                meta=self.meta)
 
     def topk_local_many(self, queries: dict[str, str],
                         k: int = 10) -> dict[str, list]:
         """Concurrent serving: answer N interactive queries through
-        the driver-local path in ONE batched pass — the term union
-        resolves against the dictionary bucket LRU, postings are read
-        once per touched bucket (decoded arrays come from / land in
-        the byte-budgeted serve.postings_cache), and each query scores
-        from the shared decode. Per-query results are identical to
-        solo ``topk_local``; per-query latency under an 8-deep load
-        stays near the solo number because reads amortize instead of
-        contending (a thread pool would serialize on the GIL between
-        arrow reads — measured 8x worse). Returns
-        {name: [(doc_id, score)]}."""
+        the driver-local path in ONE batched pass — postings of the
+        term union are read once per touched bucket (decoded arrays
+        come from / land in the byte-budgeted serve.postings_cache),
+        and each query scores from the shared decode. Per-query
+        results are identical to solo ``topk_local``; per-query
+        latency under an 8-deep load stays near the solo number
+        because reads amortize instead of contending (a thread pool
+        would serialize on the GIL between arrow reads — measured 8x
+        worse). Returns {name: [(doc_id, score)]}."""
         term_lists = {name: query_terms(q, self.meta)
                       for name, q in queries.items()}
-        all_terms = sorted({t for ts in term_lists.values() for t in ts})
         return serve.local_topk_many(self.index_path, term_lists, k,
-                                     meta=self.meta,
-                                     dic_rows=self._local_rows(all_terms))
+                                     meta=self.meta)
 
     def match_count(self, query: str) -> int:
         return match_count(self.spark, self.index_path, query,
@@ -1082,7 +1061,6 @@ class Searcher:
         self.posts = postings_df(self.spark, self.index_path)
         self.dic = dictionary_df(self.spark, self.index_path).persist()
         self._dic_cache = DictionaryCache(self.dic)  # drop stale rows
-        self._local_dic = serve._LRU(maxsize=DIC_MEMO_TERMS)
 
     def close(self) -> None:
         self.dic.unpersist()

@@ -4,17 +4,20 @@ Elasticsearch serves searches from open segment readers on the data
 node — it never launches a cluster job per query. The analogous split
 here: Spark relations remain the BULK path (index builds, analytics,
 batched multi-query scoring), while this module answers a single
-interactive query by reading the SAME index layout — dictionary and
-posting buckets, hive-partitioned parquet — directly through pyarrow
-on the driver, decoding with the same numpy varbyte kernels, and
-scoring with the same BM25 arithmetic. No Spark job, no scheduler
+interactive query by reading the SAME index layout — the query
+terms' posting buckets, hive-partitioned parquet — directly through
+pyarrow on the driver, decoding with the same numpy varbyte kernels,
+and scoring with the same BM25 arithmetic. The dictionary is never
+read: a term's df is its gathered posting count (a term's blocks and
+groups hold disjoint docs, and ``plans.merge.verify_index`` checks
+dictionary df == posting count). No Spark job, no scheduler
 round-trip: the ~0.4 s fixed per-job latency of the distributed path
-drops to single-digit milliseconds for dictionary-pruned reads.
+drops to single-digit milliseconds for bucket-pruned reads.
 
 Rank identity with the distributed scoreall path is pinned by tests
-(build → append → delete → compact lifecycle); the local path refuses
-(ValueError) anything it cannot answer bit-for-bit (post_filter,
-boosts, minimum_should_match route to the Spark path).
+(build → append → delete → compact → purge lifecycle); the local path
+refuses (ValueError) anything it cannot answer bit-for-bit
+(post_filter, boosts, minimum_should_match route to the Spark path).
 
 Scale note: this is a SERVING optimization, not a bypass of the
 execution model — the read is bounded by the query terms' buckets,
@@ -34,6 +37,7 @@ from __future__ import annotations
 
 import glob
 import os
+import sys
 import threading
 import time
 from collections import OrderedDict
@@ -51,14 +55,24 @@ from elasticsearch_osmosis_plugin_spark.plans.build import (
 )
 
 
-class _LRU:
-    """Tiny thread-safe LRU (the serving path is multi-threaded:
-    concurrent ``Searcher.topk_local_many`` workers share this)."""
+class _ByteLRU:
+    """Byte-budgeted thread-safe LRU — the one cache structure on the
+    driver (decoded posting arrays, bucket term sets, merge
+    structures, weight vectors, directory listings, a Searcher's
+    dictionary-row memo). The analog
+    of Lucene's filesystem cache / ES's shard request cache: the index
+    layout on disk stays the source of truth, this only skips
+    re-reading and recomputing hot entries. Each entry is charged its
+    payload bytes plus ``ENTRY_BYTES``, so no entry is free and the
+    driver pin is bounded regardless of entry count or size. The
+    serving path is multi-threaded (concurrent
+    ``Searcher.topk_local_many`` workers share these caches)."""
 
-    def __init__(self, maxsize: int = 64):
-        self.maxsize = maxsize
-        self._d: OrderedDict = OrderedDict()
+    def __init__(self, max_bytes: int):
+        self.max_bytes = max_bytes
+        self._d: OrderedDict = OrderedDict()   # key -> (value, nbytes)
         self._lock = threading.Lock()
+        self.bytes = 0
         self.hits = self.misses = 0
 
     def get(self, key):
@@ -66,35 +80,43 @@ class _LRU:
             v = self._d.get(key)
             if v is None:
                 self.misses += 1
-            else:
-                self.hits += 1
-                self._d.move_to_end(key)
-            return v
-
-    def put(self, key, value) -> None:
-        with self._lock:
-            self._d[key] = value
+                return None
+            self.hits += 1
             self._d.move_to_end(key)
-            while len(self._d) > self.maxsize:
-                self._d.popitem(last=False)
+            return v[0]
+
+    def put(self, key, value, nbytes: int) -> None:
+        nbytes += ENTRY_BYTES
+        if nbytes > self.max_bytes:
+            return                      # never cache a whale
+        with self._lock:
+            old = self._d.pop(key, None)
+            if old is not None:
+                self.bytes -= old[1]
+            self._d[key] = (value, nbytes)
+            self.bytes += nbytes
+            while self.bytes > self.max_bytes and self._d:
+                _, (_, nb) = self._d.popitem(last=False)
+                self.bytes -= nb
 
     def clear(self) -> None:
         with self._lock:
             self._d.clear()
+            self.bytes = 0
 
 
-# Shared dictionary-bucket frame cache: term stats for a WHOLE bucket
-# load once (columnar, term-sorted for binary search) and every later
-# query touching that bucket resolves its terms driver-locally in
-# O(log n) — across queries, Searchers, and serving threads. Keys
-# include each file's (mtime, size) signature, so an index mutation
-# (append/purge/compact rewrites the bucket files) naturally misses
-# and the stale frame ages out of the LRU; no explicit invalidation
-# hook needed. Memory bound: maxsize frames × one bucket's term stats
-# (~40 B/term) — for very large dictionaries shrink n_buckets' share
-# by raising n_buckets at build time, or pass cache=None to fall back
-# to the filtered row-group-pruned read.
-dictionary_cache = _LRU(maxsize=64)
+# Per-entry charge on top of the payload: the key, the (value, nbytes)
+# slot and the dict entry. An unbounded stream of tiny entries (absent
+# terms, short listings) still evicts.
+ENTRY_BYTES = 128
+
+
+def _pysize(*objs) -> int:
+    """Heap bytes of plain Python values (str/int/float, nested in
+    tuples, lists and frozensets) — the payload charge of a cache entry
+    that holds Python objects rather than arrays."""
+    return sum(sys.getsizeof(o) + (_pysize(*o) if isinstance(
+        o, (tuple, list, frozenset)) else 0) for o in objs)
 
 
 def _files_sig(files: list[str]) -> tuple:
@@ -114,8 +136,9 @@ def _files_sig(files: list[str]) -> tuple:
 # within the same tick as the listing leaves the dir's mtime unchanged,
 # so a listing is cached only once the dir's mtime is older than the
 # coarsest common granularity (2 s, FAT); any later change then moves
-# the mtime.
-listing_cache = _LRU(maxsize=512)
+# the mtime. Entries are charged their Python object bytes (about 2 KB
+# for 8 file paths); the budget holds 512 such listings.
+listing_cache = _ByteLRU(max_bytes=1 << 20)
 _RACY_NS = 2_000_000_000
 
 
@@ -129,28 +152,8 @@ def _ls_parquet(d: str) -> list[str]:
         return hit[1]
     files = sorted(glob.glob(os.path.join(d, "*.parquet")))
     if time.time_ns() - mt > _RACY_NS:
-        listing_cache.put(d, (mt, files))
+        listing_cache.put(d, (mt, files), _pysize(d, (mt, files)))
     return files
-
-
-def _load_dic_bucket(files: list[str]):
-    """One dictionary bucket -> (sorted term array, df, cf, max_wand
-    numpy columns) for binary-search term lookups. Sorted by Arrow
-    (UTF-8 byte order == Python ``str`` order, so ``np.searchsorted``
-    over the object array agrees); no per-term Python objects until
-    the final term array."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    tbl = pa.concat_tables([
-        pq.ParquetFile(f).read(columns=["term", "df", "cf", "max_wand"],
-                               use_threads=False)
-        for f in files])
-    tbl = tbl.take(pc.sort_indices(tbl["term"]))
-    return (tbl["term"].to_numpy(zero_copy_only=False),
-            tbl["df"].to_numpy(), tbl["cf"].to_numpy(),
-            tbl["max_wand"].to_numpy())
 
 
 def _posting_dirs(index_path: str, meta: dict) -> list[str]:
@@ -184,54 +187,13 @@ def _bucket_files(dirs: list[str], bucket: int) -> list[str]:
 
 def _read_filtered(files: list[str], columns: list[str],
                    terms: list[str]):
-    """Read parquet files with a term-IN filter; the posting layout is
-    sortWithinPartitions(term, ...) so row-group statistics prune
-    whole runs before any page decodes."""
+    """Read parquet files with a term-IN filter (row-group statistics
+    prune only files with several row groups; see the module note)."""
     import pyarrow.dataset as pds
 
-    if not files:
-        return None
     dset = pds.dataset(files, format="parquet")
     return dset.to_table(columns=columns,
                          filter=pds.field("term").isin(terms))
-
-
-def local_dictionary_rows(index_path: str, meta: dict,
-                          terms: list[str],
-                          cache: _LRU | None = dictionary_cache
-                          ) -> dict[str, dict]:
-    """term -> {df, cf, max_wand} via the shared LRU of dictionary
-    bucket frames (default), falling back to a driver-local pruned
-    filtered read when ``cache=None``."""
-    dic_dir = os.path.join(index_path, "dictionary")
-    by_bucket: dict[int, list[str]] = {}
-    for t in terms:
-        by_bucket.setdefault(bucket_of(t, meta["n_buckets"]), []).append(t)
-    out: dict[str, dict] = {}
-    for b, ts in sorted(by_bucket.items()):
-        files = _ls_parquet(os.path.join(dic_dir, f"bucket={b}"))
-        if not files:
-            continue
-        if cache is not None:
-            key = (dic_dir, b, _files_sig(files))
-            frame = cache.get(key)
-            if frame is None:
-                frame = _load_dic_bucket(files)
-                cache.put(key, frame)
-            tv, dfv, cfv, mwv = frame
-            pos = np.searchsorted(tv, ts)
-            for t, i in zip(ts, pos):
-                if i < tv.size and tv[i] == t:
-                    out[t] = {"term": t, "df": int(dfv[i]),
-                              "cf": int(cfv[i]),
-                              "max_wand": float(mwv[i])}
-            continue
-        tbl = _read_filtered(files, ["term", "df", "cf", "max_wand"], ts)
-        if tbl is None:
-            continue
-        for row in tbl.to_pylist():
-            out[row["term"]] = row
-    return out
 
 
 def _tombstone_ids(index_path: str, meta: dict) -> np.ndarray | None:
@@ -248,52 +210,18 @@ def _tombstone_ids(index_path: str, meta: dict) -> np.ndarray | None:
     return np.sort(arr.astype(np.int64))
 
 
-class _ByteLRU:
-    """Byte-budgeted thread-safe LRU for numpy payloads (decoded
-    posting arrays, merge structures, weight vectors) — the analog of
-    Lucene's filesystem cache / ES's shard request cache: the index
-    layout on disk stays the source of truth, this only skips
-    re-reading and recomputing hot terms. Eviction by total payload
-    bytes, so the driver pin is bounded regardless of entry count or
-    posting sizes."""
-
-    def __init__(self, max_bytes: int = 256 << 20):
-        self.max_bytes = max_bytes
-        self._d: OrderedDict = OrderedDict()   # key -> (value, nbytes)
-        self._lock = threading.Lock()
-        self.bytes = 0
-        self.hits = self.misses = 0
-
-    def get(self, key):
-        with self._lock:
-            v = self._d.get(key)
-            if v is None:
-                self.misses += 1
-                return None
-            self.hits += 1
-            self._d.move_to_end(key)
-            return v[0]
-
-    def put(self, key, value, nbytes: int) -> None:
-        if nbytes > self.max_bytes:
-            return                      # never cache a whale
-        with self._lock:
-            old = self._d.pop(key, None)
-            if old is not None:
-                self.bytes -= old[1]
-            self._d[key] = (value, nbytes)
-            self.bytes += nbytes
-            while self.bytes > self.max_bytes and self._d:
-                _, (_, nb) = self._d.popitem(last=False)
-                self.bytes -= nb
-
-    def clear(self) -> None:
-        with self._lock:
-            self._d.clear()
-            self.bytes = 0
-
-
 postings_cache = _ByteLRU(max_bytes=256 << 20)
+
+# A requested term its bucket does not hold: cached like any other
+# term, so a repeated unknown term is one cache hit, not a read.
+_NO_POSTINGS = (np.empty(0, dtype=np.int64), np.empty(0), np.empty(0))
+
+# A posting bucket's distinct terms (a frozenset), keyed on the
+# bucket's file signature and loaded the first time a read there misses
+# a requested term. Later new unknown terms in that bucket (typos,
+# terms of another index) are then settled by a set lookup, not by a
+# bucket read.
+vocab_cache = _ByteLRU(max_bytes=64 << 20)
 
 
 def _gather_term_postings(index_path: str, meta: dict,
@@ -302,17 +230,23 @@ def _gather_term_postings(index_path: str, meta: dict,
                           sigs_out: dict | None = None
                           ) -> dict[str, tuple]:
     """term -> (doc_ids int64, tf float64, dl float64), concatenated
-    across every posting row (block/segment/group) of the term. One
-    pruned parquet read per bucket covers ALL requested terms; decoded
-    arrays go through the byte-budgeted LRU keyed on the bucket's file
-    signature (an index rewrite changes the signature, so stale
-    entries age out untouched). Scores are NOT cached — BM25 weights
+    across every posting row (block/segment/group) of the term, for
+    the requested terms that have postings. The array size is the
+    term's df. One pruned parquet read per bucket covers ALL requested
+    terms; decoded arrays, and the absence of a term, go through the
+    byte-budgeted LRU keyed on the bucket's file signature (an index
+    rewrite changes the signature, so stale entries age out
+    untouched). A bucket's term set (``vocab_cache``) settles new
+    absent terms without a read. Scores are NOT cached — BM25 weights
     depend on meta (n_docs/avgdl), which each caller applies from its
     own snapshot.
 
     ``sigs_out``: optional dict populated with term -> the bucket file
     signature the term's arrays came from — the invalidation token the
     merge-structure cache keys on (see ``_score_from_postings``)."""
+    import pyarrow.compute as pc
+    import pyarrow.dataset as pds
+
     dirs = _posting_dirs(index_path, meta)
     by_bucket: dict[int, list[str]] = {}
     for t in terms:
@@ -322,8 +256,7 @@ def _gather_term_postings(index_path: str, meta: dict,
         files = _bucket_files(dirs, bkt)
         if not files:
             continue
-        missing = ts
-        sig = None
+        missing, sig, vocab = ts, None, None
         if cache is not None:
             sig = _files_sig(files)
             if sigs_out is not None:
@@ -332,34 +265,44 @@ def _gather_term_postings(index_path: str, meta: dict,
             missing = []
             for t in ts:
                 v = cache.get((sig, t))
-                if v is not None:
-                    out[t] = v
-                else:
+                if v is None:
                     missing.append(t)
-        if not missing:
-            continue
+                elif v[0].size:
+                    out[t] = v
+            vocab = vocab_cache.get(sig) if missing else None
+        # read only terms the bucket holds
+        held = missing if vocab is None else [t for t in missing
+                                              if t in vocab]
         tbl = _read_filtered(
-            files, ["term", "doc_ids_vb", "tfs_vb", "dls_vb"], missing)
-        if tbl is None or tbl.num_rows == 0:
+            files, ["term", "doc_ids_vb", "tfs_vb", "dls_vb"],
+            held) if held else None
+        if tbl is not None and tbl.num_rows:
+            # one decode per column for the whole read
+            ids, n = decode_doc_ids(tbl["doc_ids_vb"])
+            first = np.cumsum(n) - n
+            tfs = decode_rows(tbl["tfs_vb"])[0].astype(np.float64)
+            dls = decode_rows(tbl["dls_vb"])[0].astype(np.float64)
+            row_terms = tbl["term"].to_numpy(zero_copy_only=False)
+            for term in dict.fromkeys(row_terms):
+                # the term's rows in table order (file, then row),
+                # values concatenated in that order — the order every
+                # accumulate sums in
+                rows = np.flatnonzero(row_terms == term)
+                lens = n[rows]
+                take = (np.repeat(first[rows] - (np.cumsum(lens) - lens),
+                                  lens) + np.arange(lens.sum()))
+                out[term] = (ids[take], tfs[take], dls[take])
+        if cache is None:
             continue
-        # one decode per column for the whole read
-        ids, n = decode_doc_ids(tbl["doc_ids_vb"])
-        first = np.cumsum(n) - n
-        tfs = decode_rows(tbl["tfs_vb"])[0].astype(np.float64)
-        dls = decode_rows(tbl["dls_vb"])[0].astype(np.float64)
-        row_terms = tbl["term"].to_numpy(zero_copy_only=False)
-        for term in dict.fromkeys(row_terms):
-            # the term's rows in table order (file, then row), values
-            # concatenated in that order — the order every accumulate
-            # sums in
-            rows = np.flatnonzero(row_terms == term)
-            lens = n[rows]
-            take = (np.repeat(first[rows] - (np.cumsum(lens) - lens), lens)
-                    + np.arange(lens.sum()))
-            v = (ids[take], tfs[take], dls[take])
-            out[term] = v
-            if cache is not None:
-                cache.put((sig, term), v, sum(a.nbytes for a in v))
+        for t in missing:
+            v = out.get(t, _NO_POSTINGS)
+            cache.put((sig, t), v, sum(a.nbytes for a in v))
+        if vocab is None and not out.keys() >= set(missing):
+            vocab = frozenset(pc.unique(
+                pds.dataset(files, format="parquet")
+                .to_table(columns=["term"])["term"])
+                .to_numpy(zero_copy_only=False))
+            vocab_cache.put(sig, vocab, _pysize(vocab))
     return out
 
 
@@ -369,19 +312,19 @@ def _gather_term_postings(index_path: str, meta: dict,
 # tombstones. Keyed on (term order, per-term bucket file signatures),
 # so any index mutation (append/purge/compact rewrites the bucket
 # files) changes the signature and the stale structure ages out, same
-# invalidation discipline as dictionary_cache / postings_cache. This
-# is the serving hot path's biggest CPU item (np.unique is an
-# O(n log n) sort per call) and the cached pair is exact — the
-# accumulate still runs per call with identical operand order, so
-# scores stay bit-for-bit equal to the uncached path.
+# invalidation discipline as postings_cache. This is the serving hot
+# path's biggest CPU item (np.unique is an O(n log n) sort per call)
+# and the cached pair is exact — the accumulate still runs per call
+# with identical operand order, so scores stay bit-for-bit equal to
+# the uncached path.
 merge_cache = _ByteLRU(max_bytes=64 << 20)
 
 # Per-term BM25 weight vectors: w = query.bm25_weight(idf, tf, dl)
-# depends only on the term's posting bytes
-# (signature) and the scoring snapshot (n_docs, avgdl, k1, b, df) —
-# all in the key, so an index mutation OR a meta change (append moves
-# avgdl/n_docs) misses and recomputes. The cached vector is the exact
-# array the uncached path builds (same inputs, same expression).
+# depends only on the term's posting bytes (signature, which also fixes
+# df) and the scoring snapshot (n_docs, avgdl, k1, b) — all in the key,
+# so an index mutation OR a meta change (append moves avgdl/n_docs)
+# misses and recomputes. The cached vector is the exact array the
+# uncached path builds (same inputs, same expression).
 weight_cache = _ByteLRU(max_bytes=64 << 20)
 
 
@@ -402,16 +345,16 @@ def _topk_order(uids: np.ndarray, scores: np.ndarray,
     return cand[np.lexsort((uids[cand], -scores[cand]))][:k]
 
 
-def _score_from_postings(live: list[str], posts: dict[str, tuple],
-                         dic_rows: dict[str, dict], meta: dict,
-                         dead: np.ndarray | None, k: int,
+def _score_from_postings(terms: list[str], posts: dict[str, tuple],
+                         meta: dict, dead: np.ndarray | None, k: int,
                          sigs: dict | None = None
                          ) -> list[tuple[int, float]]:
     """BM25 accumulate + tombstone mask + deterministic top-k over
     pre-gathered per-term postings — the Spark kernels' weight,
-    ``query.bm25_weight``. ``sigs``: term -> posting bucket signature
-    (from ``_gather_term_postings``); when present the doc-id merge
-    structure comes from / lands in ``merge_cache``."""
+    ``query.bm25_weight``, with each term's df its posting count.
+    Terms absent from ``posts`` do not match. ``sigs``: term -> posting
+    bucket signature (from ``_gather_term_postings``); when present the
+    doc-id merge structure comes from / lands in ``merge_cache``."""
     from elasticsearch_osmosis_plugin_spark.operators.query import (
         bm25_weight,
         idf,
@@ -420,16 +363,16 @@ def _score_from_postings(live: list[str], posts: dict[str, tuple],
     k1, b, avgdl = meta["k1"], meta["b"], float(meta["avgdl"])
     n_docs = int(meta["n_docs"])
     ids_parts, w_parts, terms_used = [], [], []
-    for term in dict.fromkeys(live):    # dedupe: one clause per term
+    for term in dict.fromkeys(terms):   # dedupe: one clause per term
         got = posts.get(term)
         if got is None:
             continue
         d, tf, dl = got
-        df_t = int(dic_rows[term]["df"])
+        df_t = d.size
         wkey = None
         w = None
         if sigs is not None and term in sigs:
-            wkey = (term, sigs[term], n_docs, avgdl, k1, b, df_t)
+            wkey = (term, sigs[term], n_docs, avgdl, k1, b)
             hit_w = weight_cache.get(wkey)
             if hit_w is not None and hit_w.size == tf.size:
                 w = hit_w
@@ -469,50 +412,38 @@ def _score_from_postings(live: list[str], posts: dict[str, tuple],
 
 
 def local_topk(index_path: str, query_terms: list[str], k: int = 10,
-               meta: dict | None = None,
-               dic_rows: dict[str, dict] | None = None
-               ) -> list[tuple[int, float]]:
+               meta: dict | None = None) -> list[tuple[int, float]]:
     """Driver-local BM25 top-k: returns [(doc_id, score)] in the same
     deterministic (score desc, doc_id asc) order as the distributed
-    scoreall path. ``dic_rows``: optional pre-fetched dictionary rows
-    (a Searcher's local memo)."""
+    scoreall path."""
     meta = meta if meta is not None else load_meta(index_path)
-    if dic_rows is None:
-        dic_rows = local_dictionary_rows(index_path, meta, query_terms)
-    live = [t for t in query_terms if t in dic_rows]
-    if not live:
-        return []
     sigs: dict = {}
-    posts = _gather_term_postings(index_path, meta, live, sigs_out=sigs)
+    posts = _gather_term_postings(index_path, meta, query_terms,
+                                  sigs_out=sigs)
+    if not posts:
+        return []
     dead = _tombstone_ids(index_path, meta)
-    return _score_from_postings(live, posts, dic_rows, meta, dead, k,
+    return _score_from_postings(query_terms, posts, meta, dead, k,
                                 sigs=sigs)
 
 
 def local_topk_many(index_path: str,
                     term_lists: dict[str, list[str]], k: int = 10,
-                    meta: dict | None = None,
-                    dic_rows: dict[str, dict] | None = None
+                    meta: dict | None = None
                     ) -> dict[str, list[tuple[int, float]]]:
     """Batched concurrent serving: N queries answered from ONE pruned
-    read per touched bucket (dictionary and postings) — the local
-    analog of the Spark path's ``topk_many``. Per-query results are
-    exactly ``local_topk``'s; per-query latency under an 8-deep
-    concurrent load stays within ~the solo number because the reads
-    amortize instead of contending (a thread pool here would just
-    serialize the GIL-bound python between the arrow reads)."""
+    posting read per touched bucket — the local analog of the Spark
+    path's ``topk_many``. Per-query results are exactly
+    ``local_topk``'s; per-query latency under an 8-deep concurrent
+    load stays within ~the solo number because the reads amortize
+    instead of contending (a thread pool here would just serialize the
+    GIL-bound python between the arrow reads)."""
     meta = meta if meta is not None else load_meta(index_path)
     all_terms = sorted({t for ts in term_lists.values() for t in ts})
-    if dic_rows is None:
-        dic_rows = local_dictionary_rows(index_path, meta, all_terms)
-    live_union = [t for t in all_terms if t in dic_rows]
     sigs: dict = {}
-    posts = _gather_term_postings(index_path, meta, live_union,
+    posts = _gather_term_postings(index_path, meta, all_terms,
                                   sigs_out=sigs)
     dead = _tombstone_ids(index_path, meta)
-    out = {}
-    for name, terms in term_lists.items():
-        live = [t for t in terms if t in dic_rows]
-        out[name] = _score_from_postings(live, posts, dic_rows, meta,
-                                         dead, k, sigs=sigs) if live else []
-    return out
+    return {name: _score_from_postings(terms, posts, meta, dead, k,
+                                       sigs=sigs)
+            for name, terms in term_lists.items()}

@@ -114,6 +114,14 @@ def bucket_of(term: str, n_buckets: int) -> int:
     return int.from_bytes(hashlib.md5(term.encode("utf-8")).digest()[:4], "big") % n_buckets
 
 
+def wand_weight(tf, dl, k1: float, b: float, avgdl: float):
+    """Per-posting BM25 saturation tf / (tf + k1 * (1 - b + b * dl/avgdl))
+    in float64; a block's max of it is the block upper bound
+    (``max_wand``) that pruning scales by idf * (k1 + 1). The build and
+    the purge rewrite both evaluate this expression."""
+    return tf / (tf + k1 * (1.0 - b + b * dl / avgdl))
+
+
 def add_doc_ids(df: DataFrame, key_cols: Iterable[str]) -> DataFrame:
     """Deterministic 60-bit doc id from the natural key
     (reference: docs keyed by OSM id, ``EntityDao.java:96``)."""
@@ -202,7 +210,7 @@ def _segment_builder(cfg: EngineConfig, avgdl: float):
         g_starts = np.flatnonzero(new_group)
         g_ends = np.append(g_starts[1:], n_rows)
 
-        w = tf / (tf + k1 * (1.0 - b + b * dl / avgdl))       # exact float64
+        w = wand_weight(tf, dl, k1, b, avgdl)
         out_n = (g_ends - g_starts).astype(np.int32)
         out_sum_tf = np.add.reduceat(tf, g_starts)
         out_wand = np.maximum.reduceat(w, g_starts)

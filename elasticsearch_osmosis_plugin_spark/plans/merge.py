@@ -31,6 +31,7 @@ from elasticsearch_osmosis_plugin_spark.plans.build import (
     POSTING_SCHEMA,
     index_groups,
     load_meta,
+    wand_weight,
 )
 
 
@@ -127,7 +128,7 @@ def _purge_kernel(dead_bc, k1: float, b: float, avgdl_eff: float):
             pos = decode_rows(batch.column("pos_vb"))[0]
             ids_k, tf_k, dl_k = ids[keep], tf[keep], dl[keep]
             starts = (np.cumsum(kept_n) - kept_n)[live]
-            w = tf_k / (tf_k + k1 * (1.0 - b + b * dl_k / avgdl_eff))
+            w = wand_weight(tf_k, dl_k, k1, b, avgdl_eff)
             if pos.size:
                 # positions are delta-encoded per (term, doc) run, so a
                 # kept doc's run re-encodes to the same values

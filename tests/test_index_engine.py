@@ -2164,15 +2164,27 @@ def test_local_serving_path_lifecycle(spark, corpus_df, tmp_path):
     """Driver-local serving (Searcher.topk_local / operators.serve):
     rank- AND score-identical to the distributed scoreall path through
     the full index lifecycle — fresh build, appended group, logical
-    deletes, compaction, post-compaction append — with the dictionary
-    memo warm and cold."""
+    deletes, compaction, post-compaction append, purge — with the
+    postings cache warm and cold. The df it scores with (the gathered
+    posting count) equals the dictionary df at every state."""
+    from pyspark.sql import functions as F
+
     from elasticsearch_osmosis_plugin_spark.corpus import generate_corpus_df
-    from elasticsearch_osmosis_plugin_spark.operators.query import Searcher, topk
+    from elasticsearch_osmosis_plugin_spark.operators import serve
+    from elasticsearch_osmosis_plugin_spark.operators.query import (
+        Searcher,
+        query_terms,
+        topk,
+    )
     from elasticsearch_osmosis_plugin_spark.plans.build import (
         append_index_group,
         delete_docs,
+        dictionary_df,
     )
-    from elasticsearch_osmosis_plugin_spark.plans.merge import compact_index
+    from elasticsearch_osmosis_plugin_spark.plans.merge import (
+        compact_index,
+        purge_deletes,
+    )
 
     idx = str(tmp_path / "serve_idx")
     build_index(spark, corpus_df, idx, CFG, id_col="doc_id", n_groups=2)
@@ -2185,11 +2197,17 @@ def test_local_serving_path_lifecycle(spark, corpus_df, tmp_path):
             dist = [(r["doc_id"], round(r["score"], 9)) for r in
                     topk(spark, idx, q, k=10, strategy="scoreall").collect()]
             assert local == dist, (tag, q)
-            # memo warm: second call identical
+            # cache warm: second call identical
             assert local == [(d, round(sc, 9))
                              for d, sc in s.topk_local(q, k=10)], (tag, q)
         s.close()
         _assert_gather_matches_per_row_decode(idx, queries, tag)
+        meta = load_meta(idx)
+        terms = sorted({t for q in queries for t in query_terms(q, meta)})
+        gathered = serve._gather_term_postings(idx, meta, terms, cache=None)
+        dic = {r["term"]: r["df"] for r in dictionary_df(spark, idx)
+               .filter(F.col("term").isin(terms)).collect()}
+        assert {t: v[0].size for t, v in gathered.items()} == dic, tag
 
     check("fresh")
     append_index_group(spark, generate_corpus_df(spark, seed=9, n=40), idx)
@@ -2202,6 +2220,8 @@ def test_local_serving_path_lifecycle(spark, corpus_df, tmp_path):
     check("compacted")
     append_index_group(spark, generate_corpus_df(spark, seed=5, n=30), idx)
     check("compact_then_append")
+    purge_deletes(spark, idx)
+    check("purge_deletes")
     # a Searcher opened pre-mutation serves its snapshot until refresh
     s = Searcher(spark, idx)
     before = s.topk_local("public static", k=5)
@@ -2215,21 +2235,21 @@ def test_local_serving_path_lifecycle(spark, corpus_df, tmp_path):
 def test_local_serving_concurrent_and_bucket_lru(spark, corpus_df,
                                                  tmp_path):
     """Concurrent serving (Searcher.topk_local_many) returns per-query
-    results identical to solo topk_local; the shared dictionary bucket
-    LRU serves repeat bucket reads from memory (hit counter moves, no
-    re-load), keys on file signatures so an index rewrite naturally
-    misses, and cache=None still answers identically (fallback
-    filtered read)."""
+    results identical to solo topk_local; the shared postings LRU
+    serves repeat bucket reads from memory (hit counter moves, no
+    re-read), and keys on file signatures so an index rewrite
+    naturally misses and scores the new postings."""
     from elasticsearch_osmosis_plugin_spark.operators import serve
-    from elasticsearch_osmosis_plugin_spark.operators.query import Searcher
+    from elasticsearch_osmosis_plugin_spark.operators.query import (
+        Searcher,
+        topk,
+    )
     from elasticsearch_osmosis_plugin_spark.plans.build import (
         append_index_group,
-        load_meta,
     )
 
     idx = str(tmp_path / "serve_many_idx")
     build_index(spark, corpus_df, idx, CFG, id_col="doc_id", n_groups=1)
-    serve.dictionary_cache.clear()
     qs = {f"q{i}": q for i, q in enumerate(
         QUERIES + ["public static", "id0042", "getIndexBuffer public"])}
 
@@ -2240,35 +2260,28 @@ def test_local_serving_concurrent_and_bucket_lru(spark, corpus_df,
         assert got[name] == s.topk_local(q, k=10), name
 
     # LRU: a fresh searcher re-resolving the same terms is pure hits
-    h0, m0 = serve.dictionary_cache.hits, serve.dictionary_cache.misses
     ph0, pm0 = serve.postings_cache.hits, serve.postings_cache.misses
     s2 = Searcher(spark, idx)
     again = s2.topk_local_many(qs, k=10)
     assert again == got
-    assert serve.dictionary_cache.misses == m0      # no new bucket load
-    assert serve.dictionary_cache.hits > h0
-    # decoded postings served from the byte-budgeted LRU too
+    # decoded postings served from the byte-budgeted LRU
     assert serve.postings_cache.misses == pm0
     assert serve.postings_cache.hits > ph0
     assert 0 < serve.postings_cache.bytes <= serve.postings_cache.max_bytes
 
-    # cache=None fallback path answers identically
-    meta = load_meta(idx)
-    terms = ["public", "static", "id0042"]
-    with_cache = serve.local_dictionary_rows(idx, meta, terms)
-    no_cache = serve.local_dictionary_rows(idx, meta, terms, cache=None)
-    assert with_cache == no_cache
-
-    # rewrite invalidates by key: append rewrites the dictionary, the
-    # next read misses (new signature) and sees the new stats
+    # rewrite invalidates by key: append adds posting files to every
+    # bucket, the next read misses (new signature) and scores the new
+    # postings exactly as the Spark path does
     from elasticsearch_osmosis_plugin_spark.corpus import generate_corpus_df
 
     append_index_group(spark, generate_corpus_df(spark, seed=9, n=40), idx)
-    meta2 = load_meta(idx)
-    m_before = serve.dictionary_cache.misses
-    fresh = serve.local_dictionary_rows(idx, meta2, ["public"])
-    assert serve.dictionary_cache.misses > m_before
-    assert fresh["public"]["df"] > with_cache["public"]["df"]
+    s.refresh()
+    pm1 = serve.postings_cache.misses
+    fresh = s.topk_local("public", k=10)
+    assert serve.postings_cache.misses > pm1
+    assert [(d, round(sc, 9)) for d, sc in fresh] == \
+        [(r["doc_id"], round(r["score"], 9)) for r in
+         topk(spark, idx, "public", k=10, strategy="scoreall").collect()]
     s.close()
     s2.close()
 
@@ -2299,7 +2312,8 @@ def test_local_serving_k_zero_and_cache_byte_bounds(spark, index_path,
         assert 0 < c.bytes <= c.max_bytes, name
 
     # an entry over budget is not cached, and the answer is unchanged
-    tiny_merge, tiny_weight = serve._ByteLRU(16), serve._ByteLRU(16)
+    tiny_merge = serve._ByteLRU(serve.ENTRY_BYTES + 16)
+    tiny_weight = serve._ByteLRU(serve.ENTRY_BYTES + 16)
     monkeypatch.setattr(serve, "merge_cache", tiny_merge)
     monkeypatch.setattr(serve, "weight_cache", tiny_weight)
     assert s.topk_local(q, 10) == want
@@ -2309,34 +2323,80 @@ def test_local_serving_k_zero_and_cache_byte_bounds(spark, index_path,
 
 
 def test_dictionary_memos_bounded(spark, index_path, monkeypatch):
-    """Both per-term dictionary memos of a Searcher (the Spark-path
-    DictionaryCache and the driver-local memo) stay within
-    DIC_MEMO_TERMS after twice that many distinct unknown terms, and a
-    repeated unknown term is answered from the memo without a second
-    dictionary read."""
+    """Unknown terms stay cheap and bounded on both paths. Driver-local
+    serving over twice as many distinct unknown terms as the postings
+    cache holds keeps it within budget; the first unknown terms in a
+    bucket cost one read, which loads the bucket's term set, and later
+    unknown terms there, new or repeated, cost no read. The Spark
+    path's DictionaryCache stays within its byte budget after twice as
+    many unknown terms as it holds."""
     from elasticsearch_osmosis_plugin_spark.operators import query as Q
     from elasticsearch_osmosis_plugin_spark.operators import serve
 
     meta = load_meta(index_path)
-    bound = Q.DIC_MEMO_TERMS
-    unknown = [f"zzunknown{i:06d}" for i in range(2 * bound)]
+    cache = serve.postings_cache
+    cache.clear()
+    serve.vocab_cache.clear()
+    monkeypatch.setattr(cache, "max_bytes", 64 << 10)
+    unknown = [f"zzunknown{i:06d}"
+               for i in range(2 * cache.max_bytes // serve.ENTRY_BYTES)]
+    reads = []
+    real = serve._read_filtered
+    monkeypatch.setattr(serve, "_read_filtered",
+                        lambda *a: reads.append(a[2]) or real(*a))
     s = Q.Searcher(spark, index_path)
     try:
-        reads = []
-        real = serve.local_dictionary_rows
-        monkeypatch.setattr(serve, "local_dictionary_rows",
-                            lambda *a, **kw: reads.append(a[2]) or real(*a, **kw))
-        assert s._local_rows(unknown) == {}
-        assert len(s._local_dic._d) <= bound
-        assert s._local_rows(unknown[-1:] + ["public"])
-        assert s._local_rows(unknown[-1:]) == {}
-        assert reads[1:] == [["public"]]
+        assert s.topk_local(" ".join(unknown), k=10) == []
+        assert 0 < cache.bytes <= cache.max_bytes
+        assert len(cache._d) < len(unknown)     # evicted, not grown
+        n = len(reads)
+        assert 0 < n <= meta["n_buckets"]       # one read per bucket
+        assert 0 < serve.vocab_cache.bytes <= serve.vocab_cache.max_bytes
+        assert s.topk_local("zznew000001 zznew000002", k=10) == []
+        assert s.topk_local(unknown[-1], k=10) == []
+        want = s.topk_local("public", k=10)
+        assert want
+        assert len(reads) == n + 1              # only "public" was read
+        assert s.topk_local(unknown[-1], k=10) == []
+        assert s.topk_local("zznew000003 public", k=10) == want
+        assert len(reads) == n + 1
 
         dc = s._dic_cache
-        assert dc.rows(unknown, meta).empty
-        assert len(dc._rows._d) <= bound
+        monkeypatch.setattr(dc._rows, "max_bytes", 64 << 10)
+        many = [f"zzunknown{i:06d}"
+                for i in range(2 * dc._rows.max_bytes // serve.ENTRY_BYTES)]
+        assert dc.rows(many, meta).empty
+        assert 0 < dc._rows.bytes <= dc._rows.max_bytes
+        assert len(dc._rows._d) < len(many)
         dc.df = None        # any further dictionary read would raise
-        assert dc.rows(unknown[-1:], meta).empty
+        assert dc.rows(many[-1:], meta).empty
+    finally:
+        s.close()
+
+
+def test_driver_caches_are_byte_lrus(spark, index_path):
+    """One cache discipline: every cache object of operators.serve and
+    a Searcher's dictionary memo is a serve._ByteLRU with a finite
+    byte budget, and serve defines no other cache class."""
+    import inspect
+    import math
+
+    from elasticsearch_osmosis_plugin_spark.operators import serve
+    from elasticsearch_osmosis_plugin_spark.operators.query import Searcher
+
+    classes = [c for c in vars(serve).values()
+               if inspect.isclass(c) and c.__module__ == serve.__name__]
+    assert classes == [serve._ByteLRU]
+    s = Searcher(spark, index_path)
+    try:
+        caches = [v for v in vars(serve).values()
+                  if hasattr(v, "get") and hasattr(v, "put")
+                  and not inspect.isclass(v)]
+        caches.append(s._dic_cache._rows)
+        assert len(caches) >= 5
+        for c in caches:
+            assert type(c) is serve._ByteLRU
+            assert 0 < c.max_bytes and math.isfinite(c.max_bytes)
     finally:
         s.close()
 
