@@ -60,6 +60,8 @@ from typing import Any
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
+from elasticsearch_osmosis_plugin_spark.operators.query import live_docs
+
 _CONST_SCORE = "doc_id long, score double"
 
 
@@ -300,25 +302,6 @@ def _const_hits(spark: SparkSession, ids: DataFrame) -> DataFrame:
     """doc-id stream -> constant_score hits, deterministic order."""
     return (ids.select("doc_id", F.lit(1.0).alias("score"))
             .orderBy("doc_id"))
-
-
-def _live_ids(spark: SparkSession, index_path: str,
-              ids: DataFrame) -> DataFrame:
-    """Exclude tombstoned docs from a docstats-derived id stream.
-
-    Postings-side operators anti-join tombstones inside
-    ``query._live``; forms that enumerate the doc-store directly
-    (match_all / exists / ids / range / constant_score) must apply the
-    same exclusion or deleted docs resurface until a purge."""
-    from elasticsearch_osmosis_plugin_spark.plans.build import (
-        load_meta,
-        tombstones_df,
-    )
-
-    tombs = tombstones_df(spark, index_path, load_meta(index_path))
-    if tombs is None:
-        return ids
-    return ids.join(F.broadcast(tombs), "doc_id", "left_anti")
 
 
 def _wildcard_regex(pattern: str) -> str:
@@ -757,7 +740,7 @@ def _search_query(spark: SparkSession, index_path: str,
         ds = catalog.read_table(spark, index_path, "docstats")
         if post_col is not None:
             ds = ds.filter(post_col)
-        return _const_hits(spark, _live_ids(
+        return _const_hits(spark, live_docs(
             spark, index_path, ds.select("doc_id"))).limit(k)
 
     if kind == "match_none":
@@ -809,7 +792,7 @@ def _search_query(spark: SparkSession, index_path: str,
         else:  # ids query: {"ids": {"values": [..]}}
             vals = [int(v) for v in spec["values"]]
             ds = ds.filter(F.col("doc_id").isin(vals))
-        ids = _live_ids(spark, index_path, ds.select("doc_id"))
+        ids = live_docs(spark, index_path, ds.select("doc_id"))
         return _finish_ids(spark, index_path, ids, post_col, k)
 
     if kind == "constant_score":
@@ -821,7 +804,7 @@ def _search_query(spark: SparkSession, index_path: str,
         cond = filter_column(spec["filter"])
         if post_col is not None:
             cond = cond & post_col
-        ids = _live_ids(spark, index_path,
+        ids = live_docs(spark, index_path,
                         catalog.read_table(spark, index_path, "docstats")
                         .filter(cond).select("doc_id"))
         return (ids.select("doc_id", F.lit(boost).alias("score"))
@@ -852,7 +835,7 @@ def _search_query(spark: SparkSession, index_path: str,
                            **{k2: float(v) for k2, v in params.items()})
         ds = (catalog.read_table(spark, index_path, "docstats")
               .filter(F.col(field).isNotNull()))
-        ds = _live_ids(spark, index_path,
+        ds = live_docs(spark, index_path,
                        ds.select("doc_id", col.alias("score")))
         if post_col is not None:
             raise ValueError("post_filter with rank_feature is not "
@@ -921,7 +904,7 @@ def _search_query(spark: SparkSession, index_path: str,
                 f"{kind}: field {fldname!r} is not in the doc store — "
                 "carry the feature map at build time "
                 "(build_index(..., carry_cols=[...]))")
-        live = _live_ids(spark, index_path, ds)
+        live = live_docs(spark, index_path, ds)
         return sparse_topk(live, qw, k=k, features_col=fldname)
 
     if kind == "query_string":
@@ -1301,7 +1284,7 @@ def _unranked_ids(spark: SparkSession, index_path: str,
     if kind == "match_all":
         ids = catalog.read_table(spark, index_path, "docstats") \
             .select("doc_id")
-        return _live_ids(spark, index_path, ids)
+        return live_docs(spark, index_path, ids)
     if kind == "match":
         _, mspec = _one_entry(spec, "match")
         text, opts = _match_args(mspec)
@@ -1327,7 +1310,7 @@ def _unranked_ids(spark: SparkSession, index_path: str,
         else:
             ds = ds.filter(
                 F.col("doc_id").isin([int(v) for v in spec["values"]]))
-        return _live_ids(spark, index_path, ds.select("doc_id"))
+        return live_docs(spark, index_path, ds.select("doc_id"))
     raise ValueError(f"sort is not supported with query type: {kind}")
 
 

@@ -59,15 +59,14 @@ from elasticsearch_osmosis_plugin_spark.operators.intersect import (
     match_any_terms,
 )
 from elasticsearch_osmosis_plugin_spark.operators.query import (
-    _live,
     dictionary_rows,
+    live_docs,
     term_docs,
 )
 from elasticsearch_osmosis_plugin_spark.plans import catalog
 from elasticsearch_osmosis_plugin_spark.plans.build import (
     dictionary_df,
     load_meta,
-    tombstones_df,
 )
 
 VERTICES_SCHEMA = ("field string, term string, depth int, "
@@ -92,8 +91,7 @@ def _seed_ids(spark: SparkSession, index_path: str, query: dict) -> DataFrame:
     (kind, spec), = query.items()
     if kind == "match_all":
         ds = catalog.read_table(spark, index_path, "docstats")
-        return _live(ds.select("doc_id"),
-                     tombstones_df(spark, index_path, load_meta(index_path)))
+        return live_docs(spark, index_path, ds.select("doc_id"))
     if kind == "match":
         (_, mspec), = spec.items()
         if isinstance(mspec, dict):

@@ -18,14 +18,15 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from elasticsearch_osmosis_plugin_spark.operators.query import (
-    _live,
     _pruned_postings,
     dictionary_rows,
+    live_docs,
     query_terms,
     term_docs,
+    term_idfs,
     term_positions,
 )
-from elasticsearch_osmosis_plugin_spark.plans.build import load_meta, tombstones_df
+from elasticsearch_osmosis_plugin_spark.plans.build import load_meta
 
 
 def _one_term(text: str, meta: dict) -> str:
@@ -36,10 +37,6 @@ def _one_term(text: str, meta: dict) -> str:
         raise ValueError(f"expected exactly one term, got {ts!r} "
                          f"from {text!r}")
     return ts[0]
-
-
-def _drop_tombstones(spark, index_path, occ, meta) -> DataFrame:
-    return _live(occ, tombstones_df(spark, index_path, meta))
 
 
 def match_all_terms(spark: SparkSession, index_path: str, query: str) -> DataFrame:
@@ -281,7 +278,7 @@ def span_first(spark: SparkSession, index_path: str, term: str,
     t = _one_term(term, meta)
     posts = _pruned_postings(spark, index_path, [t], meta)
     occ = term_positions(posts)
-    occ = _drop_tombstones(spark, index_path, occ, meta)
+    occ = live_docs(spark, index_path, occ, meta)
     return (occ.groupBy("doc_id").agg(F.min("pos").alias("_p"))
             .filter(F.col("_p") < int(end))
             .select("doc_id").orderBy("doc_id"))
@@ -308,7 +305,7 @@ def span_not(spark: SparkSession, index_path: str, include: str,
     uniq = sorted({ti, te})
     posts = _pruned_postings(spark, index_path, uniq, meta)
     occ = term_positions(posts)
-    occ = _drop_tombstones(spark, index_path, occ, meta)
+    occ = live_docs(spark, index_path, occ, meta)
     per = (occ.groupBy("doc_id")
            .agg(F.sort_array(F.collect_list(
                     F.when(F.col("term") == ti, F.col("pos")))).alias("inc"),
@@ -806,7 +803,7 @@ def highlight(spark: SparkSession, index_path: str, query: str,
     live = sorted(dic["term"])
     posts = _pruned_postings(spark, index_path, live, meta)
     occ = term_positions(posts)
-    first = (_live(occ, tombstones_df(spark, index_path, meta))
+    first = (live_docs(spark, index_path, occ, meta)
              .groupBy("doc_id").agg(F.min("pos").alias("first_pos")))
     # stored positions are 0-based; slice() is 1-based
     start = F.greatest(F.lit(1), F.col("first_pos") + 1 - window)
@@ -831,7 +828,7 @@ def more_like_this(spark: SparkSession, index_path: str, like_doc_id: int,
     topk path."""
     from collections import Counter
 
-    from elasticsearch_osmosis_plugin_spark.operators.query import idf, topk
+    from elasticsearch_osmosis_plugin_spark.operators.query import topk
     from elasticsearch_osmosis_plugin_spark.plans import catalog
 
     meta = load_meta(index_path)
@@ -845,9 +842,7 @@ def more_like_this(spark: SparkSession, index_path: str, like_doc_id: int,
         raise KeyError(f"doc {like_doc_id} not found")
     tf = Counter(rows[0]["tokens"])
     dic = dictionary_rows(spark, index_path, sorted(tf), meta)
-    ranked = sorted(
-        ((-tf[r.term] * idf(meta["n_docs"], int(r.df)), r.term)
-         for r in dic.itertuples()))
+    ranked = sorted((-tf[t] * v, t) for t, v in term_idfs(dic, meta).items())
     terms = [t for _, t in ranked[:max_query_terms]]
     if not terms:
         return spark.createDataFrame([], "doc_id long, score double")
@@ -869,16 +864,14 @@ def more_like_this_text(spark: SparkSession, index_path: str, like: str,
     from elasticsearch_osmosis_plugin_spark.functions.tokenizer import (
         tokenize_py,
     )
-    from elasticsearch_osmosis_plugin_spark.operators.query import idf, topk
+    from elasticsearch_osmosis_plugin_spark.operators.query import topk
 
     meta = load_meta(index_path)
     tf = Counter(tokenize_py(like, meta["analyzer"],
                              min_len=meta.get("min_token_len", 1),
                              max_len=meta.get("max_token_len", 64)))
     dic = dictionary_rows(spark, index_path, sorted(tf), meta)
-    ranked = sorted(
-        ((-tf[r.term] * idf(meta["n_docs"], int(r.df)), r.term)
-         for r in dic.itertuples()))
+    ranked = sorted((-tf[t] * v, t) for t, v in term_idfs(dic, meta).items())
     terms = [t for _, t in ranked[:max_query_terms]]
     if not terms:
         return spark.createDataFrame([], "doc_id long, score double")
@@ -1394,7 +1387,7 @@ def suggest_phrase(spark: SparkSession, index_path: str, text: str,
         occ = (term_positions(posts)
                .groupBy("term", "doc_id")
                .agg(F.collect_list("pos").alias("poss")))
-        occ = _live(occ, tombstones_df(spark, index_path, meta))
+        occ = live_docs(spark, index_path, occ, meta)
         pairs = spark.createDataFrame(
             [(s, t) for s, ts in by_slot.items() for t in ts],
             "slot int, term string")
@@ -1965,17 +1958,9 @@ def global_stats_agg(spark: SparkSession, index_path: str,
     Degenerate one-pass scalar aggregate of the doc-store (tombstones
     excluded, like every query path)."""
     from elasticsearch_osmosis_plugin_spark.plans import catalog
-    from elasticsearch_osmosis_plugin_spark.plans.build import (
-        load_meta as _lm,
-        tombstones_df as _tombs,
-    )
 
-    meta = _lm(index_path)
-    ds = catalog.read_table(spark, index_path, "docstats") \
-        .select("doc_id", value_col)
-    tombs = _tombs(spark, index_path, meta)
-    if tombs is not None:
-        ds = ds.join(tombs, "doc_id", "left_anti")
+    ds = live_docs(spark, index_path, catalog.read_table(
+        spark, index_path, "docstats").select("doc_id", value_col))
     v = F.col(value_col)
     return ds.agg(F.count(F.lit(1)).alias("n"),
                   F.min(v).alias("min_v"), F.max(v).alias("max_v"),
@@ -2802,7 +2787,7 @@ def highlight_fragments(spark: SparkSession, index_path: str, query: str,
     live = sorted(dic["term"])
     posts = _pruned_postings(spark, index_path, live, meta)
     occ = term_positions(posts)
-    firsts = (_live(occ, tombstones_df(spark, index_path, meta))
+    firsts = (live_docs(spark, index_path, occ, meta)
               .groupBy("doc_id", "term").agg(F.min("pos").alias("pos")))
     w = W.partitionBy("doc_id").orderBy("pos", "term")
     sel = (firsts.withColumn("_rn", F.row_number().over(w))

@@ -29,6 +29,17 @@ Strategies:
   candidate set before the aggregation. Exact (rank-identical to
   scoreall), but the wide shuffle no longer carries the stop-term
   postings — the 100 TB win for queries mixing rare + hot terms.
+- ``blockmax``: single-term block-max — decode the highest-bound
+  blocks for θ, then only the blocks whose stored block max can still
+  beat it. Exact. On several terms it runs maxscore.
+- ``auto``: maxscore when the hottest query term's df exceeds 8x the
+  rarest's, scoreall otherwise (one term included).
+
+Match plan: every Spark-path scorer gets its term stream from
+:func:`_scored` — the indexed terms' constants (:func:`term_idfs` for
+BM25), one scoring decode, tombstones dropped (:func:`live_docs`), the
+post-filter applied (:func:`allowed_docs`) — and sums it with
+:func:`summed`.
 """
 
 from __future__ import annotations
@@ -51,6 +62,7 @@ from elasticsearch_osmosis_plugin_spark.functions.varbyte import (
 )
 from elasticsearch_osmosis_plugin_spark.operators import serve
 from elasticsearch_osmosis_plugin_spark.operators.topk import deterministic_topk
+from elasticsearch_osmosis_plugin_spark.plans import catalog
 from elasticsearch_osmosis_plugin_spark.plans.build import (
     bucket_of,
     dictionary_df,
@@ -220,12 +232,36 @@ def _doc_ids_kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatc
         yield _out(batch, rows, doc_id=ids)
 
 
-def _live(out: DataFrame, denied: DataFrame | None) -> DataFrame:
-    """Exclude tombstoned docs: broadcast anti-join (the tombstone set
-    is small by construction — logical deletes awaiting a merge)."""
+def live_docs(spark: SparkSession, index_path: str, out: DataFrame,
+              meta: dict | None = None) -> DataFrame:
+    """``out`` (any stream with a ``doc_id`` column) without tombstoned
+    docs: a broadcast anti-join (the tombstone set is small by
+    construction — logical deletes awaiting a merge). The one reader
+    of the tombstone table on the query path: posting streams pass
+    through it in :func:`_scored` / :func:`term_docs`, and forms that
+    enumerate the doc store directly (match_all, exists, ids, range)
+    call it too, or deleted docs resurface until a purge."""
+    denied = tombstones_df(spark, index_path, meta)
     if denied is None:
         return out
     return out.join(F.broadcast(denied), "doc_id", "left_anti")
+
+
+def allowed_docs(spark: SparkSession, index_path: str,
+                 post_filter) -> DataFrame | None:
+    """Doc ids passing a ``post_filter`` Column over doc-store columns
+    (None without a filter). The predicate pushes down into the
+    doc-store parquet scan."""
+    if post_filter is None:
+        return None
+    return (catalog.read_table(spark, index_path, "docstats")
+            .filter(post_filter).select("doc_id"))
+
+
+def term_idfs(dic: pd.DataFrame, meta: dict) -> dict[str, float]:
+    """{term: BM25 idf} of the indexed query terms (dictionary rows),
+    in row order; empty when no query term is indexed."""
+    return {r.term: idf(meta["n_docs"], int(r.df)) for r in dic.itertuples()}
 
 
 def term_docs(spark: SparkSession, index_path: str, terms: Sequence[str],
@@ -233,21 +269,56 @@ def term_docs(spark: SparkSession, index_path: str, terms: Sequence[str],
     """Live (term, doc_id) matches of ``terms`` — reads only the
     ``doc_ids_vb`` payload."""
     pruned = _pruned_postings(spark, index_path, terms, meta, posts)
-    return _live(pruned.select("term", "doc_ids_vb")
-                 .mapInArrow(_doc_ids_kernel, "term string, doc_id long"),
-                 tombstones_df(spark, index_path, meta))
+    return live_docs(spark, index_path,
+                     pruned.select("term", "doc_ids_vb")
+                     .mapInArrow(_doc_ids_kernel, "term string, doc_id long"),
+                     meta)
 
 
-def _scored(spark, index_path, terms, meta, idf_by_term,
-            posts=None, allowed=None, denied=None) -> DataFrame:
-    pruned = _pruned_postings(spark, index_path, terms, meta, posts)
-    out = _live(score_postings(pruned, idf_by_term, _bm25(meta)), denied)
+def _scored(spark, index_path, meta, c_by_term, *, posts=None, rows=None,
+            allowed=None, weight=None) -> DataFrame:
+    """The match plan: live (term, doc_id, partial) postings of the
+    ``c_by_term`` terms, partial = weight(c_term, tf, dl) (BM25 by
+    default). ``rows`` scores a subset of the terms' pruned posting
+    rows (block-max phases) instead of all of them; ``allowed`` keeps
+    only those doc ids."""
+    if rows is None:
+        rows = _pruned_postings(spark, index_path, list(c_by_term), meta,
+                                posts)
+    out = live_docs(spark, index_path,
+                    score_postings(rows, c_by_term, weight or _bm25(meta)),
+                    meta)
     if allowed is not None:
         # post-filter semi-join BEFORE the aggregation: per-doc scores
         # are unaffected (idf/avgdl/N stay corpus-global), only which
         # docs survive changes
         out = out.join(allowed, "doc_id", "left_semi")
     return out
+
+
+def summed(scored: DataFrame, msm: int = 0, *, keys=("doc_id",),
+           count: str = "term") -> DataFrame:
+    """Partials summed per ``keys`` -> (*keys, score). ``msm`` > 0
+    keeps only groups with >= msm distinct ``count`` values (ES
+    minimum_should_match), counted in the same aggregation."""
+    if msm <= 0:
+        return scored.groupBy(*keys).agg(F.sum("partial").alias("score"))
+    return (scored.groupBy(*keys)
+            .agg(F.sum("partial").alias("score"),
+                 F.countDistinct(count).alias("_nt"))
+            .filter(F.col("_nt") >= msm)
+            .select(*keys, "score"))
+
+
+def match_scores(spark: SparkSession, index_path: str, query: str,
+                 meta: dict, *, allowed=None) -> DataFrame | None:
+    """Scoreall BM25 of ``query`` -> (doc_id, score), or None when no
+    query term is indexed."""
+    idfs = term_idfs(dictionary_rows(spark, index_path,
+                                     query_terms(query, meta), meta), meta)
+    if not idfs:
+        return None
+    return summed(_scored(spark, index_path, meta, idfs, allowed=allowed))
 
 
 POSITIONS_SCHEMA = "term string, doc_id long, pos long"
@@ -297,19 +368,15 @@ def topk(spark: SparkSession, index_path: str, query: str, k: int = 10,
     once the msm filter shrinks the ranking — correctness over
     cleverness here (the msm count falls out of the same aggregation
     that sums the score, so the only cost is scoring hot terms)."""
+    if strategy not in ("auto", "scoreall", "maxscore", "blockmax"):
+        raise ValueError(f"unknown strategy: {strategy}")
     meta = _meta if _meta is not None else load_meta(index_path)
     terms = query_terms(query, meta)
     dic = dictionary_rows(spark, index_path, terms, meta, dic=_dic)
     if dic.empty:
         return spark.createDataFrame([], "doc_id long, score double")
-    allowed = None
-    if post_filter is not None:
-        from elasticsearch_osmosis_plugin_spark.plans import catalog
-
-        allowed = (catalog.read_table(spark, index_path, "docstats")
-                   .filter(post_filter).select("doc_id"))
-    denied = tombstones_df(spark, index_path, meta)
-    idf_by_term = {r.term: idf(meta["n_docs"], int(r.df)) for r in dic.itertuples()}
+    allowed = allowed_docs(spark, index_path, post_filter)
+    idf_by_term = term_idfs(dic, meta)
     if boosts:
         idf_by_term = {t: v * float(boosts.get(t, 1.0))
                        for t, v in idf_by_term.items()}
@@ -321,40 +388,33 @@ def topk(spark: SparkSession, index_path: str, query: str, k: int = 10,
           for r in dic.itertuples()}
     live_terms = list(dic["term"])
 
-    if strategy not in ("auto", "scoreall", "maxscore", "blockmax"):
-        raise ValueError(f"unknown strategy: {strategy}")
     if minimum_should_match > 0:
         if len(live_terms) < minimum_should_match:
             return spark.createDataFrame([], "doc_id long, score double")
-        scores = (_scored(spark, index_path, live_terms, meta, idf_by_term,
-                          posts=_posts, allowed=allowed, denied=denied)
-                  .groupBy("doc_id")
-                  .agg(F.sum("partial").alias("score"),
-                       F.countDistinct("term").alias("_nt"))
-                  .filter(F.col("_nt") >= minimum_should_match)
-                  .select("doc_id", "score"))
-        return deterministic_topk(scores, k)
+        return deterministic_topk(
+            summed(_scored(spark, index_path, meta, idf_by_term,
+                           posts=_posts, allowed=allowed),
+                   minimum_should_match), k)
     if strategy == "auto":
         # maxscore pays off when some terms are much hotter than others
         dfs = dic["df"].astype(float)
         strategy = "maxscore" if (len(live_terms) > 1
                                   and dfs.max() > 8 * dfs.min()) else "scoreall"
 
-    if len(live_terms) == 1 and strategy in ("auto", "blockmax"):
+    if len(live_terms) == 1 and strategy == "blockmax":
         return _topk_single_term_blockmax(
             spark, index_path, live_terms[0], meta, idf_by_term[live_terms[0]],
-            k, posts=_posts, allowed=allowed, denied=denied)
+            k, posts=_posts, allowed=allowed)
     if strategy == "blockmax":
         # multi-term block-max falls back to MaxScore (same block
         # metadata drives the θ seed) instead of raising
         strategy = "maxscore"
     if strategy == "scoreall" or len(live_terms) == 1:
-        scores = (_scored(spark, index_path, live_terms, meta, idf_by_term,
-                          posts=_posts, allowed=allowed, denied=denied)
-                  .groupBy("doc_id").agg(F.sum("partial").alias("score")))
-        return deterministic_topk(scores, k)
+        return deterministic_topk(
+            summed(_scored(spark, index_path, meta, idf_by_term,
+                           posts=_posts, allowed=allowed)), k)
     return _topk_maxscore(spark, index_path, live_terms, meta, idf_by_term,
-                          ub, k, posts=_posts, allowed=allowed, denied=denied)
+                          ub, k, posts=_posts, allowed=allowed)
 
 
 def topk_after(spark: SparkSession, index_path: str, query: str,
@@ -373,37 +433,20 @@ def topk_after(spark: SparkSession, index_path: str, query: str,
     paging N times never re-reads more than the query terms' postings.
     """
     meta = _meta if _meta is not None else load_meta(index_path)
-    terms = query_terms(query, meta)
-    dic = dictionary_rows(spark, index_path, terms, meta, dic=_dic)
-    if dic.empty:
-        return spark.createDataFrame([], "doc_id long, score double")
-    allowed = None
-    if post_filter is not None:
-        from elasticsearch_osmosis_plugin_spark.plans import catalog
-
-        allowed = (catalog.read_table(spark, index_path, "docstats")
-                   .filter(post_filter).select("doc_id"))
-    denied = tombstones_df(spark, index_path, meta)
-    idf_by_term = {r.term: idf(meta["n_docs"], int(r.df))
-                   for r in dic.itertuples()}
-    if boosts:
-        idf_by_term = {t: v * float(boosts.get(t, 1.0))
-                       for t, v in idf_by_term.items()}
-    if minimum_should_match > 0 and len(dic) < minimum_should_match:
+    boosts = boosts or {}
+    dic = dictionary_rows(spark, index_path, query_terms(query, meta), meta,
+                          dic=_dic)
+    idf_by_term = {t: v * float(boosts.get(t, 1.0))
+                   for t, v in term_idfs(dic, meta).items()}
+    if not idf_by_term or len(idf_by_term) < minimum_should_match:
         return spark.createDataFrame([], "doc_id long, score double")
     # msm pages must use the same match semantics as page 1 or the
-    # cursor tiles the wrong ranking; the countDistinct is only added
-    # when the constraint is actually set
-    aggs = [F.sum("partial").alias("score")]
-    if minimum_should_match > 0:
-        aggs.append(F.countDistinct("term").alias("_nt"))
-    scores = (_scored(spark, index_path, list(dic["term"]), meta,
-                      idf_by_term, posts=_posts, allowed=allowed,
-                      denied=denied)
-              .groupBy("doc_id").agg(*aggs))
-    if minimum_should_match > 0:
-        scores = scores.filter(F.col("_nt") >= minimum_should_match)
-    scores = scores.select("doc_id", "score")
+    # cursor tiles the wrong ranking
+    scores = summed(_scored(spark, index_path, meta, idf_by_term,
+                            posts=_posts,
+                            allowed=allowed_docs(spark, index_path,
+                                                 post_filter)),
+                    minimum_should_match)
     if after is not None:
         s, d = float(after[0]), int(after[1])
         scores = scores.filter(
@@ -465,16 +508,10 @@ def topk_synonyms(spark: SparkSession, index_path: str,
         live_terms.extend(present)
     if not live_terms:
         return spark.createDataFrame([], "doc_id long, score double")
-    allowed = None
-    if post_filter is not None:
-        from elasticsearch_osmosis_plugin_spark.plans import catalog
-
-        allowed = (catalog.read_table(spark, index_path, "docstats")
-                   .filter(post_filter).select("doc_id"))
-    denied = tombstones_df(spark, index_path, meta)
+    allowed = allowed_docs(spark, index_path, post_filter)
     pruned = _pruned_postings(spark, index_path, sorted(live_terms), meta,
                               _posts)
-    raw = _live(raw_postings(pruned), denied)
+    raw = live_docs(spark, index_path, raw_postings(pruned), meta)
     if allowed is not None:
         raw = raw.join(allowed, "doc_id", "left_semi")
     gmap = F.create_map(*[x for t, g in gid_of.items()
@@ -530,33 +567,18 @@ def topk_lm(spark: SparkSession, index_path: str, query: str,
     if similarity not in ("lm_dirichlet", "lm_jelinek_mercer"):
         raise ValueError(f"unknown LM similarity: {similarity!r}")
     meta = _meta if _meta is not None else load_meta(index_path)
-    terms = query_terms(query, meta)
-    if not terms:
-        return spark.createDataFrame([], "doc_id long, score double")
-    dic = dictionary_rows(spark, index_path, terms, meta, dic=_dic)
+    dic = dictionary_rows(spark, index_path, query_terms(query, meta), meta,
+                          dic=_dic)
     cf_by_term = {r.term: int(r.cf) for r in dic.itertuples()}
-    live_terms = sorted(cf_by_term)
-    if not live_terms:
+    if not cf_by_term:
         return spark.createDataFrame([], "doc_id long, score double")
     total_tokens = round(float(meta["avgdl"]) * int(meta["n_docs"]))
     p_by_term = {t: (cf_by_term[t] + 1.0) / (total_tokens + 1.0)
-                 for t in live_terms}
-    allowed = None
-    if post_filter is not None:
-        from elasticsearch_osmosis_plugin_spark.plans import catalog
-
-        allowed = (catalog.read_table(spark, index_path, "docstats")
-                   .filter(post_filter).select("doc_id"))
-    denied = tombstones_df(spark, index_path, meta)
-    pruned = _pruned_postings(spark, index_path, live_terms, meta, _posts)
-    out = _live(score_postings(pruned, p_by_term,
-                               lm_weight(similarity, float(mu), float(lam))),
-                denied)
-    if allowed is not None:
-        out = out.join(allowed, "doc_id", "left_semi")
-    scores = (out.groupBy("doc_id").agg(F.sum("partial").alias("score"))
-              .filter(F.col("score") > 0.0))
-    return deterministic_topk(scores, k)
+                 for t in sorted(cf_by_term)}
+    out = _scored(spark, index_path, meta, p_by_term, posts=_posts,
+                  allowed=allowed_docs(spark, index_path, post_filter),
+                  weight=lm_weight(similarity, float(mu), float(lam)))
+    return deterministic_topk(summed(out).filter(F.col("score") > 0.0), k)
 
 
 def classic_weight(c, tf, dl):
@@ -608,17 +630,9 @@ def topk_classic(spark: SparkSession, index_path: str, query: str,
     if not live_terms:
         return spark.createDataFrame([], "doc_id long, score double")
     w_by_term = {t: qnorm * idf_c[t] * idf_c[t] for t in live_terms}
-    allowed = None
-    if post_filter is not None:
-        from elasticsearch_osmosis_plugin_spark.plans import catalog
-
-        allowed = (catalog.read_table(spark, index_path, "docstats")
-                   .filter(post_filter).select("doc_id"))
-    denied = tombstones_df(spark, index_path, meta)
-    pruned = _pruned_postings(spark, index_path, live_terms, meta, _posts)
-    out = _live(score_postings(pruned, w_by_term, classic_weight), denied)
-    if allowed is not None:
-        out = out.join(allowed, "doc_id", "left_semi")
+    out = _scored(spark, index_path, meta, w_by_term, posts=_posts,
+                  allowed=allowed_docs(spark, index_path, post_filter),
+                  weight=classic_weight)
     # coord numerator: a term's blocks are doc-disjoint, so the decode
     # emits exactly ONE row per (term, doc) — count(1) == distinct
     # term count, without countDistinct's second aggregation pass
@@ -651,22 +665,18 @@ def topk_many(spark: SparkSession, index_path: str,
     meta = _meta if _meta is not None else load_meta(index_path)
     qterms = {qid: query_terms(q, meta) for qid, q in queries.items()}
     all_terms = sorted(set().union(*qterms.values())) if qterms else []
-    dic = dictionary_rows(spark, index_path, all_terms, meta, dic=_dic)
-    out_schema = "query_id string, doc_id long, score double"
-    if dic.empty:
-        return spark.createDataFrame([], out_schema)
-    idf_by_term = {r.term: idf(meta["n_docs"], int(r.df))
-                   for r in dic.itertuples()}
-    live = set(dic["term"])
-    denied = tombstones_df(spark, index_path, meta)
-    scored = _scored(spark, index_path, sorted(live), meta, idf_by_term,
-                     posts=_posts, denied=denied)
+    idf_by_term = term_idfs(dictionary_rows(spark, index_path, all_terms,
+                                            meta, dic=_dic), meta)
+    if not idf_by_term:
+        return spark.createDataFrame(
+            [], "query_id string, doc_id long, score double")
     pairs = spark.createDataFrame(
-        [(qid, t) for qid, ts in qterms.items() for t in ts if t in live],
+        [(qid, t) for qid, ts in qterms.items() for t in ts
+         if t in idf_by_term],
         "query_id string, term string")
-    per_q = (scored.join(F.broadcast(pairs), "term")
-             .groupBy("query_id", "doc_id")
-             .agg(F.sum("partial").alias("score")))
+    per_q = summed(_scored(spark, index_path, meta, idf_by_term, posts=_posts)
+                   .join(F.broadcast(pairs), "term"),
+                   keys=("query_id", "doc_id"))
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     return (per_q.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") <= k).drop("_rn")
@@ -694,34 +704,22 @@ def topk_clauses(spark: SparkSession, index_path: str,
     if not cl_terms or any(not ts for ts in cl_terms):
         return spark.createDataFrame([], "doc_id long, score double")
     union = sorted(set().union(*cl_terms))
-    dic = dictionary_rows(spark, index_path, union, meta, dic=_dic)
-    live = set(dic["term"])
+    idf_by_term = term_idfs(dictionary_rows(spark, index_path, union, meta,
+                                            dic=_dic), meta)
     # a clause with no indexed term can never match -> empty result
-    if any(not (set(ts) & live) for ts in cl_terms):
+    if any(not (set(ts) & idf_by_term.keys()) for ts in cl_terms):
         return spark.createDataFrame([], "doc_id long, score double")
-    idf_by_term = {r.term: idf(meta["n_docs"], int(r.df))
-                   for r in dic.itertuples()}
-    n_cl_of = {t: sum(1 for ts in cl_terms if t in ts) for t in live}
-    allowed = None
-    if post_filter is not None:
-        from elasticsearch_osmosis_plugin_spark.plans import catalog
-
-        allowed = (catalog.read_table(spark, index_path, "docstats")
-                   .filter(post_filter).select("doc_id"))
-    scored = _scored(spark, index_path, sorted(live), meta, idf_by_term,
-                     posts=_posts, allowed=allowed,
-                     denied=tombstones_df(spark, index_path, meta))
+    n_cl_of = {t: sum(1 for ts in cl_terms if t in ts) for t in idf_by_term}
+    scored = _scored(spark, index_path, meta, idf_by_term, posts=_posts,
+                     allowed=allowed_docs(spark, index_path, post_filter))
     pairs = spark.createDataFrame(
         [(ci, t, 1.0 / n_cl_of[t])
-         for ci, ts in enumerate(cl_terms) for t in ts if t in live],
+         for ci, ts in enumerate(cl_terms) for t in ts if t in idf_by_term],
         "clause int, term string, w double")
-    agg = (scored.join(F.broadcast(pairs), "term")
-           .groupBy("doc_id")
-           .agg(F.sum(F.col("partial") * F.col("w")).alias("score"),
-                F.countDistinct("clause").alias("_nc"))
-           .filter(F.col("_nc") == len(cl_terms))
-           .select("doc_id", "score"))
-    return deterministic_topk(agg, k)
+    weighted = (scored.join(F.broadcast(pairs), "term")
+                .withColumn("partial", F.col("partial") * F.col("w")))
+    return deterministic_topk(
+        summed(weighted, len(cl_terms), count="clause"), k)
 
 
 def fetch_hits(spark: SparkSession, index_path: str, hits: DataFrame,
@@ -737,8 +735,6 @@ def fetch_hits(spark: SparkSession, index_path: str, hits: DataFrame,
     shuffle of the store. Missing doc ids (possible only if the store
     was mutated after scoring) keep the hit with null fields, exactly
     like ES serving a hit whose _source was since deleted."""
-    from elasticsearch_osmosis_plugin_spark.plans import catalog
-
     ids = [r["doc_id"] for r in hits.select("doc_id").collect()]
     ds = (catalog.read_table(spark, index_path, "docstats")
           .select("doc_id", *cols)
@@ -762,13 +758,11 @@ def scan_df(spark: SparkSession, index_path: str, query: str | None = None,
     Column over doc-store carry columns.
     """
     from elasticsearch_osmosis_plugin_spark.operators import intersect
-    from elasticsearch_osmosis_plugin_spark.plans import catalog
 
     if query is None:
-        meta = load_meta(index_path)
-        ids = catalog.read_table(spark, index_path, "docstats") \
-            .select("doc_id")
-        ids = _live(ids, tombstones_df(spark, index_path, meta))
+        ids = live_docs(spark, index_path,
+                        catalog.read_table(spark, index_path, "docstats")
+                        .select("doc_id"))
     elif mode == "all":
         ids = intersect.match_all_terms(spark, index_path, query)
     elif mode == "any":
@@ -776,9 +770,8 @@ def scan_df(spark: SparkSession, index_path: str, query: str | None = None,
     else:
         raise ValueError(f"scan_df: unknown mode {mode!r}")
     if post_filter is not None:
-        allowed = (catalog.read_table(spark, index_path, "docstats")
-                   .filter(post_filter).select("doc_id"))
-        ids = ids.join(allowed, "doc_id", "left_semi")
+        ids = ids.join(allowed_docs(spark, index_path, post_filter),
+                       "doc_id", "left_semi")
     return ids.select("doc_id")
 
 
@@ -849,8 +842,6 @@ def multi_docstats(spark: SparkSession, index_paths: Sequence[str],
     convention), so the union IS the doc store of the union corpus.
     Column-pruned before the union so each parquet scan reads only
     ``cols``."""
-    from elasticsearch_osmosis_plugin_spark.plans import catalog
-
     frames = [catalog.read_table(spark, p, "docstats").select(*cols)
               for p in index_paths]
     out = frames[0]
@@ -924,43 +915,21 @@ def topk_multi(spark: SparkSession, index_paths: Sequence[str],
     idf_g = {t: idf(n_g, d) for t, d in df_g.items()}
     if indices_boost is not None and len(indices_boost) != len(index_paths):
         raise ValueError("indices_boost needs one weight per index")
+    if minimum_should_match > 0 and len(df_g) < minimum_should_match:
+        return spark.createDataFrame([], "doc_id long, score double")
     allowed = None
     if post_filter is not None:
-        from elasticsearch_osmosis_plugin_spark.plans import catalog
-
-        frames = [catalog.read_table(spark, p, "docstats")
-                  .filter(post_filter).select("doc_id")
-                  for p in index_paths]
-        allowed = frames[0]
-        for f in frames[1:]:
-            allowed = allowed.unionByName(f)
+        allowed = functools.reduce(DataFrame.unionByName, [
+            allowed_docs(spark, p, post_filter) for p in index_paths])
     parts = []
     for i, (p, m, dic) in enumerate(zip(index_paths, metas, dics)):
-        live = sorted(set(dic["term"]))
-        if not live:
-            continue
-        m_scaled = dict(m, avgdl=avgdl_g)
-        idf_i = idf_g
-        if indices_boost is not None:
-            w = float(indices_boost[i])
-            idf_i = {t: v * w for t, v in idf_g.items()}
-        parts.append(_scored(spark, p, live, m_scaled, idf_i,
-                             allowed=allowed,
-                             denied=tombstones_df(spark, p, m)))
-    out = parts[0]
-    for more in parts[1:]:
-        out = out.unionByName(more)
-    if minimum_should_match > 0:
-        if len(df_g) < minimum_should_match:
-            return spark.createDataFrame([], "doc_id long, score double")
-        scores = (out.groupBy("doc_id")
-                  .agg(F.sum("partial").alias("score"),
-                       F.countDistinct("term").alias("_nt"))
-                  .filter(F.col("_nt") >= minimum_should_match)
-                  .select("doc_id", "score"))
-        return deterministic_topk(scores, k)
-    scores = out.groupBy("doc_id").agg(F.sum("partial").alias("score"))
-    return deterministic_topk(scores, k)
+        w = 1.0 if indices_boost is None else float(indices_boost[i])
+        idf_i = {t: idf_g[t] * w for t in dic["term"]}
+        if idf_i:
+            parts.append(_scored(spark, p, dict(m, avgdl=avgdl_g), idf_i,
+                                 allowed=allowed))
+    out = functools.reduce(DataFrame.unionByName, parts)
+    return deterministic_topk(summed(out, minimum_should_match), k)
 
 
 class Searcher:
@@ -971,8 +940,6 @@ class Searcher:
     file-index rebuild, or dictionary re-reads."""
 
     def __init__(self, spark: SparkSession, index_path: str):
-        from elasticsearch_osmosis_plugin_spark.plans import catalog
-
         self.spark = spark
         # pin the REAL index at open time: a Searcher opened on an ES-
         # style alias (catalog.create_alias) keeps serving its snapshot
@@ -1053,8 +1020,6 @@ class Searcher:
         compaction) or an alias swap — the ES refresh analog (B11): a
         searcher opened before a commit keeps serving the old snapshot
         until refreshed."""
-        from elasticsearch_osmosis_plugin_spark.plans import catalog
-
         self.dic.unpersist()
         self.index_path = catalog.resolve_alias(self._given_path)
         self.meta = load_meta(self.index_path)
@@ -1067,8 +1032,7 @@ class Searcher:
 
 
 def _topk_single_term_blockmax(spark, index_path, term, meta, idf_t, k,
-                               posts=None, allowed=None,
-                               denied=None) -> DataFrame:
+                               posts=None, allowed=None) -> DataFrame:
     """Block-max pruning for single-term top-k (exact).
 
     A doc's score is scale * w(tf, dl) with scale = idf*(k1+1), and
@@ -1087,29 +1051,23 @@ def _topk_single_term_blockmax(spark, index_path, term, meta, idf_t, k,
             .limit(n_phase1).collect())
     if not head:
         return spark.createDataFrame([], "doc_id long, score double")
-    import functools
     import operator
 
     head_keys = sorted({(r["seg"], r["block"]) for r in head})
     head_pred = functools.reduce(operator.or_, [
         (F.col("seg") == s) & (F.col("block") == b) for s, b in head_keys])
-    phase1 = score_postings(posts.filter(head_pred), {term: idf_t},
-                            _bm25(meta)) \
-        .select("doc_id", F.col("partial").alias("score"))
-    phase1 = _live(phase1, denied)
-    if allowed is not None:
-        phase1 = phase1.join(allowed, "doc_id", "left_semi")
-    phase1 = phase1.persist()
+
+    def phase(rows):
+        return _scored(spark, index_path, meta, {term: idf_t}, rows=rows,
+                       allowed=allowed) \
+            .select("doc_id", F.col("partial").alias("score"))
+
+    phase1 = phase(posts.filter(head_pred)).persist()
     top1 = phase1.orderBy(F.desc("score"), F.asc("doc_id")).limit(k).collect()
     theta = top1[-1]["score"] if len(top1) >= k else 0.0
     # phase 2: only blocks that could beat θ and weren't already decoded
-    rest = posts.filter(~head_pred
-                        & (F.col("block_max_wand") * scale >= F.lit(theta)))
-    phase2 = score_postings(rest, {term: idf_t}, _bm25(meta)) \
-        .select("doc_id", F.col("partial").alias("score"))
-    phase2 = _live(phase2, denied)
-    if allowed is not None:
-        phase2 = phase2.join(allowed, "doc_id", "left_semi")
+    phase2 = phase(posts.filter(
+        ~head_pred & (F.col("block_max_wand") * scale >= F.lit(theta))))
     out = deterministic_topk(phase1.unionByName(phase2), k)
     return _finalize_topk(spark, out, [phase1])
 
@@ -1125,7 +1083,7 @@ def _finalize_topk(spark, out: DataFrame, cached: list[DataFrame]) -> DataFrame:
 
 
 def _theta_seed(spark, index_path, term, meta, idf_t, k, posts,
-                allowed=None, denied=None) -> float:
+                allowed=None) -> float:
     """Exact lower bound on the final k-th score.
 
     Metadata fast path (fresh build, no tombstones, no post-filter):
@@ -1142,7 +1100,7 @@ def _theta_seed(spark, index_path, term, meta, idf_t, k, posts,
     best partial among eligible docs — still one block, never a
     postings scan."""
     p = _pruned_postings(spark, index_path, [term], meta, posts)
-    if (allowed is None and denied is None
+    if (allowed is None and not meta.get("tombstones_n")
             and float(meta.get("wand_slack", 1.0)) == 1.0):
         scale = idf_t * (meta["k1"] + 1.0)
         rows = (p.select("block_max_wand")
@@ -1155,19 +1113,18 @@ def _theta_seed(spark, index_path, term, meta, idf_t, k, posts,
                      "block_max_wand", "seg", "block")
             .orderBy(F.desc("block_max_wand"), F.asc("seg"), F.asc("block"))
             .limit(1))
-    seed = score_postings(best, {term: idf_t}, _bm25(meta))
-    seed = _live(seed, denied)  # a tombstoned doc must not raise θ
-    if allowed is not None:
-        # θ must lower-bound the FILTERED k-th score, or MaxScore would
-        # over-prune docs still eligible under the post-filter
-        seed = seed.join(allowed, "doc_id", "left_semi")
+    # a tombstoned doc must not raise θ, and θ must lower-bound the
+    # FILTERED k-th score, or MaxScore would over-prune docs still
+    # eligible under the post-filter
+    seed = _scored(spark, index_path, meta, {term: idf_t}, rows=best,
+                   allowed=allowed)
     rows = (seed.select("partial")
             .orderBy(F.desc("partial")).limit(k).collect())
     return float(rows[-1]["partial"]) if len(rows) >= k else 0.0
 
 
 def _topk_maxscore(spark, index_path, terms, meta, idf_by_term, ub, k,
-                   posts=None, allowed=None, denied=None) -> DataFrame:
+                   posts=None, allowed=None) -> DataFrame:
     """One-shot MaxScore: the essential set E is chosen ONCE from the
     dictionary upper bounds against the θ seed — no grow-and-retry
     driver loop re-scanning postings (the r1 scale-killer) — and the
@@ -1183,29 +1140,31 @@ def _topk_maxscore(spark, index_path, terms, meta, idf_by_term, ub, k,
     by_ub_desc = sorted(terms, key=lambda t: (-ub[t], t))
     t_star = by_ub_desc[0]
     theta_seed = _theta_seed(spark, index_path, t_star, meta,
-                             idf_by_term[t_star], k, posts, allowed, denied)
+                             idf_by_term[t_star], k, posts, allowed)
     e_size = 1
     while e_size < len(by_ub_desc) and \
             sum(ub[t] for t in by_ub_desc[e_size:]) >= theta_seed:
         e_size += 1
     E, NE = by_ub_desc[:e_size], by_ub_desc[e_size:]
-    partial_e = (_scored(spark, index_path, E, meta, idf_by_term, posts,
-                         allowed=allowed, denied=denied)
-                 .groupBy("doc_id").agg(F.sum("partial").alias("partial")))
+    partial_e = summed(_scored(spark, index_path, meta,
+                               {t: idf_by_term[t] for t in E}, posts=posts,
+                               allowed=allowed))
     if not NE:
-        return deterministic_topk(
-            partial_e.withColumnRenamed("partial", "score"), k)
+        return deterministic_topk(partial_e, k)
     sum_ub_ne = sum(ub[t] for t in NE)
     # candidates: only docs that could still reach θ_seed once NE terms
     # are added; docs absent from all E postings score <= sum_ub_ne.
     cands = partial_e.filter(
-        F.col("partial") + F.lit(sum_ub_ne) >= F.lit(theta_seed))
-    ne_scores = (_scored(spark, index_path, NE, meta, idf_by_term, posts)
-                 .join(cands.select("doc_id"), "doc_id", "left_semi")  # prune hot postings
-                 .groupBy("doc_id").agg(F.sum("partial").alias("ne_partial")))
-    final = (cands.join(ne_scores, "doc_id", "left")
-             .withColumn("score", F.col("partial") + F.coalesce(F.col("ne_partial"), F.lit(0.0)))
-             .select("doc_id", "score"))
+        F.col("score") + F.lit(sum_ub_ne) >= F.lit(theta_seed))
+    # the candidate semi-join prunes the hot non-essential postings
+    ne_scores = summed(
+        _scored(spark, index_path, meta, {t: idf_by_term[t] for t in NE},
+                posts=posts)
+        .join(cands.select("doc_id"), "doc_id", "left_semi")) \
+        .withColumnRenamed("score", "ne_partial")
+    final = cands.join(ne_scores, "doc_id", "left").select(
+        "doc_id", (F.col("score") + F.coalesce(F.col("ne_partial"),
+                                               F.lit(0.0))).alias("score"))
     return deterministic_topk(final, k)
 
 
@@ -1267,8 +1226,6 @@ def update_by_query(spark: SparkSession, index_path: str,
     left join against the match-id stream), swapped atomically with
     the manifest preserved — the same full-segment-rewrite cost
     profile Lucene pays for updates, minus the merge amplification."""
-    from elasticsearch_osmosis_plugin_spark.plans import catalog
-
     protected = {"doc_id", "seg", "grp", "tokens", "dl", "content_sha"}
     ds = catalog.read_table(spark, index_path, "docstats")
     bad = sorted(set(assignments) - set(ds.columns))
@@ -1319,7 +1276,6 @@ def reindex(spark: SparkSession, src_index: str, dest_path: str,
     term-vector store. Carry columns ride along; returns the new
     index's meta."""
     from elasticsearch_osmosis_plugin_spark.config import EngineConfig
-    from elasticsearch_osmosis_plugin_spark.plans import catalog
     from elasticsearch_osmosis_plugin_spark.plans.build import build_index
 
     meta = load_meta(src_index)
@@ -1361,16 +1317,13 @@ def explain_hits(spark: SparkSession, index_path: str, hits: DataFrame,
     (top-k-sized broadcast), same as ES re-walking the scorer tree for
     explained hits; the ranking itself is untouched."""
     meta = load_meta(index_path)
-    terms = query_terms(query, meta)
-    dic = dictionary_rows(spark, index_path, terms, meta)
-    if dic.empty:
+    idf_by_term = term_idfs(dictionary_rows(
+        spark, index_path, query_terms(query, meta), meta), meta)
+    if not idf_by_term:
         return hits.withColumn(
             "explanation",
             F.array().cast("array<struct<term:string,partial:double>>"))
-    idf_by_term = {r.term: idf(meta["n_docs"], int(r.df))
-                   for r in dic.itertuples()}
-    partials = _scored(spark, index_path, list(dic["term"]), meta,
-                       idf_by_term,
+    partials = _scored(spark, index_path, meta, idf_by_term,
                        allowed=F.broadcast(hits.select("doc_id")))
     expl = (partials
             .groupBy("doc_id")
@@ -1389,16 +1342,13 @@ def explain_doc(spark: SparkSession, index_path: str, doc_id: int,
     terms, filtered to the doc — the same plan explain_hits uses with
     a 1-row hit frame."""
     meta = load_meta(index_path)
-    terms = query_terms(query, meta)
-    dic = dictionary_rows(spark, index_path, terms, meta)
-    if dic.empty:
+    idf_by_term = term_idfs(dictionary_rows(
+        spark, index_path, query_terms(query, meta), meta), meta)
+    if not idf_by_term:
         return {"matched": False, "score": 0.0, "explanation": []}
-    idf_by_term = {r.term: idf(meta["n_docs"], int(r.df))
-                   for r in dic.itertuples()}
     hit = spark.createDataFrame([(int(doc_id),)], "doc_id long")
-    rows = (_scored(spark, index_path, list(dic["term"]), meta, idf_by_term,
-                    allowed=F.broadcast(hit),
-                    denied=tombstones_df(spark, index_path, meta))
+    rows = (_scored(spark, index_path, meta, idf_by_term,
+                    allowed=F.broadcast(hit))
             .orderBy("term").collect())
     expl = [(r["term"], float(r["partial"])) for r in rows]
     return {"matched": bool(expl),

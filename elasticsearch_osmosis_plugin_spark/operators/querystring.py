@@ -240,9 +240,10 @@ def compile_tree_topk(spark: SparkSession, index_path: str, tree: Group,
     from elasticsearch_osmosis_plugin_spark.operators.query import (
         _scored,
         dictionary_rows,
-        idf,
+        live_docs,
         load_meta,
-        tombstones_df,
+        summed,
+        term_idfs,
     )
     from elasticsearch_osmosis_plugin_spark.plans import catalog
 
@@ -250,12 +251,9 @@ def compile_tree_topk(spark: SparkSession, index_path: str, tree: Group,
 
     all_terms: set[str] = set()
     _collect_terms(tree, meta, all_terms)
-    dic = dictionary_rows(spark, index_path, sorted(all_terms), meta)
-    idf_by_term = {r.term: idf(meta["n_docs"], int(r.df))
-                   for r in dic.itertuples()}
-    denied = tombstones_df(spark, index_path, meta)
-    shared = (_scored(spark, index_path, sorted(idf_by_term), meta,
-                      idf_by_term, denied=denied)
+    idf_by_term = term_idfs(dictionary_rows(spark, index_path,
+                                            sorted(all_terms), meta), meta)
+    shared = (_scored(spark, index_path, meta, idf_by_term)
               if idf_by_term else None)
 
     empty = spark.createDataFrame([], "doc_id long, score double")
@@ -272,17 +270,14 @@ def compile_tree_topk(spark: SparkSession, index_path: str, tree: Group,
                      if t in idf_by_term]
             if not terms or shared is None:
                 return empty
-            return (shared.filter(F.col("term").isin(terms))
-                    .groupBy("doc_id")
-                    .agg((F.sum("partial") * F.lit(leaf.boost)).alias("score")))
+            return summed(shared.filter(F.col("term").isin(terms))).select(
+                "doc_id", (F.col("score") * F.lit(leaf.boost)).alias("score"))
         if leaf.kind in ("exists", "match_all"):
             ds = catalog.read_table(spark, index_path, "docstats")
             if leaf.kind == "exists":
                 ds = ds.filter(F.col(leaf.text).isNotNull())
-            ds = ds.select("doc_id", F.lit(leaf.boost).alias("score"))
-            if denied is not None:
-                ds = ds.join(denied.select("doc_id"), "doc_id", "left_anti")
-            return ds
+            return live_docs(spark, index_path, ds.select(
+                "doc_id", F.lit(leaf.boost).alias("score")), meta)
         if leaf.kind == "phrase":
             toks = _analyzed(leaf.text, meta)
             if not toks:

@@ -21,6 +21,7 @@ Scale notes (100 TB design point):
 
 from __future__ import annotations
 
+import functools
 import math
 from typing import Sequence
 
@@ -28,16 +29,21 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from elasticsearch_osmosis_plugin_spark.functions.tokenizer import tokenize_py
 from elasticsearch_osmosis_plugin_spark.operators.query import (
-    _live,
     _pruned_postings,
     _scored,
+    allowed_docs,
     dictionary_rows,
     idf,
+    live_docs,
+    match_scores,
     query_terms,
     raw_postings,
+    summed,
+    term_idfs,
 )
 from elasticsearch_osmosis_plugin_spark.operators.topk import deterministic_topk
-from elasticsearch_osmosis_plugin_spark.plans.build import load_meta, tombstones_df
+from elasticsearch_osmosis_plugin_spark.plans import catalog
+from elasticsearch_osmosis_plugin_spark.plans.build import load_meta
 
 
 def field_value_factor(field: str, factor: float = 1.0,
@@ -134,21 +140,12 @@ def function_score_topk(spark: SparkSession, index_path: str, query: str,
     stream is the small side at any realistic selectivity; the store
     scan reads only doc_id + the referenced feature columns) ->
     Catalyst column expressions for the weights -> top-k."""
-    from elasticsearch_osmosis_plugin_spark.plans import catalog
-
-    meta = load_meta(index_path)
-    terms = query_terms(query, meta)
-    dic = dictionary_rows(spark, index_path, terms, meta)
-    if dic.empty:
+    scores = match_scores(spark, index_path, query, load_meta(index_path))
+    if scores is None:
         return spark.createDataFrame([], "doc_id long, score double")
-    idf_by_term = {r.term: idf(meta["n_docs"], int(r.df))
-                   for r in dic.itertuples()}
-    scores = (_scored(spark, index_path, list(dic["term"]), meta, idf_by_term,
-                      denied=tombstones_df(spark, index_path, meta))
-              .groupBy("doc_id").agg(F.sum("partial").alias("_bm25")))
     if not functions:
-        return deterministic_topk(
-            scores.select("doc_id", F.col("_bm25").alias("score")), k)
+        return deterministic_topk(scores, k)
+    scores = scores.withColumnRenamed("score", "_bm25")
     w = functions[0]
     for fn in functions[1:]:
         w = w * fn
@@ -180,26 +177,27 @@ def dis_max_topk(spark: SparkSession, index_path: str,
     meta = load_meta(index_path)
     per_q = {f"q{i}": query_terms(q, meta) for i, q in enumerate(queries)}
     uniq = sorted({t for ts in per_q.values() for t in ts})
-    dic = dictionary_rows(spark, index_path, uniq, meta)
-    if dic.empty:
+    idf_by_term = term_idfs(dictionary_rows(spark, index_path, uniq, meta),
+                            meta)
+    if not idf_by_term:
         return spark.createDataFrame([], "doc_id long, score double")
-    live = set(dic["term"])
-    idf_by_term = {r.term: idf(meta["n_docs"], int(r.df))
-                   for r in dic.itertuples()}
     slots = spark.createDataFrame(
-        [(qid, t) for qid, ts in per_q.items() for t in ts if t in live],
+        [(qid, t) for qid, ts in per_q.items() for t in ts
+         if t in idf_by_term],
         "query_id string, term string")
-    partials = _scored(spark, index_path, sorted(live), meta, idf_by_term,
-                       denied=tombstones_df(spark, index_path, meta))
-    per_query = (partials.join(F.broadcast(slots), "term")
-                 .groupBy("query_id", "doc_id")
-                 .agg(F.sum("partial").alias("s")))
-    final = (per_query.groupBy("doc_id")
-             .agg(F.max("s").alias("_mx"), F.sum("s").alias("_sm"))
-             .select("doc_id",
-                     (F.col("_mx") + F.lit(float(tie_breaker))
-                      * (F.col("_sm") - F.col("_mx"))).alias("score")))
-    return deterministic_topk(final, k)
+    per_query = summed(_scored(spark, index_path, meta, idf_by_term)
+                       .join(F.broadcast(slots), "term"),
+                       keys=("query_id", "doc_id"))
+    return deterministic_topk(_dis_max(per_query, tie_breaker), k)
+
+
+def _dis_max(scores: DataFrame, tie_breaker: float) -> DataFrame:
+    """Per-doc max of (doc_id, score) rows + tie_breaker * the rest."""
+    return (scores.groupBy("doc_id")
+            .agg(F.max("score").alias("_mx"), F.sum("score").alias("_sm"))
+            .select("doc_id",
+                    (F.col("_mx") + F.lit(float(tie_breaker))
+                     * (F.col("_sm") - F.col("_mx"))).alias("score")))
 
 
 def multi_match_best_fields(spark: SparkSession,
@@ -214,32 +212,22 @@ def multi_match_best_fields(spark: SparkSession,
     exactly per-field BM25 as ES computes it. Per-field scoring uses
     that index's pruned scoreall path; the cross-field combine is a
     union + one groupBy on doc_id."""
-    scored = []
-    for field, path in field_indexes.items():
-        meta = load_meta(path)
-        terms = query_terms(query, meta)
-        dic = dictionary_rows(spark, path, terms, meta)
-        if dic.empty:
-            continue
-        idf_by_term = {r.term: idf(meta["n_docs"], int(r.df))
-                       for r in dic.itertuples()}
-        s = (_scored(spark, path, list(dic["term"]), meta, idf_by_term,
-                     denied=tombstones_df(spark, path, meta))
-             .groupBy("doc_id").agg(F.sum("partial").alias("s"))
-             .withColumn("field", F.lit(field)))
-        scored.append(s)
-    if not scored:
+    per_field = _per_field_scores(spark, field_indexes, query)
+    if per_field is None:
         return SparkSession.getActiveSession().createDataFrame(
             [], "doc_id long, score double")
-    allf = scored[0]
-    for s in scored[1:]:
-        allf = allf.unionByName(s)
-    final = (allf.groupBy("doc_id")
-             .agg(F.max("s").alias("_mx"), F.sum("s").alias("_sm"))
-             .select("doc_id",
-                     (F.col("_mx") + F.lit(float(tie_breaker))
-                      * (F.col("_sm") - F.col("_mx"))).alias("score")))
-    return deterministic_topk(final, k)
+    return deterministic_topk(_dis_max(per_field, tie_breaker), k)
+
+
+def _per_field_scores(spark: SparkSession, field_indexes: dict[str, str],
+                      query: str) -> DataFrame | None:
+    """Union of each field index's scoreall (doc_id, score) rows, or
+    None when no field indexes a query term."""
+    scored = [s for s in (match_scores(spark, path, query, load_meta(path))
+                          for path in field_indexes.values())
+              if s is not None]
+    return functools.reduce(DataFrame.unionByName, scored) if scored \
+        else None
 
 
 def multi_match_most_fields(spark: SparkSession,
@@ -249,27 +237,12 @@ def multi_match_most_fields(spark: SparkSession,
     (best_fields takes the max) — the "same text analyzed different
     ways" combine. Same per-field pruned scoring plan as best_fields;
     only the final aggregate differs."""
-    scored = []
-    for field, path in field_indexes.items():
-        meta = load_meta(path)
-        terms = query_terms(query, meta)
-        dic = dictionary_rows(spark, path, terms, meta)
-        if dic.empty:
-            continue
-        idf_by_term = {r.term: idf(meta["n_docs"], int(r.df))
-                       for r in dic.itertuples()}
-        scored.append(
-            _scored(spark, path, list(dic["term"]), meta, idf_by_term,
-                    denied=tombstones_df(spark, path, meta))
-            .groupBy("doc_id").agg(F.sum("partial").alias("s")))
-    if not scored:
+    per_field = _per_field_scores(spark, field_indexes, query)
+    if per_field is None:
         return SparkSession.getActiveSession().createDataFrame(
             [], "doc_id long, score double")
-    allf = scored[0]
-    for s in scored[1:]:
-        allf = allf.unionByName(s)
-    return deterministic_topk(
-        allf.groupBy("doc_id").agg(F.sum("s").alias("score")), k)
+    return deterministic_topk(summed(
+        per_field.withColumnRenamed("score", "partial")), k)
 
 
 def multi_match_cross_fields(spark: SparkSession,
@@ -315,9 +288,7 @@ def multi_match_cross_fields(spark: SparkSession,
         if not terms:
             continue
         parts.append(
-            _scored(spark, p, terms, metas[f],
-                    {t: blended_idf[t] for t in terms},
-                    denied=tombstones_df(spark, p, metas[f]))
+            _scored(spark, p, metas[f], {t: blended_idf[t] for t in terms})
             .select("doc_id", "term", "partial"))
     u = parts[0]
     for s in parts[1:]:
@@ -334,20 +305,6 @@ def multi_match_cross_fields(spark: SparkSession,
     return deterministic_topk(agg.select("doc_id", "score"), k)
 
 
-def _match_scores(spark, index_path, query, meta) -> DataFrame | None:
-    """Pruned scoreall BM25 of ``query`` -> (doc_id, score), or None
-    when no query term exists in the dictionary."""
-    terms = query_terms(query, meta)
-    dic = dictionary_rows(spark, index_path, terms, meta)
-    if dic.empty:
-        return None
-    idf_by_term = {r.term: idf(meta["n_docs"], int(r.df))
-                   for r in dic.itertuples()}
-    return (_scored(spark, index_path, list(dic["term"]), meta, idf_by_term,
-                    denied=tombstones_df(spark, index_path, meta))
-            .groupBy("doc_id").agg(F.sum("partial").alias("score")))
-
-
 def boosting_topk(spark: SparkSession, index_path: str, positive: str,
                   negative: str, k: int = 10, *,
                   negative_boost: float = 0.5) -> DataFrame:
@@ -362,7 +319,7 @@ def boosting_topk(spark: SparkSession, index_path: str, positive: str,
     )
 
     meta = load_meta(index_path)
-    primary = _match_scores(spark, index_path, positive, meta)
+    primary = match_scores(spark, index_path, positive, meta)
     if primary is None:
         return spark.createDataFrame([], "doc_id long, score double")
     neg = match_any_terms(spark, index_path, negative) \
@@ -392,10 +349,8 @@ def collapse_topk(spark: SparkSession, index_path: str, query: str,
     TakeOrderedAndProject over <= |distinct values| rows."""
     from pyspark.sql import Window
 
-    from elasticsearch_osmosis_plugin_spark.plans import catalog
-
     meta = load_meta(index_path)
-    scores = _match_scores(spark, index_path, query, meta)
+    scores = match_scores(spark, index_path, query, meta)
     if scores is None:
         return spark.createDataFrame(
             [], f"{collapse_col} string, doc_id long, score double")
@@ -432,7 +387,7 @@ def rescore_topk(spark: SparkSession, index_path: str, query: str,
     docs — at 100 TB the rescore cost is bounded by window_size, not
     corpus size."""
     meta = load_meta(index_path)
-    primary = _match_scores(spark, index_path, query, meta)
+    primary = match_scores(spark, index_path, query, meta)
     if primary is None:
         return spark.createDataFrame([], "doc_id long, score double")
     # materialize the window ONCE (<= window_size rows — the same
@@ -443,19 +398,14 @@ def rescore_topk(spark: SparkSession, index_path: str, query: str,
     window = spark.createDataFrame(
         [(int(r["doc_id"]), float(r["score"])) for r in win_rows],
         "doc_id long, _p double")
-    r_terms = query_terms(rescore_query, meta)
-    rdic = dictionary_rows(spark, index_path, r_terms, meta)
-    if rdic.empty:
+    secondary = match_scores(spark, index_path, rescore_query, meta,
+                             allowed=F.broadcast(window.select("doc_id")))
+    if secondary is None:
         combined = window.select(
             "doc_id",
             (F.lit(float(query_weight)) * F.col("_p")).alias("score"))
         return deterministic_topk(combined, k)
-    idf_r = {r.term: idf(meta["n_docs"], int(r.df))
-             for r in rdic.itertuples()}
-    secondary = (_scored(spark, index_path, list(rdic["term"]), meta, idf_r,
-                         allowed=F.broadcast(window.select("doc_id")),
-                         denied=tombstones_df(spark, index_path, meta))
-                 .groupBy("doc_id").agg(F.sum("partial").alias("_r")))
+    secondary = secondary.withColumnRenamed("score", "_r")
     combined = (window.join(secondary, "doc_id", "left")
                 .select("doc_id",
                         (F.lit(float(query_weight)) * F.col("_p")
@@ -478,10 +428,8 @@ def top_hits(spark: SparkSession, index_path: str, query: str,
     per map partition ever move."""
     from pyspark.sql import Window
 
-    from elasticsearch_osmosis_plugin_spark.plans import catalog
-
     meta = load_meta(index_path)
-    scores = _match_scores(spark, index_path, query, meta)
+    scores = match_scores(spark, index_path, query, meta)
     if scores is None:
         return spark.createDataFrame(
             [], f"{bucket_col} string, rank int, doc_id long, score double")
@@ -628,20 +576,11 @@ def common_terms_topk(spark: SparkSession, index_path: str, query: str,
     dic = dictionary_rows(spark, index_path, terms, meta)
     if dic.empty:
         return spark.createDataFrame([], "doc_id long, score double")
-    n_docs = float(meta["n_docs"])
-    idf_by_term = {r.term: idf(n_docs, int(r.df)) for r in dic.itertuples()}
     low = sorted(r.term for r in dic.itertuples()
-                 if float(r.df) / n_docs <= cutoff_frequency)
+                 if float(r.df) / float(meta["n_docs"]) <= cutoff_frequency)
     live = sorted(dic["term"])
-    allowed = None
-    if post_filter is not None:
-        from elasticsearch_osmosis_plugin_spark.plans import catalog
-
-        allowed = (catalog.read_table(spark, index_path, "docstats")
-                   .filter(post_filter).select("doc_id"))
-    denied = tombstones_df(spark, index_path, meta)
-    per_doc = (_scored(spark, index_path, live, meta, idf_by_term,
-                       allowed=allowed, denied=denied)
+    per_doc = (_scored(spark, index_path, meta, term_idfs(dic, meta),
+                       allowed=allowed_docs(spark, index_path, post_filter))
                .groupBy("doc_id")
                .agg(F.sum("partial").alias("score"),
                     F.count_distinct(
@@ -674,10 +613,8 @@ def sampler_agg(spark: SparkSession, index_path: str, query: str,
     to (doc_id, facet_col) of the sample -> a tiny groupBy. Sub-agg
     cost is bounded by shard_size regardless of corpus size — exactly
     the knob's purpose in ES."""
-    from elasticsearch_osmosis_plugin_spark.plans import catalog
-
     meta = load_meta(index_path)
-    scores = _match_scores(spark, index_path, query, meta)
+    scores = match_scores(spark, index_path, query, meta)
     if scores is None:
         return spark.createDataFrame([], f"{facet_col} string, n_docs long")
     sample = _fp_ranked_sample(scores, shard_size)
@@ -704,10 +641,8 @@ def diversified_sampler_agg(spark: SparkSession, index_path: str,
     below the exchange) -> global top-shard_size -> facet groupBy."""
     from pyspark.sql import Window
 
-    from elasticsearch_osmosis_plugin_spark.plans import catalog
-
     meta = load_meta(index_path)
-    scores = _match_scores(spark, index_path, query, meta)
+    scores = match_scores(spark, index_path, query, meta)
     if scores is None:
         return spark.createDataFrame([], f"{facet_col} string, n_docs long")
     ds = catalog.read_table(spark, index_path, "docstats") \
@@ -761,20 +696,11 @@ def script_score_topk(spark: SparkSession, index_path: str, query: str,
 
     Plan: identical to function_score (one decode -> doc-store join ->
     expression -> deterministic top-k)."""
-    from elasticsearch_osmosis_plugin_spark.plans import catalog
-
-    meta = load_meta(index_path)
-    terms = query_terms(query, meta)
-    dic = dictionary_rows(spark, index_path, terms, meta)
-    if dic.empty:
+    scores = match_scores(spark, index_path, query, load_meta(index_path))
+    if scores is None:
         return spark.createDataFrame([], "doc_id long, score double")
-    idf_by_term = {r.term: idf(meta["n_docs"], int(r.df))
-                   for r in dic.itertuples()}
-    scores = (_scored(spark, index_path, list(dic["term"]), meta, idf_by_term,
-                      denied=tombstones_df(spark, index_path, meta))
-              .groupBy("doc_id").agg(F.sum("partial").alias("_score")))
     ds = catalog.read_table(spark, index_path, "docstats")
-    joined = ds.join(scores, "doc_id")
+    joined = ds.join(scores.withColumnRenamed("score", "_score"), "doc_id")
     return deterministic_topk(
         joined.select("doc_id",
                       F.greatest(script.cast("double"), F.lit(0.0))
@@ -795,19 +721,15 @@ def pinned_topk(spark: SparkSession, index_path: str, ids: Sequence[int],
     Plan: the pin list is query-literal-sized (a broadcast), the
     organic side is the usual pruned scoreall decode; one anti-join
     drops promoted ids from the organic stream."""
-    from elasticsearch_osmosis_plugin_spark.plans import catalog
-
     meta = load_meta(index_path)
     pin = spark.createDataFrame(
         [(int(d), i) for i, d in enumerate(ids)], "doc_id long, _pos int")
-    ds = catalog.read_table(spark, index_path, "docstats").select("doc_id")
-    tomb = tombstones_df(spark, index_path, meta)
-    if tomb is not None:
-        ds = ds.join(F.broadcast(tomb), "doc_id", "left_anti")
+    ds = live_docs(spark, index_path, catalog.read_table(
+        spark, index_path, "docstats").select("doc_id"), meta)
     pinned = (ds.join(F.broadcast(pin), "doc_id")
               .select("doc_id",
                       (F.lit(1.0e9) - F.col("_pos")).alias("score")))
-    org = _match_scores(spark, index_path, organic, meta)
+    org = match_scores(spark, index_path, organic, meta)
     if org is not None:
         org = org.join(F.broadcast(pin.select("doc_id")),
                        "doc_id", "left_anti")
@@ -838,7 +760,7 @@ def match_bool_prefix_topk(spark: SparkSession, index_path: str, text: str,
     if not toks:
         return spark.createDataFrame([], "doc_id long, score double")
     *full, prefix = toks
-    org = (_match_scores(spark, index_path, " ".join(full), meta)
+    org = (match_scores(spark, index_path, " ".join(full), meta)
            if full else None)
     pref = (match_expanded(spark, index_path, prefix, mode="prefix",
                            max_expansions=max_expansions)
@@ -883,8 +805,6 @@ def combined_fields_topk(spark: SparkSession,
     broadcast-joins back. At the 100 TB design point dl_c/avgdl_c are
     build-time artifacts; query-time computation here keeps the
     operator self-contained over the existing per-field layout."""
-    from elasticsearch_osmosis_plugin_spark.plans import catalog
-
     w = {f: float((field_weights or {}).get(f, 1.0)) for f in field_indexes}
     metas = {f: load_meta(p) for f, p in field_indexes.items()}
     analyzers = {m["analyzer"] for m in metas.values()}
@@ -903,7 +823,7 @@ def combined_fields_topk(spark: SparkSession,
             raw = raw_postings(_pruned_postings(spark, path,
                                                 list(dic["term"]), meta),
                                with_dl=False)
-            raw = _live(raw, tombstones_df(spark, path, meta))
+            raw = live_docs(spark, path, raw, meta)
             tf_parts.append(raw.select(
                 "term", "doc_id", (F.col("tf") * w[f]).alias("wtf")))
         dl_parts.append(

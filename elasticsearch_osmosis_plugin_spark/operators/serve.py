@@ -50,7 +50,7 @@ from elasticsearch_osmosis_plugin_spark.functions.varbyte import (
 )
 from elasticsearch_osmosis_plugin_spark.plans.build import (
     bucket_of,
-    index_groups,
+    live_posting_tables,
     load_meta,
 )
 
@@ -157,25 +157,9 @@ def _ls_parquet(d: str) -> list[str]:
 
 
 def _posting_dirs(index_path: str, meta: dict) -> list[str]:
-    """Live posting table dirs — mirrors plans.build.postings_df's
-    merged + fresh-groups read path (compact → append → query must see
-    appended docs)."""
-    import json
-
-    base = os.path.join(index_path, "postings")
-    groups = index_groups(meta)
-    merged_dir = os.path.join(index_path, "postings_merged")
-    if meta.get("merged") and os.path.exists(
-            os.path.join(merged_dir, "_MANIFEST.json")):
-        covered = meta.get("merged_groups")
-        if covered is None:
-            with open(os.path.join(merged_dir, "_MANIFEST.json")) as f:
-                n = int(json.load(f).get("merged_groups", len(groups)))
-            covered = groups[:n]
-        extra = [g for g in groups if g not in set(covered)]
-        return [merged_dir] + [os.path.join(base, f"group={g}")
-                               for g in extra]
-    return [os.path.join(base, f"group={g}") for g in groups]
+    """Live posting table dirs (``plans.build.live_posting_tables``)."""
+    return [os.path.join(index_path, t)
+            for t in live_posting_tables(index_path, meta)]
 
 
 def _bucket_files(dirs: list[str], bucket: int) -> list[str]:

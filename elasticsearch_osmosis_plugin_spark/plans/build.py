@@ -602,35 +602,39 @@ def load_meta(index_path: str) -> dict:
         return json.load(f)
 
 
-def postings_df(spark: SparkSession, index_path: str) -> DataFrame:
-    """All live posting rows. After a compaction, groups appended
-    SINCE the merge still serve from their own dirs (postings_merged
-    covers only the groups it merged — ``merged_groups`` in meta, or
-    the merge manifest's count for pre-upgrade indexes): compact →
-    append → query must see the new docs, exactly Lucene's merged +
-    fresh-segments read path."""
-    meta = load_meta(index_path)
-    base = os.path.join(index_path, "postings")
-
-    def _group_df(groups: list[int]) -> DataFrame:
-        return spark.read.schema(POSTING_SCHEMA + ", group int") \
-            .option("basePath", base).parquet(
-                *[os.path.join(base, f"group={g}") for g in groups])
-
-    if meta.get("merged") and catalog.table_exists(index_path, "postings_merged"):
-        merged = catalog.read_table(spark, index_path, "postings_merged")
-        groups = index_groups(meta)
+def live_posting_tables(index_path: str, meta: dict) -> list[str]:
+    """Table names of the live postings: every group's table, or after
+    a compaction ``postings_merged`` plus the groups appended SINCE the
+    merge (it covers only the groups it merged — ``merged_groups`` in
+    meta, or the merge manifest's count for pre-upgrade indexes), so
+    compact → append → query sees the new docs, exactly Lucene's
+    merged + fresh-segments read path."""
+    groups = index_groups(meta)
+    tables = []
+    if meta.get("merged") and catalog.table_exists(index_path,
+                                                   "postings_merged"):
         covered = meta.get("merged_groups")
         if covered is None:
             n = int(catalog.read_manifest(index_path, "postings_merged")
                     .get("merged_groups", len(groups)))
             covered = groups[:n]
-        extra = [g for g in groups if g not in set(covered)
-                 and catalog.table_exists(index_path, f"postings/group={g}")]
-        if not extra:
-            return merged
-        return merged.unionByName(_group_df(extra).drop("group"))
-    return _group_df(index_groups(meta))
+        groups = [g for g in groups if g not in set(covered)]
+        tables.append("postings_merged")
+    return tables + [f"postings/group={g}" for g in groups]
+
+
+def postings_df(spark: SparkSession, index_path: str) -> DataFrame:
+    """All live posting rows (:func:`live_posting_tables`)."""
+    tables = live_posting_tables(index_path, load_meta(index_path))
+    groups = [os.path.join(index_path, t) for t in tables
+              if t != "postings_merged"]
+    fresh = spark.read.schema(POSTING_SCHEMA + ", group int") \
+        .option("basePath", os.path.join(index_path, "postings")) \
+        .parquet(*groups) if groups else None
+    if "postings_merged" not in tables:
+        return fresh
+    merged = catalog.read_table(spark, index_path, "postings_merged")
+    return merged if fresh is None else merged.unionByName(fresh.drop("group"))
 
 
 def index_stats(spark: SparkSession, index_path: str) -> DataFrame:

@@ -457,6 +457,9 @@ def verify_index(spark: SparkSession, index_path: str,
     audit cost is one full scan of the structure being audited, the
     floor for any integrity pass):
 
+    - ``structure``: the dictionary, the doc store and every live
+      posting table (``build.live_posting_tables``: the merged table
+      plus groups appended after it, once compacted) are committed;
     - ``meta_docs``: docstats row count == meta n_docs;
     - ``row_invariant`` (when ``source_df`` given): the stored
       content sha256 equals sha256 of the source table's text per doc
@@ -473,6 +476,7 @@ def verify_index(spark: SparkSession, index_path: str,
     )
     from elasticsearch_osmosis_plugin_spark.plans.build import (
         dictionary_df,
+        live_posting_tables,
         postings_df,
         tombstones_df,
     )
@@ -483,9 +487,8 @@ def verify_index(spark: SparkSession, index_path: str,
 
     # structure first: a missing committed table is corruption in its
     # own right, and the decode checks below cannot run without it
-    expected = ["dictionary", "docstats"] + (
-        ["postings/merged"] if meta.get("merged")
-        else [f"postings/group={g}" for g in index_groups(meta)])
+    expected = ["dictionary", "docstats"] + live_posting_tables(index_path,
+                                                                meta)
     missing = [t for t in expected
                if not catalog.table_exists(index_path, t)]
     out["structure"] = {"ok": not missing, "missing": missing}

@@ -1,6 +1,6 @@
 """rare_terms / multi_terms / global / date_range / sampler /
 diversified_sampler aggregations — recompute goldens from already-
-verified building blocks (match_any_terms hit sets, _match_scores)."""
+verified building blocks (match_any_terms hit sets, match_scores)."""
 
 import math
 from collections import Counter
@@ -90,12 +90,12 @@ def _fp(x: float) -> int:
 
 @pytest.fixture(scope="module")
 def scored_rows(spark, agg_index):
-    from elasticsearch_osmosis_plugin_spark.operators.scorefn import (
-        _match_scores,
+    from elasticsearch_osmosis_plugin_spark.operators.query import (
+        match_scores,
     )
     from elasticsearch_osmosis_plugin_spark.plans.build import load_meta
 
-    scores = _match_scores(spark, agg_index, Q, load_meta(agg_index))
+    scores = match_scores(spark, agg_index, Q, load_meta(agg_index))
     ds = catalog.read_table(spark, agg_index, "docstats") \
         .select("doc_id", "lang", "repo")
     return scores.join(ds, "doc_id").collect()

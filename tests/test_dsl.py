@@ -1099,6 +1099,32 @@ def test_explain_per_hit(spark, idx):
                                 "explain": True})
 
 
+def test_explain_tombstoned_hit(spark, idx, tmp_path):
+    """A tombstoned id among the hits gets an empty explanation, in
+    agreement with explain_doc (matched False); live hits keep theirs.
+    Runs on a clone so the shared fixture is never mutated."""
+    from elasticsearch_osmosis_plugin_spark.plans import catalog as cat
+    from elasticsearch_osmosis_plugin_spark.plans.build import delete_docs
+
+    live = str(tmp_path / "explain_live")
+    cat.clone_index(idx, live)
+    rows = query.topk(spark, live, "public static", k=3).collect()
+    hits = spark.createDataFrame(rows, "doc_id long, score double")
+    dead = rows[0]["doc_id"]
+    delete_docs(spark, live, [dead])
+    got = {r["doc_id"]: r["explanation"]
+           for r in query.explain_hits(spark, live, hits,
+                                       "public static").collect()}
+    assert not got[dead]
+    assert query.explain_doc(spark, live, dead, "public static") == {
+        "matched": False, "score": 0.0, "explanation": []}
+    for r in rows[1:]:
+        parts = {e["term"]: e["partial"] for e in got[r["doc_id"]]}
+        assert abs(sum(parts.values()) - r["score"]) < 1e-9
+        assert query.explain_doc(spark, live, r["doc_id"],
+                                 "public static")["matched"]
+
+
 def test_fixed_interval_and_fuzzy_transpositions_routing(spark, tmp_path,
                                                           idx):
     """fixed_interval routes through the hit-pruned store scan; fuzzy

@@ -56,6 +56,20 @@ def test_duplicate_doc_ids_tolerated_in_dao_not_index(spark, tmp_path):
     assert a == b
 
 
+def test_unknown_strategy_rejected_before_lookup(spark, tmp_path):
+    """``strategy`` is validated before the dictionary lookup: an
+    unknown one raises for a known term, an unknown term and an empty
+    query alike (not an empty frame when no term is indexed)."""
+    docs = spark.createDataFrame([(1, "apple pie"), (2, "banana split")],
+                                 "doc_id long, content string")
+    idx = str(tmp_path / "strategy_idx")
+    build_index(spark, docs, idx, CFG, id_col="doc_id", n_groups=1)
+    assert topk(spark, idx, "apple", k=3, strategy="scoreall").count() == 1
+    for q in ("apple", "nosuchterm", ""):
+        with pytest.raises(ValueError, match="unknown strategy"):
+            topk(spark, idx, q, k=3, strategy="bogus")
+
+
 def test_query_longer_than_any_doc(spark, corpus_df, tmp_path):
     idx = str(tmp_path / "long_idx")
     build_index(spark, corpus_df, idx, CFG, id_col="doc_id", n_groups=1)

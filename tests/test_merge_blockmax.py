@@ -95,3 +95,33 @@ def test_verify_index_fsck(spark, corpus_df, tmp_path):
     rep3 = verify_index(spark, path)
     assert not rep3["ok"] and not rep3["structure"]["ok"] \
         and not rep3["dictionary"]["ok"]
+
+
+def test_verify_index_after_compaction(spark, corpus_df, tmp_path):
+    """A compacted index is clean: fsck checks the merged table, and
+    after compact → append also the group appended since the merge
+    (its loss is a structure failure, not silently ignored)."""
+    import shutil
+
+    from elasticsearch_osmosis_plugin_spark.plans.build import (
+        append_index_group,
+    )
+    from elasticsearch_osmosis_plugin_spark.plans.merge import verify_index
+
+    path = str(tmp_path / "fsck_merged")
+    build_index(spark, corpus_df.filter("doc_id < 60"), path, CFG,
+                id_col="doc_id", n_groups=2)
+    compact_index(spark, path)
+    rep = verify_index(spark, path)
+    assert rep["ok"] and rep["structure"]["missing"] == [], rep
+
+    append_index_group(spark, corpus_df.filter("doc_id >= 60"), path,
+                       id_col="doc_id")
+    rep = verify_index(spark, path, corpus_df)
+    assert rep["ok"] and rep["dictionary"]["ok"] \
+        and rep["row_invariant"]["ok"], rep
+
+    shutil.rmtree(os.path.join(path, "postings", "group=2"))
+    rep = verify_index(spark, path)
+    assert not rep["ok"] and rep["structure"]["missing"] == [
+        "postings/group=2"], rep

@@ -32,6 +32,51 @@ def test_postings_scan_prunes_buckets_and_terms(spark, index_path):
     assert "PushedFilters: [In(term" in plan            # row-group pruning
 
 
+def test_one_match_plan():
+    """Every Spark-path scorer shares one match plan: under operators/,
+    ``tombstones_df`` is read only by ``query.live_docs``,
+    ``score_postings`` is called only by ``query._scored``, no call
+    passes ``denied=``, and ``.filter(post_filter)`` appears once (in
+    ``query.allowed_docs``)."""
+    import ast
+    import pathlib
+
+    import elasticsearch_osmosis_plugin_spark.operators as ops
+
+    found: dict[str, list[str]] = {"tombstones_df": [], "score_postings": [],
+                                   "denied=": [], "filter(post_filter)": []}
+
+    class Calls(ast.NodeVisitor):
+        def __init__(self, module: str):
+            self.where = [module]
+
+        def visit_FunctionDef(self, node):
+            self.where.append(node.name)
+            self.generic_visit(node)
+            self.where.pop()
+
+        def visit_Call(self, node):
+            name = getattr(node.func, "id", None) or getattr(
+                node.func, "attr", None)
+            at = f"{self.where[0]}:{self.where[-1]}"
+            if name in ("tombstones_df", "score_postings"):
+                found[name].append(at)
+            if any(kw.arg == "denied" for kw in node.keywords):
+                found["denied="].append(at)
+            if name == "filter" and [getattr(a, "id", None)
+                                     for a in node.args] == ["post_filter"]:
+                found["filter(post_filter)"].append(at)
+            self.generic_visit(node)
+
+    root = pathlib.Path(ops.__file__).parent
+    for path in sorted(root.rglob("*.py")):
+        Calls(path.stem).visit(ast.parse(path.read_text(), str(path)))
+    assert found == {"tombstones_df": ["query:live_docs"],
+                     "score_postings": ["query:_scored"],
+                     "denied=": [],
+                     "filter(post_filter)": ["query:allowed_docs"]}, found
+
+
 def test_bm25_topk_is_take_ordered(spark, corpus_df):
     from elasticsearch_osmosis_plugin_spark.operators.bm25 import bm25_topk
 
