@@ -1176,7 +1176,7 @@ def q_stats_agg_idx(spark, sf_dir):
     from elasticsearch_osmosis_plugin_spark.operators.intersect import stats_agg
 
     idx = _index_for(spark, sf_dir)
-    s = stats_agg(spark, idx, "spark window", "dl", mode="any")
+    s = stats_agg(spark, idx, "spark window", "dl")
     return s.select(
         F.col("n"), F.col("min_v").cast("long").alias("min_v"),
         F.col("max_v").cast("long").alias("max_v"),
@@ -1264,7 +1264,7 @@ def q_histogram_agg_idx(spark, sf_dir):
     )
 
     idx = _index_for(spark, sf_dir)
-    return histogram_agg(spark, idx, "spark", "dl", 20, mode="any")
+    return histogram_agg(spark, idx, "spark", "dl", 20)
 
 
 def q_highlight_idx(spark, sf_dir):
@@ -1479,8 +1479,7 @@ def q_cardinality_idx(spark, sf_dir):
     )
 
     idx = _index_for(spark, sf_dir)
-    return cardinality_agg(spark, idx, "spark window", "source", mode="any",
-                           exact=True)
+    return cardinality_agg(spark, idx, "spark window", "source", exact=True)
 
 
 def q_significant_terms_idx(spark, sf_dir):
@@ -1633,7 +1632,7 @@ def q_facet_counts_idx(spark, sf_dir):
     )
 
     idx = _index_for(spark, sf_dir)
-    return facet_counts(spark, idx, "spark window", "lang", mode="any")
+    return facet_counts(spark, idx, "spark window", "lang")
 
 
 def q_span_near_idx(spark, sf_dir):
@@ -1764,8 +1763,7 @@ def q_percentiles_idx(spark, sf_dir):
 
     idx = _index_for(spark, sf_dir)
     return percentiles_agg(spark, idx, "spark", "dl",
-                           percentiles=(0.25, 0.5, 0.75), mode="any",
-                           exact=True)
+                           percentiles=(0.25, 0.5, 0.75), exact=True)
 
 
 def q_scan_scroll_idx(spark, sf_dir):

@@ -60,7 +60,10 @@ from typing import Any
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
-from elasticsearch_osmosis_plugin_spark.operators.query import live_docs
+from elasticsearch_osmosis_plugin_spark.operators.query import (
+    allowed_docs,
+    live_docs,
+)
 
 _CONST_SCORE = "doc_id long, score double"
 
@@ -326,11 +329,8 @@ def _finish_ids(spark: SparkSession, index_path: str, ids: DataFrame,
     apply the post_filter (doc-store semi-join) BEFORE the size cut —
     ES post_filter semantics — then emit ordered constant-score hits."""
     if post_col is not None:
-        from elasticsearch_osmosis_plugin_spark.plans import catalog
-
-        allowed = (catalog.read_table(spark, index_path, "docstats")
-                   .filter(post_col).select("doc_id"))
-        ids = ids.join(allowed, "doc_id", "left_semi")
+        ids = ids.join(allowed_docs(spark, index_path, post_col), "doc_id",
+                       "left_semi")
     return _const_hits(spark, ids).limit(k)
 
 
@@ -1272,7 +1272,8 @@ def _search_query(spark: SparkSession, index_path: str,
 
 def _unranked_ids(spark: SparkSession, index_path: str,
                   q: dict) -> DataFrame:
-    """Full (uncut) matching doc-id set for a sortable query form.
+    """Full (uncut) matching doc-id set of a query form: the hit set of
+    sorted search, ``count`` and ``search_aggs``.
 
     Sorting replaces relevance ranking, so the size cut must happen on
     the sort keys over the COMPLETE match set — a score-ranked top-k
@@ -1311,7 +1312,8 @@ def _unranked_ids(spark: SparkSession, index_path: str,
             ds = ds.filter(
                 F.col("doc_id").isin([int(v) for v in spec["values"]]))
         return live_docs(spark, index_path, ds.select("doc_id"))
-    raise ValueError(f"sort is not supported with query type: {kind}")
+    raise ValueError(f"sort, count and aggs do not support query type: "
+                     f"{kind}")
 
 
 def _parse_sort(sort_spec: list) -> tuple[list, list[str]]:
@@ -1368,21 +1370,21 @@ def _sorted_search(spark: SparkSession, index_path: str, body: dict,
 def search_aggs(spark: SparkSession, index_path: str,
                 body: dict) -> dict[str, DataFrame]:
     """Compile the ``aggs`` section: one result DataFrame per named
-    aggregation, each over the docs matching ``query`` (match / term
-    forms; OR semantics like a filtered ES agg)."""
+    aggregation, each over the docs matching ``query`` (match_all when
+    absent). The query compiles ONCE, through :func:`_unranked_ids`
+    (match_all, match with its ``operator``, term — a multi-token
+    value ANDs, as in :func:`search` — terms, exists, range, ids,
+    constant_score), into one lazy hit frame that every unscored agg
+    reads through ``intersect._hit_values``. The frame is not
+    persisted, so each returned DataFrame keeps its full lineage and
+    re-runs the hit query when collected. Only the scored ``top_hits``
+    sub-agg re-runs the match/term text."""
+    import functools
+
     from elasticsearch_osmosis_plugin_spark.operators import intersect, scorefn
 
     q = body.get("query", {"match_all": {}})
-    kind, spec = _one_entry(q, "query")
-    if kind == "match":
-        _, mspec = _one_entry(spec, "match")
-        qtext = _match_args(mspec)[0]
-    elif kind == "term":
-        _, val = _one_entry(spec, "term")
-        qtext = val["value"] if isinstance(val, dict) else str(val)
-    else:
-        raise ValueError("aggs need a match/term query here")
-
+    hit_frame = functools.cache(lambda: _unranked_ids(spark, index_path, q))
     out: dict[str, DataFrame] = {}
     for name, agg in body.get("aggs", {}).items():
         sub = {k2: v for k2, v in agg.items() if k2 != "aggs"}
@@ -1392,13 +1394,21 @@ def search_aggs(spark: SparkSession, index_path: str,
                     for n2, s in agg["aggs"].items()}
             kinds = {sk for sk, _ in subs.values()}
             if kinds == {"top_hits"}:
+                qkind, qspec = _one_entry(q, "query")
+                if qkind not in ("match", "term"):
+                    raise ValueError("top_hits needs a match/term query")
+                _, val = _one_entry(qspec, qkind)
+                if qkind == "match":
+                    qtext = _match_args(val)[0]
+                else:
+                    qtext = val["value"] if isinstance(val, dict) else str(val)
                 _, hits = next(iter(subs.values()))
                 out[name] = scorefn.top_hits(
                     spark, index_path, qtext, aspec["field"],
                     n_hits=int(hits.get("size", 3)))
             elif kinds <= set(intersect._SUBAGG_OPS):
                 out[name] = intersect.terms_subaggs(
-                    spark, index_path, qtext, aspec["field"],
+                    spark, index_path, hit_frame(), aspec["field"],
                     {n2: (sk, sspec["field"])
                      for n2, (sk, sspec) in subs.items()},
                     size=int(aspec.get("size", 10)))
@@ -1407,33 +1417,26 @@ def search_aggs(spark: SparkSession, index_path: str,
                     f"unsupported terms sub-aggs: {sorted(kinds)}")
         elif akind == "terms":
             out[name] = intersect.facet_counts(
-                spark, index_path, qtext, aspec["field"])
+                spark, index_path, hit_frame(), aspec["field"])
         elif akind == "stats":
             out[name] = intersect.stats_agg(
-                spark, index_path, qtext, aspec["field"])
+                spark, index_path, hit_frame(), aspec["field"])
         elif akind == "value_count":
             # ES value_count counts extracted VALUES, not matching docs
-            # — a doc whose field is null contributes nothing. Same
-            # semi-join shape as stats_agg but with a null-skipping
-            # count over the field column.
-            from elasticsearch_osmosis_plugin_spark.plans import catalog
-
-            hits = intersect.match_any_terms(spark, index_path, qtext)
-            ds = (catalog.read_table(spark, index_path, "docstats")
-                  .select("doc_id", aspec["field"]))
-            out[name] = (ds.join(hits, "doc_id", "left_semi")
-                         .agg(F.count(F.col(aspec["field"]))
-                              .alias("value")))
+            # — a doc whose field is null contributes nothing.
+            out[name] = (intersect._hit_values(
+                spark, index_path, hit_frame(), aspec["field"])
+                .agg(F.count(F.col(aspec["field"])).alias("value")))
         elif akind in ("avg", "min", "max", "sum"):
             # the single-metric aggs: one column off the stats pass
             col = {"avg": "avg_v", "min": "min_v", "max": "max_v",
                    "sum": "sum_v"}[akind]
             out[name] = (intersect.stats_agg(
-                spark, index_path, qtext, aspec["field"])
+                spark, index_path, hit_frame(), aspec["field"])
                 .select(F.col(col).alias("value")))
         elif akind == "histogram":
             out[name] = intersect.histogram_agg(
-                spark, index_path, qtext, aspec["field"],
+                spark, index_path, hit_frame(), aspec["field"],
                 float(aspec["interval"]))
         elif akind == "date_histogram" and "aggs" in agg:
             skind, sspec = _one_entry(
@@ -1441,89 +1444,82 @@ def search_aggs(spark: SparkSession, index_path: str,
             if skind != "terms":
                 raise ValueError(
                     f"unsupported date_histogram sub-agg: {skind}")
-            from elasticsearch_osmosis_plugin_spark.plans import catalog
-
-            hits = intersect.match_any_terms(spark, index_path, qtext)
-            ds = (catalog.read_table(spark, index_path, "docstats")
-                  .select("doc_id", aspec["field"], sspec["field"])
-                  .join(hits, "doc_id", "left_semi"))
             out[name] = intersect.date_histogram_terms(
-                ds, aspec["field"], sspec["field"],
+                intersect._hit_values(spark, index_path, hit_frame(),
+                                      aspec["field"], sspec["field"]),
+                aspec["field"], sspec["field"],
                 aspec.get("calendar_interval", "day"),
                 size_per_bucket=(int(sspec["size"]) if "size" in sspec
                                  else None))
         elif akind == "date_histogram":
             if "fixed_interval" in aspec:
-                from elasticsearch_osmosis_plugin_spark.plans import catalog
-
-                hits = intersect.match_any_terms(spark, index_path, qtext)
-                ds = (catalog.read_table(spark, index_path, "docstats")
-                      .select("doc_id", aspec["field"])
-                      .join(hits, "doc_id", "left_semi"))
                 out[name] = intersect.date_histogram_fixed(
-                    ds, aspec["field"], aspec["fixed_interval"])
+                    intersect._hit_values(spark, index_path, hit_frame(),
+                                          aspec["field"]),
+                    aspec["field"], aspec["fixed_interval"])
             else:
                 out[name] = intersect.date_histogram_agg(
-                    spark, index_path, qtext, aspec["field"],
+                    spark, index_path, hit_frame(), aspec["field"],
                     aspec.get("calendar_interval", "day"))
         elif akind == "percentiles":
             pcts = tuple(p / 100.0 for p in
                          aspec.get("percents", (25, 50, 75, 95)))
             out[name] = intersect.percentiles_agg(
-                spark, index_path, qtext, aspec["field"], percentiles=pcts)
+                spark, index_path, hit_frame(), aspec["field"],
+                percentiles=pcts)
         elif akind == "range":
             ranges = [(r.get("from"), r.get("to"))
                       for r in aspec["ranges"]]
             out[name] = intersect.range_agg(
-                spark, index_path, qtext, aspec["field"], ranges)
+                spark, index_path, hit_frame(), aspec["field"], ranges)
         elif akind == "cardinality":
             out[name] = intersect.cardinality_agg(
-                spark, index_path, qtext, aspec["field"])
+                spark, index_path, hit_frame(), aspec["field"])
         elif akind == "significant_terms":
             out[name] = intersect.significant_terms(
-                spark, index_path, qtext,
+                spark, index_path, hit_frame(),
                 size=int(aspec.get("size", 10)))
         elif akind == "significant_text":
             out[name] = intersect.significant_text(
-                spark, index_path, qtext,
+                spark, index_path, hit_frame(),
                 size=int(aspec.get("size", 10)),
                 filter_duplicate_text=bool(
                     aspec.get("filter_duplicate_text", True)))
         elif akind == "boxplot":
             out[name] = intersect.boxplot_agg(
-                spark, index_path, qtext, aspec["field"])
+                spark, index_path, hit_frame(), aspec["field"])
         elif akind == "filters":
             out[name] = intersect.filters_agg(
-                spark, index_path, qtext,
+                spark, index_path, hit_frame(),
                 {n2: filter_column(f)
                  for n2, f in aspec["filters"].items()})
         elif akind == "missing":
             out[name] = intersect.missing_agg(
-                spark, index_path, qtext, aspec["field"])
+                spark, index_path, hit_frame(), aspec["field"])
         elif akind == "percentile_ranks":
             out[name] = intersect.percentile_ranks_agg(
-                spark, index_path, qtext, aspec["field"],
+                spark, index_path, hit_frame(), aspec["field"],
                 list(aspec["values"]))
         elif akind == "rare_terms":
             out[name] = intersect.rare_terms_agg(
-                spark, index_path, qtext, aspec["field"],
+                spark, index_path, hit_frame(), aspec["field"],
                 int(aspec.get("max_doc_count", 1)))
         elif akind == "multi_terms":
             out[name] = intersect.multi_terms_agg(
-                spark, index_path, qtext,
+                spark, index_path, hit_frame(),
                 [t["field"] for t in aspec["terms"]],
                 size=int(aspec.get("size", 10)))
         elif akind == "extended_stats":
             out[name] = intersect.extended_stats_agg(
-                spark, index_path, qtext, aspec["field"],
+                spark, index_path, hit_frame(), aspec["field"],
                 sigma=float(aspec.get("sigma", 2.0)))
         elif akind == "weighted_avg":
             out[name] = intersect.weighted_avg_agg(
-                spark, index_path, qtext,
+                spark, index_path, hit_frame(),
                 aspec["value"]["field"], aspec["weight"]["field"])
         elif akind == "string_stats":
             out[name] = intersect.string_stats_agg(
-                spark, index_path, qtext, aspec["field"])
+                spark, index_path, hit_frame(), aspec["field"])
         elif akind == "top_metrics":
             m = aspec["metrics"]
             m = m[0] if isinstance(m, list) else m
@@ -1535,7 +1531,7 @@ def search_aggs(spark: SparkSession, index_path: str,
             else:
                 skey, sdir = str(srt), "desc"
             out[name] = intersect.top_metrics_agg(
-                spark, index_path, qtext, m["field"], skey,
+                spark, index_path, hit_frame(), m["field"], skey,
                 descending=str(sdir).lower() != "asc")
         else:
             raise ValueError(f"unsupported agg type: {akind}")
@@ -1572,11 +1568,8 @@ def count(spark: SparkSession, index_path: str, body: dict) -> int:
     ids = _unranked_ids(spark, index_path, q)
     post = body.get("post_filter")
     if post is not None:
-        from elasticsearch_osmosis_plugin_spark.plans import catalog
-
-        allowed = (catalog.read_table(spark, index_path, "docstats")
-                   .filter(filter_column(post)).select("doc_id"))
-        ids = ids.join(allowed, "doc_id", "left_semi")
+        ids = ids.join(allowed_docs(spark, index_path, filter_column(post)),
+                       "doc_id", "left_semi")
     return ids.count()
 
 

@@ -62,6 +62,7 @@ from elasticsearch_osmosis_plugin_spark.operators.query import (
     dictionary_rows,
     live_docs,
     term_docs,
+    term_vector_store,
 )
 from elasticsearch_osmosis_plugin_spark.plans import catalog
 from elasticsearch_osmosis_plugin_spark.plans.build import (
@@ -130,10 +131,7 @@ def _hop_vertices(spark: SparkSession, index_path: str,
     """Top vertices of one hop: fg doc counts over the sampled docs'
     term vectors, bg from the dictionary (metadata-only), JLH or raw
     doc_count weight; previously-seen terms excluded."""
-    ds = catalog.read_table(spark, index_path, "docstats")
-    if "tokens" not in ds.columns or not catalog.read_manifest(
-            index_path, "docstats").get("term_vectors", False):
-        raise ValueError("graph explore needs the term-vector store")
+    ds = term_vector_store(spark, index_path, "graph explore")
     fg_docs = (ds.select("doc_id", "tokens")
                .join(sample_ids, "doc_id", "left_semi"))
     n_fg = fg_docs.count()

@@ -25,8 +25,12 @@ from elasticsearch_osmosis_plugin_spark.operators.query import (
     term_docs,
     term_idfs,
     term_positions,
+    term_vector_store,
 )
 from elasticsearch_osmosis_plugin_spark.plans.build import load_meta
+
+# an aggregation's hit set: query text (an OR match) or a doc-id frame
+Hits = str | DataFrame
 
 
 def _one_term(text: str, meta: dict) -> str:
@@ -100,7 +104,6 @@ def match_phrase(spark: SparkSession, index_path: str, phrase: str,
     with ``store_positions=False`` (requires retained tokens;
     slop == 0 only)."""
     from elasticsearch_osmosis_plugin_spark.functions.tokenizer import tokenize_py
-    from elasticsearch_osmosis_plugin_spark.plans import catalog
 
     meta = load_meta(index_path)
     terms = tokenize_py(phrase, meta["analyzer"],
@@ -157,11 +160,9 @@ def match_phrase(spark: SparkSession, index_path: str, phrase: str,
     if slop > 0:
         raise ValueError("sloppy phrase (slop > 0) needs positional "
                          "postings (store_positions=True)")
-    ds = catalog.read_table(spark, index_path, "docstats")
-    if "tokens" not in ds.columns or not catalog.read_manifest(
-            index_path, "docstats").get("term_vectors", False):
-        raise ValueError("phrase match needs positional postings "
-                         "(store_positions=True) or the term-vector store")
+    ds = term_vector_store(
+        spark, index_path,
+        "phrase match without positional postings (store_positions=True)")
     verified = (ds.select("doc_id", "tokens")
                 .join(cands, "doc_id", "left_semi")
                 .filter(phrase_match_expr(F.col("tokens"), terms)))
@@ -541,24 +542,20 @@ def match_expanded(spark: SparkSession, index_path: str, pattern: str,
             .distinct().orderBy("doc_id"))
 
 
-def stats_agg(spark: SparkSession, index_path: str, query: str,
-              value_col: str, mode: str = "any") -> DataFrame:
+def stats_agg(spark: SparkSession, index_path: str, query: Hits,
+              value_col: str) -> DataFrame:
     """ES stats-aggregation analog: count/min/max/sum/avg of a
     doc-store numeric column over the docs matching ``query``.
     One semi-join (hits prune the doc-store scan to (doc_id,
     value_col)) + a scalar aggregate — no shuffle wider than the
-    matching doc-id stream."""
-    from elasticsearch_osmosis_plugin_spark.plans import catalog
-
-    docs = (match_any_terms(spark, index_path, query) if mode == "any"
-            else match_all_terms(spark, index_path, query))
-    ds = catalog.read_table(spark, index_path, "docstats") \
-        .select("doc_id", value_col)
+    matching doc-id stream. ``sum_v`` is a double, as in ES: a BIGINT
+    column's long sum would overflow."""
     v = F.col(value_col)
-    return (ds.join(docs, "doc_id", "left_semi")
+    return (_hit_values(spark, index_path, query, value_col)
             .agg(F.count(F.lit(1)).alias("n"),
                  F.min(v).alias("min_v"), F.max(v).alias("max_v"),
-                 F.sum(v).alias("sum_v"), F.avg(v).alias("avg_v")))
+                 F.sum(v.cast("double")).alias("sum_v"),
+                 F.avg(v).alias("avg_v")))
 
 
 CALENDAR_INTERVALS = ("hour", "day", "week", "month", "quarter", "year")
@@ -610,58 +607,37 @@ def date_histogram_fixed(df: DataFrame, ts_col: str,
             .orderBy("bucket"))
 
 
-def date_histogram_agg(spark: SparkSession, index_path: str, query: str,
-                       date_col: str, interval: str = "day",
-                       mode: str = "any") -> DataFrame:
+def date_histogram_agg(spark: SparkSession, index_path: str, query: Hits,
+                       date_col: str, interval: str = "day") -> DataFrame:
     """ES date_histogram aggregation over the docs matching ``query``:
     the hit stream semi-joins the doc-store (pruned to (doc_id,
     date_col)), then one calendar-bucket groupBy."""
-    from elasticsearch_osmosis_plugin_spark.plans import catalog
-
-    docs = (match_any_terms(spark, index_path, query) if mode == "any"
-            else match_all_terms(spark, index_path, query))
-    ds = catalog.read_table(spark, index_path, "docstats") \
-        .select("doc_id", date_col)
-    return date_histogram(ds.join(docs, "doc_id", "left_semi"),
+    return date_histogram(_hit_values(spark, index_path, query, date_col),
                           date_col, interval)
 
 
-def histogram_agg(spark: SparkSession, index_path: str, query: str,
-                  value_col: str, interval: float,
-                  mode: str = "any") -> DataFrame:
+def histogram_agg(spark: SparkSession, index_path: str, query: Hits,
+                  value_col: str, interval: float) -> DataFrame:
     """ES histogram-aggregation analog: bucket a doc-store numeric
     column of the matching docs by fixed-width intervals
     (bucket = floor(v / interval) * interval, ES's exact rule) ->
     (bucket, n_docs)."""
-    from elasticsearch_osmosis_plugin_spark.plans import catalog
-
-    docs = (match_any_terms(spark, index_path, query) if mode == "any"
-            else match_all_terms(spark, index_path, query))
-    ds = catalog.read_table(spark, index_path, "docstats") \
-        .select("doc_id", value_col)
     bucket = (F.floor(F.col(value_col) / interval) * interval) \
         .cast("long").alias("bucket")
-    return (ds.join(docs, "doc_id", "left_semi")
+    return (_hit_values(spark, index_path, query, value_col)
             .groupBy(bucket).agg(F.count(F.lit(1)).alias("n_docs"))
             .orderBy("bucket"))
 
 
-def terms_stats_facet(spark: SparkSession, index_path: str, query: str,
-                      facet_col: str, value_col: str,
-                      mode: str = "any") -> DataFrame:
+def terms_stats_facet(spark: SparkSession, index_path: str, query: Hits,
+                      facet_col: str, value_col: str) -> DataFrame:
     """ES terms_stats facet (the 0.90-era bucketed-stats workhorse,
     today's terms-agg + stats sub-agg): for each value of a doc-store
     field over the matching docs -> (facet, n, min_v, max_v, sum_v,
     avg_v), count-desc then facet order. One semi-join + one grouped
     aggregate — all five stats map-side combine."""
-    from elasticsearch_osmosis_plugin_spark.plans import catalog
-
-    docs = (match_any_terms(spark, index_path, query) if mode == "any"
-            else match_all_terms(spark, index_path, query))
-    ds = catalog.read_table(spark, index_path, "docstats") \
-        .select("doc_id", facet_col, value_col)
     v = F.col(value_col)
-    return (ds.join(docs, "doc_id", "left_semi")
+    return (_hit_values(spark, index_path, query, facet_col, value_col)
             .groupBy(facet_col)
             .agg(F.count(F.lit(1)).alias("n"),
                  F.min(v).alias("min_v"), F.max(v).alias("max_v"),
@@ -669,10 +645,10 @@ def terms_stats_facet(spark: SparkSession, index_path: str, query: str,
             .orderBy(F.desc("n"), F.asc(facet_col)))
 
 
-def range_agg(spark: SparkSession, index_path: str, query: str,
+def range_agg(spark: SparkSession, index_path: str, query: Hits,
               value_col: str,
-              ranges: Sequence[tuple[float | None, float | None]],
-              mode: str = "any") -> DataFrame:
+              ranges: Sequence[tuple[float | None, float | None]]
+              ) -> DataFrame:
     """ES range aggregation: explicit [from, to) buckets over a
     doc-store numeric column of the matching docs -> (bucket, n_docs),
     bucket labelled "from-to" with ES's open-end conventions ("*-to",
@@ -680,13 +656,7 @@ def range_agg(spark: SparkSession, index_path: str, query: str,
     semantics: ranges may overlap), so the implementation is one
     literal array of range structs filtered per row + explode — no
     join, and the groupBy is over <= len(ranges) keys."""
-    from elasticsearch_osmosis_plugin_spark.plans import catalog
-
-    docs = (match_any_terms(spark, index_path, query) if mode == "any"
-            else match_all_terms(spark, index_path, query))
-    ds = catalog.read_table(spark, index_path, "docstats") \
-        .select("doc_id", value_col)
-    hits = ds.join(docs, "doc_id", "left_semi")
+    hits = _hit_values(spark, index_path, query, value_col)
     v = F.col(value_col).cast("double")
     entries = []
     for lo, hi in ranges:
@@ -704,23 +674,17 @@ def range_agg(spark: SparkSession, index_path: str, query: str,
             .orderBy("bucket"))
 
 
-def filters_agg(spark: SparkSession, index_path: str, query: str,
-                named_filters: dict, mode: str = "any") -> DataFrame:
+def filters_agg(spark: SparkSession, index_path: str, query: Hits,
+                named_filters: dict) -> DataFrame:
     """ES filters aggregation: named filter-context buckets over the
     docs matching ``query`` -> (bucket, n_docs), bucket-name order.
     ``named_filters``: {name: Column predicate over doc-store columns}
     (build them with ``dsl.filter_column`` for the JSON form). One
     semi-joined doc-store pass computes EVERY bucket as a conditional
     sum — no per-bucket scan, buckets may overlap (ES semantics)."""
-    from elasticsearch_osmosis_plugin_spark.plans import catalog
-
     if not named_filters:
         return spark.createDataFrame([], "bucket string, n_docs long")
-    docs = (match_any_terms(spark, index_path, query) if mode == "any"
-            else match_all_terms(spark, index_path, query))
-    ds = catalog.read_table(spark, index_path, "docstats")
-    hits = ds.join(docs, "doc_id", "left_semi")
-    counts = hits.agg(*[
+    counts = _hit_values(spark, index_path, query).agg(*[
         F.sum(F.when(cond, 1).otherwise(0)).cast("long").alias(f"_c{i}")
         for i, (_, cond) in enumerate(sorted(named_filters.items(),
                                              key=lambda kv: kv[0]))])
@@ -731,19 +695,19 @@ def filters_agg(spark: SparkSession, index_path: str, query: str,
         .orderBy("bucket"))
 
 
-def missing_agg(spark: SparkSession, index_path: str, query: str,
-                field: str, mode: str = "any") -> DataFrame:
+def missing_agg(spark: SparkSession, index_path: str, query: Hits,
+                field: str) -> DataFrame:
     """ES missing aggregation: count of matching docs with a null
     field -> one (n_missing) row (degenerate filters_agg)."""
     out = filters_agg(spark, index_path, query,
-                      {"missing": F.col(field).isNull()}, mode)
+                      {"missing": F.col(field).isNull()})
     return out.select(F.col("n_docs").alias("n_missing"))
 
 
-def percentiles_agg(spark: SparkSession, index_path: str, query: str,
+def percentiles_agg(spark: SparkSession, index_path: str, query: Hits,
                     value_col: str,
                     percentiles: tuple = (0.25, 0.5, 0.75, 0.95),
-                    mode: str = "any", exact: bool = True,
+                    exact: bool = True,
                     accuracy: int = 10000) -> DataFrame:
     """ES percentiles-aggregation analog: percentile estimates of a
     doc-store numeric column over the docs matching ``query`` ->
@@ -756,13 +720,7 @@ def percentiles_agg(spark: SparkSession, index_path: str, query: str,
     Khanna sketch, mergeable map-side) — the 100 TB path, mirroring
     how ES itself serves this agg with a t-digest sketch rather than
     exact ranks."""
-    from elasticsearch_osmosis_plugin_spark.plans import catalog
-
-    docs = (match_any_terms(spark, index_path, query) if mode == "any"
-            else match_all_terms(spark, index_path, query))
-    ds = catalog.read_table(spark, index_path, "docstats") \
-        .select("doc_id", value_col)
-    vals = ds.join(docs, "doc_id", "left_semi")
+    vals = _hit_values(spark, index_path, query, value_col)
     pcts = [float(p) for p in percentiles]
     pct_arr = F.array(*[F.lit(p) for p in pcts])
     v = F.col(value_col).cast("double")
@@ -785,8 +743,6 @@ def highlight(spark: SparkSession, index_path: str, query: str,
     the full corpus), min(pos) per doc, then one semi-joined doc-store
     read slices the stored term vector around it — the doc-store scan
     is pruned to (doc_id, tokens) of matching docs only."""
-    from elasticsearch_osmosis_plugin_spark.plans import catalog
-
     meta = load_meta(index_path)
     terms = query_terms(query, meta)
     dic = dictionary_rows(spark, index_path, terms, meta)
@@ -796,10 +752,7 @@ def highlight(spark: SparkSession, index_path: str, query: str,
     if not meta.get("positions", False):
         raise ValueError("highlight needs positional postings "
                          "(store_positions=True)")
-    ds = catalog.read_table(spark, index_path, "docstats")
-    if "tokens" not in ds.columns or not catalog.read_manifest(
-            index_path, "docstats").get("term_vectors", False):
-        raise ValueError("highlight needs the term-vector store")
+    ds = term_vector_store(spark, index_path, "highlight")
     live = sorted(dic["term"])
     posts = _pruned_postings(spark, index_path, live, meta)
     occ = term_positions(posts)
@@ -829,13 +782,9 @@ def more_like_this(spark: SparkSession, index_path: str, like_doc_id: int,
     from collections import Counter
 
     from elasticsearch_osmosis_plugin_spark.operators.query import topk
-    from elasticsearch_osmosis_plugin_spark.plans import catalog
 
     meta = load_meta(index_path)
-    ds = catalog.read_table(spark, index_path, "docstats")
-    if "tokens" not in ds.columns or not catalog.read_manifest(
-            index_path, "docstats").get("term_vectors", False):
-        raise ValueError("more_like_this needs the term-vector store")
+    ds = term_vector_store(spark, index_path, "more_like_this")
     rows = (ds.filter(F.col("doc_id") == like_doc_id)
             .select("tokens").collect())
     if not rows:
@@ -891,13 +840,9 @@ def term_vectors(spark: SparkSession, index_path: str,
     from elasticsearch_osmosis_plugin_spark.operators.query import (
         dictionary_rows,
     )
-    from elasticsearch_osmosis_plugin_spark.plans import catalog
 
     meta = load_meta(index_path)
-    ds = catalog.read_table(spark, index_path, "docstats")
-    if "tokens" not in ds.columns or not catalog.read_manifest(
-            index_path, "docstats").get("term_vectors", False):
-        raise ValueError("term_vectors needs the term-vector store")
+    ds = term_vector_store(spark, index_path, "term_vectors")
     rows = ds.filter(F.col("doc_id") == doc_id).select("tokens").collect()
     if not rows:
         raise KeyError(f"doc {doc_id} not found")
@@ -913,9 +858,9 @@ def term_vectors(spark: SparkSession, index_path: str,
         out, "term string, tf long, positions array<long>, df long, cf long")
 
 
-def significant_terms(spark: SparkSession, index_path: str, query: str,
+def significant_terms(spark: SparkSession, index_path: str, query: Hits,
                       size: int = 10, min_doc_count: int = 3,
-                      mode: str = "any", heuristic: str = "jlh") -> DataFrame:
+                      heuristic: str = "jlh") -> DataFrame:
     """ES significant_terms aggregation analog: terms over-represented
     in the query's hit set relative to the background corpus, scored
     with ES's pluggable significance-heuristic family (``heuristic``,
@@ -944,17 +889,11 @@ def significant_terms(spark: SparkSession, index_path: str, query: str,
     frequencies come from the DICTIONARY (metadata-only, no posting
     decode). Output: (term, df_fg, df_bg, <heuristic>) ordered score
     desc, term asc, limit ``size`` — deterministic."""
-    from elasticsearch_osmosis_plugin_spark.plans import catalog
     from elasticsearch_osmosis_plugin_spark.plans.build import dictionary_df
 
     meta = load_meta(index_path)
-    hits = (match_any_terms(spark, index_path, query) if mode == "any"
-            else match_all_terms(spark, index_path, query))
-    ds = catalog.read_table(spark, index_path, "docstats")
-    if "tokens" not in ds.columns or not catalog.read_manifest(
-            index_path, "docstats").get("term_vectors", False):
-        raise ValueError("significant_terms needs the term-vector store")
-    fg_docs = ds.select("doc_id", "tokens").join(hits, "doc_id", "left_semi")
+    term_vector_store(spark, index_path, "significant_terms")
+    fg_docs = _hit_values(spark, index_path, query, "tokens")
     fg = (fg_docs
           .select(F.explode(F.array_distinct("tokens")).alias("term"))
           .groupBy("term").agg(F.count(F.lit(1)).alias("df_fg")))
@@ -1007,32 +946,25 @@ def _sig_heuristic(heuristic: str, n_docs: float):
     raise ValueError(f"significant_terms: unknown heuristic {heuristic!r}")
 
 
-def facet_counts(spark: SparkSession, index_path: str, query: str,
-                 facet_col: str, mode: str = "any") -> DataFrame:
+def facet_counts(spark: SparkSession, index_path: str, query: Hits,
+                 facet_col: str) -> DataFrame:
     """ES terms-aggregation analog: bucket the docs matching ``query``
     by a doc-store carry column -> (facet value, n_docs), count-desc
-    then value for deterministic order. ``mode``: "any" (OR semantics,
-    the ES filtered-agg default here) or "all" (AND).
+    then value for deterministic order.
 
-    Plan: matching doc ids (posting union/intersection) semi-join the
-    doc-store — which prunes its scan to (doc_id, facet_col) — then a
-    tiny groupBy on the facet values."""
-    from elasticsearch_osmosis_plugin_spark.plans import catalog
-
-    docs = (match_any_terms(spark, index_path, query) if mode == "any"
-            else match_all_terms(spark, index_path, query))
-    ds = catalog.read_table(spark, index_path, "docstats") \
-        .select("doc_id", facet_col)
-    return (ds.join(docs, "doc_id", "left_semi")
+    Plan: matching doc ids semi-join the doc-store — which prunes its
+    scan to (doc_id, facet_col) — then a tiny groupBy on the facet
+    values."""
+    return (_hit_values(spark, index_path, query, facet_col)
             .groupBy(facet_col)
             .agg(F.count(F.lit(1)).alias("n_docs"))
             .orderBy(F.desc("n_docs"), F.asc(facet_col)))
 
 
-def terms_agg_sharded(spark: SparkSession, index_path: str, query: str,
+def terms_agg_sharded(spark: SparkSession, index_path: str, query: Hits,
                       facet_col: str, size: int = 10,
-                      shard_size: int | None = None, n_shards: int = 4,
-                      mode: str = "any") -> DataFrame:
+                      shard_size: int | None = None,
+                      n_shards: int = 4) -> DataFrame:
     """ES terms aggregation with the DISTRIBUTED merge protocol made
     explicit: each of ``n_shards`` deterministic hash-shards returns
     its local top ``shard_size`` buckets, the coordinator merge sums
@@ -1055,15 +987,9 @@ def terms_agg_sharded(spark: SparkSession, index_path: str, query: str,
     value-for-value, error bounds included."""
     from pyspark.sql import Window as PW
 
-    from elasticsearch_osmosis_plugin_spark.plans import catalog
-
     if shard_size is None:
         shard_size = int(size * 1.5 + 10)
-    docs = (match_any_terms(spark, index_path, query) if mode == "any"
-            else match_all_terms(spark, index_path, query))
-    ds = catalog.read_table(spark, index_path, "docstats") \
-        .select("doc_id", facet_col)
-    hits = ds.join(docs, "doc_id", "left_semi")
+    hits = _hit_values(spark, index_path, query, facet_col)
     shard = (F.conv(F.substring(F.md5(F.col("doc_id").cast("string")),
                                 2, 15), 16, 10).cast("long")
              % F.lit(int(n_shards))).alias("shard")
@@ -1423,9 +1349,9 @@ def suggest_phrase(spark: SparkSession, index_path: str, text: str,
     return spark.createDataFrame(rows[:size], out_schema)
 
 
-def cardinality_agg(spark: SparkSession, index_path: str, query: str,
-                    value_col: str, mode: str = "any",
-                    exact: bool = True, rsd: float = 0.05) -> DataFrame:
+def cardinality_agg(spark: SparkSession, index_path: str, query: Hits,
+                    value_col: str, exact: bool = True,
+                    rsd: float = 0.05) -> DataFrame:
     """ES cardinality-aggregation analog: number of distinct values of
     a doc-store column over the docs matching ``query``.
 
@@ -1434,15 +1360,9 @@ def cardinality_agg(spark: SparkSession, index_path: str, query: str,
     bounded). ``exact=False`` is the 100 TB path and what ES actually
     ships: HyperLogLog++ via Spark's ``approx_count_distinct`` (one
     pass, constant memory per partition, relative error ``rsd``)."""
-    from elasticsearch_osmosis_plugin_spark.plans import catalog
-
-    docs = (match_any_terms(spark, index_path, query) if mode == "any"
-            else match_all_terms(spark, index_path, query))
-    ds = catalog.read_table(spark, index_path, "docstats") \
-        .select("doc_id", value_col)
     agg = (F.countDistinct(value_col) if exact
            else F.approx_count_distinct(value_col, rsd))
-    return (ds.join(docs, "doc_id", "left_semi")
+    return (_hit_values(spark, index_path, query, value_col)
             .agg(agg.alias("cardinality")))
 
 
@@ -1714,8 +1634,8 @@ def sibling_bucket_stats(buckets: DataFrame,
                        F.count(F.lit(1)).alias("n_buckets"))
 
 
-def percentile_ranks_agg(spark: SparkSession, index_path: str, query: str,
-                         value_col: str, values, mode: str = "any") -> DataFrame:
+def percentile_ranks_agg(spark: SparkSession, index_path: str, query: Hits,
+                         value_col: str, values) -> DataFrame:
     """ES percentile_ranks aggregation (the inverse of percentiles):
     for each probe value, the percentage of matching docs whose
     ``value_col`` is <= it -> (value, rank_pct).
@@ -1724,13 +1644,7 @@ def percentile_ranks_agg(spark: SparkSession, index_path: str, query: str,
     per probe value plus one total count — all in the same partial
     aggregation); no sort, no sketch needed for the <=-fraction
     definition, so exact AND mergeable at any scale."""
-    from elasticsearch_osmosis_plugin_spark.plans import catalog
-
-    docs = (match_any_terms(spark, index_path, query) if mode == "any"
-            else match_all_terms(spark, index_path, query))
-    ds = catalog.read_table(spark, index_path, "docstats") \
-        .select("doc_id", value_col)
-    vals = ds.join(docs, "doc_id", "left_semi")
+    vals = _hit_values(spark, index_path, query, value_col)
     v = F.col(value_col).cast("double")
     probes = [float(x) for x in values]
     aggs = [F.sum(F.when(v <= p, 1).otherwise(0)).alias(f"_le{i}")
@@ -1775,22 +1689,17 @@ def composite_agg(df: DataFrame, sources, size: int = 10,
     return g.orderBy(*[F.asc(c) for c in cols]).limit(int(size))
 
 
-def adjacency_matrix_agg(spark: SparkSession, index_path: str, query: str,
-                         named_filters: dict, mode: str = "any",
+def adjacency_matrix_agg(spark: SparkSession, index_path: str, query: Hits,
+                         named_filters: dict,
                          separator: str = "&") -> DataFrame:
     """ES adjacency_matrix aggregation: doc counts for every named
     filter AND every pairwise intersection -> (bucket, n_docs), keys
     "a" and "a&b" in name order, empty buckets dropped (ES drops
     zero-doc cells). One semi-joined doc-store pass computes the whole
     m + m(m-1)/2 matrix as conditional sums — no per-cell scan."""
-    from elasticsearch_osmosis_plugin_spark.plans import catalog
-
     if not named_filters:
         return spark.createDataFrame([], "bucket string, n_docs long")
-    docs = (match_any_terms(spark, index_path, query) if mode == "any"
-            else match_all_terms(spark, index_path, query))
-    ds = catalog.read_table(spark, index_path, "docstats")
-    hits = ds.join(docs, "doc_id", "left_semi")
+    hits = _hit_values(spark, index_path, query)
     names = sorted(named_filters)
     cells = [(n, named_filters[n]) for n in names]
     for i, a in enumerate(names):
@@ -1808,26 +1717,19 @@ def adjacency_matrix_agg(spark: SparkSession, index_path: str, query: str,
             .filter(F.col("n_docs") > 0).orderBy("bucket"))
 
 
-def weighted_avg_agg(spark: SparkSession, index_path: str, query: str,
-                     value_col: str, weight_col: str,
-                     mode: str = "any") -> DataFrame:
+def weighted_avg_agg(spark: SparkSession, index_path: str, query: Hits,
+                     value_col: str, weight_col: str) -> DataFrame:
     """ES weighted_avg aggregation over query hits:
     sum(v * w) / sum(w) -> one row. One pass, two partial sums."""
-    from elasticsearch_osmosis_plugin_spark.plans import catalog
-
-    docs = (match_any_terms(spark, index_path, query) if mode == "any"
-            else match_all_terms(spark, index_path, query))
-    ds = catalog.read_table(spark, index_path, "docstats") \
-        .select("doc_id", value_col, weight_col)
-    hits = ds.join(docs, "doc_id", "left_semi")
+    hits = _hit_values(spark, index_path, query, value_col, weight_col)
     v = F.col(value_col).cast("double")
     w = F.col(weight_col).cast("double")
     return hits.agg((F.sum(v * w) / F.sum(w)).alias("weighted_avg"),
                     F.count(F.lit(1)).alias("n"))
 
 
-def string_stats_agg(spark: SparkSession, index_path: str, query: str,
-                     field: str, mode: str = "any") -> DataFrame:
+def string_stats_agg(spark: SparkSession, index_path: str, query: Hits,
+                     field: str) -> DataFrame:
     """ES string_stats aggregation (with show_distribution's entropy)
     over query hits: count, min/max/avg length, and the Shannon
     entropy (bits) of the CHARACTER distribution across all values.
@@ -1836,13 +1738,7 @@ def string_stats_agg(spark: SparkSession, index_path: str, query: str,
     the histogram is alphabet-sized after the map-side combine, so the
     shuffle moves at most |alphabet| rows per partition; lengths ride
     a separate scalar agg and the two tiny results cross-join."""
-    from elasticsearch_osmosis_plugin_spark.plans import catalog
-
-    docs = (match_any_terms(spark, index_path, query) if mode == "any"
-            else match_all_terms(spark, index_path, query))
-    ds = catalog.read_table(spark, index_path, "docstats") \
-        .select("doc_id", field)
-    hits = (ds.join(docs, "doc_id", "left_semi")
+    hits = (_hit_values(spark, index_path, query, field)
             .filter(F.col(field).isNotNull()))
     lens = hits.agg(
         F.count(F.lit(1)).alias("count"),
@@ -1859,9 +1755,8 @@ def string_stats_agg(spark: SparkSession, index_path: str, query: str,
     return lens.crossJoin(ent)
 
 
-def matrix_stats_agg(spark: SparkSession, index_path: str, query: str,
-                     field_a: str, field_b: str,
-                     mode: str = "any") -> DataFrame:
+def matrix_stats_agg(spark: SparkSession, index_path: str, query: Hits,
+                     field_a: str, field_b: str) -> DataFrame:
     """ES matrix_stats aggregation for a field pair over query hits:
     the full per-field response shape — mean, population variance,
     skewness (g1 = m3/m2^1.5) and kurtosis (m4/m2^2, plain not excess)
@@ -1870,13 +1765,7 @@ def matrix_stats_agg(spark: SparkSession, index_path: str, query: str,
     x^4) combined after the aggregate, so every input shuffles exactly
     once and the whole row reduces map-side (the same streaming-moments
     math ES's MatrixStatsAggregator runs shard-locally then merges)."""
-    from elasticsearch_osmosis_plugin_spark.plans import catalog
-
-    docs = (match_any_terms(spark, index_path, query) if mode == "any"
-            else match_all_terms(spark, index_path, query))
-    ds = catalog.read_table(spark, index_path, "docstats") \
-        .select("doc_id", field_a, field_b)
-    hits = ds.join(docs, "doc_id", "left_semi")
+    hits = _hit_values(spark, index_path, query, field_a, field_b)
     a = F.col(field_a).cast("double")
     b = F.col(field_b).cast("double")
 
@@ -1906,9 +1795,8 @@ def matrix_stats_agg(spark: SparkSession, index_path: str, query: str,
                       "covariance", "correlation")
 
 
-def rare_terms_agg(spark: SparkSession, index_path: str, query: str,
-                   facet_col: str, max_doc_count: int = 1,
-                   mode: str = "any") -> DataFrame:
+def rare_terms_agg(spark: SparkSession, index_path: str, query: Hits,
+                   facet_col: str, max_doc_count: int = 1) -> DataFrame:
     """ES rare_terms aggregation: the long-tail complement of the terms
     agg — buckets of ``facet_col`` whose doc count over the matching
     docs is <= ``max_doc_count``, ordered count-asc then value (ES's
@@ -1917,34 +1805,21 @@ def rare_terms_agg(spark: SparkSession, index_path: str, query: str,
     so scale cost is identical to the plain terms agg (ES implements
     this with a CuckooFilter for the same reason: the heavy lifting is
     the count, not the cut)."""
-    from elasticsearch_osmosis_plugin_spark.plans import catalog
-
-    docs = (match_any_terms(spark, index_path, query) if mode == "any"
-            else match_all_terms(spark, index_path, query))
-    ds = catalog.read_table(spark, index_path, "docstats") \
-        .select("doc_id", facet_col)
-    return (ds.join(docs, "doc_id", "left_semi")
+    return (_hit_values(spark, index_path, query, facet_col)
             .groupBy(facet_col)
             .agg(F.count(F.lit(1)).alias("n_docs"))
             .filter(F.col("n_docs") <= int(max_doc_count))
             .orderBy(F.asc("n_docs"), F.asc(facet_col)))
 
 
-def multi_terms_agg(spark: SparkSession, index_path: str, query: str,
-                    cols: Sequence[str], size: int = 10,
-                    mode: str = "any") -> DataFrame:
+def multi_terms_agg(spark: SparkSession, index_path: str, query: Hits,
+                    cols: Sequence[str], size: int = 10) -> DataFrame:
     """ES multi_terms aggregation: compound-key buckets over several
     doc-store fields of the matching docs -> (*cols, n_docs), count
     desc then key order, top ``size`` (ES default order). One grouped
     count over the compound key — map-side combined; the size cut is a
     TakeOrderedAndProject, never a full sort."""
-    from elasticsearch_osmosis_plugin_spark.plans import catalog
-
-    docs = (match_any_terms(spark, index_path, query) if mode == "any"
-            else match_all_terms(spark, index_path, query))
-    ds = catalog.read_table(spark, index_path, "docstats") \
-        .select("doc_id", *cols)
-    return (ds.join(docs, "doc_id", "left_semi")
+    return (_hit_values(spark, index_path, query, *cols)
             .groupBy(*cols)
             .agg(F.count(F.lit(1)).alias("n_docs"))
             .orderBy(F.desc("n_docs"), *[F.asc(c) for c in cols])
@@ -1956,7 +1831,8 @@ def global_stats_agg(spark: SparkSession, index_path: str,
     """ES global aggregation: escapes the query scope — sub-stats run
     over ALL live docs in the index regardless of any query context.
     Degenerate one-pass scalar aggregate of the doc-store (tombstones
-    excluded, like every query path)."""
+    excluded, like every query path; ``sum_v`` is a double, as in
+    :func:`stats_agg`)."""
     from elasticsearch_osmosis_plugin_spark.plans import catalog
 
     ds = live_docs(spark, index_path, catalog.read_table(
@@ -1964,7 +1840,8 @@ def global_stats_agg(spark: SparkSession, index_path: str,
     v = F.col(value_col)
     return ds.agg(F.count(F.lit(1)).alias("n"),
                   F.min(v).alias("min_v"), F.max(v).alias("max_v"),
-                  F.sum(v).alias("sum_v"), F.avg(v).alias("avg_v"))
+                  F.sum(v.cast("double")).alias("sum_v"),
+                  F.avg(v).alias("avg_v"))
 
 
 def date_range(df: DataFrame, ts_col: str,
@@ -1992,28 +1869,32 @@ def date_range(df: DataFrame, ts_col: str,
             .orderBy("bucket"))
 
 
-def _hit_values(spark: SparkSession, index_path: str, query: str,
-                value_col: str, mode: str = "any") -> DataFrame:
-    """(doc_id, value_col) of the docs matching ``query`` — the shared
-    hit-stream semi-join every metric agg starts from."""
+def _hit_values(spark: SparkSession, index_path: str, query: Hits,
+                *cols: str) -> DataFrame:
+    """(doc_id, *cols) doc-store rows of the live docs matching
+    ``query`` (the whole row when no column is named): the one hit-set
+    semi-join every query-scoped aggregation reads. ``query`` is query
+    text, resolved to an OR match (:func:`match_any_terms`), or a
+    doc-id DataFrame used as given (``dsl.search_aggs`` compiles its
+    query once and hands that frame to every agg)."""
     from elasticsearch_osmosis_plugin_spark.plans import catalog
 
-    docs = (match_any_terms(spark, index_path, query) if mode == "any"
-            else match_all_terms(spark, index_path, query))
-    ds = catalog.read_table(spark, index_path, "docstats") \
-        .select("doc_id", value_col)
-    return ds.join(docs, "doc_id", "left_semi")
+    hits = (query if isinstance(query, DataFrame)
+            else match_any_terms(spark, index_path, query))
+    ds = catalog.read_table(spark, index_path, "docstats")
+    if cols:
+        ds = ds.select("doc_id", *cols)
+    return ds.join(hits, "doc_id", "left_semi")
 
 
-def extended_stats_agg(spark: SparkSession, index_path: str, query: str,
-                       value_col: str, sigma: float = 2.0,
-                       mode: str = "any") -> DataFrame:
+def extended_stats_agg(spark: SparkSession, index_path: str, query: Hits,
+                       value_col: str, sigma: float = 2.0) -> DataFrame:
     """ES extended_stats aggregation: the stats block plus
     sum_of_squares, POPULATION variance / std_deviation (ES's
     definition), and the sigma std-deviation bounds — all mergeable
     second-moment aggregates, one map-side-combined pass over the hit
     stream."""
-    vals = _hit_values(spark, index_path, query, value_col, mode)
+    vals = _hit_values(spark, index_path, query, value_col)
     v = F.col(value_col).cast("double")
     row = vals.agg(F.count(F.lit(1)).alias("n"),
                    F.min(v).alias("min_v"), F.max(v).alias("max_v"),
@@ -2028,22 +1909,15 @@ def extended_stats_agg(spark: SparkSession, index_path: str, query: str,
         (F.col("avg_v") - F.lit(float(sigma)) * sd).alias("std_lower"))
 
 
-def top_metrics_agg(spark: SparkSession, index_path: str, query: str,
+def top_metrics_agg(spark: SparkSession, index_path: str, query: Hits,
                     metric_col: str, sort_col: str, *,
-                    descending: bool = True,
-                    mode: str = "any") -> DataFrame:
+                    descending: bool = True) -> DataFrame:
     """ES top_metrics aggregation (size=1): the value of
     ``metric_col`` in the hit with the max (or min) ``sort_col`` ->
     one row (sort_value, metric_value). ``max_by``/``min_by`` are
     mergeable JVM aggregates — one pass, no sort, no window. Ties on
     the sort value break on min doc_id for cross-engine determinism."""
-    from elasticsearch_osmosis_plugin_spark.plans import catalog
-
-    docs = (match_any_terms(spark, index_path, query) if mode == "any"
-            else match_all_terms(spark, index_path, query))
-    ds = catalog.read_table(spark, index_path, "docstats") \
-        .select("doc_id", metric_col, sort_col)
-    vals = ds.join(docs, "doc_id", "left_semi")
+    vals = _hit_values(spark, index_path, query, metric_col, sort_col)
     s, d = F.col(sort_col).cast("double"), F.col("doc_id")
     # deterministic tie-break: order on (sort, -doc_id) / (sort, doc_id)
     key = F.struct(s.alias("s"),
@@ -2061,8 +1935,7 @@ def top_metrics_agg(spark: SparkSession, index_path: str, query: str,
 
 
 def median_absolute_deviation_agg(spark: SparkSession, index_path: str,
-                                  query: str, value_col: str,
-                                  mode: str = "any") -> DataFrame:
+                                  query: Hits, value_col: str) -> DataFrame:
     """ES median_absolute_deviation aggregation, EXACT twin:
     median(|v - median(v)|) with the linear-interpolated median
     (Spark ``percentile`` == DuckDB ``quantile_cont``, exact halves on
@@ -2070,7 +1943,7 @@ def median_absolute_deviation_agg(spark: SparkSession, index_path: str,
     deviations) — ES uses a t-digest sketch; the exact definition here
     is the oracle-able baseline, and ``percentile_approx`` swaps in as
     the one-pass sketch path at scale."""
-    vals = _hit_values(spark, index_path, query, value_col, mode) \
+    vals = _hit_values(spark, index_path, query, value_col) \
         .select(F.col(value_col).cast("double").alias("v"))
     vals = vals.localCheckpoint(eager=True)  # two consumers, one scan
     med = vals.agg(F.expr(
@@ -2082,21 +1955,20 @@ def median_absolute_deviation_agg(spark: SparkSession, index_path: str,
                    F.expr("percentile(d, 0.5)").alias("mad"))
 
 
-def t_test_agg(spark: SparkSession, index_path: str, query_a: str,
-               query_b: str, value_col: str,
-               mode: str = "any") -> DataFrame:
+def t_test_agg(spark: SparkSession, index_path: str, query_a: Hits,
+               query_b: Hits, value_col: str) -> DataFrame:
     """ES t_test aggregation (heteroscedastic / Welch, the ES default):
     compare ``value_col`` between the hit sets of two queries ->
     (n_a, n_b, t_stat). Welch's t = (mean_a - mean_b) /
     sqrt(s2_a/n_a + s2_b/n_b) with SAMPLE variances — two independent
     mergeable-moment passes, a scalar combine, no shuffle beyond the
     hit streams."""
-    a = _hit_values(spark, index_path, query_a, value_col, mode) \
+    a = _hit_values(spark, index_path, query_a, value_col) \
         .agg(F.count(F.lit(1)).alias("n"),
              F.avg(F.col(value_col).cast("double")).alias("m"),
              F.var_samp(F.col(value_col).cast("double")).alias("s2")) \
         .collect()[0]
-    b = _hit_values(spark, index_path, query_b, value_col, mode) \
+    b = _hit_values(spark, index_path, query_b, value_col) \
         .agg(F.count(F.lit(1)).alias("n"),
              F.avg(F.col(value_col).cast("double")).alias("m"),
              F.var_samp(F.col(value_col).cast("double")).alias("s2")) \
@@ -2114,19 +1986,18 @@ def t_test_agg(spark: SparkSession, index_path: str, query_a: str,
                                   "n_a long, n_b long, t_stat double")
 
 
-def histogram_filled(spark: SparkSession, index_path: str, query: str,
+def histogram_filled(spark: SparkSession, index_path: str, query: Hits,
                      value_col: str, interval: float, *,
                      min_doc_count: int = 0,
-                     extended_bounds: tuple[float, float] | None = None,
-                     mode: str = "any") -> DataFrame:
+                     extended_bounds: tuple[float, float] | None = None
+                     ) -> DataFrame:
     """ES histogram with ``min_doc_count: 0`` + ``extended_bounds``:
     emit EMPTY buckets too — the gapless series pipeline aggs assume.
     The observed bucket range (optionally widened by extended_bounds)
     expands via ``sequence()`` (a driver-free lateral range, thousands
     of rows) and left-joins the counted buckets; cost stays the
     counting groupBy."""
-    base = histogram_agg(spark, index_path, query, value_col, interval,
-                         mode)
+    base = histogram_agg(spark, index_path, query, value_col, interval)
     if min_doc_count > 0:
         return base.filter(F.col("n_docs") >= int(min_doc_count))
     lo_hi = base.agg(F.min("bucket").alias("lo"),
@@ -2149,8 +2020,8 @@ def histogram_filled(spark: SparkSession, index_path: str, query: str,
             .orderBy("bucket"))
 
 
-def boxplot_agg(spark: SparkSession, index_path: str, query: str,
-                value_col: str, mode: str = "any") -> DataFrame:
+def boxplot_agg(spark: SparkSession, index_path: str, query: Hits,
+                value_col: str) -> DataFrame:
     """ES boxplot aggregation: min/max/q1/q2/q3 of a doc-store numeric
     column over the docs matching ``query``, plus the whisker values —
     the closest observed values inside the 1.5*IQR Tukey fences (ES's
@@ -2164,7 +2035,7 @@ def boxplot_agg(spark: SparkSession, index_path: str, query: str,
     pass 2's conditional min/max as literals. Both passes are column-
     pruned scans of (doc_id, value) semi-joined to the hit stream —
     nothing corpus-wide shuffles."""
-    vals = _hit_values(spark, index_path, query, value_col, mode)
+    vals = _hit_values(spark, index_path, query, value_col)
     v = F.col(value_col).cast("double")
     row = vals.agg(
         F.count(F.lit(1)).alias("n"), F.min(v).alias("min_v"),
@@ -2299,9 +2170,8 @@ def moving_percentiles(buckets: DataFrame, value_col: str = "n_docs",
     return buckets.withColumn(out_col, val).orderBy(key_col)
 
 
-def significant_text(spark: SparkSession, index_path: str, query: str,
+def significant_text(spark: SparkSession, index_path: str, query: Hits,
                      size: int = 10, min_doc_count: int = 3,
-                     mode: str = "any",
                      filter_duplicate_text: bool = True,
                      heuristic: str = "jlh") -> DataFrame:
     """ES significant_text aggregation: :func:`significant_terms` over
@@ -2313,17 +2183,11 @@ def significant_text(spark: SparkSession, index_path: str, query: str,
     rows; one row per duplicate group survives (min doc_id, for
     determinism). Background stats stay corpus-wide from the
     dictionary — ES keeps bg duplicate-naive too."""
-    from elasticsearch_osmosis_plugin_spark.plans import catalog
     from elasticsearch_osmosis_plugin_spark.plans.build import dictionary_df
 
     meta = load_meta(index_path)
-    hits = (match_any_terms(spark, index_path, query) if mode == "any"
-            else match_all_terms(spark, index_path, query))
-    ds = catalog.read_table(spark, index_path, "docstats")
-    if "tokens" not in ds.columns or not catalog.read_manifest(
-            index_path, "docstats").get("term_vectors", False):
-        raise ValueError("significant_text needs the term-vector store")
-    fg_docs = ds.select("doc_id", "tokens").join(hits, "doc_id", "left_semi")
+    term_vector_store(spark, index_path, "significant_text")
+    fg_docs = _hit_values(spark, index_path, query, "tokens")
     if filter_duplicate_text:
         fg_docs = (fg_docs
                    .withColumn("_fp", F.md5(F.array_join("tokens", "\x1f")))
@@ -2354,13 +2218,9 @@ def mtermvectors(spark: SparkSession, index_path: str,
     from elasticsearch_osmosis_plugin_spark.operators.query import (
         dictionary_rows,
     )
-    from elasticsearch_osmosis_plugin_spark.plans import catalog
 
     meta = load_meta(index_path)
-    ds = catalog.read_table(spark, index_path, "docstats")
-    if "tokens" not in ds.columns or not catalog.read_manifest(
-            index_path, "docstats").get("term_vectors", False):
-        raise ValueError("mtermvectors needs the term-vector store")
+    ds = term_vector_store(spark, index_path, "mtermvectors")
     ids = [int(d) for d in doc_ids]
     rows = (ds.filter(F.col("doc_id").isin(ids))
             .select("doc_id", "tokens").collect())
@@ -2392,10 +2252,10 @@ _SUBAGG_OPS = {
 }
 
 
-def terms_subaggs(spark: SparkSession, index_path: str, query: str,
+def terms_subaggs(spark: SparkSession, index_path: str, query: Hits,
                   facet_col: str,
                   subaggs: dict[str, tuple[str, str]],
-                  mode: str = "any", size: int = 10) -> DataFrame:
+                  size: int = 10) -> DataFrame:
     """ES terms aggregation with METRIC sub-aggregations — the
     canonical bucket+metric pattern (`terms` over a keyword field,
     `avg`/`sum`/`min`/`max`/`value_count`/`cardinality`/`stddev` of
@@ -2408,16 +2268,10 @@ def terms_subaggs(spark: SparkSession, index_path: str, query: str,
     all mergeable aggregates, map-side combined; nothing per-bucket
     runs a second pass (ES computes sub-aggs in the same collector
     sweep for the same reason)."""
-    from elasticsearch_osmosis_plugin_spark.plans import catalog
-
     bad = sorted(op for op, _ in subaggs.values() if op not in _SUBAGG_OPS)
     if bad:
         raise ValueError(f"unsupported sub-agg ops: {bad}")
-    docs = (match_any_terms(spark, index_path, query) if mode == "any"
-            else match_all_terms(spark, index_path, query))
     fields = sorted({f for _, f in subaggs.values()})
-    ds = catalog.read_table(spark, index_path, "docstats") \
-        .select("doc_id", facet_col, *fields)
     aggs = [F.count(F.lit(1)).alias("n_docs")]
     for name, (op, field) in subaggs.items():
         # count-ish ops keep the column's own type (strings are fine);
@@ -2425,7 +2279,7 @@ def terms_subaggs(spark: SparkSession, index_path: str, query: str,
         col = (F.col(field) if op in ("value_count", "cardinality")
                else F.col(field).cast("double"))
         aggs.append(_SUBAGG_OPS[op](col).alias(name))
-    return (ds.join(docs, "doc_id", "left_semi")
+    return (_hit_values(spark, index_path, query, facet_col, *fields)
             .groupBy(facet_col).agg(*aggs)
             .orderBy(F.desc("n_docs"), F.asc(facet_col)).limit(size))
 
@@ -2557,9 +2411,8 @@ def term_vectors_artificial(spark: SparkSession, index_path: str,
         out, "term string, tf long, positions array<long>, df long, cf long")
 
 
-def scripted_metric_agg(spark: SparkSession, index_path: str, query: str,
-                        map_script: str, reduce_script: str,
-                        mode: str = "any") -> DataFrame:
+def scripted_metric_agg(spark: SparkSession, index_path: str, query: Hits,
+                        map_script: str, reduce_script: str) -> DataFrame:
     """ES scripted_metric aggregation under the engine's
     painless-to-Catalyst contract (the same contract runtime_mappings
     and script_fields use): ``map_script`` is a per-document SQL
@@ -2574,13 +2427,8 @@ def scripted_metric_agg(spark: SparkSession, index_path: str, query: str,
     combined + whole-stage codegen'd — no state object ships around.
 
     Returns one row ``(value double)``."""
-    from elasticsearch_osmosis_plugin_spark.plans import catalog
-
-    docs = (match_any_terms(spark, index_path, query) if mode == "any"
-            else match_all_terms(spark, index_path, query))
-    ds = catalog.read_table(spark, index_path, "docstats")
-    hits = ds.join(docs, "doc_id", "left_semi")
-    return (hits.withColumn("_mapped", F.expr(map_script))
+    return (_hit_values(spark, index_path, query)
+            .withColumn("_mapped", F.expr(map_script))
             .agg(F.expr(reduce_script).cast("double").alias("value")))
 
 
@@ -2769,8 +2617,6 @@ def highlight_fragments(spark: SparkSession, index_path: str, query: str,
     streams only, doc-store pruned to matching docs."""
     from pyspark.sql import Window as W
 
-    from elasticsearch_osmosis_plugin_spark.plans import catalog
-
     meta = load_meta(index_path)
     terms = query_terms(query, meta)
     dic = dictionary_rows(spark, index_path, terms, meta)
@@ -2780,10 +2626,7 @@ def highlight_fragments(spark: SparkSession, index_path: str, query: str,
     if not meta.get("positions", False):
         raise ValueError("highlight needs positional postings "
                          "(store_positions=True)")
-    ds = catalog.read_table(spark, index_path, "docstats")
-    if "tokens" not in ds.columns or not catalog.read_manifest(
-            index_path, "docstats").get("term_vectors", False):
-        raise ValueError("highlight needs the term-vector store")
+    ds = term_vector_store(spark, index_path, "highlight")
     live = sorted(dic["term"])
     posts = _pruned_postings(spark, index_path, live, meta)
     occ = term_positions(posts)

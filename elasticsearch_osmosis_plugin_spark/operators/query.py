@@ -258,6 +258,19 @@ def allowed_docs(spark: SparkSession, index_path: str,
             .filter(post_filter).select("doc_id"))
 
 
+def term_vector_store(spark: SparkSession, index_path: str,
+                      op: str) -> DataFrame:
+    """The doc-store frame with its stored term vectors (``tokens``);
+    raises ``ValueError("<op> needs the term-vector store")`` when the
+    index was built without them or ``merge.drop_term_vectors`` removed
+    them."""
+    ds = catalog.read_table(spark, index_path, "docstats")
+    if "tokens" not in ds.columns or not catalog.read_manifest(
+            index_path, "docstats").get("term_vectors", False):
+        raise ValueError(f"{op} needs the term-vector store")
+    return ds
+
+
 def term_idfs(dic: pd.DataFrame, meta: dict) -> dict[str, float]:
     """{term: BM25 idf} of the indexed query terms (dictionary rows),
     in row order; empty when no query term is indexed."""
@@ -1279,11 +1292,7 @@ def reindex(spark: SparkSession, src_index: str, dest_path: str,
     from elasticsearch_osmosis_plugin_spark.plans.build import build_index
 
     meta = load_meta(src_index)
-    ds = catalog.read_table(spark, src_index, "docstats")
-    if "tokens" not in ds.columns or not catalog.read_manifest(
-            src_index, "docstats").get("term_vectors", False):
-        raise ValueError("reindex needs the term-vector store "
-                         "(drop_term_vectors removed the _source analog)")
+    ds = term_vector_store(spark, src_index, "reindex")
     ids = scan_df(spark, src_index, query, mode=mode,
                   post_filter=post_filter)
     internal = {"seg", "grp", "tokens", "dl", "content_sha"}

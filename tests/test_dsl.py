@@ -265,6 +265,35 @@ def test_aggs(spark, idx):
         _rows(scorefn.top_hits(spark, idx, "public", "lang", n_hits=2))
 
 
+def test_aggs_without_query_cover_all_live_docs(spark, idx):
+    """An aggs-only body aggregates over match_all (it used to raise
+    "aggs need a match/term query")."""
+    from elasticsearch_osmosis_plugin_spark.plans import catalog
+
+    out = dsl.search_aggs(spark, idx, {"aggs": {
+        "dl_stats": {"stats": {"field": "dl"}},
+        "by_lang": {"terms": {"field": "lang"}}}})
+    assert _rows(out["dl_stats"]) == \
+        _rows(intersect.global_stats_agg(spark, idx, "dl"))
+    live = query.live_docs(spark, idx, catalog.read_table(
+        spark, idx, "docstats").select("doc_id"))
+    assert _rows(out["by_lang"]) == \
+        _rows(intersect.facet_counts(spark, idx, live, "lang"))
+
+
+def test_aggs_honour_match_operator(spark, idx):
+    """``operator: "and"`` scopes the aggs to the AND hit set (they
+    used to count the OR hits)."""
+    body = {"query": {"match": {"content": {"query": "public static",
+                                            "operator": "and"}}},
+            "aggs": {"n": {"value_count": {"field": "dl"}}}}
+    got = dsl.search_aggs(spark, idx, body)["n"].collect()[0]["value"]
+    want = intersect.match_all_terms(spark, idx, "public static").count()
+    assert got == want
+    assert want < intersect.match_any_terms(spark, idx,
+                                            "public static").count()
+
+
 def test_filter_column_forms(spark, idx):
     from elasticsearch_osmosis_plugin_spark.plans import catalog
 
@@ -1380,8 +1409,8 @@ def test_scripted_metric_agg(spark, idx):
 
     got = intersect.scripted_metric_agg(
         spark, idx, "public static",
-        map_script="dl * 2", reduce_script="sum(_mapped)",
-        mode="any").collect()[0]["value"]
+        map_script="dl * 2", reduce_script="sum(_mapped)"
+    ).collect()[0]["value"]
     ds = catalog.read_table(spark, idx, "docstats")
     hits = ds.join(intersect.match_any_terms(spark, idx, "public static"),
                    "doc_id", "left_semi")

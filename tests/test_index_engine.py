@@ -639,6 +639,23 @@ def test_english_analyzer_index_rank_identical(spark, corpus_rows, tmp_path):
         for r, (_, s) in zip(got, want):
             assert abs(r["score"] - s) < 1e-9
 
+    # the same index's 60-bit sha-derived doc_ids: a BIGINT stats sum is
+    # a double, as in ES (a long sum raised ARITHMETIC_OVERFLOW)
+    from elasticsearch_osmosis_plugin_spark.operators import dsl
+    from elasticsearch_osmosis_plugin_spark.operators.intersect import (
+        global_stats_agg,
+    )
+
+    ids = [d for d, _ in rows]
+    assert sum(ids) > 2 ** 63
+    via_dsl = dsl.search_aggs(spark, path, {"aggs": {"s": {
+        "stats": {"field": "doc_id"}}}})["s"]  # stats_agg over match_all
+    for df in (global_stats_agg(spark, path, "doc_id"), via_dsl):
+        r = df.collect()[0]
+        assert (r["n"], r["min_v"], r["max_v"]) == \
+            (len(ids), min(ids), max(ids))
+        assert abs(r["sum_v"] / sum(ids) - 1) < 1e-12
+
 
 def test_date_histogram_agg(spark, tmp_path):
     """date_histogram over query hits: calendar-month buckets of a
@@ -1176,11 +1193,11 @@ def test_cardinality_agg(spark, corpus_rows, index_path):
     want = len({by_doc[d] for d in hits})
     assert want > 1  # non-degenerate fixture
 
-    exact = cardinality_agg(spark, index_path, "public static", "repo",
-                            mode="any").collect()[0]["cardinality"]
+    exact = cardinality_agg(spark, index_path, "public static",
+                            "repo").collect()[0]["cardinality"]
     assert exact == want
     approx = cardinality_agg(spark, index_path, "public static", "repo",
-                             mode="any", exact=False,
+                             exact=False,
                              rsd=0.05).collect()[0]["cardinality"]
     assert abs(approx - exact) <= max(2, 0.2 * exact)
 

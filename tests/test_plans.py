@@ -77,6 +77,63 @@ def test_one_match_plan():
                      "filter(post_filter)": ["query:allowed_docs"]}, found
 
 
+# the query-scoped aggregations of intersect.py
+HIT_SET_AGGS = {
+    "stats_agg", "date_histogram_agg", "histogram_agg", "terms_stats_facet",
+    "range_agg", "filters_agg", "missing_agg", "percentiles_agg",
+    "significant_terms", "significant_text", "facet_counts",
+    "terms_agg_sharded", "cardinality_agg", "percentile_ranks_agg",
+    "adjacency_matrix_agg", "weighted_avg_agg", "string_stats_agg",
+    "matrix_stats_agg", "rare_terms_agg", "multi_terms_agg",
+    "top_metrics_agg", "scripted_metric_agg", "terms_subaggs",
+    "extended_stats_agg", "median_absolute_deviation_agg", "t_test_agg",
+    "boxplot_agg", "histogram_filled"}
+
+
+def test_one_hit_set_per_agg():
+    """Every query-scoped agg reads its doc-store rows through
+    ``intersect._hit_values`` (directly or via another such agg): none
+    resolves its query (match_any_terms / match_all_terms) or reads
+    docstats itself, and no intersect function but expand_terms /
+    match_expanded has a ``mode`` parameter. ``dsl.search_aggs``
+    compiles its query once, through ``_unranked_ids``."""
+    import ast
+    import inspect
+
+    from elasticsearch_osmosis_plugin_spark.operators import dsl, intersect
+
+    def functions(module):
+        tree = ast.parse(inspect.getsource(module))
+        return {n.name: n for n in tree.body
+                if isinstance(n, ast.FunctionDef)}
+
+    def calls(fn):
+        return [getattr(n.func, "id", None) or getattr(n.func, "attr", None)
+                for n in ast.walk(fn) if isinstance(n, ast.Call)]
+
+    fns = functions(intersect)
+    assert HIT_SET_AGGS <= set(fns)
+    bad = []
+    for name in sorted(HIT_SET_AGGS):
+        called = calls(fns[name])
+        bad += [(name, c) for c in called
+                if c in ("match_any_terms", "match_all_terms", "read_table")]
+        bad += [(name, "docstats") for n in ast.walk(fns[name])
+                if isinstance(n, ast.Constant) and n.value == "docstats"]
+        if not ({"_hit_values"} | HIT_SET_AGGS) & set(called):
+            bad.append((name, "no _hit_values"))
+    assert not bad, bad
+    with_mode = sorted(name for name, fn in fns.items()
+                       if "mode" in {a.arg for a in
+                                     fn.args.args + fn.args.kwonlyargs})
+    assert with_mode == ["expand_terms", "match_expanded"]
+
+    called = calls(functions(dsl)["search_aggs"])
+    assert called.count("_unranked_ids") == 1
+    assert not {"match_any_terms", "match_all_terms", "read_table"} \
+        & set(called)
+
+
 def test_bm25_topk_is_take_ordered(spark, corpus_df):
     from elasticsearch_osmosis_plugin_spark.operators.bm25 import bm25_topk
 
