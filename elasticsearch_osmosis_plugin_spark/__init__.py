@@ -9,8 +9,8 @@ index itself:
 - SPIMI-style distributed inverted-index build (``plans.build``)
 - delta + varbyte posting compression with block-max metadata
   (``functions.varbyte``)
-- top-k BM25 (k1=1.2, b=0.75) query engine with MaxScore/block-max
-  pruning (``operators.query``)
+- top-k BM25 (k1=1.2, b=0.75) query engine: per-posting-segment
+  top-k in one Arrow kernel, merged k x n_segments (``operators.query``)
 - doc-store DAO ops mirroring the reference's EntityDao
   (``operators.dao``; reference: EntityDao.java)
 - the ES API surface: JSON query-DSL compiler (``operators.dsl``),

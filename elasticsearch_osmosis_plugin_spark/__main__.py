@@ -115,7 +115,9 @@ def build_parser() -> argparse.ArgumentParser:
     q.add_argument("--query", required=True)
     q.add_argument("--k", type=int, default=10)
     q.add_argument("--strategy", default="auto",
-                   choices=["auto", "scoreall", "maxscore", "blockmax"])
+                   choices=["auto", "scoreall", "maxscore", "blockmax"],
+                   help="accepted for compatibility: every name runs "
+                   "the one segment-local top-k plan")
     q.add_argument("--output", default=None, help="write parquet here "
                    "instead of printing JSON lines")
     _add_common(q)

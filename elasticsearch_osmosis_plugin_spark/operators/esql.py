@@ -29,7 +29,7 @@ gate):
 
 Two full-text plans: :func:`esql` over tables compiles ``MATCH`` to
 the M1 full-scan scorer; :func:`esql_index` compiles the canonical
-search pipeline onto the PERSISTED index's MaxScore/block-max path
+search pipeline onto the PERSISTED index's segment-local top-k
 (reads only the query terms' posting bytes) — rank-identical.
 - expressions: arithmetic, comparisons, ``AND OR NOT``, ``IN``,
   ``LIKE`` (``*``/``?`` wildcards, whole-string), ``RLIKE``
@@ -3350,11 +3350,11 @@ def esql_index(spark: SparkSession, query: str,
         | SORT _score DESC [, doc_id]
         | LIMIT k
 
-    and compiles it to :func:`..operators.query.topk` — MaxScore /
-    block-max pruned, so the scan reads only the query terms' posting
-    bytes instead of the corpus (the table compiler's MATCH path is a
+    and compiles it to :func:`..operators.query.topk` — segment-local
+    top-k, so the scan reads only the query terms' posting bytes
+    instead of the corpus (the table compiler's MATCH path is a
     full-scan M1 plan). Residual WHERE conjuncts become the exact
-    ``post_filter`` (pruning bounds stay filtered-correct); KEEP of
+    ``post_filter``; KEEP of
     carry columns hydrates from docstats with a broadcast of the
     k-bounded hit frame. Any other pipeline shape raises — use
     :func:`esql` over tables for the general language.

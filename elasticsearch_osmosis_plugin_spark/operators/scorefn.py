@@ -8,9 +8,9 @@ a TakeOrderedAndProject — no extra shuffle beyond the score
 aggregation the plain match query already pays.
 
 Scale notes (100 TB design point):
-- function_score runs the scoreall path: a bounded function weight
-  (gauss/linear decay <= 1, log1p of a bounded field) WOULD let
-  MaxScore keep pruning (ub' = ub * w_max), but correctness across
+- function_score scores every matching posting: a bounded function
+  weight (gauss/linear decay <= 1, log1p of a bounded field) would
+  allow WAND-style pruning (ub' = ub * w_max), but correctness across
   arbitrary user functions cannot assume a bound — ES itself rescopes
   function_score out of WAND for the same reason.
 - dis_max shares one postings decode across all subqueries; the
@@ -805,7 +805,7 @@ def combined_fields_topk(spark: SparkSession,
     broadcast-joins back. At the 100 TB design point dl_c/avgdl_c are
     build-time artifacts; query-time computation here keeps the
     operator self-contained over the existing per-field layout."""
-    w = {f: float((field_weights or {}).get(f, 1.0)) for f in field_indexes}
+    w = [float((field_weights or {}).get(f, 1.0)) for f in field_indexes]
     metas = {f: load_meta(p) for f, p in field_indexes.items()}
     analyzers = {m["analyzer"] for m in metas.values()}
     if len(analyzers) != 1:
@@ -815,7 +815,7 @@ def combined_fields_topk(spark: SparkSession,
     n_docs = max(m["n_docs"] for m in metas.values())
 
     tf_parts, dl_parts = [], []
-    for f, path in field_indexes.items():
+    for i, (f, path) in enumerate(field_indexes.items()):
         meta = metas[f]
         terms = query_terms(query, meta)
         dic = dictionary_rows(spark, path, terms, meta)
@@ -824,25 +824,37 @@ def combined_fields_topk(spark: SparkSession,
                                                 list(dic["term"]), meta),
                                with_dl=False)
             raw = live_docs(spark, path, raw, meta)
-            tf_parts.append(raw.select(
-                "term", "doc_id", (F.col("tf") * w[f]).alias("wtf")))
-        dl_parts.append(
-            catalog.read_table(spark, path, "docstats")
-            .select("doc_id", (F.col("dl").cast("double") * w[f])
-                    .alias("wdl")))
+            tf_parts.append(raw.select("term", "doc_id",
+                                       F.lit(i).alias("_f"), "tf"))
+        dl_parts.append(catalog.read_table(spark, path, "docstats")
+                        .select("doc_id", F.lit(i).alias("_f"), "dl"))
     if not tf_parts:
         return spark.createDataFrame([], "doc_id long, score double")
 
-    tfc = tf_parts[0]
-    for part in tf_parts[1:]:
-        tfc = tfc.unionByName(part)
-    tfc = tfc.groupBy("term", "doc_id").agg(F.sum("wtf").alias("tfc"))
+    # Every float sum below runs in a fixed order (fields in the given
+    # order, terms sorted), so repeated calls agree bit for bit: each
+    # (key, field) value lands in its own pivot column and the weighted
+    # blend adds the columns in field order.
+    fields = list(range(len(w)))
 
-    dlc = dl_parts[0]
-    for part in dl_parts[1:]:
-        dlc = dlc.unionByName(part)
-    dlc = dlc.groupBy("doc_id").agg(F.sum("wdl").alias("dlc"))
-    avgdl_c = float(dlc.agg(F.avg("dlc")).collect()[0][0] or 1.0)
+    def by_field(parts, keys, col):
+        return (functools.reduce(DataFrame.unionByName, parts)
+                .groupBy(*keys).pivot("_f", fields).agg(F.first(col)))
+
+    def blend():
+        return functools.reduce(lambda a, c: a + c, [
+            F.coalesce(F.col(str(i)), F.lit(0)) * F.lit(w[i])
+            for i in fields])
+
+    tfc = by_field(tf_parts, ("term", "doc_id"), "tf").select(
+        "term", "doc_id", blend().alias("tfc"))
+    dls = by_field(dl_parts, ("doc_id",), "dl")
+    dlc = dls.select("doc_id", blend().alias("dlc"))
+    # avgdl_c = sum_f w_f * (exact integer dl total of f) / union docs
+    tot = dls.agg(F.count(F.lit(1)),
+                  *[F.sum(F.col(str(i))) for i in fields]).collect()[0]
+    avgdl_c = (sum(w[i] * float(tot[i + 1] or 0) for i in fields) / tot[0]
+               if tot[0] else 0.0) or 1.0
 
     dfc = tfc.groupBy("term").agg(F.count(F.lit(1)).alias("dfc"))
     idf_c = F.log(F.lit(1.0) + (F.lit(float(n_docs)) - F.col("dfc")
@@ -850,7 +862,11 @@ def combined_fields_topk(spark: SparkSession,
     partial = (F.col("tfc") * F.lit(k1 + 1.0)
                / (F.col("tfc") + F.lit(k1) * (F.lit(1.0 - b)
                   + F.lit(b) * F.col("dlc") / F.lit(avgdl_c)))) * idf_c
+    per_term = F.array_sort(F.collect_list(F.struct("term",
+                                                    partial.alias("p"))))
     scored = (tfc.join(F.broadcast(dfc), "term")
               .join(dlc, "doc_id")
-              .groupBy("doc_id").agg(F.sum(partial).alias("score")))
+              .groupBy("doc_id")
+              .agg(F.aggregate(per_term, F.lit(0.0),
+                               lambda acc, x: acc + x["p"]).alias("score")))
     return deterministic_topk(scored, k)

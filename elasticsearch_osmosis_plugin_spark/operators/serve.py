@@ -14,8 +14,10 @@ dictionary df == posting count). No Spark job, no scheduler
 round-trip: the ~0.4 s fixed per-job latency of the distributed path
 drops to single-digit milliseconds for bucket-pruned reads.
 
-Rank identity with the distributed scoreall path is pinned by tests
-(build → append → delete → compact → purge lifecycle); the local path
+The accumulate, tombstone mask and top-k (:func:`accumulate_topk`)
+are the ones the Spark path's per-segment kernel runs, so the two paths
+return the same ids and bit-equal scores, pinned by tests across the
+build → append → delete → compact → purge lifecycle; the local path
 refuses (ValueError) anything it cannot answer bit-for-bit
 (post_filter, boosts, minimum_should_match route to the Spark path).
 
@@ -162,11 +164,9 @@ def _posting_dirs(index_path: str, meta: dict) -> list[str]:
             for t in live_posting_tables(index_path, meta)]
 
 
-def _bucket_files(dirs: list[str], bucket: int) -> list[str]:
-    out = []
-    for d in dirs:
-        out.extend(_ls_parquet(os.path.join(d, f"bucket={bucket}")))
-    return out
+def _bucket_files(dirs: list[str], *buckets: int) -> list[str]:
+    return [f for d in dirs for b in buckets
+            for f in _ls_parquet(os.path.join(d, f"bucket={b}"))]
 
 
 def _read_filtered(files: list[str], columns: list[str],
@@ -329,16 +329,47 @@ def _topk_order(uids: np.ndarray, scores: np.ndarray,
     return cand[np.lexsort((uids[cand], -scores[cand]))][:k]
 
 
+def accumulate_topk(ids: np.ndarray, w: np.ndarray,
+                    dead: np.ndarray | None, k: int | None, *,
+                    msm: int = 0, merged: tuple | None = None
+                    ) -> tuple[np.ndarray, np.ndarray]:
+    """The BM25 accumulate both query paths share (the Spark per-segment
+    kernel and the driver-local scorer): per-doc sums of the posting
+    weights ``w`` of doc ``ids``, tombstoned ids (sorted ``dead``)
+    masked, docs matching fewer than ``msm`` terms dropped, then the
+    deterministic (score desc, doc_id asc) top ``k`` — every doc, in
+    that order, when ``k`` is None. Postings come in sorted-term order
+    and the sum runs in posting order, so a doc's score adds its terms
+    in one fixed order and both paths agree bit for bit. A term holds
+    one posting per doc, so a doc's posting count is its matched-term
+    count. ``merged``: a cached ``np.unique(ids, return_inverse=True)``.
+    Returns (doc_ids, scores) in rank order."""
+    uids, inv = merged if merged is not None else np.unique(
+        ids, return_inverse=True)
+    scores = np.bincount(inv, weights=w, minlength=uids.size)
+    keep = None
+    if dead is not None and dead.size:
+        pos = np.searchsorted(dead, uids)
+        keep = dead[np.minimum(pos, dead.size - 1)] != uids
+    if msm > 0:
+        enough = np.bincount(inv, minlength=uids.size) >= msm
+        keep = enough if keep is None else keep & enough
+    if keep is not None:
+        uids, scores = uids[keep], scores[keep]
+    order = _topk_order(uids, scores, uids.size if k is None else k)
+    return uids[order], scores[order]
+
+
 def _score_from_postings(terms: list[str], posts: dict[str, tuple],
                          meta: dict, dead: np.ndarray | None, k: int,
                          sigs: dict | None = None
                          ) -> list[tuple[int, float]]:
-    """BM25 accumulate + tombstone mask + deterministic top-k over
-    pre-gathered per-term postings — the Spark kernels' weight,
-    ``query.bm25_weight``, with each term's df its posting count.
-    Terms absent from ``posts`` do not match. ``sigs``: term -> posting
-    bucket signature (from ``_gather_term_postings``); when present the
-    doc-id merge structure comes from / lands in ``merge_cache``."""
+    """BM25 weights of pre-gathered per-term postings — the Spark
+    kernels' weight, ``query.bm25_weight``, with each term's df its
+    posting count — through :func:`accumulate_topk`. Terms absent from
+    ``posts`` do not match. ``sigs``: term -> posting bucket signature
+    (from ``_gather_term_postings``); when present the doc-id merge
+    structure comes from / lands in ``merge_cache``."""
     from elasticsearch_osmosis_plugin_spark.operators.query import (
         bm25_weight,
         idf,
@@ -377,22 +408,15 @@ def _score_from_postings(terms: list[str], posts: dict[str, tuple],
     else:
         hit = None
     if hit is not None and hit[2] == all_w.size:
-        uids, inv = hit[0], hit[1]
+        merged = hit[0], hit[1]
     else:
         all_ids = np.concatenate(ids_parts)
-        uids, inv = np.unique(all_ids, return_inverse=True)
+        merged = np.unique(all_ids, return_inverse=True)
         if key is not None:
-            merge_cache.put(key, (uids, inv, all_ids.size),
-                            uids.nbytes + inv.nbytes)
-    scores = np.zeros(uids.size, dtype=np.float64)
-    np.add.at(scores, inv, all_w)
-    if dead is not None and dead.size:
-        pos = np.searchsorted(dead, uids)
-        hit_d = (pos < dead.size) & (dead[np.minimum(pos, dead.size - 1)]
-                                     == uids)
-        uids, scores = uids[~hit_d], scores[~hit_d]
-    order = _topk_order(uids, scores, k)
-    return [(int(uids[i]), float(scores[i])) for i in order]
+            merge_cache.put(key, (*merged, all_ids.size),
+                            merged[0].nbytes + merged[1].nbytes)
+    uids, scores = accumulate_topk(None, all_w, dead, k, merged=merged)
+    return list(zip(uids.tolist(), scores.tolist()))
 
 
 def local_topk(index_path: str, query_terms: list[str], k: int = 10,

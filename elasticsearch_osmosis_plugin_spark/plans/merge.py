@@ -447,6 +447,22 @@ def drop_unmerged_groups(index_path: str) -> None:
         catalog.drop_table(index_path, f"postings/group={g}")
 
 
+def _seg_doc_ids(batches):
+    """Posting rows -> one (seg, doc_id) row per posting."""
+    import numpy as np
+    import pyarrow as pa
+
+    from elasticsearch_osmosis_plugin_spark.functions.varbyte import (
+        decode_doc_ids,
+    )
+
+    for batch in batches:
+        ids, n = decode_doc_ids(batch.column("doc_ids_vb"))
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(np.repeat(batch.column("seg").to_numpy(), n)),
+             pa.array(ids)], names=["seg", "doc_id"])
+
+
 def verify_index(spark: SparkSession, index_path: str,
                  source_df=None, *, id_col: str = "doc_id",
                  text_col: str = "content") -> dict:
@@ -469,9 +485,13 @@ def verify_index(spark: SparkSession, index_path: str,
       of the posting payloads equals the dictionary metadata;
     - ``doc_lengths``: every decoded (doc_id, dl) pair agrees with
       the docstats doc store, and postings reference no unknown docs;
+    - ``segments``: no live doc id has postings in two posting
+      segments (``seg`` values) — the per-segment top-k of
+      ``query.topk`` is exact only under this invariant;
     - ``tombstones``: tombstoned ids all exist in the doc store.
     """
     from elasticsearch_osmosis_plugin_spark.operators.query import (
+        live_docs,
         raw_postings,
     )
     from elasticsearch_osmosis_plugin_spark.plans.build import (
@@ -512,6 +532,8 @@ def verify_index(spark: SparkSession, index_path: str,
                              "skipped": "structure incomplete"}
         out["doc_lengths"] = {"ok": False, "mismatches": None,
                               "skipped": "structure incomplete"}
+        out["segments"] = {"ok": False, "split_docs": None,
+                           "skipped": "structure incomplete"}
         out["ok"] = False
         return out
 
@@ -537,6 +559,13 @@ def verify_index(spark: SparkSession, index_path: str,
         out["doc_lengths"] = {"ok": bad_dl == 0, "mismatches": int(bad_dl)}
     finally:
         decoded.unpersist()
+
+    seg_docs = (postings_df(spark, index_path).select("seg", "doc_ids_vb")
+                .mapInArrow(_seg_doc_ids, "seg long, doc_id long"))
+    split = live_docs(spark, index_path,
+                      seg_docs.distinct().groupBy("doc_id").count()
+                      .filter(F.col("count") > 1), meta).count()
+    out["segments"] = {"ok": split == 0, "split_docs": int(split)}
 
     denied = tombstones_df(spark, index_path, meta)
     if denied is not None:

@@ -1747,6 +1747,27 @@ def test_combined_fields_topk(spark, corpus_rows, corpus_df,
         assert abs(r["score"] - (-ns)) < 1e-9
 
 
+
+def test_combined_fields_topk_repeatable(spark, corpus_df, index_path,
+                                         tmp_path):
+    """Every float sum of combined_fields runs in a fixed order (field
+    blend, avgdl_c, per-doc term sum): repeated calls return the same
+    doc ids and bit-identical scores."""
+    from elasticsearch_osmosis_plugin_spark.operators.scorefn import (
+        combined_fields_topk,
+    )
+
+    repo_idx = str(tmp_path / "cf_rep_idx")
+    build_index(spark, corpus_df, repo_idx, CFG, id_col="doc_id",
+                text_col="repo", n_groups=2)
+    runs = {tuple((r["doc_id"], r["score"]) for r in combined_fields_topk(
+        spark, {"content": index_path, "repo": repo_idx},
+        "public static void import", k=20,
+        field_weights={"content": 1.1, "repo": 2.3}).collect())
+        for _ in range(4)}
+    assert len(runs) == 1 and len(next(iter(runs))) == 20, runs
+
+
 def test_more_like_this_text(spark, corpus_rows, index_path):
     """Free-text like: analyzed through the index chain, top tf*idf
     terms become the query, nothing excluded; identical to topk over

@@ -125,3 +125,33 @@ def test_verify_index_after_compaction(spark, corpus_df, tmp_path):
     rep = verify_index(spark, path)
     assert not rep["ok"] and rep["structure"]["missing"] == [
         "postings/group=2"], rep
+
+
+def test_verify_index_flags_doc_in_two_segments(spark, corpus_df, tmp_path):
+    """Per-segment top-k needs every live doc's postings in ONE posting
+    segment: a clean index passes the ``segments`` check, and a
+    hand-built group repeating group 0's doc ids under other segment
+    ids is flagged, one split doc per duplicated id."""
+    from pyspark.sql import functions as F
+
+    from elasticsearch_osmosis_plugin_spark.plans import catalog
+    from elasticsearch_osmosis_plugin_spark.plans.build import _write_meta
+    from elasticsearch_osmosis_plugin_spark.plans.merge import verify_index
+
+    path = str(tmp_path / "split")
+    build_index(spark, corpus_df.filter("doc_id < 40"), path, CFG,
+                id_col="doc_id", n_groups=1)
+    rep = verify_index(spark, path)
+    assert rep["ok"] and rep["segments"] == {"ok": True, "split_docs": 0}
+
+    dup = (catalog.read_table(spark, path, "postings/group=0")
+           .withColumn("seg", F.col("seg") + F.lit(1 << 40)))
+    catalog.create_or_replace(dup, path, "postings/group=1",
+                              manifest={"stage": "postings", "group": 1},
+                              partition_by=["bucket"])
+    meta = load_meta(path)
+    meta["groups"] = [0, 1]
+    _write_meta(path, meta)
+    rep = verify_index(spark, path)
+    assert not rep["ok"] and rep["segments"] == {"ok": False,
+                                                 "split_docs": 40}, rep

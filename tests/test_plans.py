@@ -355,3 +355,60 @@ def test_terms_enum_is_metadata_only(spark, index_path):
     assert "doc_ids_vb" not in plan and "pos_vb" not in plan
     assert "StartsWith(term,p)" in plan.replace(" ", "") \
         or "PushedFilters" in plan
+
+
+def test_searcher_topk_job_budget(spark, corpus_df, tmp_path):
+    """Segment-local top-k: with a warm dictionary memo, ``Searcher.topk``
+    runs at most 2 Spark jobs (the posting-segment shuffle and the
+    k x n_segments merge) under every strategy name, for 1- and 2-term
+    queries, on an index with tombstones."""
+    from elasticsearch_osmosis_plugin_spark.operators.query import (
+        STRATEGIES,
+        Searcher,
+    )
+    from elasticsearch_osmosis_plugin_spark.plans.build import delete_docs
+
+    path = str(tmp_path / "jobs")
+    build_index(spark, corpus_df, path,
+                EngineConfig(n_segments=8, n_buckets=8, resume=False),
+                id_col="doc_id", n_groups=2)
+    delete_docs(spark, path, [1, 2, 3])
+    sc = spark.sparkContext
+    s = Searcher(spark, path)
+    try:
+        for q in ("public", "public static"):
+            for strategy in STRATEGIES:
+                s.topk(q, 5, strategy).collect()           # warm the memo
+                group = f"jobs-{q}-{strategy}"
+                sc.setJobGroup(group, group)
+                rows = s.topk(q, 5, strategy).collect()
+                n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+                assert rows and n_jobs <= 2, (q, strategy, n_jobs)
+    finally:
+        sc.setJobGroup("", "")
+        s.close()
+
+
+def test_one_topk_kernel():
+    """The dominated Spark top-k strategies are gone, and the Spark
+    per-segment kernel and the driver-local scorer share one
+    accumulate (``serve.accumulate_topk``), defined once."""
+    import ast
+    import inspect
+
+    from elasticsearch_osmosis_plugin_spark.operators import query, serve
+
+    def functions(module):
+        return {n.name: n for n in ast.walk(ast.parse(inspect.getsource(module)))
+                if isinstance(n, ast.FunctionDef)}
+
+    def calls(fn):
+        return {getattr(n.func, "id", None) or getattr(n.func, "attr", None)
+                for n in ast.walk(fn) if isinstance(n, ast.Call)}
+
+    q_fns, s_fns = functions(query), functions(serve)
+    assert not {"_topk_maxscore", "_theta_seed", "_topk_single_term_blockmax",
+                "_finalize_topk"} & set(q_fns)
+    assert "accumulate_topk" not in q_fns and "accumulate_topk" in s_fns
+    assert "accumulate_topk" in calls(q_fns["_segment_topk_kernel"])
+    assert "accumulate_topk" in calls(s_fns["_score_from_postings"])

@@ -1,0 +1,78 @@
+"""Cross-path identity of BM25 top-k across index mutations: the Spark
+segment-local ``topk`` (under every accepted strategy name) equals the
+driver-local ``serve.local_topk`` bit for bit, and its post_filter /
+boosts / minimum_should_match variants equal the Spark match-plan
+reference ``deterministic_topk(summed(_scored(...), msm), k)``, at the
+build, append, delete, compact and purge states of one 2-group index."""
+
+import pytest
+from pyspark.sql import functions as F
+
+from elasticsearch_osmosis_plugin_spark.config import EngineConfig
+from elasticsearch_osmosis_plugin_spark.operators import query, serve
+from elasticsearch_osmosis_plugin_spark.operators.topk import deterministic_topk
+from elasticsearch_osmosis_plugin_spark.plans import merge
+from elasticsearch_osmosis_plugin_spark.plans.build import (
+    append_index_group,
+    build_index,
+    delete_docs,
+    load_meta,
+)
+
+CFG = EngineConfig(n_segments=8, n_buckets=4, block_size=8, resume=False)
+QUERIES = ("public static", "id0001", "public static void import")
+K = 10
+
+
+def _reference(spark, idx, q, *, post_filter=None, boosts=None, msm=0):
+    meta = load_meta(idx)
+    dic = query.dictionary_rows(spark, idx, query.query_terms(q, meta), meta)
+    c = {t: v * float((boosts or {}).get(t, 1.0))
+         for t, v in query.term_idfs(dic, meta).items()}
+    if len(c) < max(msm, 1):
+        return []
+    scored = query._scored(spark, idx, meta, c,
+                           allowed=query.allowed_docs(spark, idx, post_filter))
+    return [(r["doc_id"], r["score"]) for r in
+            deterministic_topk(query.summed(scored, msm), K).collect()]
+
+
+def _check_state(spark, idx, state):
+    meta = load_meta(idx)
+    for q in QUERIES:
+        want = serve.local_topk(idx, query.query_terms(q, meta), K, meta=meta)
+        assert want, (state, q)
+        for strategy in query.STRATEGIES:
+            got = [(r["doc_id"], r["score"]) for r in
+                   query.topk(spark, idx, q, K, strategy).collect()]
+            assert got == want, (state, q, strategy)
+    q = QUERIES[2]
+    for kw in ({"post_filter": F.col("dl") > 20},
+               {"boosts": {"public": 2.5, "import": 0.5}},
+               {"minimum_should_match": 2}):
+        ref = _reference(spark, idx, q, post_filter=kw.get("post_filter"),
+                         boosts=kw.get("boosts"),
+                         msm=kw.get("minimum_should_match", 0))
+        got = [(r["doc_id"], r["score"]) for r in
+               query.topk(spark, idx, q, K, **kw).collect()]
+        assert ref and [d for d, _ in got] == [d for d, _ in ref], (state, kw)
+        for (_, a), (_, b) in zip(got, ref):
+            assert a == pytest.approx(b, abs=1e-9), (state, kw)
+
+
+def test_topk_paths_identical_across_mutations(spark, corpus_df, tmp_path):
+    idx = str(tmp_path / "paths")
+    build_index(spark, corpus_df.filter("doc_id < 60"), idx, CFG,
+                id_col="doc_id", n_groups=2)
+    _check_state(spark, idx, "build")
+    append_index_group(spark, corpus_df.filter("doc_id >= 60"), idx,
+                       id_col="doc_id")
+    _check_state(spark, idx, "append")
+    dead = [r["doc_id"] for r in
+            query.topk(spark, idx, "public static", 3).collect()]
+    delete_docs(spark, idx, dead)
+    _check_state(spark, idx, "delete")
+    merge.compact_index(spark, idx)
+    _check_state(spark, idx, "compact")
+    merge.purge_deletes(spark, idx)
+    _check_state(spark, idx, "purge")
