@@ -66,6 +66,7 @@ from elasticsearch_osmosis_plugin_spark.plans.build import (
     dictionary_df,
     load_meta,
     postings_df,
+    tombstone_ids,
     tombstones_df,
 )
 
@@ -419,7 +420,7 @@ def topk(spark: SparkSession, index_path: str, query: str, k: int = 10,
                      for t, v in c_by_term.items()}
     allowed = allowed_docs(spark, index_path, post_filter)
     kernel = _segment_topk_kernel(
-        c_by_term, meta, serve._tombstone_ids(index_path, meta),
+        c_by_term, meta, tombstone_ids(index_path, meta),
         k if allowed is None else None, minimum_should_match)
     out = (_pruned_postings(spark, index_path, list(c_by_term), meta, _posts)
            .select("seg", "term", "doc_ids_vb", "tfs_vb", "dls_vb")

@@ -54,6 +54,10 @@ from elasticsearch_osmosis_plugin_spark.plans.build import (
     bucket_of,
     live_posting_tables,
     load_meta,
+    # serving calls the one driver-side tombstone reader under this
+    # module-level name, so a tracer that wraps
+    # ``serve._tombstone_ids`` still sees every serving read
+    tombstone_ids as _tombstone_ids,
 )
 
 
@@ -178,20 +182,6 @@ def _read_filtered(files: list[str], columns: list[str],
     dset = pds.dataset(files, format="parquet")
     return dset.to_table(columns=columns,
                          filter=pds.field("term").isin(terms))
-
-
-def _tombstone_ids(index_path: str, meta: dict) -> np.ndarray | None:
-    if not meta.get("tombstones_n"):
-        return None
-    import pyarrow.dataset as pds
-
-    files = sorted(glob.glob(
-        os.path.join(index_path, "tombstones", "*.parquet")))
-    if not files:
-        return None
-    arr = (pds.dataset(files, format="parquet")
-           .to_table(columns=["doc_id"])["doc_id"].to_numpy())
-    return np.sort(arr.astype(np.int64))
 
 
 postings_cache = _ByteLRU(max_bytes=256 << 20)

@@ -43,8 +43,10 @@ Scale design:
   makes resume skip tokenization entirely — a restarted build reads
   tokens back instead of recomputing them.
 - postings are bucketed by md5(term) % n_buckets -> query-time
-  partition pruning; within a bucket, rows sorted by term -> parquet
-  row-group min/max stats prune file reads per query term.
+  partition pruning; within a bucket file rows are NOT term-sorted
+  (Spark's planned write sorts each task's rows by the partition
+  column, which drops any sort placed before it), so readers filter
+  rows by term after the bucket prune.
 - hot terms (stop-term postings) never concentrate: each (term, seg)
   pair is an independent row group of <= block_size entries per block,
   so a term appearing in every doc still parallelizes across segments.
@@ -57,6 +59,7 @@ Scale design:
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import json
 import os
@@ -175,8 +178,8 @@ def _segment_builder(cfg: EngineConfig, avgdl: float):
         # boundaries; the per-run position lists are already contiguous
         # (lexsort is stable and flat_pos ascends within each doc).
         # Term order across groups is factorize (first-appearance)
-        # order — irrelevant here: the Spark-side
-        # sortWithinPartitions("term", ...) imposes the on-disk order.
+        # order — irrelevant: no reader relies on the row order of a
+        # posting file.
         codes, uniq_terms = pd.factorize(flat_terms)
         order = np.lexsort((flat_docs, codes))
         codes_s = codes[order]
@@ -254,13 +257,16 @@ def _segment_builder(cfg: EngineConfig, avgdl: float):
 
 
 def _spimi_map_builder(cfg: EngineConfig, avgdl: float, group: int,
-                       n_groups: int):
+                       n_groups: int, seg_base: int = 0):
     """mapInPandas SPIMI: build memory-bounded segments PER INPUT
     PARTITION — the corpus is never shuffled (the classic SPIMI
     invert-then-merge layout). A partition larger than
     ``segment_token_budget`` tokens flushes multiple segments; segment
-    ids are (partition, chunk, group)-derived and deterministic for a
-    deterministic input split."""
+    ids are ``seg_base | (partition * n_groups + group) << 16 | chunk``,
+    deterministic for a deterministic input split. A build's ids stay
+    below 2^40 (fewer than 2^24 partition x group slots); an appended
+    group g passes ``seg_base = g << 40``, so its ids never equal
+    another group's."""
     build = _segment_builder(cfg, avgdl)
     budget = cfg.segment_token_budget
 
@@ -277,7 +283,7 @@ def _spimi_map_builder(cfg: EngineConfig, avgdl: float, group: int,
             if not buf:
                 return None
             pdf = pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0]
-            seg_id = ((pid * n_groups + group) << 16) | chunk
+            seg_id = seg_base | ((pid * n_groups + group) << 16) | chunk
             out = build(pdf, seg_id)
             buf, buf_tokens = [], 0
             chunk += 1
@@ -389,15 +395,13 @@ def build_index(spark: SparkSession, docs: DataFrame, index_path: str,
         part = (docstats.filter(F.col("grp") == g)
                 .select("doc_id", "dl", "tokens")
                 .coalesce(spark.sparkContext.defaultParallelism))
-        # repartition postings by bucket + sort by term before the
-        # partitioned write: exactly one file per bucket per group (no
-        # small-file spray from every build task), and parquet row-group
-        # min/max stats on `term` prune reads per query term.
+        # repartition postings by bucket before the partitioned write:
+        # exactly one file per bucket per group (no small-file spray
+        # from every build task).
         seg_postings = (part.mapInPandas(
                             _spimi_map_builder(cfg, avgdl, g, n_groups),
                             POSTING_SCHEMA)
-                        .repartition(cfg.n_buckets, "bucket")
-                        .sortWithinPartitions("term", "seg", "block"))
+                        .repartition(cfg.n_buckets, "bucket"))
         man = catalog.create_or_replace(
             seg_postings, index_path, name,
             manifest={"stage": "postings", "group": g, "n_groups": n_groups,
@@ -461,8 +465,7 @@ def _write_dictionary(spark: SparkSession, index_path: str,
                 F.count(F.lit(1)).alias("n_blocks"),
                 F.max("block_max_wand").alias("max_wand"),
                 F.max("bucket").alias("bucket"))
-           .repartition(n_buckets, "bucket")
-           .sortWithinPartitions("term"))
+           .repartition(n_buckets, "bucket"))
     catalog.create_or_replace(dic, index_path, "dictionary",
                               manifest={"stage": "dictionary"},
                               partition_by=["bucket"])
@@ -529,10 +532,9 @@ def append_index_group(spark: SparkSession, docs: DataFrame, index_path: str,
             .select("doc_id", "dl", "tokens")
             .coalesce(spark.sparkContext.defaultParallelism))
     seg_postings = (part.mapInPandas(
-                        _spimi_map_builder(cfg, avgdl, g, g + 1),
+                        _spimi_map_builder(cfg, avgdl, 0, 1, seg_base=g << 40),
                         POSTING_SCHEMA)
-                    .repartition(cfg.n_buckets, "bucket")
-                    .sortWithinPartitions("term", "seg", "block"))
+                    .repartition(cfg.n_buckets, "bucket"))
     man = catalog.create_or_replace(
         seg_postings, index_path, f"postings/group={g}",
         manifest={"stage": "postings", "group": g, "append": True,
@@ -574,15 +576,18 @@ def delete_docs(spark: SparkSession, index_path: str,
     if isinstance(doc_ids, DataFrame):
         new = doc_ids.select(F.col("doc_id").cast("long"))
     else:
-        new = spark.createDataFrame(
-            [(int(d),) for d in doc_ids], "doc_id long")
+        # an Arrow-backed frame: a row-list createDataFrame would run
+        # its first job through a Python worker
+        new = spark.createDataFrame(pd.DataFrame({"doc_id": np.fromiter(
+            (int(d) for d in doc_ids), np.int64)}))
     if catalog.table_exists(index_path, "tombstones"):
         old = catalog.read_table(spark, index_path, "tombstones")
         new = old.unionByName(new)
-    tombs = new.distinct().coalesce(1)
-    n = tombs.count()
-    catalog.create_or_replace(tombs, index_path, "tombstones",
-                              manifest={"stage": "tombstones", "n": n})
+    # the count is the written file's footer row count (no count job)
+    n = catalog.create_or_replace(new.distinct().coalesce(1), index_path,
+                                  "tombstones",
+                                  manifest={"stage": "tombstones"},
+                                  count_key="n")["n"]
     meta = load_meta(index_path)
     meta["tombstones_n"] = n
     _write_meta(index_path, meta)
@@ -595,6 +600,24 @@ def tombstones_df(spark: SparkSession, index_path: str,
     if not meta.get("tombstones_n"):
         return None
     return catalog.read_table(spark, index_path, "tombstones")
+
+
+def tombstone_ids(index_path: str, meta: dict) -> np.ndarray | None:
+    """The tombstoned doc ids as a sorted int64 array, read on the
+    driver with pyarrow (no Spark job); None without tombstones. The
+    one driver-side tombstone reader: driver-local serving, the Spark
+    top-k kernel and purge's exact path all take their dead set here."""
+    if not meta.get("tombstones_n"):
+        return None
+    import pyarrow.dataset as pds
+
+    files = sorted(glob.glob(
+        os.path.join(index_path, "tombstones", "*.parquet")))
+    if not files:
+        return None
+    arr = (pds.dataset(files, format="parquet")
+           .to_table(columns=["doc_id"])["doc_id"].to_numpy())
+    return np.sort(arr.astype(np.int64))
 
 
 def load_meta(index_path: str) -> dict:

@@ -12,6 +12,7 @@ visible or absent, never partial).
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import shutil
@@ -46,12 +47,35 @@ def read_manifest(root: str, name: str) -> dict[str, Any]:
         return json.load(f)
 
 
+def footer_rows(path: str) -> int:
+    """Row count of the parquet files under ``path``, summed from their
+    footers: no Spark job, no data page read."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.read_metadata(f).num_rows for f in glob.glob(
+        os.path.join(path, "**", "*.parquet"), recursive=True))
+
+
+def _commit(src: str, final: str, man: dict[str, Any]) -> None:
+    """Write ``man`` into the staged table dir ``src``, then rename it
+    over ``final`` (drop-first)."""
+    with open(os.path.join(src, MANIFEST), "w") as f:
+        json.dump(man, f, indent=1, default=str)
+    if os.path.exists(final):
+        shutil.rmtree(final)
+    os.makedirs(os.path.dirname(final), exist_ok=True)
+    os.rename(src, final)
+
+
 def create_or_replace(df: DataFrame, root: str, name: str,
                       manifest: dict[str, Any] | None = None,
-                      partition_by: list[str] | None = None) -> dict[str, Any]:
+                      partition_by: list[str] | None = None,
+                      count_key: str | None = None) -> dict[str, Any]:
     """Write df as table ``name`` with drop-first semantics
     (reference ``IndexAdminService.java:22``): stage into a tmp dir,
-    write the manifest last, then rename into place atomically."""
+    write the manifest last, then rename into place atomically.
+    ``count_key``: manifest key that records the written row count,
+    read from the staged files' footers (no count job)."""
     os.makedirs(root, exist_ok=True)
     final = table_path(root, name)
     tmp = os.path.join(root, f"_tmp_{name.replace('/', '_')}_{uuid.uuid4().hex[:8]}")
@@ -61,20 +85,43 @@ def create_or_replace(df: DataFrame, root: str, name: str,
             writer = writer.partitionBy(*partition_by)
         writer.parquet(tmp)
         man = dict(manifest or {})
+        if count_key:
+            man[count_key] = footer_rows(tmp)
         man.setdefault("table", name)
         # recorded schema keeps the table readable even when empty +
         # partitioned (no part dirs -> nothing to infer from)
         man.setdefault("schema", df.schema.json())
-        with open(os.path.join(tmp, MANIFEST), "w") as f:
-            json.dump(man, f, indent=1, default=str)
-        if os.path.exists(final):
-            shutil.rmtree(final)
-        os.makedirs(os.path.dirname(final), exist_ok=True)
-        os.rename(tmp, final)
+        _commit(tmp, final, man)
         return man
     finally:
         if os.path.exists(tmp):
             shutil.rmtree(tmp, ignore_errors=True)
+
+
+def create_or_replace_each(df: DataFrame, root: str, name: str, column: str,
+                           manifests: Mapping[Any, dict[str, Any]],
+                           partition_by: list[str]) -> None:
+    """Write df ONCE, partitioned by ``column`` then ``partition_by``,
+    and commit each ``name/column=v`` (v in ``manifests``, in order) as
+    a table of its own, exactly as :func:`create_or_replace` would
+    have written it alone: manifest (schema without ``column``), then a
+    drop-first rename. A value with no rows commits as an empty
+    table."""
+    os.makedirs(root, exist_ok=True)
+    tmp = os.path.join(root, f"_tmp_{name.replace('/', '_')}_{uuid.uuid4().hex[:8]}")
+    try:
+        df.write.mode("overwrite").partitionBy(column, *partition_by).parquet(tmp)
+        schema = df.drop(column).schema.json()
+        for v, manifest in manifests.items():
+            sub = f"{name}/{column}={v}"
+            src = os.path.join(tmp, f"{column}={v}")
+            os.makedirs(src, exist_ok=True)
+            man = dict(manifest)
+            man.setdefault("table", sub)
+            man.setdefault("schema", schema)
+            _commit(src, table_path(root, sub), man)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def add_partition(df: DataFrame, root: str, name: str,

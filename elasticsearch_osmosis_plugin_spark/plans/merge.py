@@ -4,9 +4,10 @@ The build commits postings in ``n_groups`` checkpoint groups (the LSM
 "levels" produced by resumable ingestion). Compaction merges them into
 ONE term-sharded layout:
 
-- one file per bucket (vs one per bucket per group),
-- rows clustered by (term, seg, block) so a query term's blocks are
-  contiguous in one row-group run,
+- one file per bucket (vs one per bucket per group); rows are not
+  term-sorted inside it (Spark's planned write sorts each task's rows
+  by the partition column, so a sort placed before it is dropped) —
+  readers prune by bucket directory and filter by term,
 - atomic swap via the catalog (drop-first semantics, A18), queries
   see old or new, never both.
 
@@ -42,15 +43,15 @@ def compact_index(spark: SparkSession, index_path: str) -> dict:
     base = os.path.join(index_path, "postings")
     groups = [os.path.join(base, f"group={g}") for g in index_groups(meta)]
     posts = spark.read.option("basePath", base).parquet(*groups).drop("group")
-    merged = (posts.repartition(meta["n_buckets"], "bucket")
-              .sortWithinPartitions("term", "seg", "block"))
-    n_rows = merged.count()
-    catalog.create_or_replace(
+    merged = posts.repartition(meta["n_buckets"], "bucket")
+    # n_rows from the written files' footers: a merged.count() would
+    # re-run the whole shuffle for a number the write already knows
+    man = catalog.create_or_replace(
         merged, index_path, "postings_merged",
-        manifest={"stage": "merge", "n_rows": n_rows,
-                  "merged_groups": len(index_groups(meta)),
+        manifest={"stage": "merge", "merged_groups": len(index_groups(meta)),
                   "wall_s": time.time() - t0},
-        partition_by=["bucket"])
+        partition_by=["bucket"], count_key="n_rows")
+    n_rows = man["n_rows"]
     meta["merged"] = True
     meta["merged_groups"] = list(index_groups(meta))  # coverage marker:
     # groups appended AFTER this merge serve from their own dirs
@@ -76,6 +77,7 @@ def drop_term_vectors(spark: SparkSession, index_path: str) -> None:
 
 
 _POSTING_COLS = [f.split()[0] for f in POSTING_SCHEMA.split(",")]
+_BLOCK_KEY = ["bucket", "term", "seg", "block"]
 
 
 def _purge_kernel(dead_bc, k1: float, b: float, avgdl_eff: float):
@@ -86,7 +88,8 @@ def _purge_kernel(dead_bc, k1: float, b: float, avgdl_eff: float):
     group encoders (one group per block), and the per-block stats are
     ``reduceat``s. Bounds are recomputed under ``avgdl_eff`` = max(old,
     new avgdl), valid for readers of either meta snapshot (w is
-    monotone in avgdl).
+    monotone in avgdl). A ``group`` column passes through (last) when
+    the batch has one.
 
     ``dead_bc``: a Spark Broadcast of the SORTED int64 tombstone id
     array — torrent-distributed once per executor, never serialized
@@ -136,9 +139,9 @@ def _purge_kernel(dead_bc, k1: float, b: float, avgdl_eff: float):
                                 (np.cumsum(tf_k) - tf_k)[starts])
             else:
                 pos_vb = pa.array([b""] * live.size, pa.binary())
+            group = ["group"] if "group" in batch.schema.names else []
             yield pa.RecordBatch.from_arrays([
-                *(batch.column(c).take(live)
-                  for c in ("bucket", "term", "seg", "block")),
+                *(batch.column(c).take(live) for c in _BLOCK_KEY),
                 pa.array(kept_n[live].astype(np.int32)),
                 pa.array(np.add.reduceat(tf_k, starts)),
                 pa.array(np.maximum.reduceat(w, starts)),
@@ -146,7 +149,8 @@ def _purge_kernel(dead_bc, k1: float, b: float, avgdl_eff: float):
                 pa.array(ids_k[np.append(starts[1:], ids_k.size) - 1]),
                 encode(delta_encode_groups(ids_k, starts), starts),
                 encode(tf_k, starts), encode(dl_k, starts), pos_vb,
-            ], names=_POSTING_COLS)
+                *(batch.column(c).take(live) for c in group),
+            ], names=_POSTING_COLS + group)
     return fn
 
 
@@ -234,7 +238,11 @@ def _bloom_probe(words_u64, ids_u64, n_bits: int, k: int = 4):
     return cand
 
 
-CAND_SCHEMA = "bucket int, term string, seg long, block int, cand long"
+# seg ids are unique per group only, so a block key spanning several
+# group tables carries ``group``
+_CAND_KEY = _BLOCK_KEY + ["group"]
+CAND_SCHEMA = ("bucket int, term string, seg long, block int, "
+               "group int, cand long")
 
 
 def _cand_kernel(bloom_bc, n_bits: int, k: int = 4):
@@ -256,10 +264,8 @@ def _cand_kernel(bloom_bc, n_bits: int, k: int = 4):
                 _bloom_probe(words, ids.astype(np.uint64), n_bits, k))
             rows = np.repeat(np.arange(n.size), n)[cand]
             yield pa.RecordBatch.from_arrays(
-                [batch.column(c).take(rows)
-                 for c in ("bucket", "term", "seg", "block")]
-                + [pa.array(ids[cand])],
-                names=["bucket", "term", "seg", "block", "cand"])
+                [batch.column(c).take(rows) for c in _CAND_KEY]
+                + [pa.array(ids[cand])], names=_CAND_KEY + ["cand"])
     return fn
 
 
@@ -268,43 +274,51 @@ def purge_deletes(spark: SparkSession, index_path: str,
     """Physically remove tombstoned docs (the Lucene expunge-deletes /
     forced-merge analog): rewrite the doc store without them, rewrite
     every posting block without their entries (batched kernel, no
-    shuffle), rebuild the dictionary, recompute corpus stats, clear the
-    tombstones. After this, df/avgdl/n_docs no longer count the deleted
-    docs — queries score exactly as a fresh build over the live corpus.
-    Groups commit one by one; meta swaps last, and bounds are computed
-    under max(old, new) avgdl so a reader in the commit window never
-    over-prunes.
+    shuffle before it), rebuild the dictionary, recompute corpus stats,
+    clear the tombstones. After this, df/avgdl/n_docs no longer count
+    the deleted docs — queries score exactly as a fresh build over the
+    live corpus.
 
-    Tombstone shipment is threshold-switched on ``max_exact_broadcast``:
-    up to that many dead ids, ONE sorted numpy array broadcast (exact,
-    zero extra passes); above it, a capped-size Bloom broadcast +
-    per-block exact verification via a semi-join against the tombstone
-    relation — the driver pin is the filter size (<= 128 MiB at the
-    2^30-bit cap), independent of the delete count, and no false
-    deletion is possible (the bloom only nominates candidates; the
-    semi-join confirms them exactly)."""
+    The postings of ALL groups are rewritten by one Spark job: one read
+    of ``postings/`` carrying the ``group`` column, the kernel, one
+    shuffle by bucket and one write partitioned by (group, bucket) —
+    one file per bucket per group, as a per-group rewrite writes. Each
+    ``postings/group=g`` then commits with its manifest by its own
+    rename (a group that lost every row commits empty); meta swaps
+    last, and bounds are computed under max(old, new) avgdl so a reader
+    in the commit window never over-prunes.
+
+    Tombstone shipment is threshold-switched on ``max_exact_broadcast``
+    (the count is meta's ``tombstones_n``): up to that many dead ids,
+    ONE sorted numpy array, read on the driver from the tombstone file
+    (:func:`build.tombstone_ids`) and broadcast (exact, zero extra
+    passes); above it, a capped-size Bloom broadcast + per-block exact
+    verification via a semi-join against the tombstone relation — the
+    driver pin is the filter size (<= 128 MiB at the 2^30-bit cap),
+    independent of the delete count, and no false deletion is possible
+    (the bloom only nominates candidates; the semi-join confirms them
+    exactly)."""
     from elasticsearch_osmosis_plugin_spark.plans.build import (
         _write_dictionary,
         _write_meta,
-        tombstones_df,
+        tombstone_ids,
     )
-
-    import numpy as np
 
     meta = load_meta(index_path)
     t0 = time.time()
-    tombs = tombstones_df(spark, index_path, meta)
-    if tombs is None:
+    n_dead = int(meta.get("tombstones_n") or 0)
+    if not n_dead:
         return meta
-    # Distributed tombstone handling (no driver-side set, no literal
-    # isin list in any plan): the doc-store rewrite is a plain
-    # anti-join against the tombstones DataFrame (broadcast by AQE
-    # while small, shuffle-join when deletes have accumulated). For
-    # the per-block posting kernel the shipment is threshold-switched:
-    # exact sorted-array broadcast below ``max_exact_broadcast``,
-    # capped-size Bloom + per-block exact verify above it (see the
-    # module comment at the bloom section).
-    n_dead = int(tombs.count())
+    tombs = catalog.read_table(spark, index_path, "tombstones").select(
+        F.col("doc_id").cast("long"))
+    # Distributed tombstone handling (no literal isin list in any
+    # plan): the doc-store rewrite is a plain anti-join against the
+    # tombstones DataFrame (broadcast by AQE while small, shuffle-join
+    # when deletes have accumulated). For the per-block posting kernel
+    # the shipment is threshold-switched: exact sorted-array broadcast
+    # below ``max_exact_broadcast``, capped-size Bloom + per-block
+    # exact verify above it (see the module comment at the bloom
+    # section).
     use_bloom = n_dead > max_exact_broadcast
     dead_bc = bloom_bc = None
     if use_bloom:
@@ -312,15 +326,12 @@ def purge_deletes(spark: SparkSession, index_path: str,
         bloom_bc = spark.sparkContext.broadcast(
             _bloom_words_build(tombs, n_bits))
     else:
-        dead_np = np.sort(
-            tombs.select(F.col("doc_id").cast("long"))
-            .toPandas()["doc_id"].to_numpy(np.int64))
-        dead_bc = spark.sparkContext.broadcast(dead_np)
+        dead_bc = spark.sparkContext.broadcast(
+            tombstone_ids(index_path, meta))
 
     ds = catalog.read_table(spark, index_path, "docstats")
     ds_man = catalog.read_manifest(index_path, "docstats")
-    live = ds.join(tombs.select(F.col("doc_id").cast("long")),
-                   "doc_id", "left_anti")
+    live = ds.join(tombs, "doc_id", "left_anti")
     ds_man.pop("schema", None)
     catalog.create_or_replace(live, index_path, "docstats",
                               manifest=ds_man, partition_by=["grp"])
@@ -331,47 +342,44 @@ def purge_deletes(spark: SparkSession, index_path: str,
     avgdl_eff = max(float(meta["avgdl"]) * float(meta.get("wand_slack", 1.0)),
                     avgdl_new)
 
-    kern = _purge_kernel(dead_bc, meta["k1"], meta["b"], avgdl_eff)
-    tomb_ids = tombs.select(
-        F.col("doc_id").cast("long").alias("cand")).distinct()
-    for g in index_groups(meta):
-        name = f"postings/group={g}"
-        posts = spark.read.schema(POSTING_SCHEMA).parquet(
-            catalog.table_path(index_path, name))
-        if use_bloom:
-            # pass 1: bloom-nominate candidates per block — the scan
-            # reads only the block key + doc_ids_vb (column pruning
-            # keeps tf/dl/pos payloads on disk); pass 2 verifies them
-            # EXACTLY via a semi-join against the tombstone relation,
-            # re-groups the survivors per block and joins them back
-            # onto the posting rows. Blocks with no verified dead id
-            # join to NULL and are re-encoded unchanged.
-            cands = (posts
-                     .select("bucket", "term", "seg", "block",
-                             "doc_ids_vb")
-                     .mapInArrow(_cand_kernel(bloom_bc, n_bits),
-                                 CAND_SCHEMA))
-            dead_per_block = (
-                cands.join(tomb_ids, "cand", "left_semi")
-                .groupBy("bucket", "term", "seg", "block")
-                .agg(F.collect_list("cand").alias("dead_ids")))
-            posts = posts.join(dead_per_block,
-                               ["bucket", "term", "seg", "block"], "left")
-        rewritten = posts.mapInArrow(kern, POSTING_SCHEMA)
-        purged = (rewritten
-                  .repartition(meta["n_buckets"], "bucket")
-                  .sortWithinPartitions("term", "seg", "block"))
-        gman = catalog.read_manifest(index_path, name)
+    groups = index_groups(meta)
+    base = os.path.join(index_path, "postings")
+    posts = (spark.read.schema(POSTING_SCHEMA + ", group int")
+             .option("basePath", base)
+             .parquet(*[os.path.join(base, f"group={g}") for g in groups]))
+    if use_bloom:
+        # pass 1: bloom-nominate candidates per block — the scan reads
+        # only the block key + doc_ids_vb (column pruning keeps tf/dl/
+        # pos payloads on disk); pass 2 verifies them EXACTLY via a
+        # semi-join against the tombstone relation, re-groups the
+        # survivors per block and joins them back onto the posting
+        # rows. Blocks with no verified dead id join to NULL and are
+        # re-encoded unchanged.
+        dead_per_block = (
+            posts.select(*_CAND_KEY, "doc_ids_vb")
+            .mapInArrow(_cand_kernel(bloom_bc, n_bits), CAND_SCHEMA)
+            .join(tombs.select(F.col("doc_id").alias("cand")).distinct(),
+                  "cand", "left_semi")
+            .groupBy(*_CAND_KEY)
+            .agg(F.collect_list("cand").alias("dead_ids")))
+        posts = posts.join(dead_per_block, _CAND_KEY, "left")
+    purged = (posts.mapInArrow(
+                  _purge_kernel(dead_bc, meta["k1"], meta["b"], avgdl_eff),
+                  POSTING_SCHEMA + ", group int")
+              .repartition(meta["n_buckets"], "bucket"))
+    manifests = {}
+    for g in groups:
+        gman = catalog.read_manifest(index_path, f"postings/group={g}")
         gman.pop("schema", None)
         gman.update({"avgdl": avgdl_eff, "n_docs": n_docs, "purged": True})
-        catalog.create_or_replace(purged, index_path, name,
-                                  manifest=gman, partition_by=["bucket"])
+        manifests[g] = gman
+    catalog.create_or_replace_each(purged, index_path, "postings", "group",
+                                   manifests, partition_by=["bucket"])
     if meta.get("merged") and catalog.table_exists(index_path, "postings_merged"):
         # purged groups supersede the stale merged layout
         catalog.drop_table(index_path, "postings_merged")
         meta["merged"] = False
-    _write_dictionary(spark, index_path, index_groups(meta),
-                      meta["n_buckets"])
+    _write_dictionary(spark, index_path, groups, meta["n_buckets"])
     catalog.drop_table(index_path, "tombstones")
     meta.update({"n_docs": n_docs, "avgdl": avgdl_new,
                  "wand_slack": max(1.0, avgdl_new / avgdl_eff),
@@ -697,16 +705,14 @@ def split_index(spark: SparkSession, src_path: str, dst_path: str,
                     .withColumn("bucket", nb)
                     .repartition(min(n_buckets,
                                      spark.sparkContext.defaultParallelism
-                                     * 2), "bucket")
-                    .sortWithinPartitions("term", "seg", "block"))
+                                     * 2), "bucket"))
             catalog.create_or_replace(rows, tmp, name, manifest=man,
                                       partition_by=["bucket"])
         dman = catalog.read_manifest(src_path, "dictionary")
         dman.pop("schema", None)
         dic = (catalog.read_table(spark, src_path, "dictionary")
                .withColumn("bucket", nb)
-               .repartition(min(n_buckets, 64), "bucket")
-               .sortWithinPartitions("term"))
+               .repartition(min(n_buckets, 64), "bucket"))
         catalog.create_or_replace(dic, tmp, "dictionary", manifest=dman,
                                   partition_by=["bucket"])
         meta["n_buckets"] = n_buckets

@@ -714,3 +714,80 @@ def test_purge_kernel_matches_per_block_reference(spark, positions):
         out = list(_purge_kernel(dead_bc, k1, b, avgdl_eff)(iter(batches)))
         assert all(o.schema == schema for o in out)
         assert pa.Table.from_batches(out).to_pylist() == want
+
+
+def test_appended_segment_ids_disjoint(spark, corpus_df, tmp_path):
+    """An appended group's posting segment ids never equal a build
+    group's (build ids stay below 2^40; appended group g uses the
+    range from g << 40), so ``verify_index``'s ``segments`` check sees
+    every doc duplicated into an appended group: one split doc per
+    duplicated id."""
+    import pyarrow.dataset as pds
+    from pyspark.sql import functions as F
+
+    from elasticsearch_osmosis_plugin_spark.plans.merge import verify_index
+
+    idx = str(tmp_path / "segs")
+    build_index(spark, corpus_df.filter("doc_id < 60"), idx, CFG,
+                id_col="doc_id", n_groups=2)
+    # docs 50..59 again under their own ids, plus 20 new ones
+    add = corpus_df.filter("doc_id >= 50").withColumn(
+        "doc_id", F.when(F.col("doc_id") >= 60, F.col("doc_id") + 1000)
+        .otherwise(F.col("doc_id")))
+    append_index_group(spark, add, idx, id_col="doc_id")
+    segs = [set(pds.dataset(os.path.join(idx, "postings", f"group={g}"),
+                            format="parquet")
+                .to_table(columns=["seg"])["seg"].to_pylist())
+            for g in (0, 1, 2)]
+    assert all(segs)
+    assert not segs[0] & segs[1] and not (segs[0] | segs[1]) & segs[2]
+    rep = verify_index(spark, idx)
+    assert rep["segments"] == {"ok": False, "split_docs": 10}, rep
+
+
+@pytest.mark.parametrize("bloom", [False, True])
+def test_purge_empties_appended_group(spark, corpus_df, tmp_path, bloom):
+    """Delete every doc of an appended group (and a few build docs),
+    then purge — one posting job over all three groups, on the exact
+    and the bloom (``max_exact_broadcast=0``) paths: the emptied
+    group's table commits empty, ``verify_index`` is ok, and Spark
+    ``topk`` == ``topk_local`` == a fresh rebuild over the
+    survivors."""
+    from elasticsearch_osmosis_plugin_spark.operators import serve
+    from elasticsearch_osmosis_plugin_spark.operators.query import (
+        query_terms,
+    )
+    from elasticsearch_osmosis_plugin_spark.plans import catalog
+    from elasticsearch_osmosis_plugin_spark.plans.build import delete_docs
+    from elasticsearch_osmosis_plugin_spark.plans.merge import (
+        purge_deletes,
+        verify_index,
+    )
+
+    idx = str(tmp_path / "emptied")
+    build_index(spark, corpus_df.filter("doc_id < 60"), idx, CFG,
+                id_col="doc_id", n_groups=2)
+    append_index_group(spark, corpus_df.filter("doc_id >= 60"), idx,
+                       id_col="doc_id")
+    dead = list(range(60, 80)) + [3, 5, 8, 13, 21, 34]
+    delete_docs(spark, idx, dead)
+    meta = purge_deletes(spark, idx,
+                         **({"max_exact_broadcast": 0} if bloom else {}))
+    assert meta["groups"] == [0, 1, 2] and meta["n_docs"] == 54
+    assert meta["metrics"][-1]["strategy"] == ("bloom" if bloom else "exact")
+    name = "postings/group=2"
+    assert catalog.read_manifest(idx, name)["purged"]
+    assert catalog.footer_rows(catalog.table_path(idx, name)) == 0
+    assert catalog.read_table(spark, idx, name).count() == 0
+    assert verify_index(spark, idx)["ok"]
+
+    fresh = str(tmp_path / "emptied_fresh")
+    build_index(spark, corpus_df.filter(~corpus_df.doc_id.isin(dead)),
+                fresh, CFG, id_col="doc_id", n_groups=2)
+    for q in QUERIES:
+        got = [(r["doc_id"], r["score"]) for r in
+               topk(spark, idx, q, k=10).collect()]
+        assert got == serve.local_topk(idx, query_terms(q, meta), 10,
+                                       meta=meta), q
+        assert [(d, round(s, 9)) for d, s in got] == \
+            _rows((spark, fresh), q, "auto"), q

@@ -37,7 +37,8 @@ def test_one_match_plan():
     ``tombstones_df`` is read only by ``query.live_docs``,
     ``score_postings`` is called only by ``query._scored``, no call
     passes ``denied=``, and ``.filter(post_filter)`` appears once (in
-    ``query.allowed_docs``)."""
+    ``query.allowed_docs``). Tombstone ids reach the driver only
+    through ``plans.build.tombstone_ids``."""
     import ast
     import pathlib
 
@@ -75,6 +76,42 @@ def test_one_match_plan():
                      "score_postings": ["query:_scored"],
                      "denied=": [],
                      "filter(post_filter)": ["query:allowed_docs"]}, found
+
+    # one driver-side tombstone reader, ``plans.build.tombstone_ids``
+    # (pyarrow, no Spark job): no code under operators/ or plans/
+    # defines another, or brings tombstones to the driver with a
+    # toPandas()/collect(). The one collect over the tombstone frame
+    # left, in the bloom purge path, gathers at most n_bits/64 filter
+    # words, never ids.
+    import elasticsearch_osmosis_plugin_spark.plans as plans
+    from elasticsearch_osmosis_plugin_spark.operators import serve
+    from elasticsearch_osmosis_plugin_spark.plans import build
+
+    readers, to_driver = [], []
+
+    def mentions_tombstones(node) -> bool:
+        return any("tomb" in str(getattr(n, "id", None)
+                                 or getattr(n, "attr", None)
+                                 or getattr(n, "value", "")).lower()
+                   for n in ast.walk(node))
+
+    for pkg in (ops, plans):
+        for path in sorted(pathlib.Path(pkg.__file__).parent.rglob("*.py")):
+            tree = ast.parse(path.read_text(), str(path))
+            for fn in ast.walk(tree):
+                if not isinstance(fn, ast.FunctionDef):
+                    continue
+                if "tombstone_ids" in fn.name:
+                    readers.append(f"{path.stem}:{fn.name}")
+                for node in ast.walk(fn):
+                    if (isinstance(node, ast.Call)
+                            and isinstance(node.func, ast.Attribute)
+                            and node.func.attr in ("toPandas", "collect")
+                            and mentions_tombstones(node.func.value)):
+                        to_driver.append(f"{path.stem}:{fn.name}")
+    assert readers == ["build:tombstone_ids"], readers
+    assert to_driver == ["merge:_bloom_words_build"], to_driver
+    assert serve._tombstone_ids is build.tombstone_ids
 
 
 # the query-scoped aggregations of intersect.py
@@ -412,3 +449,55 @@ def test_one_topk_kernel():
     assert "accumulate_topk" not in q_fns and "accumulate_topk" in s_fns
     assert "accumulate_topk" in calls(q_fns["_segment_topk_kernel"])
     assert "accumulate_topk" in calls(s_fns["_score_from_postings"])
+
+
+def test_write_path_job_budget(spark, corpus_df, tmp_path, monkeypatch):
+    """One Spark pass per committed table on the write path: purge runs
+    as many jobs after an append (3 groups) as on a 2-group index (one
+    posting job rewrites every group), and ``delete_docs`` (a list of
+    ids) and ``compact_index`` run no ``count()`` job."""
+    from elasticsearch_osmosis_plugin_spark.plans.build import (
+        append_index_group,
+        delete_docs,
+    )
+    from elasticsearch_osmosis_plugin_spark.plans.merge import (
+        compact_index,
+        purge_deletes,
+    )
+
+    sc = spark.sparkContext
+    frame = type(corpus_df)        # the concrete (classic) DataFrame
+    counts = []
+    count = frame.count
+
+    def spy(self):
+        counts.append(self)
+        return count(self)
+
+    def jobs(group, fn, *args):
+        sc.setJobGroup(group, group)
+        try:
+            fn(*args)
+        finally:
+            sc.setJobGroup("", "")
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    cfg = EngineConfig(n_segments=8, n_buckets=8, resume=False)
+    purge_jobs = {}
+    for appended in (False, True):
+        path = str(tmp_path / f"write-{appended}")
+        build_index(spark, corpus_df.filter("doc_id < 60"), path, cfg,
+                    id_col="doc_id", n_groups=2)
+        if appended:
+            append_index_group(spark, corpus_df.filter("doc_id >= 60"),
+                               path, id_col="doc_id")
+        monkeypatch.setattr(frame, "count", spy)
+        n_delete = jobs(f"delete-{appended}", delete_docs, spark, path,
+                        [1, 2, 3, 70])
+        n_compact = jobs(f"compact-{appended}", compact_index, spark, path)
+        monkeypatch.undo()
+        assert not counts and n_delete <= 2 and n_compact <= 3, (
+            len(counts), n_delete, n_compact)
+        purge_jobs[appended] = jobs(f"purge-{appended}", purge_deletes,
+                                    spark, path)
+    assert purge_jobs[True] == purge_jobs[False] <= 9, purge_jobs
