@@ -52,7 +52,7 @@ from elasticsearch_osmosis_plugin_spark.functions.varbyte import (
 )
 from elasticsearch_osmosis_plugin_spark.plans.build import (
     bucket_of,
-    live_posting_tables,
+    index_groups,
     load_meta,
     # serving calls the one driver-side tombstone reader under this
     # module-level name, so a tracer that wraps
@@ -163,9 +163,9 @@ def _ls_parquet(d: str) -> list[str]:
 
 
 def _posting_dirs(index_path: str, meta: dict) -> list[str]:
-    """Live posting table dirs (``plans.build.live_posting_tables``)."""
-    return [os.path.join(index_path, t)
-            for t in live_posting_tables(index_path, meta)]
+    """The dirs of the posting groups meta lists."""
+    return [os.path.join(index_path, "postings", f"group={g}")
+            for g in index_groups(meta)]
 
 
 def _bucket_files(dirs: list[str], *buckets: int) -> list[str]:

@@ -89,14 +89,14 @@ def write_impact_layout(exploded: DataFrame, path: str,
                         term_col: str = "term",
                         n_buckets: int = 64) -> None:
     """Persist the exploded impact layout hash-bucketed by term
-    (``impact_bkt=B`` partitions, weight-descending within files so
-    row-group stats allow early cut-off readers). Query-time
-    IN-filters on the term column prune to the touched buckets."""
+    (``impact_bkt=B`` partitions; rows are in no order within a file:
+    Spark's planned write sorts each task by the partition column).
+    Query-time IN-filters on the term column prune to the touched
+    buckets."""
     bkt = F.pmod(F.xxhash64(F.col(term_col)), F.lit(n_buckets)).alias(
         "impact_bkt")
     (exploded.withColumn("impact_bkt", bkt)
      .repartition("impact_bkt")
-     .sortWithinPartitions(term_col, F.col("weight").desc())
      .write.mode("overwrite").partitionBy("impact_bkt").parquet(path))
 
 
@@ -105,8 +105,8 @@ def read_impact_layout(spark: SparkSession, path: str,
                        term_col: str = "term",
                        n_buckets: int = 64) -> DataFrame:
     """Read back only the buckets the query's terms hash into —
-    PartitionFilters do the pruning; the term IN-filter then prunes
-    row groups inside each bucket."""
+    PartitionFilters do the pruning; the caller's term filter then
+    picks the rows inside each bucket."""
     df = spark.read.parquet(path)
     bkts = sorted({b["b"] for b in
                    spark.createDataFrame([(t,) for t in query_weights],

@@ -16,10 +16,12 @@ atomically via plans.catalog):
   derived indexes, resume — reads the needed columns only (parquet
   column pruning; doc-store lookups never touch ``tokens``).
   ``drop_term_vectors`` reclaims the space after the build.
-- ``postings`` (partitioned by bucket, group): one row per
+- ``postings/group=g`` (each partitioned by bucket): one row per
   (term, seg, block): delta+varbyte doc_ids, varbyte tfs, varbyte dls,
   block_max_wand (exact float64 upper-bound kernel for BM25),
-  min/max doc.
+  min/max doc. meta's ``groups`` lists the live groups — build,
+  append and compaction each commit one whole group and swap meta;
+  :func:`postings_df` is the one reader.
 - ``dictionary`` (partitioned by bucket): term, df, cf, n_blocks,
   max_wand.
 - ``meta`` manifest: N, avgdl, analyzer, cfg, per-stage metrics +
@@ -440,6 +442,9 @@ def build_index(spark: SparkSession, docs: DataFrame, index_path: str,
 
 
 def _write_meta(index_path: str, meta: dict) -> None:
+    """Swap in a new meta.json: a NEW file, then ``os.replace`` — the
+    directory entry moves, so a meta.json hardlinked from another index
+    (shrink/split trees) is never truncated in place."""
     os.makedirs(index_path, exist_ok=True)
     tmp = os.path.join(index_path, "_meta.tmp")
     with open(tmp, "w") as f:
@@ -456,11 +461,7 @@ def _write_dictionary(spark: SparkSession, index_path: str,
     """Aggregate the per-(term, seg, block) metadata rows of the given
     groups into the dictionary. Column pruning keeps this off the
     compressed payloads — the scan reads the five stat columns only."""
-    posts = spark.read.schema(POSTING_SCHEMA + ", group int") \
-        .option("basePath", os.path.join(index_path, "postings")) \
-        .parquet(*[catalog.table_path(index_path, f"postings/group={g}")
-                   for g in groups])
-    dic = (posts.groupBy("term")
+    dic = (postings_df(spark, index_path, groups).groupBy("term")
            .agg(F.sum("n").alias("df"), F.sum("sum_tf").alias("cf"),
                 F.count(F.lit(1)).alias("n_blocks"),
                 F.max("block_max_wand").alias("max_wand"),
@@ -625,39 +626,20 @@ def load_meta(index_path: str) -> dict:
         return json.load(f)
 
 
-def live_posting_tables(index_path: str, meta: dict) -> list[str]:
-    """Table names of the live postings: every group's table, or after
-    a compaction ``postings_merged`` plus the groups appended SINCE the
-    merge (it covers only the groups it merged — ``merged_groups`` in
-    meta, or the merge manifest's count for pre-upgrade indexes), so
-    compact → append → query sees the new docs, exactly Lucene's
-    merged + fresh-segments read path."""
-    groups = index_groups(meta)
-    tables = []
-    if meta.get("merged") and catalog.table_exists(index_path,
-                                                   "postings_merged"):
-        covered = meta.get("merged_groups")
-        if covered is None:
-            n = int(catalog.read_manifest(index_path, "postings_merged")
-                    .get("merged_groups", len(groups)))
-            covered = groups[:n]
-        groups = [g for g in groups if g not in set(covered)]
-        tables.append("postings_merged")
-    return tables + [f"postings/group={g}" for g in groups]
-
-
-def postings_df(spark: SparkSession, index_path: str) -> DataFrame:
-    """All live posting rows (:func:`live_posting_tables`)."""
-    tables = live_posting_tables(index_path, load_meta(index_path))
-    groups = [os.path.join(index_path, t) for t in tables
-              if t != "postings_merged"]
-    fresh = spark.read.schema(POSTING_SCHEMA + ", group int") \
+def postings_df(spark: SparkSession, index_path: str,
+                groups: list[int] | None = None) -> DataFrame:
+    """The posting rows of ``groups`` (default: the live ones, meta's
+    ``groups``) with their ``group`` column: the one posting reader."""
+    if groups is None:
+        groups = index_groups(load_meta(index_path))
+    schema = POSTING_SCHEMA + ", group int"
+    if not groups:
+        # a zero-group shell index; Spark refuses a zero-path read
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema) \
         .option("basePath", os.path.join(index_path, "postings")) \
-        .parquet(*groups) if groups else None
-    if "postings_merged" not in tables:
-        return fresh
-    merged = catalog.read_table(spark, index_path, "postings_merged")
-    return merged if fresh is None else merged.unionByName(fresh.drop("group"))
+        .parquet(*[os.path.join(index_path, f"postings/group={g}")
+                   for g in groups])
 
 
 def index_stats(spark: SparkSession, index_path: str) -> DataFrame:

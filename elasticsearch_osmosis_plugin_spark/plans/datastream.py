@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from elasticsearch_osmosis_plugin_spark.plans import catalog
 from elasticsearch_osmosis_plugin_spark.plans.build import (
+    _write_meta,
     append_index_group,
     load_meta,
 )
@@ -104,10 +105,7 @@ def create_data_stream(root: str, name: str, *,
              "positions": dflt.store_positions, "n_groups": 0,
              "n_docs": 0, "avgdl": 0.0, "groups": [], "metrics": []}
     shell.update(config or {})
-    tmp = os.path.join(backing, "_meta.tmp")
-    with open(tmp, "w") as f:
-        json.dump(shell, f, indent=1, default=str)
-    os.replace(tmp, os.path.join(backing, "meta.json"))
+    _write_meta(backing, shell)
     catalog.create_alias(_write_alias(root, name), backing)
     man = {"name": name, "generation": 1, "backing": [backing],
            "timestamp_field": TS_COL}

@@ -1,25 +1,28 @@
 """Log-structured merge of per-group posting segments (SURVEY M3).
 
-The build commits postings in ``n_groups`` checkpoint groups (the LSM
-"levels" produced by resumable ingestion). Compaction merges them into
-ONE term-sharded layout:
+The build and every append commit postings as groups
+(``postings/group=g``, the LSM segments); meta's ``groups`` is the
+commit point listing the live ones. Compaction folds the live groups
+into ONE new group, ``max(groups) + 1``, and swaps meta to list only
+it — the merge output is just another group, as in Lucene:
 
 - one file per bucket (vs one per bucket per group); rows are not
   term-sorted inside it (Spark's planned write sorts each task's rows
   by the partition column, so a sort placed before it is dropped) —
   readers prune by bucket directory and filter by term,
-- atomic swap via the catalog (drop-first semantics, A18), queries
-  see old or new, never both.
+- atomic swap via the catalog and meta (drop-first semantics, A18),
+  queries see old or new, never both. The folded dirs stay on disk
+  for readers of the old meta until ``purge_deletes`` or
+  ``drop_unmerged_groups`` reclaims them.
 
 Posting payloads are immutable (disjoint doc sets per (term, seg)) so
 the merge is a pure re-layout — no decode/re-encode needed; that's the
-benefit of segment-local posting construction. meta.json flips
-``merged: true`` and records merge lineage.
+benefit of segment-local posting construction.
 """
 
 from __future__ import annotations
 
-import json
+import glob
 import os
 import shutil
 import time
@@ -30,37 +33,46 @@ from pyspark.sql import SparkSession, functions as F
 from elasticsearch_osmosis_plugin_spark.plans import catalog
 from elasticsearch_osmosis_plugin_spark.plans.build import (
     POSTING_SCHEMA,
+    _write_dictionary,
+    _write_meta,
+    dictionary_df,
     index_groups,
     load_meta,
+    postings_df,
+    tombstone_ids,
+    tombstones_df,
     wand_weight,
 )
 
 
 def compact_index(spark: SparkSession, index_path: str) -> dict:
-    """Merge all postings groups into postings_merged; update meta."""
+    """Fold the live posting groups into one new group,
+    ``postings/group=<max(groups) + 1>``, and swap meta to list only
+    it. Its manifest keeps the smallest build-time avgdl of the folded
+    non-empty groups, so the ``wand_slack`` a later append derives from
+    it still bounds every folded block."""
     meta = load_meta(index_path)
     t0 = time.time()
-    base = os.path.join(index_path, "postings")
-    groups = [os.path.join(base, f"group={g}") for g in index_groups(meta)]
-    posts = spark.read.option("basePath", base).parquet(*groups).drop("group")
-    merged = posts.repartition(meta["n_buckets"], "bucket")
+    groups = index_groups(meta)
+    g = max(groups, default=-1) + 1
+    merged = (postings_df(spark, index_path, groups).drop("group")
+              .repartition(meta["n_buckets"], "bucket"))
+    built = [catalog.read_manifest(index_path, f"postings/group={x}")
+             for x in groups]
+    avgdl = min((float(m["avgdl"]) for m in built
+                 if int(m.get("n_docs", 0))), default=float(meta["avgdl"]))
     # n_rows from the written files' footers: a merged.count() would
     # re-run the whole shuffle for a number the write already knows
     man = catalog.create_or_replace(
-        merged, index_path, "postings_merged",
-        manifest={"stage": "merge", "merged_groups": len(index_groups(meta)),
+        merged, index_path, f"postings/group={g}",
+        manifest={"stage": "merge", "group": g, "merged_groups": groups,
+                  "n_docs": meta["n_docs"], "avgdl": avgdl,
                   "wall_s": time.time() - t0},
         partition_by=["bucket"], count_key="n_rows")
-    n_rows = man["n_rows"]
-    meta["merged"] = True
-    meta["merged_groups"] = list(index_groups(meta))  # coverage marker:
-    # groups appended AFTER this merge serve from their own dirs
+    meta["groups"] = [g]
     meta["metrics"].append({"stage": "merge", "wall_s": time.time() - t0,
-                            "n_rows": n_rows})
-    tmp = os.path.join(index_path, "_meta.tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f, indent=1, default=str)
-    os.replace(tmp, os.path.join(index_path, "meta.json"))
+                            "n_rows": man["n_rows"]})
+    _write_meta(index_path, meta)
     return meta
 
 
@@ -298,12 +310,6 @@ def purge_deletes(spark: SparkSession, index_path: str,
     independent of the delete count, and no false deletion is possible
     (the bloom only nominates candidates; the semi-join confirms them
     exactly)."""
-    from elasticsearch_osmosis_plugin_spark.plans.build import (
-        _write_dictionary,
-        _write_meta,
-        tombstone_ids,
-    )
-
     meta = load_meta(index_path)
     t0 = time.time()
     n_dead = int(meta.get("tombstones_n") or 0)
@@ -343,10 +349,7 @@ def purge_deletes(spark: SparkSession, index_path: str,
                     avgdl_new)
 
     groups = index_groups(meta)
-    base = os.path.join(index_path, "postings")
-    posts = (spark.read.schema(POSTING_SCHEMA + ", group int")
-             .option("basePath", base)
-             .parquet(*[os.path.join(base, f"group={g}") for g in groups]))
+    posts = postings_df(spark, index_path, groups)
     if use_bloom:
         # pass 1: bloom-nominate candidates per block — the scan reads
         # only the block key + doc_ids_vb (column pruning keeps tf/dl/
@@ -375,10 +378,6 @@ def purge_deletes(spark: SparkSession, index_path: str,
         manifests[g] = gman
     catalog.create_or_replace_each(purged, index_path, "postings", "group",
                                    manifests, partition_by=["bucket"])
-    if meta.get("merged") and catalog.table_exists(index_path, "postings_merged"):
-        # purged groups supersede the stale merged layout
-        catalog.drop_table(index_path, "postings_merged")
-        meta["merged"] = False
     _write_dictionary(spark, index_path, groups, meta["n_buckets"])
     catalog.drop_table(index_path, "tombstones")
     meta.update({"n_docs": n_docs, "avgdl": avgdl_new,
@@ -389,6 +388,7 @@ def purge_deletes(spark: SparkSession, index_path: str,
          "strategy": "bloom" if use_bloom else "exact",
          "wall_s": time.time() - t0})
     _write_meta(index_path, meta)
+    drop_unmerged_groups(index_path)
     for bc in (dead_bc, bloom_bc):
         if bc is not None:
             bc.unpersist()
@@ -402,15 +402,6 @@ def index_stats(spark: SparkSession, index_path: str) -> dict:
     metadata columns — no posting payload is ever decoded. Reference
     analog: the final accounting the plugin logs after a build
     (``IndexAdminService`` index-level introspection surface)."""
-    import os
-
-    from elasticsearch_osmosis_plugin_spark.plans import catalog
-    from elasticsearch_osmosis_plugin_spark.plans.build import (
-        dictionary_df,
-        load_meta,
-        postings_df,
-    )
-
     meta = load_meta(index_path)
     dic = dictionary_df(spark, index_path)
     agg = dic.agg(
@@ -447,12 +438,14 @@ def index_stats(spark: SparkSession, index_path: str) -> dict:
 
 
 def drop_unmerged_groups(index_path: str) -> None:
-    """Space reclaim after a successful compaction (optional)."""
-    meta = load_meta(index_path)
-    if not meta.get("merged"):
-        raise RuntimeError("compact_index has not completed for this index")
-    for g in index_groups(meta):
-        catalog.drop_table(index_path, f"postings/group={g}")
+    """Space reclaim: delete every posting group dir meta does not list
+    (the inputs of a compaction). Readers still holding an older meta
+    must refresh."""
+    live = set(_posting_tables(load_meta(index_path)))
+    for d in glob.glob(os.path.join(index_path, "postings", "group=*")):
+        name = f"postings/{os.path.basename(d)}"
+        if name not in live:
+            catalog.drop_table(index_path, name)
 
 
 def _seg_doc_ids(batches):
@@ -481,9 +474,8 @@ def verify_index(spark: SparkSession, index_path: str,
     audit cost is one full scan of the structure being audited, the
     floor for any integrity pass):
 
-    - ``structure``: the dictionary, the doc store and every live
-      posting table (``build.live_posting_tables``: the merged table
-      plus groups appended after it, once compacted) are committed;
+    - ``structure``: the dictionary, the doc store and every posting
+      group meta lists are committed;
     - ``meta_docs``: docstats row count == meta n_docs;
     - ``row_invariant`` (when ``source_df`` given): the stored
       content sha256 equals sha256 of the source table's text per doc
@@ -502,12 +494,6 @@ def verify_index(spark: SparkSession, index_path: str,
         live_docs,
         raw_postings,
     )
-    from elasticsearch_osmosis_plugin_spark.plans.build import (
-        dictionary_df,
-        live_posting_tables,
-        postings_df,
-        tombstones_df,
-    )
 
     meta = load_meta(index_path)
     ds = catalog.read_table(spark, index_path, "docstats")
@@ -515,8 +501,7 @@ def verify_index(spark: SparkSession, index_path: str,
 
     # structure first: a missing committed table is corruption in its
     # own right, and the decode checks below cannot run without it
-    expected = ["dictionary", "docstats"] + live_posting_tables(index_path,
-                                                                meta)
+    expected = ["dictionary", "docstats"] + _posting_tables(meta)
     missing = [t for t in expected
                if not catalog.table_exists(index_path, t)]
     out["structure"] = {"ok": not missing, "missing": missing}
@@ -586,29 +571,13 @@ def verify_index(spark: SparkSession, index_path: str,
     return out
 
 
-def _posting_tables(index_path: str, meta: dict) -> list[str]:
-    """Every committed posting table of an index, across both layouts
-    (per-group LSM dirs and/or the compacted postings_merged)."""
-    names = [f"postings/group={g}" for g in index_groups(meta)
-             if catalog.table_exists(index_path, f"postings/group={g}")]
-    if catalog.table_exists(index_path, "postings_merged"):
-        names.append("postings_merged")
-    return names
+def _posting_tables(meta: dict) -> list[str]:
+    """The table names of the posting groups meta lists."""
+    return [f"postings/group={g}" for g in index_groups(meta)]
 
 
 def _hardlink_tree(src: str, dst: str) -> None:
     shutil.copytree(os.path.realpath(src), dst, copy_function=os.link)
-
-
-def _write_meta_unlinked(root: str, meta: dict) -> None:
-    """Replace ``root``/meta.json via a NEW file + os.replace. The
-    tree arrived by hardlink, so an in-place open(..., "w") would
-    truncate the inode SHARED with the source index — os.replace
-    swaps the directory entry instead, leaving the source untouched."""
-    tmp = os.path.join(root, "_meta.tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f, indent=1, default=str)
-    os.replace(tmp, os.path.join(root, "meta.json"))
 
 
 def _remap_bucket_dirs(table_dir: str, new_n: int) -> None:
@@ -660,13 +629,13 @@ def shrink_index(spark: SparkSession, src_path: str, dst_path: str,
     tmp = f"{dst_path}.tmp.{uuid.uuid4().hex[:8]}"
     try:
         _hardlink_tree(src_path, tmp)
-        for name in _posting_tables(tmp, meta) + ["dictionary"]:
+        for name in _posting_tables(meta) + ["dictionary"]:
             _remap_bucket_dirs(catalog.table_path(tmp, name), n_buckets)
         meta["n_buckets"] = n_buckets
         meta.setdefault("metrics", []).append(
             {"stage": "shrink", "from_buckets": old_n,
              "to_buckets": n_buckets, "wall_s": time.time() - t0})
-        _write_meta_unlinked(tmp, meta)
+        _write_meta(tmp, meta)
         os.rename(tmp, dst_path)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
@@ -698,10 +667,11 @@ def split_index(spark: SparkSession, src_path: str, dst_path: str,
     tmp = f"{dst_path}.tmp.{uuid.uuid4().hex[:8]}"
     try:
         _hardlink_tree(src_path, tmp)
-        for name in _posting_tables(src_path, meta):
+        for g in index_groups(meta):
+            name = f"postings/group={g}"
             man = catalog.read_manifest(src_path, name)
             man.pop("schema", None)
-            rows = (catalog.read_table(spark, src_path, name)
+            rows = (postings_df(spark, src_path, [g]).drop("group")
                     .withColumn("bucket", nb)
                     .repartition(min(n_buckets,
                                      spark.sparkContext.defaultParallelism
@@ -719,7 +689,7 @@ def split_index(spark: SparkSession, src_path: str, dst_path: str,
         meta.setdefault("metrics", []).append(
             {"stage": "split", "from_buckets": old_n,
              "to_buckets": n_buckets, "wall_s": time.time() - t0})
-        _write_meta_unlinked(tmp, meta)
+        _write_meta(tmp, meta)
         os.rename(tmp, dst_path)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
@@ -753,10 +723,8 @@ def cat_indices(paths: list[str]) -> list[dict]:
             out.append({"index": name, "health": "red",
                         "error": str(exc)})
             continue
-        groups = index_groups(meta)
-        missing = [g for g in groups
-                   if not catalog.table_exists(p, f"postings/group={g}")
-                   and not meta.get("merged")]
+        groups = _posting_tables(meta)
+        missing = [t for t in groups if not catalog.table_exists(p, t)]
         size, _ = _tree_bytes_files(os.path.realpath(p))
         deleted = int(meta.get("tombstones_n", 0))
         out.append({
@@ -773,19 +741,14 @@ def cat_indices(paths: list[str]) -> list[dict]:
 
 
 def cat_segments(index_path: str) -> list[dict]:
-    """ES ``_cat/segments`` analog: one row per LSM group (the segment
-    unit queries union over) — on-disk bytes and file count per
-    posting table, plus the compacted ``postings_merged`` table when
-    present. Directory metadata only."""
-    meta = load_meta(index_path)
+    """ES ``_cat/segments`` analog: one row per live LSM group (the
+    segment unit queries union over) — on-disk bytes and file count
+    per posting table. Directory metadata only."""
     rows = []
-    names = [(str(g), f"postings/group={g}") for g in index_groups(meta)
-             if catalog.table_exists(index_path, f"postings/group={g}")]
-    if catalog.table_exists(index_path, "postings_merged"):
-        names.append(("merged", "postings_merged"))
-    for label, name in names:
-        size, nf = _tree_bytes_files(catalog.table_path(index_path, name))
-        rows.append({"segment": label, "size_bytes": size, "files": nf})
+    for g in index_groups(load_meta(index_path)):
+        size, nf = _tree_bytes_files(
+            catalog.table_path(index_path, f"postings/group={g}"))
+        rows.append({"segment": str(g), "size_bytes": size, "files": nf})
     return rows
 
 

@@ -186,8 +186,8 @@ def stream_index_ingest(spark: SparkSession, src_path: str,
     streaming checkpoint + idempotent group replace.
 
     ``compact_every=N`` is the Lucene-merge-policy analog for the
-    stream: whenever the live group count reaches a multiple of N, the
-    batch handler runs ``plans.merge.compact_index`` inline before
+    stream: whenever the live group count reaches N, the batch
+    handler runs ``plans.merge.compact_index`` inline before
     returning — searchers only ever see pre- or post-compaction
     states (the same atomic swap), and the group count stays bounded
     no matter how long the stream runs (unbounded groups = unbounded
@@ -205,10 +205,9 @@ def stream_index_ingest(spark: SparkSession, src_path: str,
             return
         append_index_group(batch_df.sparkSession, batch_df, index_path,
                            id_col=id_col, text_col=text_col)
-        if compact_every:
-            n_groups = len(index_groups(load_meta(index_path)))
-            if n_groups >= compact_every and n_groups % compact_every == 0:
-                compact_index(batch_df.sparkSession, index_path)
+        if compact_every and len(index_groups(
+                load_meta(index_path))) >= compact_every:
+            compact_index(batch_df.sparkSession, index_path)
 
     q = (stream_events(spark, src_path, schema, max_files_per_trigger)
          .writeStream.foreachBatch(handle)

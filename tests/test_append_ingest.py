@@ -528,10 +528,9 @@ def test_restore_via_alias_is_atomic(spark, tmp_path):
 
 
 def test_compact_then_append_visible(spark, corpus_df, tmp_path):
-    """Regression: groups appended AFTER a compaction must serve from
-    their own dirs (postings_merged only covers the groups it merged).
-    compact -> append == append-only, and a re-compact folds the new
-    group in."""
+    """Regression: a group appended AFTER a compaction serves next to
+    the compacted group. compact -> append == append-only, and a
+    re-compact folds the new group in."""
     from elasticsearch_osmosis_plugin_spark.plans.merge import compact_index
 
     half = corpus_df.filter("doc_id % 2 = 0")
@@ -587,7 +586,7 @@ def test_streaming_ingest_auto_compaction(spark, corpus_rows, tmp_path):
                         id_col="doc_id", compact_every=2)
     meta = load_meta(inc)
     assert meta["n_docs"] == len(pdf)
-    assert meta.get("merged")
+    assert len(meta["groups"]) < 2      # the live count, < compact_every
     assert any(m["stage"] == "merge" for m in meta["metrics"])
 
     full = str(tmp_path / "stream_full_ac")

@@ -43,14 +43,14 @@ def test_blockmax_single_term_rank_identical(spark, corpus_rows, index_path):
 def test_compaction_preserves_results(spark, corpus_rows, index_path):
     before = topk(spark, index_path, "id0001 import", k=10).collect()
     meta = compact_index(spark, index_path)
-    assert meta["merged"] is True
-    assert os.path.exists(os.path.join(index_path, "postings_merged"))
+    # the 4 build groups fold into ONE new group, the only one listed
+    assert meta["groups"] == [4]
     after = topk(spark, index_path, "id0001 import", k=10).collect()
     assert [(r["doc_id"], round(r["score"], 9)) for r in before] == \
            [(r["doc_id"], round(r["score"], 9)) for r in after]
-    # merged layout: exactly one data file per bucket
+    # compacted group: exactly one data file per bucket
     for b in range(CFG.n_buckets):
-        d = os.path.join(index_path, "postings_merged", f"bucket={b}")
+        d = os.path.join(index_path, "postings", "group=4", f"bucket={b}")
         files = [f for f in os.listdir(d) if f.endswith(".parquet")]
         assert len(files) == 1, d
 
@@ -98,7 +98,7 @@ def test_verify_index_fsck(spark, corpus_df, tmp_path):
 
 
 def test_verify_index_after_compaction(spark, corpus_df, tmp_path):
-    """A compacted index is clean: fsck checks the merged table, and
+    """A compacted index is clean: fsck checks the compacted group, and
     after compact → append also the group appended since the merge
     (its loss is a structure failure, not silently ignored)."""
     import shutil
@@ -121,10 +121,12 @@ def test_verify_index_after_compaction(spark, corpus_df, tmp_path):
     assert rep["ok"] and rep["dictionary"]["ok"] \
         and rep["row_invariant"]["ok"], rep
 
-    shutil.rmtree(os.path.join(path, "postings", "group=2"))
+    # groups 0, 1 folded into 2; the append is group 3
+    assert load_meta(path)["groups"] == [2, 3]
+    shutil.rmtree(os.path.join(path, "postings", "group=3"))
     rep = verify_index(spark, path)
     assert not rep["ok"] and rep["structure"]["missing"] == [
-        "postings/group=2"], rep
+        "postings/group=3"], rep
 
 
 def test_verify_index_flags_doc_in_two_segments(spark, corpus_df, tmp_path):

@@ -114,6 +114,50 @@ def test_one_match_plan():
     assert serve._tombstone_ids is build.tombstone_ids
 
 
+def test_one_posting_layout():
+    """meta's ``groups`` is the one statement of the live postings: no
+    package code mentions a ``postings_merged`` table or uses
+    ``merged`` / ``merged_groups`` as a meta key (``merged_groups``
+    lives only in compaction's group manifest), and
+    ``build.postings_df`` is the one ``basePath`` posting reader."""
+    import ast
+    import pathlib
+
+    import elasticsearch_osmosis_plugin_spark as pkg
+
+    merged_table, meta_keys, manifest_keys, base_path = [], [], [], []
+    for path in sorted(pathlib.Path(pkg.__file__).parent.rglob("*.py")):
+        src = path.read_text()
+        if "postings_merged" in src:
+            merged_table.append(path.stem)
+        tree = ast.parse(src, str(path))
+        for fn in ast.walk(tree):
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            at = f"{path.stem}:{fn.name}"
+            allowed = set()     # the keys of a manifest= dict literal
+            for node in ast.walk(fn):
+                if isinstance(node, ast.Call):
+                    allowed |= {id(k) for kw in node.keywords
+                                if kw.arg == "manifest"
+                                and isinstance(kw.value, ast.Dict)
+                                for k in kw.value.keys}
+                    if (getattr(node.func, "attr", None) == "option"
+                            and node.args
+                            and getattr(node.args[0], "value", None)
+                            == "basePath"):
+                        base_path.append(at)
+            for node in ast.walk(fn):
+                if (isinstance(node, ast.Constant)
+                        and node.value in ("merged", "merged_groups")):
+                    (manifest_keys if id(node) in allowed
+                     else meta_keys).append(at)
+    assert merged_table == [], merged_table
+    assert meta_keys == [], meta_keys
+    assert sorted(set(manifest_keys)) == ["merge:compact_index"], manifest_keys
+    assert base_path == ["build:postings_df"], base_path
+
+
 # the query-scoped aggregations of intersect.py
 HIT_SET_AGGS = {
     "stats_agg", "date_histogram_agg", "histogram_agg", "terms_stats_facet",
