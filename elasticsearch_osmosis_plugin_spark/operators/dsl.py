@@ -855,10 +855,8 @@ def _search_query(spark: SparkSession, index_path: str,
         # of model_text weighted by their tf in the query text (ES
         # would call a deployed ELSER/SPLADE model instead; any other
         # model_id is rejected, never silently approximated).
-        from elasticsearch_osmosis_plugin_spark.functions.tokenizer import (
-            tokenize_py,
-        )
         from elasticsearch_osmosis_plugin_spark.operators.query import (
+            analyze,
             load_meta,
         )
         from elasticsearch_osmosis_plugin_spark.operators.sparsevec import (
@@ -867,10 +865,7 @@ def _search_query(spark: SparkSession, index_path: str,
         from elasticsearch_osmosis_plugin_spark.plans import catalog
 
         def _identity_expansion(text: str) -> dict[str, float]:
-            meta = load_meta(index_path)
-            toks = tokenize_py(text, meta["analyzer"],
-                               min_len=meta.get("min_token_len", 1),
-                               max_len=meta.get("max_token_len", 64))
+            toks = analyze(text, load_meta(index_path))
             qw: dict[str, float] = {}
             for t in toks:
                 qw[t] = qw.get(t, 0.0) + 1.0

@@ -111,6 +111,8 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from ..config import EngineConfig
 from ..functions.tokenizer import tokenize_expr, tokenize_py
 from .bm25 import bm25_score_terms
+from .intersect import phrase_match_expr
+from .query import analyze, query_terms
 
 
 class EsqlError(ValueError):
@@ -1045,17 +1047,16 @@ def _qstr(args, raw):
                 "— QSTR(query, default_field) or qualify as field:term")
         return tokenize_expr(F.col(f), an)
 
-    return _qstr_column(q, an, toks_of)
+    return _qstr_column(q, {"analyzer": an}, toks_of)
 
 
-def _qstr_column(q: str, an: str, toks_of, *, min_len: int = 1,
-                 max_len: int = 64) -> Column:
+def _qstr_column(q: str, meta: dict, toks_of) -> Column:
     """Core QSTR tree -> Column compiler, parameterized by the
     token-stream resolver so the persisted-index path can point leaves
     at the docstats term-vector column instead of re-tokenizing.
-    ``min_len``/``max_len`` must match how the doc-side tokens were
-    produced (the index path threads its meta bounds) so query terms
-    the analyzer would drop are dropped here too."""
+    Leaf text is analyzed by ``query.analyze`` under ``meta`` (the
+    index meta on the index path, so its token length bounds drop
+    the query terms the doc side dropped)."""
     from .querystring import (MUST, MUST_NOT, SHOULD, Leaf,
                               parse_query_string)
 
@@ -1069,8 +1070,7 @@ def _qstr_column(q: str, an: str, toks_of, *, min_len: int = 1,
             return F.col(lf.text).isNotNull()
         toks = toks_of(lf.field)
         if lf.kind == "term":
-            terms = list(dict.fromkeys(tokenize_py(
-                lf.text, an, min_len=min_len, max_len=max_len)))
+            terms = list(dict.fromkeys(analyze(lf.text, meta)))
             if not terms:
                 return None      # analyzed-away clause vanishes
             return F.arrays_overlap(
@@ -1081,13 +1081,10 @@ def _qstr_column(q: str, an: str, toks_of, *, min_len: int = 1,
                     "ES|QL QSTR: phrase slop (~N) needs positional "
                     "postings — use the persisted-index query_string "
                     "path")
-            terms = tokenize_py(lf.text, an, min_len=min_len,
-                                max_len=max_len)
+            terms = analyze(lf.text, meta)
             if not terms:
                 return None
-            joined = F.concat(F.lit(" "), F.array_join(toks, " "),
-                              F.lit(" "))
-            return joined.contains(" " + " ".join(terms) + " ")
+            return phrase_match_expr(toks, terms)
         if lf.kind == "prefix":
             pre = lf.text.lower()
             return F.exists(toks, lambda t: t.startswith(pre))
@@ -1157,13 +1154,12 @@ def _kql(args, raw):
     default_field = (str(_lit_of(args[1], "KQL default_field"))
                      if len(args) == 2 else None)
     an = _match_analyzer()
-    return _kql_column(q, default_field, an,
+    return _kql_column(q, default_field, {"analyzer": an},
                        lambda f: tokenize_expr(F.col(f), an))
 
 
-def _kql_column(q: str, default_field: str | None, an: str,
-                ftoks_of, col_of=F.col, *, min_len: int = 1,
-                max_len: int = 64) -> Column:
+def _kql_column(q: str, default_field: str | None, meta: dict,
+                ftoks_of, col_of=F.col) -> Column:
     """Core KQL tree -> Column compiler, parameterized by the
     token-stream resolver (``ftoks_of(field) -> Column``) and the
     plain-column resolver (``col_of``, for ``field:*`` existence) so
@@ -1189,20 +1185,16 @@ def _kql_column(q: str, default_field: str | None, an: str,
         ftoks = ftoks_of(field)
         if val.startswith('"'):
             phrase = re.sub(r'\\(.)', r'\1', val[1:-1])
-            terms = tokenize_py(phrase, an, min_len=min_len,
-                                max_len=max_len)
+            terms = analyze(phrase, meta)
             if not terms:
                 return F.lit(False)
-            joined = F.concat(F.lit(" "), F.array_join(ftoks, " "),
-                              F.lit(" "))
-            return joined.contains(" " + " ".join(terms) + " ")
+            return phrase_match_expr(ftoks, terms)
         if val == "*":
             return col_of(field).isNotNull()
         if "*" in val:
             pat = re.escape(val.lower()).replace(r"\*", ".*")
             return F.exists(ftoks, lambda t: t.rlike("^" + pat + "$"))
-        terms = sorted(set(tokenize_py(val, an, min_len=min_len,
-                                       max_len=max_len)))
+        terms = query_terms(val, meta)
         if not terms:
             return F.lit(False)
         return F.arrays_overlap(
@@ -1742,12 +1734,10 @@ def _compile(ast) -> Column:
         return F.arrays_overlap(toks, tarr)
     if kind == "phrase_match":
         # MATCH_PHRASE(field, "q"): true iff the analyzed query tokens
-        # occur CONSECUTIVELY in the field's analyzed token stream.
-        # Tokens cannot contain spaces, so consecutive-subsequence ==
-        # substring match on the space-joined token stream with
-        # boundary spaces — pure Catalyst, whole-stage codegen (the
-        # table-path twin of the positional-postings
-        # intersect.match_phrase; slop=0 only, ES's default).
+        # occur CONSECUTIVELY in the field's analyzed token stream
+        # (intersect.phrase_match_expr — the table-path twin of the
+        # positional-postings intersect.match_phrase; slop=0 only,
+        # ES's default).
         field_ast, q_ast = ast[1], ast[2]
         if field_ast[0] != "col":
             raise EsqlError("ES|QL: match_phrase needs a field on "
@@ -1756,12 +1746,8 @@ def _compile(ast) -> Column:
         terms = tokenize_py(str(query), _match_analyzer())  # keep order
         if not terms:
             return F.lit(False)
-        joined = F.concat(
-            F.lit(" "),
-            F.array_join(tokenize_expr(F.col(field_ast[1]),
-                                       _match_analyzer()), " "),
-            F.lit(" "))
-        return joined.contains(" " + " ".join(terms) + " ")
+        return phrase_match_expr(
+            tokenize_expr(F.col(field_ast[1]), _match_analyzer()), terms)
     if kind == "list":
         return F.array(*[_compile(x) for x in ast[1]])
     if kind == "call":
@@ -3260,16 +3246,8 @@ def _index_phrase_col(index_path, ast) -> Column:
     """Compile a MATCH_PHRASE conjunct for the persisted-index path:
     analyzed phrase terms checked as a contiguous slice of the
     docstats ``tokens`` term-vector column."""
-    from .intersect import phrase_match_expr
-    from elasticsearch_osmosis_plugin_spark.functions.tokenizer import (
-        tokenize_py,
-    )
-
     m = _index_tv_meta(index_path, "MATCH_PHRASE")
-    terms = tokenize_py(str(_lit_of(ast[2], "match_phrase query")),
-                        m["analyzer"],
-                        min_len=m.get("min_token_len", 1),
-                        max_len=m.get("max_token_len", 64))
+    terms = analyze(str(_lit_of(ast[2], "match_phrase query")), m)
     if not terms:
         return F.lit(False)
     return phrase_match_expr(F.col("tokens"), terms)
@@ -3302,9 +3280,7 @@ def _index_qstr_col(index_path, ast) -> Column:
                 f"indexed text field {text_col!r}")
         return F.col("tokens")
 
-    return _qstr_column(q, m["analyzer"], toks_of,
-                        min_len=m.get("min_token_len", 1),
-                        max_len=m.get("max_token_len", 64))
+    return _qstr_column(q, m, toks_of)
 
 
 def _index_kql_col(index_path, ast) -> Column:
@@ -3331,9 +3307,7 @@ def _index_kql_col(index_path, ast) -> Column:
     def col_of(field: str) -> Column:
         return F.col("tokens" if field == text_col else field)
 
-    return _kql_column(q, default_field, an, ftoks_of, col_of,
-                       min_len=m.get("min_token_len", 1),
-                       max_len=m.get("max_token_len", 64))
+    return _kql_column(q, default_field, m, ftoks_of, col_of)
 
 
 def esql_index(spark: SparkSession, query: str,
@@ -3483,12 +3457,8 @@ def esql_index(spark: SparkSession, query: str,
         if str(match_opts.get("operator", "or")).lower() == "and":
             from ..plans.build import load_meta
 
-            meta = load_meta(paths[0])
-            n_terms = len(set(tokenize_py(
-                match_text, meta.get("analyzer", "simple"),
-                min_len=meta.get("min_token_len", 1),
-                max_len=meta.get("max_token_len", 64))))
-            msm = max(msm, n_terms)
+            msm = max(msm, len(query_terms(match_text,
+                                           load_meta(paths[0]))))
         hits = topk_multi(spark, paths, match_text, k=k, post_filter=post,
                           minimum_should_match=msm)
         hits = (hits.withColumnRenamed("score", "_score")
@@ -3520,12 +3490,7 @@ def esql_index(spark: SparkSession, query: str,
         # requirement counts exactly the terms the index stored
         from ..plans.build import load_meta
 
-        meta = load_meta(index_path)
-        n_terms = len(set(tokenize_py(
-            match_text, meta.get("analyzer", "simple"),
-            min_len=meta.get("min_token_len", 1),
-            max_len=meta.get("max_token_len", 64))))
-        msm = max(msm, n_terms)
+        msm = max(msm, len(query_terms(match_text, load_meta(index_path))))
     hits = topk(spark, index_path, match_text, k=k, strategy=strategy,
                 post_filter=post, minimum_should_match=msm)
     hits = (hits.withColumnRenamed("score", "_score")

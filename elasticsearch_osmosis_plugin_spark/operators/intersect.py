@@ -19,6 +19,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from elasticsearch_osmosis_plugin_spark.operators.query import (
     _pruned_postings,
+    analyze,
     dictionary_rows,
     live_docs,
     query_terms,
@@ -61,30 +62,142 @@ def match_all_terms(spark: SparkSession, index_path: str, query: str) -> DataFra
 
 
 def phrase_match_expr(tokens_col, terms: list[str]):
-    """Column predicate: token array contains ``terms`` as a contiguous
-    subsequence. Pure Catalyst (exists over slice equality)."""
-    n = len(terms)
-    phrase = F.array(*[F.lit(t) for t in terms])
-    k = F.size(tokens_col) - (n - 1)
-    return F.when(k >= 1, F.exists(
-        F.sequence(F.lit(1), k),
-        lambda i: F.slice(tokens_col, i, n) == phrase)).otherwise(F.lit(False))
+    """Column predicate: the token array holds ``terms`` as a
+    contiguous subsequence — the one phrase check over token arrays
+    (term-vector fallback, ES|QL MATCH_PHRASE / QSTR / KQL phrases,
+    the percolator). Only analyzers that split on whitespace yield
+    several terms, so no token holds a space and the check is a
+    substring match on the space-joined array with boundary spaces
+    (codegen'd, and ``tokens_col`` is evaluated once); one term (a
+    keyword-analyzed token may hold spaces) is array membership."""
+    if len(terms) == 1:
+        return F.array_contains(tokens_col, terms[0])
+    joined = F.concat(F.lit(" "), F.array_join(tokens_col, " "), F.lit(" "))
+    return joined.contains(" " + " ".join(terms) + " ")
+
+
+# ------------------------------------------------------------ positional plan
+#
+# Every phrase and span operator reads its live occurrences from ONE
+# pruned positions decode (:func:`_occurrences`); there is no separate
+# candidate intersection — the per-doc grouping keeps only docs with an
+# occurrence in every slot. Exact phrases align on ``pos - slot``
+# (:func:`_aligned`); window rules run over a per-doc slot->positions
+# map (:func:`_slot_position_lists`) as pure Catalyst array expressions.
+
+
+def _occurrences(spark: SparkSession, index_path: str, meta: dict,
+                 slot_terms, op: str) -> DataFrame:
+    """Live ``(doc_id, slot, term, pos)`` occurrences of the (slot,
+    term) pairs: one pruned positions decode of the term union,
+    tombstoned docs dropped. A slot may hold several terms (span_or
+    alternatives, phrase-prefix expansions) and a term may fill several
+    slots. Raises ``ValueError`` when the index stores no positions."""
+    if not meta.get("positions", False):
+        raise ValueError(f"{op} needs positional postings "
+                         "(store_positions=True)")
+    uniq = sorted({t for _, t in slot_terms})
+    # term -> its slots as a literal map: no join, no job
+    slots = F.create_map(*[c for t in uniq for c in (
+        F.lit(t), F.array(*[F.lit(s) for s, u in slot_terms if u == t]))])
+    occ = term_positions(_pruned_postings(spark, index_path, uniq, meta))
+    return (live_docs(spark, index_path, occ, meta)
+            .select("doc_id", F.explode(slots[F.col("term")]).alias("slot"),
+                    "term", "pos"))
+
+
+def _aligned(spark: SparkSession, index_path: str, meta: dict,
+             slot_terms, op: str) -> DataFrame:
+    """Docs where the slots occur contiguously in slot order: an
+    occurrence of slot i at position p matches when every other slot j
+    has one at p + (j - i) — a groupBy on (doc, pos - slot) counting
+    distinct slots."""
+    n = len({s for s, _ in slot_terms})
+    occ = _occurrences(spark, index_path, meta, slot_terms, op)
+    return (occ.groupBy("doc_id", (F.col("pos") - F.col("slot")).alias("apos"))
+            .agg(F.countDistinct("slot").alias("n_slots"))
+            .filter(F.col("n_slots") == n)
+            .select("doc_id").distinct().orderBy("doc_id"))
+
+
+def _slot_position_lists(spark, index_path, meta, slot_terms, op):
+    """One row per doc with a slot->sorted positions map -> (doc_id, m),
+    for docs where EVERY slot has >=1 live occurrence."""
+    n_slots = len({s for s, _ in slot_terms})
+    per = (_occurrences(spark, index_path, meta, slot_terms, op)
+           .groupBy("doc_id", "slot")
+           .agg(F.sort_array(F.collect_set("pos")).alias("poss")))
+    return (per.groupBy("doc_id")
+            .agg(F.map_from_entries(
+                     F.collect_list(F.struct("slot", "poss"))).alias("m"),
+                 F.count(F.lit(1)).alias("_ns"))
+            .filter(F.col("_ns") == n_slots))
+
+
+def _chain_end(lists, s):
+    """End of the greedy in-order chain from start ``s`` through the
+    position arrays ``lists`` (next = smallest occurrence after the
+    running position): the smallest end any in-order chain from ``s``
+    reaches, null when some array has no later occurrence."""
+    if not lists:
+        return s
+    return F.aggregate(
+        F.array(*lists), s,
+        lambda acc, arr: F.when(acc.isNull(), F.lit(None).cast("long"))
+        .otherwise(F.array_min(F.filter(arr, lambda x: x > acc))))
+
+
+def _window_end(lists, s):
+    """Far end of the tightest window starting at ``s`` that holds an
+    occurrence from every array of ``lists`` (max over arrays of the
+    smallest occurrence >= s), null when some array has none.
+    greatest() SKIPS nulls, so an empty filter must null the
+    accumulator explicitly or a missing slot looks satisfied."""
+    def merge(acc, arr):
+        nxt = F.array_min(F.filter(arr, lambda x: x >= s))
+        return F.when(acc.isNull() | nxt.isNull(),
+                      F.lit(None).cast("long")).otherwise(F.greatest(acc, nxt))
+
+    return F.aggregate(F.array(*lists), s, merge)
+
+
+def _near(spark, index_path, meta, slots: list[list[str]], slop: int,
+          in_order: bool, op: str) -> DataFrame:
+    """The span_near window rule over analyzed ``slots`` (each a list
+    of alternative terms): docs with one occurrence per slot spanning
+    at most ``slop`` intervening positions, in slot order when
+    ``in_order`` (greedy chain from each first-slot start) or in any
+    order otherwise (tightest window from each occurrence)."""
+    slot_terms = [(i, t) for i, alts in enumerate(slots) for t in alts]
+    doc = _slot_position_lists(spark, index_path, meta, slot_terms, op)
+    if not in_order and len({t for _, t in slot_terms}) < len(slot_terms):
+        raise ValueError(f"unordered {op} requires distinct terms")
+    k = len(slots)
+    if k > 1:
+        lists = [F.col("m")[i] for i in range(k)]
+
+        def ok(s):
+            end = (_chain_end(lists[1:], s) if in_order
+                   else _window_end(lists, s))
+            return F.coalesce(end - s - F.lit(k - 1) <= F.lit(slop),
+                              F.lit(False))
+
+        starts = (lists[0] if in_order else
+                  F.array_sort(F.array_distinct(F.flatten(F.array(*lists)))))
+        doc = doc.filter(F.exists(starts, ok))
+    return doc.select("doc_id").orderBy("doc_id")
 
 
 def match_phrase(spark: SparkSession, index_path: str, phrase: str,
                  slop: int = 0) -> DataFrame:
     """doc_ids containing the phrase's terms CONTIGUOUSLY IN ORDER
-    (ES match_phrase analog). Two-stage plan, fully index-side when the
-    index stores positions (the default — the role ES positional
-    postings play):
-
-    1. candidate docs = posting intersection (doc-id streams only);
-    2. decode the phrase terms' POSITION streams, keep candidate docs,
-       and check alignment: occurrence of term_i at position p matches
-       the phrase when every other term_j has an occurrence at
-       p + (j - i) — expressed as a groupBy on (doc, pos - i) counting
-       distinct phrase slots, no per-row Python beyond the varbyte
-       decode kernel.
+    (ES match_phrase analog), fully index-side when the index stores
+    positions (the default — the role ES positional postings play):
+    ONE positions decode of the phrase terms (:func:`_occurrences`),
+    then the alignment check — an occurrence of term_i at position p
+    matches when every other term_j has one at p + (j - i), a groupBy
+    on (doc, pos - i) counting distinct phrase slots, no per-row Python
+    beyond the varbyte decode kernel.
 
     ``slop > 0`` is ES's SLOPPY phrase (SloppyPhraseMatcher semantics,
     not span_near's window rule): the cost of a match is the minimal
@@ -103,91 +216,52 @@ def match_phrase(spark: SparkSession, index_path: str, phrase: str,
     Falls back to term-vector adjacency verification for indexes built
     with ``store_positions=False`` (requires retained tokens;
     slop == 0 only)."""
-    from elasticsearch_osmosis_plugin_spark.functions.tokenizer import tokenize_py
-
     meta = load_meta(index_path)
-    terms = tokenize_py(phrase, meta["analyzer"],
-                        min_len=meta.get("min_token_len", 1),
-                        max_len=meta.get("max_token_len", 64))  # ordered!
+    terms = analyze(phrase, meta)
     if not terms:
         return spark.createDataFrame([], "doc_id long")
-    cands = match_all_terms(spark, index_path, phrase)
+    slot_terms = list(enumerate(terms))
     if len(terms) == 1:
+        cands = match_all_terms(spark, index_path, phrase)
         if slop > 0:
-            return cands.withColumn("slop_cost",
-                                    F.lit(0).cast("int"))
+            return cands.withColumn("slop_cost", F.lit(0).cast("int"))
         return cands
 
-    if meta.get("positions", False):
-        if slop > 0:
-            docs = _slot_position_lists(
-                spark, index_path, list(enumerate(terms)), cands, meta)
-            ents = F.map_entries(F.col("m"))
-            # candidate anchors: every occurrence's own alignment
-            # d = p - slot (the minimum of the piecewise-linear cost
-            # is attained at one of these)
-            anchors = F.array_distinct(F.flatten(F.transform(
-                ents, lambda kv: F.transform(
-                    kv["value"], lambda p: p - kv["key"]))))
-
-            def _cost(a):
-                return F.aggregate(
-                    ents, F.lit(0).cast("bigint"),
-                    lambda acc, kv: acc + F.array_min(F.transform(
-                        kv["value"],
-                        lambda p: F.abs(p - (a + kv["key"])))))
-
-            scored = docs.select(
-                "doc_id",
-                F.array_min(F.transform(anchors, _cost))
-                .cast("int").alias("slop_cost"))
-            return (scored.filter(F.col("slop_cost") <= slop)
-                    .orderBy("doc_id"))
-
-        uniq = sorted(set(terms))
-        posts = _pruned_postings(spark, index_path, uniq, meta)
-        occ = term_positions(posts).join(cands, "doc_id", "left_semi")
-        slots = spark.createDataFrame(
-            [(i, t) for i, t in enumerate(terms)], "slot int, term string")
-        aligned = (occ.join(F.broadcast(slots), "term")
-                   .select("doc_id", (F.col("pos") - F.col("slot")).alias("apos"),
-                           "slot"))
-        hits = (aligned.groupBy("doc_id", "apos")
-                .agg(F.countDistinct("slot").alias("n_slots"))
-                .filter(F.col("n_slots") == len(terms)))
-        return hits.select("doc_id").distinct().orderBy("doc_id")
-
     if slop > 0:
-        raise ValueError("sloppy phrase (slop > 0) needs positional "
-                         "postings (store_positions=True)")
+        docs = _slot_position_lists(spark, index_path, meta, slot_terms,
+                                    "sloppy phrase (slop > 0)")
+        ents = F.map_entries(F.col("m"))
+        # candidate anchors: every occurrence's own alignment
+        # d = p - slot (the minimum of the piecewise-linear cost
+        # is attained at one of these)
+        anchors = F.array_distinct(F.flatten(F.transform(
+            ents, lambda kv: F.transform(
+                kv["value"], lambda p: p - kv["key"]))))
+
+        def _cost(a):
+            return F.aggregate(
+                ents, F.lit(0).cast("bigint"),
+                lambda acc, kv: acc + F.array_min(F.transform(
+                    kv["value"],
+                    lambda p: F.abs(p - (a + kv["key"])))))
+
+        scored = docs.select(
+            "doc_id",
+            F.array_min(F.transform(anchors, _cost))
+            .cast("int").alias("slop_cost"))
+        return (scored.filter(F.col("slop_cost") <= slop)
+                .orderBy("doc_id"))
+
+    if meta.get("positions", False):
+        return _aligned(spark, index_path, meta, slot_terms, "match_phrase")
     ds = term_vector_store(
         spark, index_path,
         "phrase match without positional postings (store_positions=True)")
     verified = (ds.select("doc_id", "tokens")
-                .join(cands, "doc_id", "left_semi")
+                .join(match_all_terms(spark, index_path, phrase),
+                      "doc_id", "left_semi")
                 .filter(phrase_match_expr(F.col("tokens"), terms)))
     return verified.select("doc_id").orderBy("doc_id")
-
-
-def _slot_position_lists(spark, index_path, slot_terms, cands, meta):
-    """Decode the position streams of the (slot, term) pairs, keep
-    candidate docs, and pivot to one row per doc with a slot->sorted
-    positions map -> (doc_id, m) for docs where EVERY slot has >=1
-    occurrence. ``slot_terms`` may map several terms to one slot
-    (phrase-prefix expansions) or one term to several slots."""
-    uniq = sorted({t for _, t in slot_terms})
-    posts = _pruned_postings(spark, index_path, uniq, meta)
-    occ = term_positions(posts).join(cands, "doc_id", "left_semi")
-    slots = spark.createDataFrame(list(slot_terms), "slot int, term string")
-    n_slots = len({s for s, _ in slot_terms})
-    per = (occ.join(F.broadcast(slots), "term")
-           .groupBy("doc_id", "slot")
-           .agg(F.sort_array(F.collect_set("pos")).alias("poss")))
-    return (per.groupBy("doc_id")
-            .agg(F.map_from_entries(
-                     F.collect_list(F.struct("slot", "poss"))).alias("m"),
-                 F.count(F.lit(1)).alias("_ns"))
-            .filter(F.col("_ns") == n_slots))
 
 
 def span_near(spark: SparkSession, index_path: str, phrase: str,
@@ -206,64 +280,17 @@ def span_near(spark: SparkSession, index_path: str, phrase: str,
       each candidate start position). Requires distinct terms (a
       repeated term could otherwise reuse one occurrence twice).
 
-    Plan: candidate docs = posting intersection; ONE positions decode
-    for the term set; per-doc slot->positions map; the existence check
-    is a pure Catalyst expression (exists/aggregate over arrays) — no
-    per-row Python, work per doc bounded by its occurrence counts."""
-    from elasticsearch_osmosis_plugin_spark.functions.tokenizer import tokenize_py
-
+    Plan: :func:`span_or_near` with one term per slot — ONE positions
+    decode for the term set, a per-doc slot->positions map holding
+    only docs with every term, and the existence check as a pure
+    Catalyst expression (exists/aggregate over arrays) — no per-row
+    Python, work per doc bounded by its occurrence counts."""
     meta = load_meta(index_path)
-    terms = tokenize_py(phrase, meta["analyzer"],
-                        min_len=meta.get("min_token_len", 1),
-                        max_len=meta.get("max_token_len", 64))  # ordered!
+    terms = analyze(phrase, meta)
     if not terms:
         return spark.createDataFrame([], "doc_id long")
-    if not meta.get("positions", False):
-        raise ValueError("span_near needs positional postings "
-                         "(store_positions=True)")
-    if not in_order and len(set(terms)) < len(terms):
-        raise ValueError("unordered span_near requires distinct terms")
-    cands = match_all_terms(spark, index_path, phrase)
-    if len(terms) == 1:
-        return cands
-    k = len(terms)
-    doc = _slot_position_lists(spark, index_path,
-                               list(enumerate(terms)), cands, meta)
-    lists = [F.col("m")[i] for i in range(k)]
-
-    if in_order:
-        rest = F.array(*lists[1:])
-
-        def ok(s):
-            chain = F.aggregate(
-                rest, s,
-                lambda acc, arr: F.when(
-                    acc.isNull(), F.lit(None).cast("long")
-                ).otherwise(F.array_min(F.filter(arr, lambda x: x > acc))))
-            return F.coalesce(chain - s - F.lit(k - 1) <= F.lit(slop),
-                              F.lit(False))
-
-        pred = F.exists(lists[0], ok)
-    else:
-        allv = F.array(*lists)
-
-        def ok(s):
-            # max over slots of (smallest occurrence >= s); null if any
-            # slot has none — the tightest window anchored at s.
-            # greatest() SKIPS nulls, so an empty filter must null the
-            # accumulator explicitly or a missing slot looks satisfied.
-            def merge(acc, arr):
-                nxt = F.array_min(F.filter(arr, lambda x: x >= s))
-                return F.when(acc.isNull() | nxt.isNull(),
-                              F.lit(None).cast("long")) \
-                    .otherwise(F.greatest(acc, nxt))
-
-            far = F.aggregate(allv, s, merge)
-            return F.coalesce(far - s - F.lit(k - 1) <= F.lit(slop),
-                              F.lit(False))
-
-        pred = F.exists(F.array_sort(F.array_distinct(F.flatten(allv))), ok)
-    return doc.filter(pred).select("doc_id").orderBy("doc_id")
+    return _near(spark, index_path, meta, [[t] for t in terms], slop,
+                 in_order, "span_near")
 
 
 def span_first(spark: SparkSession, index_path: str, term: str,
@@ -274,12 +301,8 @@ def span_first(spark: SparkSession, index_path: str, term: str,
     ``SpanFirstQuery``). One pruned positions decode for the term, a
     min-position aggregate, no doc-store touch."""
     meta = load_meta(index_path)
-    if not meta.get("positions", False):
-        raise ValueError("span_first needs positional postings")
-    t = _one_term(term, meta)
-    posts = _pruned_postings(spark, index_path, [t], meta)
-    occ = term_positions(posts)
-    occ = live_docs(spark, index_path, occ, meta)
+    occ = _occurrences(spark, index_path, meta,
+                       [(0, _one_term(term, meta))], "span_first")
     return (occ.groupBy("doc_id").agg(F.min("pos").alias("_p"))
             .filter(F.col("_p") < int(end))
             .select("doc_id").orderBy("doc_id"))
@@ -295,23 +318,19 @@ def span_not(spark: SparkSession, index_path: str, include: str,
 
     ONE positions decode for both terms; the per-doc existence check is
     a pure Catalyst exists/filter over the two position arrays — docs
-    without any exclude occurrence pass trivially (left join)."""
+    without any exclude occurrence pass trivially."""
     meta = load_meta(index_path)
-    if not meta.get("positions", False):
-        raise ValueError("span_not needs positional postings")
     ti = _one_term(include, meta)
     te = _one_term(exclude, meta)
     if ti == te:
         raise ValueError("span_not include and exclude must differ")
-    uniq = sorted({ti, te})
-    posts = _pruned_postings(spark, index_path, uniq, meta)
-    occ = term_positions(posts)
-    occ = live_docs(spark, index_path, occ, meta)
+    occ = _occurrences(spark, index_path, meta, [(0, ti), (1, te)],
+                       "span_not")
     per = (occ.groupBy("doc_id")
            .agg(F.sort_array(F.collect_list(
-                    F.when(F.col("term") == ti, F.col("pos")))).alias("inc"),
+                    F.when(F.col("slot") == 0, F.col("pos")))).alias("inc"),
                 F.sort_array(F.collect_list(
-                    F.when(F.col("term") == te, F.col("pos")))).alias("exc")))
+                    F.when(F.col("slot") == 1, F.col("pos")))).alias("exc")))
     keep = F.exists(
         F.col("inc"),
         lambda p: ~F.exists(F.col("exc"),
@@ -327,61 +346,19 @@ def span_or_near(spark: SparkSession, index_path: str,
     """Lucene span_or composed under span_near: each slot is a LIST of
     alternative terms (a ``span_or`` clause); the document matches when
     some choice of one alternative per slot satisfies the span_near
-    window rule. ``_slot_position_lists`` already merges several terms
-    into one slot's position list, which is exactly span_or's union-of-
-    spans semantics for single-term alternatives.
+    window rule. ``_slot_position_lists`` merges several terms into one
+    slot's position list, which is exactly span_or's union-of-spans
+    semantics for single-term alternatives.
 
-    Same plan as span_near: one positions decode for the term union,
-    candidates = docs with >=1 alternative in EVERY slot."""
+    Same plan as :func:`span_near`: ONE positions decode for the term
+    union; only docs with >=1 alternative in EVERY slot reach the
+    window check."""
     meta = load_meta(index_path)
-    if not meta.get("positions", False):
-        raise ValueError("span_or_near needs positional postings")
     norm = [[_one_term(t, meta) for t in alts] for alts in slots]
     if not norm or any(not alts for alts in norm):
         raise ValueError("every slot needs >=1 alternative term")
-    if not in_order:
-        flat = [t for alts in norm for t in alts]
-        if len(set(flat)) < len(flat):
-            raise ValueError("unordered span_or_near requires distinct terms")
-    # candidates: per-slot OR, all slots ANDed — via the grouped decode
-    slot_terms = [(i, t) for i, alts in enumerate(norm) for t in alts]
-    k = len(norm)
-    all_docs = match_any_terms(
-        spark, index_path, " ".join(sorted({t for _, t in slot_terms})))
-    doc = _slot_position_lists(spark, index_path, slot_terms, all_docs, meta)
-    lists = [F.col("m")[i] for i in range(k)]
-    if k == 1:
-        return doc.select("doc_id").orderBy("doc_id")
-
-    if in_order:
-        rest = F.array(*lists[1:])
-
-        def ok(s):
-            chain = F.aggregate(
-                rest, s,
-                lambda acc, arr: F.when(
-                    acc.isNull(), F.lit(None).cast("long")
-                ).otherwise(F.array_min(F.filter(arr, lambda x: x > acc))))
-            return F.coalesce(chain - s - F.lit(k - 1) <= F.lit(slop),
-                              F.lit(False))
-
-        pred = F.exists(lists[0], ok)
-    else:
-        allv = F.array(*lists)
-
-        def ok(s):
-            def merge(acc, arr):
-                nxt = F.array_min(F.filter(arr, lambda x: x >= s))
-                return F.when(acc.isNull() | nxt.isNull(),
-                              F.lit(None).cast("long")) \
-                    .otherwise(F.greatest(acc, nxt))
-
-            far = F.aggregate(allv, s, merge)
-            return F.coalesce(far - s - F.lit(k - 1) <= F.lit(slop),
-                              F.lit(False))
-
-        pred = F.exists(F.array_sort(F.array_distinct(F.flatten(allv))), ok)
-    return doc.filter(pred).select("doc_id").orderBy("doc_id")
+    return _near(spark, index_path, meta, norm, slop, in_order,
+                 "span_or_near")
 
 
 def match_phrase_prefix(spark: SparkSession, index_path: str, phrase: str,
@@ -392,15 +369,11 @@ def match_phrase_prefix(spark: SparkSession, index_path: str, phrase: str,
     (capped at ``max_expansions`` in term order, ES's deterministic
     cap).
 
-    Plan: dictionary expansion (metadata-only) -> positions decode for
-    fixed terms + expansions -> the same (pos - slot) alignment groupBy
-    as match_phrase, with every expansion mapped to the LAST slot."""
-    from elasticsearch_osmosis_plugin_spark.functions.tokenizer import tokenize_py
-
+    Plan: dictionary expansion (metadata-only) -> ONE positions decode
+    for fixed terms + expansions -> the same (pos - slot) alignment as
+    match_phrase, with every expansion mapped to the LAST slot."""
     meta = load_meta(index_path)
-    terms = tokenize_py(phrase, meta["analyzer"],
-                        min_len=meta.get("min_token_len", 1),
-                        max_len=meta.get("max_token_len", 64))  # ordered!
+    terms = analyze(phrase, meta)
     if not terms:
         return spark.createDataFrame([], "doc_id long")
     fixed, prefix = terms[:-1], terms[-1]
@@ -411,24 +384,10 @@ def match_phrase_prefix(spark: SparkSession, index_path: str, phrase: str,
     if not fixed:
         return match_expanded(spark, index_path, prefix, mode="prefix",
                               max_expansions=max_expansions)
-    if not meta.get("positions", False):
-        raise ValueError("match_phrase_prefix needs positional postings "
-                         "(store_positions=True)")
-    cands = match_all_terms(spark, index_path, " ".join(fixed))
-    slot_terms = ([(i, t) for i, t in enumerate(fixed)]
-                  + [(len(fixed), e) for e in expansions])
-    uniq = sorted({t for _, t in slot_terms})
-    posts = _pruned_postings(spark, index_path, uniq, meta)
-    occ = term_positions(posts).join(cands, "doc_id", "left_semi")
-    slots = spark.createDataFrame(slot_terms, "slot int, term string")
-    n = len(fixed) + 1
-    aligned = (occ.join(F.broadcast(slots), "term")
-               .select("doc_id", (F.col("pos") - F.col("slot")).alias("apos"),
-                       "slot"))
-    hits = (aligned.groupBy("doc_id", "apos")
-            .agg(F.countDistinct("slot").alias("n_slots"))
-            .filter(F.col("n_slots") == n))
-    return hits.select("doc_id").distinct().orderBy("doc_id")
+    return _aligned(spark, index_path, meta,
+                    list(enumerate(fixed))
+                    + [(len(fixed), e) for e in expansions],
+                    "match_phrase_prefix")
 
 
 def expand_terms(spark: SparkSession, index_path: str, pattern: str,
@@ -749,15 +708,10 @@ def highlight(spark: SparkSession, index_path: str, query: str,
     if dic.empty:
         return spark.createDataFrame(
             [], "doc_id long, first_pos long, snippet string")
-    if not meta.get("positions", False):
-        raise ValueError("highlight needs positional postings "
-                         "(store_positions=True)")
+    occ = _occurrences(spark, index_path, meta,
+                       [(0, t) for t in dic["term"]], "highlight")
     ds = term_vector_store(spark, index_path, "highlight")
-    live = sorted(dic["term"])
-    posts = _pruned_postings(spark, index_path, live, meta)
-    occ = term_positions(posts)
-    first = (live_docs(spark, index_path, occ, meta)
-             .groupBy("doc_id").agg(F.min("pos").alias("first_pos")))
+    first = occ.groupBy("doc_id").agg(F.min("pos").alias("first_pos"))
     # stored positions are 0-based; slice() is 1-based
     start = F.greatest(F.lit(1), F.col("first_pos") + 1 - window)
     length = F.least(F.size("tokens"),
@@ -810,15 +764,10 @@ def more_like_this_text(spark: SparkSession, index_path: str, like: str,
     out exactly as ES ignores terms absent from the index."""
     from collections import Counter
 
-    from elasticsearch_osmosis_plugin_spark.functions.tokenizer import (
-        tokenize_py,
-    )
     from elasticsearch_osmosis_plugin_spark.operators.query import topk
 
     meta = load_meta(index_path)
-    tf = Counter(tokenize_py(like, meta["analyzer"],
-                             min_len=meta.get("min_token_len", 1),
-                             max_len=meta.get("max_token_len", 64)))
+    tf = Counter(analyze(like, meta))
     dic = dictionary_rows(spark, index_path, sorted(tf), meta)
     ranked = sorted((-tf[t] * v, t) for t, v in term_idfs(dic, meta).items())
     terms = [t for _, t in ranked[:max_query_terms]]
@@ -1264,15 +1213,10 @@ def suggest_phrase(spark: SparkSession, index_path: str, text: str,
     candidate yields no suggestions (nothing to correct toward).
 
     Returns (phrase, score), score desc, phrase asc, top ``size``."""
-    from elasticsearch_osmosis_plugin_spark.functions.tokenizer import (
-        tokenize_py,
-    )
     from elasticsearch_osmosis_plugin_spark.plans.build import dictionary_df
 
     meta = load_meta(index_path)
-    slots = tokenize_py(text, meta["analyzer"],
-                        min_len=meta.get("min_token_len", 1),
-                        max_len=meta.get("max_token_len", 64))
+    slots = analyze(text, meta)
     out_schema = "phrase string, score double"
     if not slots:
         return spark.createDataFrame([], out_schema)
@@ -1308,22 +1252,16 @@ def suggest_phrase(spark: SparkSession, index_path: str, text: str,
     # positional decode + one (doc, slot+1) join
     bigram: dict[tuple[str, str], float] = {}
     if len(slots) > 1:
-        uniq = sorted({t for ts in by_slot.values() for t in ts})
-        posts = _pruned_postings(spark, index_path, uniq, meta)
-        occ = (term_positions(posts)
-               .groupBy("term", "doc_id")
+        occ = (_occurrences(spark, index_path, meta,
+                            [(s, t) for s, ts in by_slot.items() for t in ts],
+                            "suggest_phrase")
+               .groupBy("slot", "term", "doc_id")
                .agg(F.collect_list("pos").alias("poss")))
-        occ = live_docs(spark, index_path, occ, meta)
-        pairs = spark.createDataFrame(
-            [(s, t) for s, ts in by_slot.items() for t in ts],
-            "slot int, term string")
-        a = (occ.join(F.broadcast(pairs), "term")
-             .select("slot", F.col("term").alias("ta"), "doc_id",
-                     F.transform("poss", lambda x: x + 1).alias("pa")))
-        b = (occ.join(F.broadcast(pairs.withColumn("slot", F.col("slot") - 1)),
-                      "term")
-             .select("slot", F.col("term").alias("tb"), "doc_id",
-                     F.col("poss").alias("pb")))
+        a = occ.select("slot", F.col("term").alias("ta"), "doc_id",
+                       F.transform("poss", lambda x: x + 1).alias("pa"))
+        b = occ.select((F.col("slot") - 1).alias("slot"),
+                       F.col("term").alias("tb"), "doc_id",
+                       F.col("poss").alias("pb"))
         counts = (a.join(b, ["slot", "doc_id"])
                   .select("ta", "tb",
                           F.size(F.array_intersect("pa", "pb")).alias("c"))
@@ -2298,41 +2236,23 @@ def span_containing(spark: SparkSession, index_path: str, big: str,
     between that end and the slop bound is also a valid end (the
     intermediate chain is reusable), so containment reduces to
     "exists little position in [s, max valid end]" — all pure Catalyst
-    array expressions over ONE positions decode."""
-    from elasticsearch_osmosis_plugin_spark.functions.tokenizer import (
-        tokenize_py,
-    )
-
+    array expressions over ONE positions decode, reading only docs
+    with every big term and the little term."""
     meta = load_meta(index_path)
-    terms = tokenize_py(big, meta["analyzer"],
-                        min_len=meta.get("min_token_len", 1),
-                        max_len=meta.get("max_token_len", 64))
+    terms = analyze(big, meta)
     lt = _one_term(little, meta)
     if not terms:
         return spark.createDataFrame([], "doc_id long")
-    if not meta.get("positions", False):
-        raise ValueError("span_containing needs positional postings "
-                         "(store_positions=True)")
-    cands = (match_all_terms(spark, index_path, big)
-             .join(match_all_terms(spark, index_path, lt),
-                   "doc_id", "left_semi"))
     k = len(terms)
-    slot_terms = list(enumerate(terms)) + [(k, lt)]
-    doc = _slot_position_lists(spark, index_path, slot_terms, cands, meta)
+    doc = _slot_position_lists(spark, index_path, meta,
+                               list(enumerate(terms)) + [(k, lt)],
+                               "span_containing")
     lists = [F.col("m")[i] for i in range(k)]
     little_ps = F.col("m")[k]
     bound = F.lit(int(slop) + k - 1)
 
     def ok(s):
-        if k == 1:
-            min_end = s
-        else:
-            rest = F.array(*lists[1:])
-            min_end = F.aggregate(
-                rest, s,
-                lambda acc, arr: F.when(
-                    acc.isNull(), F.lit(None).cast("long")
-                ).otherwise(F.array_min(F.filter(arr, lambda x: x > acc))))
+        min_end = _chain_end(lists[1:], s)
         valid = F.coalesce(min_end - s <= bound, F.lit(False))
         max_end = F.array_max(F.filter(
             lists[k - 1] if k > 1 else F.array(s),
@@ -2388,17 +2308,8 @@ def term_vectors_artificial(spark: SparkSession, index_path: str,
     the index's chain, per-term tf + positions from the analysis,
     df/cf collection statistics from the dictionary; terms absent from
     the index report df=0/cf=0 (ES's behavior for unseen terms)."""
-    from elasticsearch_osmosis_plugin_spark.functions.tokenizer import (
-        tokenize_py,
-    )
-    from elasticsearch_osmosis_plugin_spark.operators.query import (
-        dictionary_rows,
-    )
-
     meta = load_meta(index_path)
-    toks = tokenize_py(text, meta["analyzer"],
-                       min_len=meta.get("min_token_len", 1),
-                       max_len=meta.get("max_token_len", 64))
+    toks = analyze(text, meta)
     tf: dict[str, int] = {}
     pos: dict[str, list[int]] = {}
     for i, t in enumerate(toks):
@@ -2623,15 +2534,11 @@ def highlight_fragments(spark: SparkSession, index_path: str, query: str,
     if dic.empty:
         return spark.createDataFrame(
             [], "doc_id long, fragments array<string>")
-    if not meta.get("positions", False):
-        raise ValueError("highlight needs positional postings "
-                         "(store_positions=True)")
-    ds = term_vector_store(spark, index_path, "highlight")
     live = sorted(dic["term"])
-    posts = _pruned_postings(spark, index_path, live, meta)
-    occ = term_positions(posts)
-    firsts = (live_docs(spark, index_path, occ, meta)
-              .groupBy("doc_id", "term").agg(F.min("pos").alias("pos")))
+    occ = _occurrences(spark, index_path, meta, [(0, t) for t in live],
+                       "highlight")
+    ds = term_vector_store(spark, index_path, "highlight")
+    firsts = occ.groupBy("doc_id", "term").agg(F.min("pos").alias("pos"))
     w = W.partitionBy("doc_id").orderBy("pos", "term")
     sel = (firsts.withColumn("_rn", F.row_number().over(w))
            .filter(F.col("_rn") <= number_of_fragments))

@@ -75,11 +75,17 @@ def idf(n_docs: int, df: int) -> float:
     return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
 
 
+def analyze(text: str, meta: dict) -> list[str]:
+    """``text``'s tokens IN ORDER under the index's analyzer and token
+    length bounds — the one analysis of query text against an index
+    (phrases and spans need the order)."""
+    return tokenize_py(text, meta["analyzer"],
+                       min_len=meta.get("min_token_len", 1),
+                       max_len=meta.get("max_token_len", 64))
+
+
 def query_terms(query: str, meta: dict) -> list[str]:
-    return sorted(set(tokenize_py(
-        query, meta["analyzer"],
-        min_len=meta.get("min_token_len", 1),
-        max_len=meta.get("max_token_len", 64))))
+    return sorted(set(analyze(query, meta)))
 
 
 _DIC_COLS = ["term", "df", "cf", "n_blocks", "max_wand", "bucket"]

@@ -55,7 +55,7 @@ from dataclasses import dataclass, field as dc_field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from elasticsearch_osmosis_plugin_spark.functions.tokenizer import tokenize_py
+from elasticsearch_osmosis_plugin_spark.operators.query import analyze
 from elasticsearch_osmosis_plugin_spark.operators.topk import deterministic_topk
 
 MUST, SHOULD, MUST_NOT = "MUST", "SHOULD", "MUST_NOT"
@@ -210,15 +210,7 @@ def _collect_terms(node, meta, out: set[str]) -> None:
             _collect_terms(c, meta, out)
         return
     if node.kind == "term":
-        out.update(_analyzed(node.text, meta))
-
-
-def _analyzed(text: str, meta: dict) -> list[str]:
-    """Order-preserving analysis (phrases need token ORDER; sorting
-    through query.query_terms would silently flip the phrase)."""
-    return tokenize_py(text, meta["analyzer"],
-                       min_len=meta.get("min_token_len", 1),
-                       max_len=meta.get("max_token_len", 64))
+        out.update(analyze(node.text, meta))
 
 
 def query_string_topk(spark: SparkSession, index_path: str, q: str,
@@ -266,7 +258,7 @@ def compile_tree_topk(spark: SparkSession, index_path: str, tree: Group,
                 f"query_string: unknown field {leaf.field!r} "
                 f"(index covers {indexed!r})")
         if leaf.kind == "term":
-            terms = [t for t in dict.fromkeys(_analyzed(leaf.text, meta))
+            terms = [t for t in dict.fromkeys(analyze(leaf.text, meta))
                      if t in idf_by_term]
             if not terms or shared is None:
                 return empty
@@ -279,7 +271,7 @@ def compile_tree_topk(spark: SparkSession, index_path: str, tree: Group,
             return live_docs(spark, index_path, ds.select(
                 "doc_id", F.lit(leaf.boost).alias("score")), meta)
         if leaf.kind == "phrase":
-            toks = _analyzed(leaf.text, meta)
+            toks = analyze(leaf.text, meta)
             if not toks:
                 return empty
             if len(toks) == 1:

@@ -27,11 +27,11 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from elasticsearch_osmosis_plugin_spark.functions.tokenizer import tokenize_py
 from elasticsearch_osmosis_plugin_spark.operators.query import (
     _pruned_postings,
     _scored,
     allowed_docs,
+    analyze,
     dictionary_rows,
     idf,
     live_docs,
@@ -754,9 +754,7 @@ def match_bool_prefix_topk(spark: SparkSession, index_path: str, text: str,
     )
 
     meta = load_meta(index_path)
-    toks = tokenize_py(text, meta["analyzer"],
-                       min_len=meta.get("min_token_len", 1),
-                       max_len=meta.get("max_token_len", 64))
+    toks = analyze(text, meta)
     if not toks:
         return spark.createDataFrame([], "doc_id long, score double")
     *full, prefix = toks

@@ -72,6 +72,40 @@ def test_append_phrase_and_boolean_cross_group(spark, corpus_df, tmp_path):
             match_all_terms(spark, full, "public static").collect()]
     assert got == want
 
+    # tombstones reach every positional operator through its one
+    # occurrence stream: after deleting a few docs from ``inc`` (some
+    # from each group), each operator on ``inc`` equals the same call
+    # on ``full`` minus the deleted ids
+    from elasticsearch_osmosis_plugin_spark.operators import intersect as I
+    from elasticsearch_osmosis_plugin_spark.plans.build import delete_docs
+
+    ops = {
+        "phrase": lambda p: I.match_phrase(spark, p, "public static"),
+        "phrase~2": lambda p: I.match_phrase(spark, p, "public static",
+                                             slop=2),
+        "prefix": lambda p: I.match_phrase_prefix(spark, p, "public stat"),
+        "near": lambda p: I.span_near(spark, p, "public static", slop=1),
+        "near_unordered": lambda p: I.span_near(
+            spark, p, "public static", slop=1, in_order=False),
+        "or_near": lambda p: I.span_or_near(
+            spark, p, [["public", "void"], ["static"]], slop=1),
+        "containing": lambda p: I.span_containing(
+            spark, p, "public static", "id0000", slop=10),
+        "first": lambda p: I.span_first(spark, p, "id0000", 5),
+        "not": lambda p: I.span_not(spark, p, "public", "static",
+                                    pre=1, post=1),
+    }
+    full_rows = {n: [tuple(r) for r in op(full).collect()]
+                 for n, op in ops.items()}
+    dead = {full_rows[n][0][0]
+            for n in ("phrase", "containing", "first", "not")}
+    assert min(dead) < 40 <= max(dead)  # both groups lose docs
+    delete_docs(spark, inc, sorted(dead))
+    for n, op in ops.items():
+        want = [r for r in full_rows[n] if r[0] not in dead]
+        assert len(want) < len(full_rows[n]), n  # the delete bites
+        assert [tuple(r) for r in op(inc).collect()] == want, n
+
 
 def test_append_then_compact_preserves_results(spark, corpus_df, tmp_path):
     from elasticsearch_osmosis_plugin_spark.plans.merge import (

@@ -215,6 +215,85 @@ def test_one_hit_set_per_agg():
         & set(called)
 
 
+# the operators of intersect.py that read positional postings, and the
+# private steps of their one plan
+POSITIONAL_OPS = {
+    "match_phrase", "match_phrase_prefix", "span_near", "span_or_near",
+    "span_containing", "span_first", "span_not", "highlight",
+    "highlight_fragments", "suggest_phrase", "_near", "_aligned",
+    "_slot_position_lists", "_occurrences"}
+
+
+def test_one_positional_plan():
+    """Every phrase and span operator reads its live occurrences from
+    ``intersect._occurrences``, the one ``term_positions`` caller in
+    the package. ``_slot_position_lists`` takes no candidate frame and
+    no positional path computes a candidate intersection
+    (match_all_terms / match_any_terms): match_phrase keeps them only
+    for a single term and for its term-vector fallback, which read no
+    positions. Query text is analyzed against an index only by
+    ``query.analyze`` (no ``tokenize_py`` call passes ``min_len=``
+    elsewhere), and span_near is span_or_near's window rule, not a copy
+    (its body defines no lambda)."""
+    import ast
+    import inspect
+    import pathlib
+
+    import elasticsearch_osmosis_plugin_spark as pkg
+    from elasticsearch_osmosis_plugin_spark.operators import intersect
+
+    def name_of(call):
+        return getattr(call.func, "id", None) or getattr(
+            call.func, "attr", None)
+
+    positions, min_len = [], []
+    for path in sorted(pathlib.Path(pkg.__file__).parent.rglob("*.py")):
+        tree = ast.parse(path.read_text(), str(path))
+        for fn in ast.walk(tree):
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            for node in ast.walk(fn):
+                if not isinstance(node, ast.Call):
+                    continue
+                if name_of(node) == "term_positions":
+                    positions.append(f"{path.stem}:{fn.name}")
+                if name_of(node) == "tokenize_py" and any(
+                        kw.arg == "min_len" for kw in node.keywords):
+                    min_len.append(f"{path.stem}:{fn.name}")
+    assert positions == ["intersect:_occurrences"], positions
+    assert sorted(set(min_len)) == ["query:analyze"], min_len
+
+    fns = {n.name: n for n in ast.parse(inspect.getsource(intersect)).body
+           if isinstance(n, ast.FunctionDef)}
+    assert POSITIONAL_OPS <= set(fns)
+    assert [a.arg for a in fns["_slot_position_lists"].args.args] == [
+        "spark", "index_path", "meta", "slot_terms", "op"]
+
+    def cand_calls(fn):
+        return [n for n in ast.walk(fn) if isinstance(n, ast.Call)
+                and name_of(n) in ("match_all_terms", "match_any_terms")]
+
+    bad = [name for name in sorted(POSITIONAL_OPS - {"match_phrase"})
+           if cand_calls(fns[name])]
+    assert not bad, bad
+    # match_phrase: only inside its single-term branch or after the
+    # positional return (the term-vector fallback)
+    mp = fns["match_phrase"]
+    single = next(n for n in ast.walk(mp) if isinstance(n, ast.If)
+                  and "len(terms) == 1" in ast.unparse(n.test))
+    in_single = {id(n) for n in ast.walk(single)}
+    positional_end = max(n.lineno for n in ast.walk(mp)
+                         if isinstance(n, ast.Call)
+                         and name_of(n) in ("_aligned",
+                                            "_slot_position_lists"))
+    stray = [n.lineno for n in cand_calls(mp)
+             if id(n) not in in_single and n.lineno <= positional_end]
+    assert not stray, stray
+    assert not [n for n in ast.walk(fns["span_near"])
+                if isinstance(n, (ast.Lambda, ast.FunctionDef))
+                and n is not fns["span_near"]]
+
+
 def test_bm25_topk_is_take_ordered(spark, corpus_df):
     from elasticsearch_osmosis_plugin_spark.operators.bm25 import bm25_topk
 
