@@ -81,7 +81,7 @@ def docs_with_terms(spark: SparkSession, index_path: str,
     (the hop expansion primitive — :func:`match_any_terms` would
     re-tokenize, which is wrong for terms lifted from the index)."""
     meta = load_meta(index_path)
-    dic = dictionary_rows(spark, index_path, sorted(set(terms)), meta)
+    dic = dictionary_rows(index_path, sorted(set(terms)), meta)
     if dic.empty:
         return spark.createDataFrame([], "doc_id long")
     return (term_docs(spark, index_path, list(dic["term"]), meta)
@@ -140,8 +140,8 @@ def _hop_vertices(spark: SparkSession, index_path: str,
     fg = (fg_docs
           .select(F.explode(F.array_distinct("tokens")).alias("term"))
           .groupBy("term").agg(F.count(F.lit(1)).alias("doc_count")))
-    bg = (dictionary_df(spark, index_path)
-          .groupBy("term").agg(F.sum("df").alias("df_bg")))
+    bg = dictionary_df(spark, index_path).select(
+        "term", F.col("df").alias("df_bg"))
     scored = fg.join(bg, "term")
     out = []
     for spec in specs:

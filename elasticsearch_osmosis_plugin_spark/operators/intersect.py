@@ -48,7 +48,7 @@ def match_all_terms(spark: SparkSession, index_path: str, query: str) -> DataFra
     """doc_ids containing ALL query terms (conjunctive AND)."""
     meta = load_meta(index_path)
     terms = query_terms(query, meta)
-    dic = dictionary_rows(spark, index_path, terms, meta)
+    dic = dictionary_rows(index_path, terms, meta)
     if dic.empty or len(dic) < len(terms):
         # some term matches nothing -> empty intersection
         return spark.createDataFrame([], "doc_id long")
@@ -378,7 +378,7 @@ def match_phrase_prefix(spark: SparkSession, index_path: str, phrase: str,
         return spark.createDataFrame([], "doc_id long")
     fixed, prefix = terms[:-1], terms[-1]
     expansions = expand_terms(spark, index_path, prefix, mode="prefix",
-                              max_expansions=max_expansions, _meta=meta)
+                              max_expansions=max_expansions)
     if not expansions:
         return spark.createDataFrame([], "doc_id long")
     if not fixed:
@@ -391,8 +391,8 @@ def match_phrase_prefix(spark: SparkSession, index_path: str, phrase: str,
 
 
 def expand_terms(spark: SparkSession, index_path: str, pattern: str,
-                 mode: str = "prefix", max_expansions: int = 50,
-                 _meta=None, _dic=None) -> list[str]:
+                 mode: str = "prefix",
+                 max_expansions: int = 50) -> list[str]:
     """Dictionary expansion for multi-term queries (ES prefix /
     wildcard / regexp analog): scan the DICTIONARY (tiny — metadata
     columns only, never postings) for terms matching the pattern and
@@ -405,14 +405,14 @@ def expand_terms(spark: SparkSession, index_path: str, pattern: str,
     relative to any posting scan."""
     from elasticsearch_osmosis_plugin_spark.plans.build import dictionary_df
 
-    dic = dictionary_df(spark, index_path) if _dic is None else _dic
+    dic = dictionary_df(spark, index_path)
     if mode == "prefix":
         m = dic.filter(F.col("term").startswith(pattern))
     elif mode == "regex":
         m = dic.filter(F.col("term").rlike(f"^(?:{pattern})$"))
     else:
         raise ValueError(f"unknown expansion mode: {mode}")
-    rows = (m.select("term").distinct().orderBy("term")
+    rows = (m.select("term").orderBy("term")
             .limit(max_expansions).collect())
     return [r["term"] for r in rows]
 
@@ -448,8 +448,7 @@ def _osa_udf(query: str):
 
 def expand_fuzzy(spark: SparkSession, index_path: str, term: str,
                  max_edits: int = 1, max_expansions: int = 50,
-                 transpositions: bool = False,
-                 _dic=None) -> list[str]:
+                 transpositions: bool = False) -> list[str]:
     """ES fuzzy-query expansion: dictionary terms within edit distance
     ``max_edits`` of ``term`` (ES AUTO fuzziness caps at 2).
     ``transpositions=True`` switches Levenshtein to OSA/Damerau (an
@@ -461,14 +460,13 @@ def expand_fuzzy(spark: SparkSession, index_path: str, term: str,
     exactly ES's behavior of preferring nearer terms under the cap."""
     from elasticsearch_osmosis_plugin_spark.plans.build import dictionary_df
 
-    dic = dictionary_df(spark, index_path) if _dic is None else _dic
+    dic = dictionary_df(spark, index_path)
     cand = dic.filter(
         F.abs(F.length("term") - F.lit(len(term))) <= max_edits)
     d = (_osa_udf(term)(F.col("term")) if transpositions
          else F.levenshtein(F.col("term"), F.lit(term)))
     rows = (cand.select("term", d.alias("d"))
             .filter(F.col("d") <= max_edits)
-            .select("term", "d").distinct()
             .orderBy("d", "term").limit(max_expansions).collect())
     return [r["term"] for r in rows]
 
@@ -493,8 +491,7 @@ def match_expanded(spark: SparkSession, index_path: str, pattern: str,
     """doc_ids containing >=1 term matching the pattern
     (constant-score, like ES prefix/wildcard/regexp queries)."""
     meta = load_meta(index_path)
-    terms = expand_terms(spark, index_path, pattern, mode, max_expansions,
-                         _meta=meta)
+    terms = expand_terms(spark, index_path, pattern, mode, max_expansions)
     if not terms:
         return spark.createDataFrame([], "doc_id long")
     return (term_docs(spark, index_path, terms, meta).select("doc_id")
@@ -704,7 +701,7 @@ def highlight(spark: SparkSession, index_path: str, query: str,
     is pruned to (doc_id, tokens) of matching docs only."""
     meta = load_meta(index_path)
     terms = query_terms(query, meta)
-    dic = dictionary_rows(spark, index_path, terms, meta)
+    dic = dictionary_rows(index_path, terms, meta)
     if dic.empty:
         return spark.createDataFrame(
             [], "doc_id long, first_pos long, snippet string")
@@ -744,7 +741,7 @@ def more_like_this(spark: SparkSession, index_path: str, like_doc_id: int,
     if not rows:
         raise KeyError(f"doc {like_doc_id} not found")
     tf = Counter(rows[0]["tokens"])
-    dic = dictionary_rows(spark, index_path, sorted(tf), meta)
+    dic = dictionary_rows(index_path, sorted(tf), meta)
     ranked = sorted((-tf[t] * v, t) for t, v in term_idfs(dic, meta).items())
     terms = [t for _, t in ranked[:max_query_terms]]
     if not terms:
@@ -768,7 +765,7 @@ def more_like_this_text(spark: SparkSession, index_path: str, like: str,
 
     meta = load_meta(index_path)
     tf = Counter(analyze(like, meta))
-    dic = dictionary_rows(spark, index_path, sorted(tf), meta)
+    dic = dictionary_rows(index_path, sorted(tf), meta)
     ranked = sorted((-tf[t] * v, t) for t, v in term_idfs(dic, meta).items())
     terms = [t for _, t in ranked[:max_query_terms]]
     if not terms:
@@ -800,7 +797,7 @@ def term_vectors(spark: SparkSession, index_path: str,
     for i, t in enumerate(rows[0]["tokens"]):
         tf[t] = tf.get(t, 0) + 1
         pos.setdefault(t, []).append(i)
-    dic = dictionary_rows(spark, index_path, sorted(tf), meta)
+    dic = dictionary_rows(index_path, sorted(tf), meta)
     stats = {r.term: (int(r.df), int(r.cf)) for r in dic.itertuples()}
     out = [(t, tf[t], pos[t], *stats[t]) for t in sorted(tf)]
     return spark.createDataFrame(
@@ -847,8 +844,8 @@ def significant_terms(spark: SparkSession, index_path: str, query: Hits,
           .select(F.explode(F.array_distinct("tokens")).alias("term"))
           .groupBy("term").agg(F.count(F.lit(1)).alias("df_fg")))
     n_fg = fg_docs.select(F.count(F.lit(1)).alias("n_fg"))
-    bg = (dictionary_df(spark, index_path)
-          .groupBy("term").agg(F.sum("df").alias("df_bg")))
+    bg = dictionary_df(spark, index_path).select(
+        "term", F.col("df").alias("df_bg"))
     return (fg.join(bg, "term").crossJoin(F.broadcast(n_fg))
             .filter(F.col("df_fg") >= min_doc_count)
             .select("term", "df_fg", "df_bg",
@@ -978,7 +975,7 @@ def match_min_should(spark: SparkSession, index_path: str, query: str,
     and to AND at n_terms."""
     meta = load_meta(index_path)
     terms = query_terms(query, meta)
-    dic = dictionary_rows(spark, index_path, terms, meta)
+    dic = dictionary_rows(index_path, terms, meta)
     if dic.empty or len(dic) < min_should_match:
         return spark.createDataFrame([], "doc_id long")
     return (term_docs(spark, index_path, list(dic["term"]), meta)
@@ -1007,7 +1004,7 @@ def terms_set(spark: SparkSession, index_path: str, terms_query: str,
 
     meta = load_meta(index_path)
     terms = query_terms(terms_query, meta)
-    dic = dictionary_rows(spark, index_path, terms, meta)
+    dic = dictionary_rows(index_path, terms, meta)
     if dic.empty:
         return spark.createDataFrame([], "doc_id long, n_matched long")
     hits = (term_docs(spark, index_path, list(dic["term"]), meta)
@@ -1058,7 +1055,7 @@ def match_any_terms(spark: SparkSession, index_path: str, query: str) -> DataFra
     """doc_ids containing >=1 query term (disjunctive OR) — union + dedupe."""
     meta = load_meta(index_path)
     terms = query_terms(query, meta)
-    dic = dictionary_rows(spark, index_path, terms, meta)
+    dic = dictionary_rows(index_path, terms, meta)
     if dic.empty:
         return spark.createDataFrame([], "doc_id long")
     return (term_docs(spark, index_path, list(dic["term"]), meta)
@@ -1066,7 +1063,7 @@ def match_any_terms(spark: SparkSession, index_path: str, query: str) -> DataFra
 
 def suggest_terms(spark: SparkSession, index_path: str, text: str,
                   max_edits: int = 2, size: int = 5,
-                  suggest_mode: str = "always", _dic=None) -> DataFrame:
+                  suggest_mode: str = "always") -> DataFrame:
     """ES term-suggester analog (did-you-mean): dictionary terms within
     Levenshtein distance ``max_edits`` of ``text``, ranked the way ES
     ranks suggestions — distance ascending, then document frequency
@@ -1081,15 +1078,14 @@ def suggest_terms(spark: SparkSession, index_path: str, text: str,
 
     Metadata-only plan: the DICTIONARY (term/df rows, no postings) is
     length-prefiltered (||t|-|text|| <= max_edits prunes before the
-    edit-distance kernel), per-group rows are summed into corpus df,
-    and the final ranking is a tiny TakeOrderedAndProject; the
+    edit-distance kernel; a dictionary row already carries the term's
+    corpus df), and the final ranking is a tiny TakeOrderedAndProject; the
     mode's self-df probe is one broadcast scalar over the same frame."""
     from elasticsearch_osmosis_plugin_spark.plans.build import dictionary_df
 
     if suggest_mode not in ("always", "missing", "popular"):
         raise ValueError(f"unknown suggest_mode {suggest_mode!r}")
-    dic = dictionary_df(spark, index_path) if _dic is None else _dic
-    terms = dic.groupBy("term").agg(F.sum("df").alias("df"))
+    terms = dictionary_df(spark, index_path).select("term", "df")
     cand = terms.filter(
         F.abs(F.length("term") - F.lit(len(text))) <= max_edits)
     out = (cand.select(
@@ -1111,22 +1107,21 @@ def suggest_terms(spark: SparkSession, index_path: str, text: str,
 
 
 def suggest_prefix(spark: SparkSession, index_path: str, prefix: str,
-                   size: int = 5, _dic=None) -> DataFrame:
+                   size: int = 5) -> DataFrame:
     """ES completion-suggester analog: dictionary terms starting with
     ``prefix``, ranked by collection frequency descending (the
     popularity weight ES completion entries carry), term ascending.
     Same metadata-only dictionary plan as ``suggest_terms``."""
     from elasticsearch_osmosis_plugin_spark.plans.build import dictionary_df
 
-    dic = dictionary_df(spark, index_path) if _dic is None else _dic
-    terms = dic.groupBy("term").agg(F.sum("cf").alias("cf"))
+    terms = dictionary_df(spark, index_path).select("term", "cf")
     return (terms.filter(F.col("term").startswith(prefix))
             .orderBy(F.desc("cf"), "term").limit(size))
 
 
 def suggest_completion_fuzzy(spark: SparkSession, index_path: str,
                              prefix: str, fuzziness: int = 1,
-                             size: int = 5, _dic=None) -> DataFrame:
+                             size: int = 5) -> DataFrame:
     """ES completion-suggester FUZZY mode: dictionary terms whose
     length-|prefix| prefix is within Levenshtein distance ``fuzziness``
     of the typed prefix (the fixed-prefix-length variant of Lucene's
@@ -1134,14 +1129,13 @@ def suggest_completion_fuzzy(spark: SparkSession, index_path: str,
     hits first, ES's preference), then popularity (collection
     frequency) descending, term ascending.
 
-    Metadata-only plan like :func:`suggest_prefix`: the dictionary is
-    aggregated to (term, cf) and the distance is a codegen
+    Metadata-only plan like :func:`suggest_prefix` over the
+    dictionary's (term, cf) rows; the distance is a codegen
     ``levenshtein(substr(term, ...), prefix)`` — no postings touched,
     cost bounded by vocabulary size."""
     from elasticsearch_osmosis_plugin_spark.plans.build import dictionary_df
 
-    dic = dictionary_df(spark, index_path) if _dic is None else _dic
-    terms = dic.groupBy("term").agg(F.sum("cf").alias("cf"))
+    terms = dictionary_df(spark, index_path).select("term", "cf")
     d = F.levenshtein(F.substring(F.col("term"), 1, len(prefix)),
                       F.lit(prefix))
     return (terms.withColumn("distance", d.cast("long"))
@@ -1226,9 +1220,7 @@ def suggest_phrase(spark: SparkSession, index_path: str, text: str,
     # kernel, window rank caps each slot
     from pyspark.sql import Window as PW
 
-    dic = (dictionary_df(spark, index_path)
-           .groupBy("term").agg(F.sum("df").alias("df"),
-                                F.sum("cf").alias("cf")))
+    dic = dictionary_df(spark, index_path).select("term", "df", "cf")
     slot_df = spark.createDataFrame(list(enumerate(slots)),
                                     "slot int, tok string")
     w = PW.partitionBy("slot").orderBy("distance", F.desc("df"), "term")
@@ -2137,8 +2129,8 @@ def significant_text(spark: SparkSession, index_path: str, query: Hits,
           .select(F.explode(F.array_distinct("tokens")).alias("term"))
           .groupBy("term").agg(F.count(F.lit(1)).alias("df_fg")))
     n_fg = fg_docs.select(F.count(F.lit(1)).alias("n_fg"))
-    bg = (dictionary_df(spark, index_path)
-          .groupBy("term").agg(F.sum("df").alias("df_bg")))
+    bg = dictionary_df(spark, index_path).select(
+        "term", F.col("df").alias("df_bg"))
     return (fg.join(bg, "term").crossJoin(F.broadcast(n_fg))
             .filter(F.col("df_fg") >= min_doc_count)
             .select("term", "df_fg", "df_bg",
@@ -2170,7 +2162,7 @@ def mtermvectors(spark: SparkSession, index_path: str,
             tf[key] = tf.get(key, 0) + 1
             pos.setdefault(key, []).append(i)
     terms = sorted({t for _, t in tf})
-    dic = dictionary_rows(spark, index_path, terms, meta)
+    dic = dictionary_rows(index_path, terms, meta)
     stats = {r.term: (int(r.df), int(r.cf)) for r in dic.itertuples()}
     out = [(d, t, tf[(d, t)], pos[(d, t)], *stats[t])
            for d, t in sorted(tf)]
@@ -2315,7 +2307,7 @@ def term_vectors_artificial(spark: SparkSession, index_path: str,
     for i, t in enumerate(toks):
         tf[t] = tf.get(t, 0) + 1
         pos.setdefault(t, []).append(i)
-    dic = dictionary_rows(spark, index_path, sorted(tf), meta)
+    dic = dictionary_rows(index_path, sorted(tf), meta)
     stats = {r.term: (int(r.df), int(r.cf)) for r in dic.itertuples()}
     out = [(t, tf[t], pos[t], *stats.get(t, (0, 0))) for t in sorted(tf)]
     return spark.createDataFrame(
@@ -2503,7 +2495,7 @@ def terms_enum(spark: SparkSession, index_path: str, prefix: str = "",
         dic = dic.filter(F.col("term").startswith(prefix))
     if search_after is not None:
         dic = dic.filter(F.col("term") > F.lit(search_after))
-    return (dic.groupBy("term").agg(F.sum("df").alias("doc_count"))
+    return (dic.select("term", F.col("df").alias("doc_count"))
             .orderBy("term").limit(size))
 
 
@@ -2530,7 +2522,7 @@ def highlight_fragments(spark: SparkSession, index_path: str, query: str,
 
     meta = load_meta(index_path)
     terms = query_terms(query, meta)
-    dic = dictionary_rows(spark, index_path, terms, meta)
+    dic = dictionary_rows(index_path, terms, meta)
     if dic.empty:
         return spark.createDataFrame(
             [], "doc_id long, fragments array<string>")
@@ -2578,7 +2570,7 @@ def search_shards(spark: SparkSession, index_path: str,
 
     meta = load_meta(index_path)
     terms = sorted(set(query_terms(query, meta)))
-    dic = dictionary_rows(spark, index_path, terms, meta)
+    dic = dictionary_rows(index_path, terms, meta)
     live = set(dic["term"]) if not dic.empty else set()
     rows = [(t, bucket_of(t, meta["n_buckets"]), t in live)
             for t in terms]

@@ -7,11 +7,10 @@ Elasticsearch did for the reference is implemented here.
 
 Execution of :func:`topk` (Spark-first), one plan:
 1. tokenize the query with the SAME analyzer as the build;
-2. dictionary lookup: parquet read pruned to the terms' buckets
-   (partition pruning) + term predicate (row-group stats) — a few KB,
-   read with pyarrow on the driver by a Searcher's
-   :class:`DictionaryCache`; idfs (boosts folded in) are computed on
-   the driver;
+2. dictionary lookup (:func:`dictionary_rows`): the terms' bucket
+   files (partition pruning) read with a term predicate — a few KB,
+   read with pyarrow on the driver, no Spark job; idfs (boosts folded
+   in) are computed on the driver;
 3. postings read pruned the same way — only query terms' rows are
    ever scanned, and only their doc-id/tf/dl payloads;
 4. ``groupBy("seg").applyInArrow``: one Arrow kernel per posting
@@ -24,7 +23,7 @@ Execution of :func:`topk` (Spark-first), one plan:
    ``plans.merge.verify_index``), so a segment's scores are final;
 5. deterministic top-k over the k x n_segments rows
    (TakeOrderedAndProject). The shuffle carries compressed posting
-   rows, not decoded matches, and a warm query runs 2 Spark jobs.
+   rows, not decoded matches, and a query runs 2 Spark jobs.
 
 The per-doc sums are the driver-local path's (``serve.local_topk``)
 bit for bit. ``strategy`` names ``"auto"``, ``"scoreall"``,
@@ -43,7 +42,6 @@ from __future__ import annotations
 
 import functools
 import math
-import os
 from typing import Iterator, Sequence
 
 import numpy as np
@@ -63,7 +61,6 @@ from elasticsearch_osmosis_plugin_spark.operators.topk import deterministic_topk
 from elasticsearch_osmosis_plugin_spark.plans import catalog
 from elasticsearch_osmosis_plugin_spark.plans.build import (
     bucket_of,
-    dictionary_df,
     load_meta,
     postings_df,
     tombstone_ids,
@@ -90,63 +87,25 @@ def query_terms(query: str, meta: dict) -> list[str]:
 
 _DIC_COLS = ["term", "df", "cf", "n_blocks", "max_wand", "bucket"]
 
-# A Searcher's per-term dictionary memo is a byte-budgeted LRU, so an
-# adversarial query vocabulary evicts instead of growing the driver
-# heap. A row is a tuple of Python values charged its object bytes
-# (about 460 B with the per-entry charge), so the budget holds ~16k
-# rows. Absent terms are memoized as _ABSENT (an LRU miss is None).
-DIC_MEMO_BYTES = 8 << 20
-_ABSENT = False
 
-
-class DictionaryCache:
-    """Driver-side per-term dictionary memo for a long-lived Searcher:
-    a term's stats row is read once, with pyarrow on the driver from
-    its bucket's dictionary files (a few KB), and kept while it stays
-    within the ``DIC_MEMO_BYTES`` budget — no lookup costs a Spark job
-    (~50-150 ms of fixed scheduling latency, the dominant term in
-    serving p95). Negative hits (absent terms) are memoized too, so
-    unknown-term queries stay one-time."""
-
-    def __init__(self, index_path: str):
-        self.index_path = index_path
-        self._rows = serve._ByteLRU(max_bytes=DIC_MEMO_BYTES)
-
-    def rows(self, terms: Sequence[str], meta: dict) -> pd.DataFrame:
-        got = {t: self._rows.get(t) for t in dict.fromkeys(terms)}
-        missing = sorted(t for t, r in got.items() if r is None)
-        if missing:
-            nb = meta["n_buckets"]
-            files = serve._bucket_files(
-                [os.path.join(self.index_path, "dictionary")],
-                *sorted({bucket_of(t, nb) for t in missing}))
-            tbl = serve._read_filtered(files, _DIC_COLS[:-1], missing) \
-                if files else None
-            found = {} if tbl is None else {
-                r[0]: (*r, bucket_of(r[0], nb)) for r in
-                zip(*(tbl[c].to_pylist() for c in _DIC_COLS[:-1]))}
-            for t in missing:
-                got[t] = found.get(t, _ABSENT)
-                self._rows.put(t, got[t], serve._pysize(t, got[t]))
-        return pd.DataFrame([r for r in got.values() if r is not _ABSENT],
-                            columns=_DIC_COLS)
-
-
-def dictionary_rows(spark: SparkSession, index_path: str,
-                    terms: Sequence[str], meta: dict,
-                    dic: DictionaryCache | None = None) -> pd.DataFrame:
-    """Tiny dictionary lookup: bucket partition pruning + term
-    predicate; a :class:`DictionaryCache` answers without a Spark
-    job."""
-    if not terms:
+def dictionary_rows(index_path: str, terms: Sequence[str],
+                    meta: dict) -> pd.DataFrame:
+    """The query terms' dictionary rows, read with pyarrow on the
+    driver from their buckets' dictionary files (bucket partition
+    pruning + term predicate, a few KB) — no Spark job. Rows come in
+    requested-term order; absent terms are omitted."""
+    nb = meta["n_buckets"]
+    want = list(dict.fromkeys(terms))
+    files = serve._bucket_files(
+        [catalog.table_path(index_path, "dictionary")],
+        *sorted({bucket_of(t, nb) for t in want}))
+    if not files:
         return pd.DataFrame(columns=_DIC_COLS)
-    if dic is not None:
-        return dic.rows(terms, meta)
-    buckets = sorted({bucket_of(t, meta["n_buckets"]) for t in terms})
-    return (dictionary_df(spark, index_path)
-            .filter(F.col("bucket").isin(buckets)
-                    & F.col("term").isin(list(terms)))
-            .toPandas())
+    tbl = serve._read_filtered(files, _DIC_COLS[:-1], want)
+    found = {r[0]: (*r, bucket_of(r[0], nb)) for r in
+             zip(*(tbl[c].to_pylist() for c in _DIC_COLS[:-1]))}
+    return pd.DataFrame([found[t] for t in want if t in found],
+                        columns=_DIC_COLS)
 
 
 def _pruned_postings(spark: SparkSession, index_path: str,
@@ -328,8 +287,8 @@ def match_scores(spark: SparkSession, index_path: str, query: str,
                  meta: dict, *, allowed=None) -> DataFrame | None:
     """Scoreall BM25 of ``query`` -> (doc_id, score), or None when no
     query term is indexed."""
-    idfs = term_idfs(dictionary_rows(spark, index_path,
-                                     query_terms(query, meta), meta), meta)
+    idfs = term_idfs(dictionary_rows(index_path, query_terms(query, meta),
+                                     meta), meta)
     if not idfs:
         return None
     return summed(_scored(spark, index_path, meta, idfs, allowed=allowed))
@@ -390,7 +349,7 @@ def _segment_topk_kernel(c_by_term: dict[str, float], meta: dict,
 def topk(spark: SparkSession, index_path: str, query: str, k: int = 10,
          strategy: str = "auto", *, post_filter=None, boosts=None,
          minimum_should_match: int = 0,
-         _meta=None, _posts=None, _dic=None) -> DataFrame:
+         _meta=None, _posts=None) -> DataFrame:
     """Top-k BM25 -> DataFrame (doc_id, score), deterministic order.
 
     One plan for every ``strategy`` name (see the module docstring):
@@ -416,8 +375,7 @@ def topk(spark: SparkSession, index_path: str, query: str, k: int = 10,
     if strategy not in STRATEGIES:
         raise ValueError(f"unknown strategy: {strategy}")
     meta = _meta if _meta is not None else load_meta(index_path)
-    dic = dictionary_rows(spark, index_path, query_terms(query, meta), meta,
-                          dic=_dic)
+    dic = dictionary_rows(index_path, query_terms(query, meta), meta)
     if dic.empty or len(dic) < minimum_should_match:
         return spark.createDataFrame([], "doc_id long, score double")
     c_by_term = term_idfs(dic, meta)
@@ -440,7 +398,7 @@ def topk_after(spark: SparkSession, index_path: str, query: str,
                k: int = 10, *, after: tuple[float, int] | None = None,
                post_filter=None, boosts=None,
                minimum_should_match: int = 0,
-               _meta=None, _posts=None, _dic=None) -> DataFrame:
+               _meta=None, _posts=None) -> DataFrame:
     """Keyset pagination (ES search_after analog): the next ``k`` hits
     strictly AFTER position ``after = (score, doc_id)`` in the global
     (score desc, doc_id asc) ranking. ``after=None`` returns page 1.
@@ -453,8 +411,7 @@ def topk_after(spark: SparkSession, index_path: str, query: str,
     """
     meta = _meta if _meta is not None else load_meta(index_path)
     boosts = boosts or {}
-    dic = dictionary_rows(spark, index_path, query_terms(query, meta), meta,
-                          dic=_dic)
+    dic = dictionary_rows(index_path, query_terms(query, meta), meta)
     idf_by_term = {t: v * float(boosts.get(t, 1.0))
                    for t, v in term_idfs(dic, meta).items()}
     if not idf_by_term or len(idf_by_term) < minimum_should_match:
@@ -477,7 +434,7 @@ def topk_after(spark: SparkSession, index_path: str, query: str,
 def topk_synonyms(spark: SparkSession, index_path: str,
                   groups: list[list[str]], k: int = 10, *,
                   post_filter=None,
-                  _meta=None, _posts=None, _dic=None) -> DataFrame:
+                  _meta=None, _posts=None) -> DataFrame:
     """Top-k BM25 with query-time synonym expansion — Lucene
     ``SynonymQuery`` semantics (what ES's query-time ``synonym`` /
     ``synonym_graph`` token filter compiles match clauses into): each
@@ -508,7 +465,7 @@ def topk_synonyms(spark: SparkSession, index_path: str,
     flat = sorted({t for alts in norm for t in alts})
     if len(flat) != sum(len(a) for a in norm):
         raise ValueError("a term may appear in only one synonym group")
-    dic = dictionary_rows(spark, index_path, flat, meta, dic=_dic)
+    dic = dictionary_rows(index_path, flat, meta)
     if dic.empty:
         return spark.createDataFrame([], "doc_id long, score double")
     df_by_term = {r.term: int(r.df) for r in dic.itertuples()}
@@ -567,7 +524,7 @@ def lm_weight(similarity: str, mu: float, lam: float):
 def topk_lm(spark: SparkSession, index_path: str, query: str,
             k: int = 10, *, similarity: str = "lm_dirichlet",
             mu: float = 2000.0, lam: float = 0.1, post_filter=None,
-            _meta=None, _posts=None, _dic=None) -> DataFrame:
+            _meta=None, _posts=None) -> DataFrame:
     """Top-k under the Lucene language-model similarities — the ES
     ``similarity`` module's ``LMDirichlet`` (mu=2000) and
     ``LMJelinekMercer`` (lambda=0.1) settings a reference user could
@@ -586,8 +543,7 @@ def topk_lm(spark: SparkSession, index_path: str, query: str,
     if similarity not in ("lm_dirichlet", "lm_jelinek_mercer"):
         raise ValueError(f"unknown LM similarity: {similarity!r}")
     meta = _meta if _meta is not None else load_meta(index_path)
-    dic = dictionary_rows(spark, index_path, query_terms(query, meta), meta,
-                          dic=_dic)
+    dic = dictionary_rows(index_path, query_terms(query, meta), meta)
     cf_by_term = {r.term: int(r.cf) for r in dic.itertuples()}
     if not cf_by_term:
         return spark.createDataFrame([], "doc_id long, score double")
@@ -608,7 +564,7 @@ def classic_weight(c, tf, dl):
 
 def topk_classic(spark: SparkSession, index_path: str, query: str,
                  k: int = 10, *, post_filter=None,
-                 _meta=None, _posts=None, _dic=None) -> DataFrame:
+                 _meta=None, _posts=None) -> DataFrame:
     """Top-k under Lucene ClassicSimilarity (TF-IDF) — the DEFAULT
     similarity of the Elasticsearch 0.90 era the reference targets
     (``pom.xml`` elasticsearch 0.90.x; every ranked query the plugin's
@@ -636,7 +592,7 @@ def topk_classic(spark: SparkSession, index_path: str, query: str,
     terms = query_terms(query, meta)
     if not terms:
         return spark.createDataFrame([], "doc_id long, score double")
-    dic = dictionary_rows(spark, index_path, terms, meta, dic=_dic)
+    dic = dictionary_rows(index_path, terms, meta)
     df_by_term = {r.term: int(r.df) for r in dic.itertuples()}
     n = float(meta["n_docs"])
     if n <= 0:
@@ -666,7 +622,7 @@ def topk_classic(spark: SparkSession, index_path: str, query: str,
 
 def topk_many(spark: SparkSession, index_path: str,
               queries: dict[str, str], k: int = 10, *,
-              _meta=None, _posts=None, _dic=None) -> DataFrame:
+              _meta=None, _posts=None) -> DataFrame:
     """Batched top-k: ALL queries in ONE Spark job.
 
     Serving amortization (the 100 TB path for query throughput): the
@@ -684,8 +640,8 @@ def topk_many(spark: SparkSession, index_path: str,
     meta = _meta if _meta is not None else load_meta(index_path)
     qterms = {qid: query_terms(q, meta) for qid, q in queries.items()}
     all_terms = sorted(set().union(*qterms.values())) if qterms else []
-    idf_by_term = term_idfs(dictionary_rows(spark, index_path, all_terms,
-                                            meta, dic=_dic), meta)
+    idf_by_term = term_idfs(dictionary_rows(index_path, all_terms, meta),
+                            meta)
     if not idf_by_term:
         return spark.createDataFrame(
             [], "query_id string, doc_id long, score double")
@@ -704,8 +660,7 @@ def topk_many(spark: SparkSession, index_path: str,
 
 def topk_clauses(spark: SparkSession, index_path: str,
                  clauses: Sequence[str], k: int = 10, *,
-                 post_filter=None, _meta=None, _posts=None,
-                 _dic=None) -> DataFrame:
+                 post_filter=None, _meta=None, _posts=None) -> DataFrame:
     """Ranked bool.must of match clauses with ES's clause semantics: a
     doc matches iff EVERY clause contributes at least one of its own
     analyzed terms (each match clause is an OR over its terms — NOT a
@@ -723,8 +678,7 @@ def topk_clauses(spark: SparkSession, index_path: str,
     if not cl_terms or any(not ts for ts in cl_terms):
         return spark.createDataFrame([], "doc_id long, score double")
     union = sorted(set().union(*cl_terms))
-    idf_by_term = term_idfs(dictionary_rows(spark, index_path, union, meta,
-                                            dic=_dic), meta)
+    idf_by_term = term_idfs(dictionary_rows(index_path, union, meta), meta)
     # a clause with no indexed term can never match -> empty result
     if any(not (set(ts) & idf_by_term.keys()) for ts in cl_terms):
         return spark.createDataFrame([], "doc_id long, score double")
@@ -919,7 +873,7 @@ def topk_multi(spark: SparkSession, index_paths: Sequence[str],
                 raise ValueError(f"indexes disagree on {key}: "
                                  f"{m.get(key)!r} != {m0.get(key)!r}")
     terms = query_terms(query, m0)
-    dics = [dictionary_rows(spark, p, terms, m)
+    dics = [dictionary_rows(p, terms, m)
             for p, m in zip(index_paths, metas)]
     df_g: dict[str, int] = {}
     for dic in dics:
@@ -953,11 +907,9 @@ def topk_multi(spark: SparkSession, index_paths: Sequence[str],
 
 class Searcher:
     """Reusable query handle over one index — the analog of an open ES
-    index reader. Loads meta once, keeps ONE postings relation (cached
-    parquet file listing) and a driver-side dictionary memo
-    (:class:`DictionaryCache`), so repeated queries pay scoring cost
-    only, not per-query planning, file-index rebuild, or dictionary
-    jobs."""
+    index reader. Loads meta once and keeps ONE postings relation
+    (cached parquet file listing), so repeated queries pay scoring cost
+    only, not per-query planning or file-index rebuild."""
 
     def __init__(self, spark: SparkSession, index_path: str):
         self.spark = spark
@@ -968,7 +920,6 @@ class Searcher:
         self.index_path = catalog.resolve_alias(index_path)
         self.meta = load_meta(self.index_path)
         self.posts = postings_df(spark, self.index_path)
-        self._dic_cache = DictionaryCache(self.index_path)
 
     def topk(self, query: str, k: int = 10, strategy: str = "auto",
              post_filter=None, boosts=None,
@@ -976,7 +927,7 @@ class Searcher:
         return topk(self.spark, self.index_path, query, k, strategy,
                     post_filter=post_filter, boosts=boosts,
                     minimum_should_match=minimum_should_match,
-                    _meta=self.meta, _posts=self.posts, _dic=self._dic_cache)
+                    _meta=self.meta, _posts=self.posts)
 
     def topk_local(self, query: str, k: int = 10) -> list:
         """Interactive serving path (operators.serve): answer the
@@ -1012,13 +963,13 @@ class Searcher:
 
     def match_count(self, query: str) -> int:
         return match_count(self.spark, self.index_path, query,
-                           _meta=self.meta, _posts=self.posts, _dic=self._dic_cache)
+                           _meta=self.meta, _posts=self.posts)
 
     def topk_classic(self, query: str, k: int = 10,
                      post_filter=None) -> DataFrame:
         return topk_classic(self.spark, self.index_path, query, k,
                             post_filter=post_filter, _meta=self.meta,
-                            _posts=self.posts, _dic=self._dic_cache)
+                            _posts=self.posts)
 
     def topk_lm(self, query: str, k: int = 10, *,
                 similarity: str = "lm_dirichlet", mu: float = 2000.0,
@@ -1026,11 +977,11 @@ class Searcher:
         return topk_lm(self.spark, self.index_path, query, k,
                        similarity=similarity, mu=mu, lam=lam,
                        post_filter=post_filter, _meta=self.meta,
-                       _posts=self.posts, _dic=self._dic_cache)
+                       _posts=self.posts)
 
     def topk_many(self, queries: dict[str, str], k: int = 10) -> DataFrame:
         return topk_many(self.spark, self.index_path, queries, k,
-                         _meta=self.meta, _posts=self.posts, _dic=self._dic_cache)
+                         _meta=self.meta, _posts=self.posts)
 
     def refresh(self) -> None:
         """Reload meta + relations after an index mutation (append,
@@ -1040,20 +991,19 @@ class Searcher:
         self.index_path = catalog.resolve_alias(self._given_path)
         self.meta = load_meta(self.index_path)
         self.posts = postings_df(self.spark, self.index_path)
-        self._dic_cache = DictionaryCache(self.index_path)  # drop stale rows
 
     def close(self) -> None:
-        """Drop the dictionary memo."""
-        self._dic_cache = DictionaryCache(self.index_path)
+        """Nothing to release: the handle holds no driver memo (the
+        shared serve caches are byte-bounded on their own)."""
 
 
 def match_count(spark: SparkSession, index_path: str, query: str, *,
-                _meta=None, _posts=None, _dic=None) -> int:
+                _meta=None, _posts=None) -> int:
     """Number of docs matching >=1 query term (reference analog: count
     API, ``PluginIntegrationITest.java:44-45``)."""
     meta = _meta if _meta is not None else load_meta(index_path)
     terms = query_terms(query, meta)
-    dic = dictionary_rows(spark, index_path, terms, meta, dic=_dic)
+    dic = dictionary_rows(index_path, terms, meta)
     if dic.empty:
         return 0
     if len(dic) == 1 and not meta.get("tombstones_n"):
@@ -1193,7 +1143,7 @@ def explain_hits(spark: SparkSession, index_path: str, hits: DataFrame,
     explained hits; the ranking itself is untouched."""
     meta = load_meta(index_path)
     idf_by_term = term_idfs(dictionary_rows(
-        spark, index_path, query_terms(query, meta), meta), meta)
+        index_path, query_terms(query, meta), meta), meta)
     if not idf_by_term:
         return hits.withColumn(
             "explanation",
@@ -1218,7 +1168,7 @@ def explain_doc(spark: SparkSession, index_path: str, doc_id: int,
     a 1-row hit frame."""
     meta = load_meta(index_path)
     idf_by_term = term_idfs(dictionary_rows(
-        spark, index_path, query_terms(query, meta), meta), meta)
+        index_path, query_terms(query, meta), meta), meta)
     if not idf_by_term:
         return {"matched": False, "score": 0.0, "explanation": []}
     hit = spark.createDataFrame([(int(doc_id),)], "doc_id long")

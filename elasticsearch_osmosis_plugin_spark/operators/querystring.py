@@ -243,8 +243,8 @@ def compile_tree_topk(spark: SparkSession, index_path: str, tree: Group,
 
     all_terms: set[str] = set()
     _collect_terms(tree, meta, all_terms)
-    idf_by_term = term_idfs(dictionary_rows(spark, index_path,
-                                            sorted(all_terms), meta), meta)
+    idf_by_term = term_idfs(dictionary_rows(index_path, sorted(all_terms),
+                                            meta), meta)
     shared = (_scored(spark, index_path, meta, idf_by_term)
               if idf_by_term else None)
 

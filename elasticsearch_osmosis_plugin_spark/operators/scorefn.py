@@ -177,7 +177,7 @@ def dis_max_topk(spark: SparkSession, index_path: str,
     meta = load_meta(index_path)
     per_q = {f"q{i}": query_terms(q, meta) for i, q in enumerate(queries)}
     uniq = sorted({t for ts in per_q.values() for t in ts})
-    idf_by_term = term_idfs(dictionary_rows(spark, index_path, uniq, meta),
+    idf_by_term = term_idfs(dictionary_rows(index_path, uniq, meta),
                             meta)
     if not idf_by_term:
         return spark.createDataFrame([], "doc_id long, score double")
@@ -274,7 +274,7 @@ def multi_match_cross_fields(spark: SparkSession,
     for f, p in field_indexes.items():
         meta = metas[f]
         n_docs = max(n_docs, int(meta["n_docs"]))
-        dic = dictionary_rows(spark, p, query_terms(query, meta), meta)
+        dic = dictionary_rows(p, query_terms(query, meta), meta)
         dics[f] = dic
         for r in dic.itertuples():
             df_by_term[r.term] = max(df_by_term.get(r.term, 0), int(r.df))
@@ -573,7 +573,7 @@ def common_terms_topk(spark: SparkSession, index_path: str, query: str,
     """
     meta = load_meta(index_path)
     terms = query_terms(query, meta)
-    dic = dictionary_rows(spark, index_path, terms, meta)
+    dic = dictionary_rows(index_path, terms, meta)
     if dic.empty:
         return spark.createDataFrame([], "doc_id long, score double")
     low = sorted(r.term for r in dic.itertuples()
@@ -816,7 +816,7 @@ def combined_fields_topk(spark: SparkSession,
     for i, (f, path) in enumerate(field_indexes.items()):
         meta = metas[f]
         terms = query_terms(query, meta)
-        dic = dictionary_rows(spark, path, terms, meta)
+        dic = dictionary_rows(path, terms, meta)
         if not dic.empty:
             raw = raw_postings(_pruned_postings(spark, path,
                                                 list(dic["term"]), meta),

@@ -64,8 +64,7 @@ from elasticsearch_osmosis_plugin_spark.plans.build import (
 class _ByteLRU:
     """Byte-budgeted thread-safe LRU — the one cache structure on the
     driver (decoded posting arrays, bucket term sets, merge
-    structures, weight vectors, directory listings, a Searcher's
-    dictionary-row memo). The analog
+    structures, weight vectors, directory listings). The analog
     of Lucene's filesystem cache / ES's shard request cache: the index
     layout on disk stays the source of truth, this only skips
     re-reading and recomputing hot entries. Each entry is charged its

@@ -628,7 +628,7 @@ def test_common_terms_query(spark, idx):
 
     meta = query.load_meta(idx)
     n = float(meta["n_docs"])
-    dic = query.dictionary_rows(spark, idx, ["id0000", "id1638"], meta)
+    dic = query.dictionary_rows(idx, ["id0000", "id1638"], meta)
     dfs = {r.term: float(r.df) for r in dic.itertuples()}
     assert dfs["id0000"] / n > 0.1 > dfs["id1638"] / n  # fixture sanity
 

@@ -2204,13 +2204,17 @@ def test_local_serving_path_lifecycle(spark, corpus_df, tmp_path):
     the full index lifecycle — fresh build, appended group, logical
     deletes, compaction, post-compaction append, purge — with the
     postings cache warm and cold. The df it scores with (the gathered
-    posting count) equals the dictionary df at every state."""
+    posting count) equals the dictionary df at every state, and the
+    driver's pyarrow dictionary lookup returns the Spark dictionary
+    read's rows, unknown terms omitted."""
     from pyspark.sql import functions as F
 
     from elasticsearch_osmosis_plugin_spark.corpus import generate_corpus_df
     from elasticsearch_osmosis_plugin_spark.operators import serve
     from elasticsearch_osmosis_plugin_spark.operators.query import (
+        _DIC_COLS,
         Searcher,
+        dictionary_rows,
         query_terms,
         topk,
     )
@@ -2243,8 +2247,12 @@ def test_local_serving_path_lifecycle(spark, corpus_df, tmp_path):
         meta = load_meta(idx)
         terms = sorted({t for q in queries for t in query_terms(q, meta)})
         gathered = serve._gather_term_postings(idx, meta, terms, cache=None)
-        dic = {r["term"]: r["df"] for r in dictionary_df(spark, idx)
-               .filter(F.col("term").isin(terms)).collect()}
+        rows = sorted(tuple(r[c] for c in _DIC_COLS) for r in
+                      dictionary_df(spark, idx)
+                      .filter(F.col("term").isin(terms)).collect())
+        assert list(dictionary_rows(idx, terms, meta).itertuples(
+            index=False, name=None)) == rows, tag
+        dic = {r[0]: r[1] for r in rows}
         assert {t: v[0].size for t, v in gathered.items()} == dic, tag
 
     check("fresh")
@@ -2366,8 +2374,8 @@ def test_dictionary_memos_bounded(spark, index_path, monkeypatch):
     cache holds keeps it within budget; the first unknown terms in a
     bucket cost one read, which loads the bucket's term set, and later
     unknown terms there, new or repeated, cost no read. The Spark
-    path's DictionaryCache stays within its byte budget after twice as
-    many unknown terms as it holds."""
+    path's dictionary lookup keeps no memo: the same unknown terms cost
+    at most one read per bucket and return no rows."""
     from elasticsearch_osmosis_plugin_spark.operators import query as Q
     from elasticsearch_osmosis_plugin_spark.operators import serve
 
@@ -2399,44 +2407,33 @@ def test_dictionary_memos_bounded(spark, index_path, monkeypatch):
         assert s.topk_local("zznew000003 public", k=10) == want
         assert len(reads) == n + 1
 
-        dc = s._dic_cache
-        monkeypatch.setattr(dc._rows, "max_bytes", 64 << 10)
-        many = [f"zzunknown{i:06d}"
-                for i in range(2 * dc._rows.max_bytes // serve.ENTRY_BYTES)]
-        assert dc.rows(many, meta).empty
-        assert 0 < dc._rows.bytes <= dc._rows.max_bytes
-        assert len(dc._rows._d) < len(many)
-        dc.df = None        # any further dictionary read would raise
-        assert dc.rows(many[-1:], meta).empty
+        del reads[:]
+        dic = Q.dictionary_rows(index_path, unknown, meta)
+        assert dic.empty and list(dic.columns) == Q._DIC_COLS
+        assert len(reads) <= meta["n_buckets"]
     finally:
         s.close()
 
 
-def test_driver_caches_are_byte_lrus(spark, index_path):
-    """One cache discipline: every cache object of operators.serve and
-    a Searcher's dictionary memo is a serve._ByteLRU with a finite
-    byte budget, and serve defines no other cache class."""
+def test_driver_caches_are_byte_lrus():
+    """One cache discipline: every cache object of operators.serve is
+    a serve._ByteLRU with a finite byte budget, and serve defines no
+    other cache class."""
     import inspect
     import math
 
     from elasticsearch_osmosis_plugin_spark.operators import serve
-    from elasticsearch_osmosis_plugin_spark.operators.query import Searcher
 
     classes = [c for c in vars(serve).values()
                if inspect.isclass(c) and c.__module__ == serve.__name__]
     assert classes == [serve._ByteLRU]
-    s = Searcher(spark, index_path)
-    try:
-        caches = [v for v in vars(serve).values()
-                  if hasattr(v, "get") and hasattr(v, "put")
-                  and not inspect.isclass(v)]
-        caches.append(s._dic_cache._rows)
-        assert len(caches) >= 5
-        for c in caches:
-            assert type(c) is serve._ByteLRU
-            assert 0 < c.max_bytes and math.isfinite(c.max_bytes)
-    finally:
-        s.close()
+    caches = [v for v in vars(serve).values()
+              if hasattr(v, "get") and hasattr(v, "put")
+              and not inspect.isclass(v)]
+    assert len(caches) >= 5
+    for c in caches:
+        assert type(c) is serve._ByteLRU
+        assert 0 < c.max_bytes and math.isfinite(c.max_bytes)
 
 
 def test_listing_cache_racy_timestamp(tmp_path):

@@ -294,6 +294,48 @@ def test_one_positional_plan():
                 and n is not fns["span_near"]]
 
 
+def test_one_dictionary_read(tmp_path):
+    """A per-term dictionary lookup has one implementation:
+    ``query.dictionary_rows(index_path, terms, meta)``, a pyarrow read
+    of the terms' bucket files that starts no Spark job (it neither
+    collects to pandas nor builds a dictionary DataFrame). No operator
+    function takes a ``_dic`` knob and ``query`` keeps no
+    ``DictionaryCache`` memo. An index directory holding only its meta
+    gives the empty ``_DIC_COLS`` frame."""
+    import ast
+    import inspect
+    import json
+    import pathlib
+
+    from elasticsearch_osmosis_plugin_spark.operators import query
+
+    ops = pathlib.Path(query.__file__).parent
+    knobs = []
+    for path in sorted(ops.glob("*.py")):
+        for fn in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)) and \
+                    "_dic" in [a.arg for a in ast.walk(fn.args)
+                               if isinstance(a, ast.arg)]:
+                knobs.append(f"{path.stem}:{fn.name}")
+    assert not knobs, knobs
+
+    tree = ast.parse(inspect.getsource(query))
+    assert not [n for n in ast.walk(tree) if isinstance(n, ast.ClassDef)
+                and n.name == "DictionaryCache"]
+    fn = next(n for n in tree.body if isinstance(n, ast.FunctionDef)
+              and n.name == "dictionary_rows")
+    assert [a.arg for a in fn.args.args + fn.args.kwonlyargs] == [
+        "index_path", "terms", "meta"]
+    called = {getattr(n.func, "id", None) or getattr(n.func, "attr", None)
+              for n in ast.walk(fn) if isinstance(n, ast.Call)}
+    assert not {"toPandas", "dictionary_df"} & called, called
+
+    (tmp_path / "meta.json").write_text(json.dumps({"n_buckets": 4}))
+    dic = query.dictionary_rows(str(tmp_path), ["public", "nosuch"],
+                                query.load_meta(str(tmp_path)))
+    assert dic.empty and list(dic.columns) == query._DIC_COLS
+
+
 def test_bm25_topk_is_take_ordered(spark, corpus_df):
     from elasticsearch_osmosis_plugin_spark.operators.bm25 import bm25_topk
 
@@ -518,13 +560,15 @@ def test_terms_enum_is_metadata_only(spark, index_path):
 
 
 def test_searcher_topk_job_budget(spark, corpus_df, tmp_path):
-    """Segment-local top-k: with a warm dictionary memo, ``Searcher.topk``
-    runs at most 2 Spark jobs (the posting-segment shuffle and the
-    k x n_segments merge) under every strategy name, for 1- and 2-term
-    queries, on an index with tombstones."""
+    """Segment-local top-k: ``Searcher.topk`` runs at most 2 Spark
+    jobs (the posting-segment shuffle and the k x n_segments merge)
+    under every strategy name, for 1- and 2-term queries, on an index
+    with tombstones; the dictionary lookup runs none, so a bare
+    ``query.topk`` stays within the same 2."""
     from elasticsearch_osmosis_plugin_spark.operators.query import (
         STRATEGIES,
         Searcher,
+        topk,
     )
     from elasticsearch_osmosis_plugin_spark.plans.build import delete_docs
 
@@ -538,12 +582,17 @@ def test_searcher_topk_job_budget(spark, corpus_df, tmp_path):
     try:
         for q in ("public", "public static"):
             for strategy in STRATEGIES:
-                s.topk(q, 5, strategy).collect()           # warm the memo
+                s.topk(q, 5, strategy).collect()           # warm-up
                 group = f"jobs-{q}-{strategy}"
                 sc.setJobGroup(group, group)
                 rows = s.topk(q, 5, strategy).collect()
                 n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
                 assert rows and n_jobs <= 2, (q, strategy, n_jobs)
+            group = f"jobs-bare-{q}"
+            sc.setJobGroup(group, group)
+            rows = topk(spark, path, q, 5).collect()
+            n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+            assert rows and n_jobs <= 2, (q, "bare", n_jobs)
     finally:
         sc.setJobGroup("", "")
         s.close()

@@ -31,7 +31,7 @@ K = 10
 
 def _reference(spark, idx, q, *, post_filter=None, boosts=None, msm=0):
     meta = load_meta(idx)
-    dic = query.dictionary_rows(spark, idx, query.query_terms(q, meta), meta)
+    dic = query.dictionary_rows(idx, query.query_terms(q, meta), meta)
     c = {t: v * float((boosts or {}).get(t, 1.0))
          for t, v in query.term_idfs(dic, meta).items()}
     if len(c) < max(msm, 1):
